@@ -7,7 +7,7 @@
 #                    perturbation, then the pytest suite.
 #   make gate      — vanilla gate only (sf0.01, bare session)
 #   make gate-hard — perturbed gate only
-#   make test      — pytest suite only
+#   make test      — pytest suite only (the ROADMAP tier-1 command)
 #   make bench     — headline-query bench (one JSON line, sf0.1)
 #   make plans     — regenerate PLANS.md physical-plan audit
 #   make scale     — regenerate SCALE.md 1x..10x probe (slow)
@@ -27,7 +27,7 @@ gate-hard:
 	$(PERTURB) GATE_FAST=1 python tools/check_correctness.py $(SF)
 
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

@@ -435,16 +435,18 @@ def main() -> None:
         # that died mid-query).  A query is SUSPECT only when NO rep was
         # clean — then the all-rep median is recorded and the flag says
         # exactly why it is not comparable.
-        clean = [t for t, x in zip(per_rep, per_ext) if x <= EXT_CORES_SUSPECT]
-        basis = sorted(clean) if clean else sorted(per_rep)
-        timings[name] = basis[len(basis) // 2]
-        # the construct/execute split of the rep whose total is the
-        # recorded median (so construct + execute == the median exactly)
-        med_i = per_rep.index(timings[name])
+        clean = [i for i, x in enumerate(per_ext) if x <= EXT_CORES_SUSPECT]
+        # rep indices ordered by time, drawn from the clean reps only (all
+        # reps when none was clean), so the median rep is itself clean
+        basis = sorted(clean or range(len(per_rep)), key=per_rep.__getitem__)
+        med_i = basis[len(basis) // 2]
+        timings[name] = per_rep[med_i]
+        # the construct/execute split of the median rep (so construct +
+        # execute == the median exactly)
         construct[name] = per_con[med_i]
         execute[name] = round(per_rep[med_i] - per_con[med_i], 3)
         clean_counts[name] = len(clean)
-        mins[name] = basis[0]
+        mins[name] = per_rep[basis[0]]
         ext_cores[name] = min(per_ext) if clean else round(
             sum(per_ext) / len(per_ext), 2
         )

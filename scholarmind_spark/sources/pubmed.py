@@ -32,7 +32,7 @@ TAG_RE = re.compile(r"^([A-Z0-9]+)\s*-\s*(.*)")
 
 
 def _split_marker(value: str) -> tuple[str, str] | None:
-    """``"10.1/x [doi]" → ("10.1/x", "DOI")`` — the AID marker split.
+    r"""``"10.1/x [doi]" → ("10.1/x", "DOI")`` — the AID marker split.
 
     Plain string ops, NOT the old ``^(.*?)\s+\[(doi|pii)\]$`` regex:
     the lazy-dot/``\s+`` combination backtracked quadratically on a long

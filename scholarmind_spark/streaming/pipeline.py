@@ -25,15 +25,27 @@ streaming results equal the batch oracle.
 
 from __future__ import annotations
 
+import json
+import math
+import os
 import shutil
 import tempfile
 import uuid
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-# (live session, probe path) -> analyzed schema; see read_events_stream
-_SCHEMA_MEMO: dict = {}
+from scholarmind_spark.streaming.state import (
+    SKIP, Manifest, chain_dirs, fold_gate, gc_versions, has_parquet,
+    publish_manifest, read_manifest, read_sidecar, recover_swap, rename_swap,
+    start_fold_stream, version_dir, write_marker, write_sidecar,
+)
+
+# session -> {probe path: (file stamp, analyzed schema)}; weak on the
+# session, so a stopped one is not kept alive.  See read_events_stream.
+_SCHEMA_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def read_events_stream(
@@ -51,8 +63,6 @@ def read_events_stream(
     path applies in ``queries._events``.  Hard-coding either assumption is
     exactly the unit bug that collapses every window 1000×.
     """
-    import os
-
     # FileStreamSource requires a directory; wrap a lone file in a temp dir
     # of symlinks (testdata is read-only, so no copy).  The wrapper dir is
     # REUSED per (process, source path) — a fresh mkdtemp per call leaked
@@ -80,20 +90,19 @@ def read_events_stream(
         probe = os.path.join(path, "events.parquet")
     # Schema-probe memo (round 16): the footer read rebuilds a file index
     # per call — pure driver-side construction cost, re-paid by every
-    # stream gate and bench rep (guide §6, file-listing caches).  Keyed on
-    # the LIVE session like queries._T_MEMO; stale sessions evict on miss.
-    # Read-only test fixtures by contract — a caller that rewrites the
-    # parquet under the same path in a live session must use a new path.
-    key = (spark, probe)
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        for k in list(_SCHEMA_MEMO):
-            if k[0] is not spark:
-                del _SCHEMA_MEMO[k]
-        schema = spark.read.parquet(probe).schema
-        _SCHEMA_MEMO[key] = schema
+    # stream gate and bench rep (guide §6, file-listing caches).  The
+    # stamp (mtime and size of the probe file, or of each entry of a
+    # probed directory) makes a rewrite under the same path probe afresh.
+    paths = [probe] if os.path.isfile(probe) else [
+        os.path.join(probe, f) for f in sorted(os.listdir(probe))
+    ]
+    stamp = tuple((s.st_mtime_ns, s.st_size) for s in map(os.stat, paths))
+    memo = _SCHEMA_MEMO.setdefault(spark, {})
+    hit = memo.get(probe)
+    if hit is None or hit[0] != stamp:
+        hit = memo[probe] = (stamp, spark.read.parquet(probe).schema)
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(hit[1])
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(path)
     )
@@ -321,12 +330,24 @@ def _scratch_ck_base() -> str | None:
     ``stream_fold_sketch_state``, ``stream_vector_ingest``) are NOT
     routed through this — their checkpoints carry exactly-once lineage
     across runs and stay wherever the caller puts them."""
-    import os
-
     env = os.environ.get("SPARK_GRAFT_STREAM_CK_DIR")
     if env:
         return env
     return "/dev/shm" if os.path.isdir("/dev/shm") else None
+
+
+def _aggregates_stream(df: DataFrame) -> bool:
+    """Whether the analyzed plan holds an ``Aggregate`` over the stream
+    (an aggregate inside a static side, e.g. a stream-static join's
+    dimension, emits nothing at a watermark and does not count)."""
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Aggregate" and node.isStreaming():
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
 
 
 def run_to_memory(
@@ -334,7 +355,6 @@ def run_to_memory(
     mode: str = "complete",
     name: str | None = None,
     shuffle_partitions: int = 32,
-    final_no_data_batch: bool = False,
 ) -> DataFrame:
     """Drain a stream with availableNow into an in-memory table and return
     it as a batch DataFrame (test/verification harness).
@@ -345,19 +365,18 @@ def run_to_memory(
     microbatch regardless of data size.  The conf is pinned for the start
     and restored after the drain.
 
-    ``final_no_data_batch``: availableNow appends one NO-DATA microbatch
-    after the last data batch when watermarks advanced, whose only jobs
-    are eager state cleanup and append-mode window finalization.  For
-    every shape this harness drains — complete-mode aggregations (emit
+    availableNow appends one NO-DATA microbatch after the last data batch
+    when watermarks advanced, whose only jobs are eager state cleanup and
+    append-mode window finalization.  The drain runs it only for an
+    APPEND-MODE AGGREGATION of the stream: there a window is emitted once
+    the watermark passes it, which for a finite drain happens in exactly
+    that final batch — without it the last closed windows are silently
+    missing.  For every other shape — complete-mode aggregations (emit
     everything each batch), append-mode joins/dedup/enrich (emit matches
-    in the data batch itself) and update-mode stateful ops — that batch
+    in the data batch itself) and update-mode stateful ops — the batch
     changes NOTHING about the result while paying a full state-store
     commit cycle (measured 2.4 s of the sf0.1 interval join's 6.6 s
-    drain), so it is skipped by default.  Pass ``True`` when draining an
-    APPEND-MODE WATERMARKED AGGREGATION: there a window is only emitted
-    once the watermark passes it, which for a finite drain happens in
-    exactly that final batch — without it the last windows are silently
-    missing.
+    drain), so it is skipped.
 
     NOT concurrency-safe: the pin/restore mutates the SHARED session conf
     non-atomically, so two concurrent drains (or a batch query started
@@ -366,6 +385,7 @@ def run_to_memory(
     once at query start and never restore."""
     name = name or f"mem_{uuid.uuid4().hex[:8]}"
     spark = stream_df.sparkSession
+    final_batch = mode == "append" and _aggregates_stream(stream_df)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_ndb = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
@@ -373,7 +393,7 @@ def run_to_memory(
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     spark.conf.set(
         "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if final_no_data_batch else "false",
+        "true" if final_batch else "false",
     )
     ck = tempfile.mkdtemp(prefix="smck_", dir=_scratch_ck_base())
     try:
@@ -428,141 +448,25 @@ def stream_merge_to_snapshot(
     parquet snapshot via ``foreachBatch`` + :func:`operators.merge.
     merge_upsert` — the streaming half of the nightly-increment story
     (exactly-once per batch id: foreachBatch re-runs a failed batch and
-    the merge is idempotent by key/version).
-
-    The new snapshot is written to a staging directory and swapped in
-    with renames ordered so EVERY failure point leaves a recoverable
-    state: stage → move current aside (``.old``) → move staging in →
-    drop ``.old``.  A crash between the two moves leaves ``.old``, which
-    the next batch restores before merging — the previous fixed-point
-    (rmtree then rename) lost the whole snapshot if the process died
-    between the calls, and the re-run batch would silently rebuild from
-    one microbatch's rows.
-
-    SCOPE: the swap uses driver-local ``os``/``shutil``, so
-    ``snapshot_path`` must be a path all of: the driver, the executors,
-    and the rename syscall can reach — i.e. a shared POSIX filesystem
-    (local disk, NFS).  For object stores (s3a://...) use a table format
-    with transactional commit instead; plain parquet-directory renames
-    are not atomic there."""
-    import os
-
+    the merge is idempotent by key/version).  The snapshot is the rename
+    layout of :mod:`streaming.state`: each new snapshot is staged and
+    swapped in so every crash point stays recoverable, which needs a
+    shared POSIX filesystem (for object stores use a table format with
+    transactional commit; parquet-directory renames are not atomic
+    there)."""
     from scholarmind_spark.operators.merge import merge_upsert
 
-    old_path = f"{snapshot_path}.old"
-
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if not os.path.isdir(snapshot_path) and os.path.isdir(old_path):
-            os.rename(old_path, snapshot_path)  # recover interrupted swap
-        if os.path.isdir(snapshot_path) and any(
-            f.endswith(".parquet") for f in os.listdir(snapshot_path)
-        ):
-            snap = spark.read.schema(batch_df.schema).parquet(snapshot_path)
-            merged = merge_upsert(snap, batch_df, keys, version_col=version_col)
-        else:
-            merged = merge_upsert(
-                batch_df.limit(0), batch_df, keys, version_col=version_col
+        recover_swap(snapshot_path)
+        snap = batch_df.limit(0)
+        if has_parquet(snapshot_path):
+            snap = batch_df.sparkSession.read.schema(batch_df.schema).parquet(
+                snapshot_path
             )
-        staging = f"{snapshot_path}.staging-{batch_id}"
-        try:
-            merged.write.mode("overwrite").parquet(staging)
-        except BaseException:
-            # a failed batch write must not strand the staging dir: the
-            # retried batch re-stages from scratch
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        if os.path.isdir(old_path):  # leftover from an interrupted final step
-            shutil.rmtree(old_path)
-        if os.path.isdir(snapshot_path):
-            os.rename(snapshot_path, old_path)
-        os.rename(staging, snapshot_path)
-        if os.path.isdir(old_path):
-            shutil.rmtree(old_path)
+        merged = merge_upsert(snap, batch_df, keys, version_col=version_col)
+        rename_swap(snapshot_path, batch_id, merged.write.mode("overwrite").parquet)
 
-    return (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint or tempfile.mkdtemp(prefix="smck_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _state_marker_tag(state_path: str) -> str | None:
-    """The lineage tag an existing state snapshot was folded under, or
-    None for a fresh/unmarked state — read from the manifest (manifest
-    protocol) or the ``_folded_<tag>_<n>`` marker file (rename
-    protocol, including a state parked at ``.old`` by an interrupted
-    swap).  Used only for the one-time legacy-lineage adoption in
-    :func:`_fold_lineage`."""
-    import os
-    import re
-
-    if os.path.exists(_manifest_path(state_path)):
-        with open(_manifest_path(state_path)) as f:
-            parts = f.read().split()
-        if parts:  # lineage field: "mor v LINEAGE upto base" | "v LINEAGE upto"
-            return parts[2] if parts[0] == "mor" else parts[1]
-    marker_re = re.compile(r"^_folded_([0-9a-f]{8})_(\d+)$")
-    for d in (state_path, f"{state_path}.old"):
-        if os.path.isdir(d):
-            for f in os.listdir(d):
-                mm = marker_re.match(f)
-                if mm:
-                    return mm.group(1)
-    return None
-
-
-def _fold_lineage(checkpoint: str, state_paths: tuple[str, ...] = ()) -> str:
-    """Checkpoint IDENTITY tag for the sketch-fold markers: a random
-    token minted into ``<checkpoint>/_sketchfold_lineage`` the first
-    time this checkpoint is used, then read back on every resume.  The
-    file lives INSIDE the checkpoint directory, so it shares the
-    checkpoint's fate: wipe-and-recreate the checkpoint (which restarts
-    Spark's batch ids at 0) and the tag changes with it, which is what
-    lets ``_sketch_fold_fn`` refuse instead of silently dropping every
-    batch id below the stored high-water mark.  Single-writer by
-    Spark's own contract (two streaming queries cannot share a
-    checkpoint); the write is staged + renamed so a crash mid-write
-    never leaves a torn tag.
-
-    LEGACY MIGRATION: lineage tags used to be derived as
-    ``md5(abspath(checkpoint))[:8]`` with no identity file.  A
-    checkpoint from that era has no ``_sketchfold_lineage`` file, but
-    its state snapshots carry the path-derived tag — and minting a
-    fresh random token here would make resuming that state with its
-    ORIGINAL checkpoint raise the lineage-mismatch error (whose message
-    advises exactly that resume).  So on first use of an identity-less
-    checkpoint, if any of ``state_paths`` carries a marker matching the
-    legacy derivation, ADOPT the legacy tag as this checkpoint's
-    identity instead: the match proves state and checkpoint were
-    already paired, and the adopted tag gains the identity-file
-    semantics (dies with the checkpoint) from this point on.  A marker
-    that does NOT match gets the random token, and the mismatch guard
-    fires as it must — identity cannot be proven."""
-    import hashlib
-    import os
-
-    os.makedirs(checkpoint, exist_ok=True)
-    lf = os.path.join(checkpoint, "_sketchfold_lineage")
-    if os.path.exists(lf):
-        with open(lf) as f:
-            return f.read().strip()
-    tag = uuid.uuid4().hex[:8]
-    legacy = hashlib.md5(os.path.abspath(checkpoint).encode()).hexdigest()[:8]
-    if any(_state_marker_tag(sp) == legacy for sp in state_paths):
-        tag = legacy
-    tmp = f"{lf}.tmp-{tag}"
-    with open(tmp, "w") as f:
-        f.write(tag)
-    os.rename(tmp, lf)
-    for stray in os.listdir(checkpoint):
-        if stray.startswith("_sketchfold_lineage.tmp-"):
-            try:
-                os.remove(os.path.join(checkpoint, stray))
-            except OSError:
-                pass
-    return tag
+    return start_fold_stream(stream_df, lambda _: _merge, checkpoint, "smck_")
 
 
 def stream_fold_sketch_state(
@@ -588,49 +492,26 @@ def stream_fold_sketch_state(
     geometry ``p``), ``"kmv"`` (``kmv_state_build``/``kmv_state_merge``,
     geometry ``k`` — part of the stored-state contract, same k at every
     fold), ``"bloom"`` (``bloom_state_build``/``bloom_state_merge``,
-    geometry ``m_words``/``bloom_k``) — using
-    :func:`stream_merge_to_snapshot`'s staging/rename swap discipline.
+    geometry ``m_words``/``bloom_k``).
 
-    The exactly-once marker discipline below applies to ALL THREE
-    families.  For HDR it is correctness-critical: an additive fold
-    double-counts a re-delivered batch outright.  A KMV re-fold (union
-    → distinct → rank-cap) and a Bloom re-fold (``bit_or``) are
-    mathematically no-ops when the geometry matches — but only then: a
-    re-fold under a different ``k`` re-caps the state and silently
-    corrupts the estimator.  The marker keeps all three families under
-    ONE behavioral contract (a batch folds exactly once, ever), guards
-    the set-semantics families against geometry drift between runs,
-    and skips the wasted re-fold work besides.
+    Exactly-once (the marker/manifest discipline and checkpoint lineage
+    of :mod:`streaming.state`) applies to ALL THREE families.  For HDR
+    it is correctness-critical: an additive fold, unlike a keyed upsert,
+    is NOT naturally idempotent — a re-delivered batch would double its
+    bucket counts.  A KMV re-fold (union → distinct → rank-cap) and a
+    Bloom re-fold (``bit_or``) are no-ops only when the geometry
+    matches: a re-fold under a different ``k`` re-caps the state and
+    silently corrupts the estimator.  The mark keeps all three families
+    under ONE contract (a batch folds exactly once, ever), guards the
+    set-semantics families against geometry drift between runs, and
+    skips the wasted re-fold work besides.  Folding a marked state under
+    a different checkpoint lineage raises: resume with the original
+    checkpoint, or start a fresh ``state_path``.
 
-    Exactly-once NEEDS extra machinery here: an additive fold, unlike a
-    keyed upsert, is NOT naturally idempotent — a re-delivered batch
-    would double its bucket counts.  Each successful fold therefore
-    writes ONE high-water marker ``_folded_<lineage>_<batch_id>`` INTO
-    the staged snapshot (underscore-prefixed — invisible to Spark's
-    parquet reader — and atomic with the swap because it travels inside
-    the renamed directory): batch ids are monotone within a checkpoint
-    lineage, so a re-run of any batch ``≤`` the marker skips, O(1)
-    marker state forever.  Batch ids are only meaningful WITHIN one
-    checkpoint lineage, so the marker carries a lineage tag derived
-    from checkpoint IDENTITY, not its path: a random token minted into
-    a ``_sketchfold_lineage`` file inside the checkpoint directory on
-    first use (:func:`_fold_lineage`).  A path-derived tag would be
-    fooled by wiping and recreating the checkpoint at the same path —
-    Spark restarts batch ids at 0 but the tag still matches, so every
-    batch ``≤`` the stored high-water mark would be silently SKIPPED,
-    i.e. new data dropped.  The identity file dies with the
-    checkpoint, so a recreated checkpoint gets a fresh tag and the
-    mismatch guard fires: folding a marked snapshot under a DIFFERENT
-    checkpoint lineage raises — a fresh checkpoint restarts ids at 0,
-    making re-deliveries indistinguishable from new data, and silently
-    skipping (or silently double-counting) is exactly the corruption
-    this guard exists to prevent.  Resume with the original checkpoint,
-    or start a fresh ``state_path``.  ``commit`` picks the snapshot
-    protocol: ``"rename"`` (default) swaps whole directories with POSIX
-    rename — the stream_merge_to_snapshot discipline, which requires a
-    shared POSIX filesystem; ``"manifest"`` uses immutable version
-    directories plus one atomically-replaced manifest file
-    (:func:`_sketch_fold_fn_manifest`) — the transactional-table-format
+    ``commit`` picks the layout: ``"rename"`` (default) swaps whole
+    directories (the stream_merge_to_snapshot discipline; shared POSIX
+    filesystem); ``"manifest"`` uses immutable version directories plus
+    one atomically-replaced manifest — the transactional-table-format
     shape whose only atomicity requirement (single-file replace) object
     stores DO provide, read back via :func:`manifest_state_dir`.
     ``retain_days`` turns on in-loop retention/compaction: after every
@@ -639,35 +520,14 @@ def stream_fold_sketch_state(
     family's coarse period grain (:func:`_maybe_compact`), so the
     standing state stays O(retained days + periods) under continuous
     ingest instead of growing one day-partition forever."""
-    ck = checkpoint or tempfile.mkdtemp(prefix="sfck_")
-    lineage = _fold_lineage(ck, (state_path,))
-    if commit == "rename":
-        fold_fn = _sketch_fold_fn
-    elif commit == "manifest":
-        fold_fn = _sketch_fold_fn_manifest
-    else:
-        raise ValueError(
-            f"unknown commit protocol {commit!r}: expected rename | manifest"
-        )
-    return (
-        stream_df.writeStream.foreachBatch(
-            fold_fn(
-                state_path,
-                keys,
-                value,
-                p,
-                lineage,
-                family=family,
-                k=k,
-                m_words=m_words,
-                bloom_k=bloom_k,
-                retain_days=retain_days,
-                compact_day=compact_day,
-            )
-        )
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold_stream(
+        stream_df,
+        lambda lineage: _sketch_fold_fn(
+            state_path, keys, value, p, lineage, family=family, k=k,
+            m_words=m_words, bloom_k=bloom_k, retain_days=retain_days,
+            compact_day=compact_day, commit=commit,
+        ),
+        checkpoint, "sfck_", state_path,
     )
 
 
@@ -745,8 +605,6 @@ def _maybe_compact(
         return merged
     if retain_days < 1:
         raise ValueError("retain_days must be >= 1")
-    from pyspark.sql import functions as F
-
     from scholarmind_spark.operators.sketchledger import (
         bloom_state_compact,
         hdr_state_compact,
@@ -786,6 +644,9 @@ def _maybe_compact(
     return bloom_state_compact(merged, day_col, cutoff)
 
 
+_SKETCH_LAYOUTS = {"rename": "rename", "manifest": "cow"}
+
+
 def _sketch_fold_fn(
     state_path: str,
     keys: list[str],
@@ -798,306 +659,76 @@ def _sketch_fold_fn(
     bloom_k: int = 4,
     retain_days: int | None = None,
     compact_day: str | None = None,
+    commit: str = "rename",
 ):
-    """The foreachBatch fold of :func:`stream_fold_sketch_state`
-    (rename-commit protocol), exposed so tests can exercise re-delivery
-    (same batch id twice) and lineage-mismatch refusal
-    deterministically."""
-    import os
-    import re
-
+    """The foreachBatch fold of :func:`stream_fold_sketch_state`, exposed
+    so tests can exercise re-delivery (same batch id twice) and
+    lineage-mismatch refusal deterministically.  One body for both
+    ``commit`` protocols: only where the live state sits and the commit
+    step differ.  ``"rename"`` stages the folded state with its
+    ``_folded_`` mark and swaps it in; ``"manifest"`` writes the
+    immutable ``v-(n+1)``, publishes it with the new high-water mark, and
+    collects versions older than n."""
+    layout = _SKETCH_LAYOUTS.get(commit)
+    if layout is None:
+        raise ValueError(
+            f"unknown commit protocol {commit!r}: expected rename | manifest"
+        )
     build, merge = _family_ops(family, keys, value, p, k, m_words, bloom_k)
 
-    old_path = f"{state_path}.old"
-    marker_re = re.compile(r"^_folded_([0-9a-f]{8})_(\d+)$")
+    def _commit(merged: DataFrame, head, batch_id: int) -> None:
+        if layout == "rename":
+            def write(staging):
+                merged.write.mode("overwrite").parquet(staging)
+                write_marker(staging, lineage, batch_id)
 
-    def _read_marker():
-        if not os.path.isdir(state_path):
-            return None
-        for f in os.listdir(state_path):
-            m = marker_re.match(f)
-            if m:
-                return m.group(1), int(m.group(2))
-        return None
+            rename_swap(state_path, batch_id, write)
+            return
+        v = head.version + 1 if head else 0
+        # overwrite mode: a crashed predecessor's orphan for the SAME
+        # version is replaced, never merged with
+        merged.write.mode("overwrite").parquet(version_dir(state_path, v))
+        publish_manifest(state_path, Manifest(v, lineage, batch_id))
+        gc_versions(state_path, v - 1)
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if not os.path.isdir(state_path) and os.path.isdir(old_path):
-            os.rename(old_path, state_path)  # recover interrupted swap
-        if os.path.exists(_manifest_path(state_path)):
-            # the directory-swap below would rmtree the MANIFEST and
-            # every version directory — all accumulated state destroyed
-            # and replaced by one microbatch
-            raise ValueError(
-                f"state at {state_path} is manifest-committed; folding "
-                "it with commit='rename' would destroy it — resume with "
-                "commit='manifest', or start a fresh state_path"
-            )
-        mk = _read_marker()
-        if mk is not None:
-            mk_lineage, folded_upto = mk
-            if mk_lineage != lineage:
-                raise ValueError(
-                    f"sketch state at {state_path} was folded under a "
-                    "different checkpoint lineage; batch ids from this "
-                    "checkpoint cannot be deduplicated against it — "
-                    "resume with the original checkpoint, or fold into "
-                    "a fresh state_path"
-                )
-            if batch_id <= folded_upto:
-                return  # re-delivered batch: already folded exactly once
+        head = fold_gate(state_path, lineage, batch_id, layout, "sketch")
+        if head is SKIP:
+            return
         delta = build(batch_df)
-        if os.path.isdir(state_path) and any(
-            f.endswith(".parquet") for f in os.listdir(state_path)
-        ):
-            snap = spark.read.schema(delta.schema).parquet(state_path)
-            merged = merge(snap, delta)
+        if layout == "rename":
+            live = state_path
         else:
-            merged = delta
+            live = version_dir(state_path, head.version) if head else ""
+        merged = delta
+        if has_parquet(live):
+            snap = batch_df.sparkSession.read.schema(delta.schema).parquet(live)
+            merged = merge(snap, delta)
         cached = None
-        staging = f"{state_path}.staging-{batch_id}"
+        if retain_days is not None:
+            # _maybe_compact runs a driver-side max-day action over the
+            # merged state; without a cache the write would re-execute
+            # the whole merge (snapshot read + delta build + union/
+            # groupBy) a second time
+            merged = cached = merged.persist()
         try:
-            if retain_days is not None:
-                # _maybe_compact runs a driver-side max-day action over
-                # the merged state; without a cache the write below
-                # would re-execute the whole merge (snapshot read +
-                # delta build + union/groupBy) a second time
-                cached = merged.persist()
-                merged = cached
             merged = _maybe_compact(
                 merged, family, compact_day or keys[0], retain_days, k
             )
-            try:
-                merged.write.mode("overwrite").parquet(staging)
-                open(
-                    os.path.join(staging, f"_folded_{lineage}_{batch_id}"), "w"
-                ).close()
-            except BaseException:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
+            _commit(merged, head, batch_id)
         finally:
             if cached is not None:
                 cached.unpersist()
-        if os.path.isdir(old_path):
-            shutil.rmtree(old_path)
-        if os.path.isdir(state_path):
-            os.rename(state_path, old_path)
-        os.rename(staging, state_path)
-        if os.path.isdir(old_path):
-            shutil.rmtree(old_path)
 
     return _fold
-
-
-# --------------------------------------------------- manifest commit
-#
-# The rename-commit protocol above swaps WHOLE DIRECTORIES with POSIX
-# rename — correct on a shared POSIX filesystem, unavailable on object
-# stores (S3/GCS have no atomic directory rename).  The manifest
-# protocol below is the transactional-table-format shape reduced to its
-# minimum: immutable VERSION DIRECTORIES plus ONE small manifest file
-# whose atomic replacement is the only primitive required — os.replace
-# locally, a conditional PUT (If-Match / x-goog-if-generation-match) on
-# an object store.  Readers resolve the manifest, then read exactly the
-# version it names; a crash at ANY point before the manifest publish
-# leaves the previous version live and the orphan version directory is
-# overwritten by the retried batch and garbage-collected after the next
-# successful publish.  Exactly-once state (lineage + folded-upto
-# high-water mark) travels INSIDE the manifest, so marker and data
-# publish in the same atomic step.
-
-
-def _manifest_path(state_path: str) -> str:
-    import os
-
-    return os.path.join(state_path, "MANIFEST")
-
-
-def _manifest_read(state_path: str):
-    """(version, lineage, folded_upto) or None if never published.
-    Refuses a merge-on-read manifest cleanly — a copy-on-write fold
-    pointed at MoR state would read the base version directory as if
-    it held the whole state and silently drop every delta."""
-    import os
-
-    mp = _manifest_path(state_path)
-    if not os.path.exists(mp):
-        return None
-    with open(mp) as f:
-        parts = f.read().split()
-    if parts and parts[0] == "mor":
-        raise ValueError(
-            f"state at {state_path} is merge-on-read; fold it with "
-            "mode='mor' (and read it with ledger_state_mor), or start "
-            "a fresh state_path"
-        )
-    version, lineage, upto = parts
-    return int(version), lineage, int(upto)
-
-
-def _manifest_publish(
-    state_path: str, version: int, lineage: str, batch_id: int
-) -> None:
-    """Atomically point the manifest at ``version``: staged write +
-    os.replace (THE commit — on an object store this one call becomes a
-    conditional PUT; nothing else in the protocol needs atomicity)."""
-    import os
-
-    mp = _manifest_path(state_path)
-    tmp = f"{mp}.tmp-{version}"
-    with open(tmp, "w") as f:
-        f.write(f"{version} {lineage} {batch_id}\n")
-    os.replace(tmp, mp)
 
 
 def manifest_state_dir(state_path: str) -> str | None:
     """Resolve the CURRENT version directory of a manifest-committed
     state snapshot (what a reader passes to ``spark.read.parquet``), or
     None if nothing has been published yet."""
-    import os
-
-    m = _manifest_read(state_path)
-    if m is None:
-        return None
-    return os.path.join(state_path, f"v-{m[0]}")
-
-
-_SKIP = object()  # _manifest_fold_gate sentinel: re-delivered batch
-
-
-def _manifest_fold_gate(state_path: str, lineage: str, batch_id: int, what: str):
-    """The shared pre-fold manifest discipline — ONE implementation so
-    the sketch and ledger folds can never diverge (an r11 review found
-    the hand-rolled copies already had: the ledger fold missed the
-    rename-layout refusal).  Returns the current version (-1 if never
-    published) or the ``_SKIP`` sentinel for a re-delivered batch id.
-
-    Refuses: (a) a rename-committed layout — loose parquet files or
-    ``_folded_`` markers in state_path, or the state parked at
-    ``state_path + '.old'`` by an interrupted rename swap (the rename
-    fold self-heals that window; a manifest fold would orphan it); and
-    (b) a foreign checkpoint lineage."""
-    import os
-
-    os.makedirs(state_path, exist_ok=True)
-    m = _manifest_read(state_path)
-    if m is None:
-        if os.path.isdir(f"{state_path}.old") or any(
-            f.endswith(".parquet") or f.startswith("_folded_")
-            for f in os.listdir(state_path)
-        ):
-            raise ValueError(
-                f"state at {state_path} is rename-committed; folding it "
-                "with commit='manifest' would orphan it — resume with "
-                "commit='rename', or start a fresh state_path"
-            )
-        return -1
-    version, mk_lineage, folded_upto = m
-    if mk_lineage != lineage:
-        raise ValueError(
-            f"{what} state at {state_path} was folded under a "
-            "different checkpoint lineage; batch ids from this "
-            "checkpoint cannot be deduplicated against it — "
-            "resume with the original checkpoint, or fold into "
-            "a fresh state_path"
-        )
-    if batch_id <= folded_upto:
-        return _SKIP  # re-delivered batch: already folded exactly once
-    return version
-
-
-def _manifest_gc(state_path: str, keep_from_version: int) -> None:
-    """Post-publish housekeeping shared by the manifest folds: drop
-    version dirs older than ``keep_from_version`` (the just-superseded
-    version is kept one cycle — a reader resolving the old manifest
-    mid-publish may still be scanning it) and any MANIFEST.tmp-* files
-    a crashed publish orphaned."""
-    import os
-    import shutil as _shutil
-
-    for f in os.listdir(state_path):
-        # only true version DIRECTORIES are candidates: a stray
-        # non-numeric entry (user-made 'v-backup', a partial 'v-' name)
-        # must not raise here — GC runs AFTER the manifest publish, so
-        # a crash at this point would fail the microbatch on
-        # otherwise-healthy, already-committed state
-        if (
-            f.startswith("v-")
-            and f[2:].isdigit()
-            and os.path.isdir(os.path.join(state_path, f))
-            and int(f[2:]) < keep_from_version
-        ):
-            _shutil.rmtree(os.path.join(state_path, f), ignore_errors=True)
-        elif f.startswith("MANIFEST.tmp-"):
-            try:
-                os.remove(os.path.join(state_path, f))
-            except OSError:
-                pass
-
-
-def _sketch_fold_fn_manifest(
-    state_path: str,
-    keys: list[str],
-    value: str,
-    p: int,
-    lineage: str,
-    family: str = "hdr",
-    k: int = 64,
-    m_words: int = 64,
-    bloom_k: int = 4,
-    retain_days: int | None = None,
-    compact_day: str | None = None,
-):
-    """Manifest-commit twin of :func:`_sketch_fold_fn` — same family
-    folds, same exactly-once semantics, no directory rename anywhere:
-
-    1. read the manifest (version n, lineage, folded-upto);
-    2. refuse a foreign lineage, skip a re-delivered batch id;
-    3. write the folded state to the IMMUTABLE directory ``v-(n+1)``
-       (a retried batch overwrites the same orphan — ids are stable);
-    4. publish the manifest naming ``v-(n+1)`` with the new high-water
-       mark — the single atomic step;
-    5. garbage-collect version directories older than n (n itself is
-       kept one cycle: a reader resolving the old manifest mid-publish
-       may still be scanning it)."""
-    import os
-
-    build, merge = _family_ops(family, keys, value, p, k, m_words, bloom_k)
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        version = _manifest_fold_gate(state_path, lineage, batch_id, "sketch")
-        if version is _SKIP:
-            return
-        delta = build(batch_df)
-        if version >= 0:
-            snap = spark.read.schema(delta.schema).parquet(
-                os.path.join(state_path, f"v-{version}")
-            )
-            merged = merge(snap, delta)
-        else:
-            merged = delta
-        cached = None
-        try:
-            if retain_days is not None:
-                # double-execution guard: _maybe_compact runs a driver
-                # max-day action; the write would re-run the merge
-                cached = merged.persist()
-                merged = cached
-            merged = _maybe_compact(
-                merged, family, compact_day or keys[0], retain_days, k
-            )
-            new_dir = os.path.join(state_path, f"v-{version + 1}")
-            # overwrite mode: a crashed predecessor's orphan for the
-            # SAME version is replaced, never merged with
-            merged.write.mode("overwrite").parquet(new_dir)
-        finally:
-            if cached is not None:
-                cached.unpersist()
-        _manifest_publish(state_path, version + 1, lineage, batch_id)
-        _manifest_gc(state_path, version)
-
-    return _fold
+    m = read_manifest(state_path, "cow")
+    return None if m is None else version_dir(state_path, m.version)
 
 
 # Merge-on-read base fp files are hash-partitioned by a bucket of the
@@ -1105,12 +736,10 @@ def _sketch_fold_fn_manifest(
 # resolved row count — each bucket holds ~_MOR_BUCKET_ROWS rows no
 # matter how big the corpus grows, so a fold's neg-lookup (which only
 # needs the batch ids' current rows) reads ≤ |batch| buckets ×
-# ~constant rows: O(batch), flat in the standing corpus.  This is the
-# chain-read pruning SCALE.md's r12 MoR entry named as the residual
-# (the fold WROTE O(batch) but still READ O(state) per fold).
-# Production default 100k rows/bucket ≈ tens of MB of fingerprints per
-# bucket file; the probe overrides it down to make the read term
-# measurable at test scale.
+# ~constant rows: O(batch), flat in the standing corpus.  Production
+# default 100k rows/bucket ≈ tens of MB of fingerprints per bucket
+# file; the probe overrides it down to make the read term measurable
+# at test scale.
 _MOR_BUCKET_ROWS = 100_000
 _MOR_MAX_BUCKETS = 4096
 
@@ -1136,23 +765,19 @@ def stream_ledger_ingest(
     The state pair MUST commit atomically: a crash between writing new
     fingerprints and new counts would leave the two halves describing
     different corpora, and every downstream match would be silently
-    wrong.  Directory renames cannot swap two directories atomically,
-    so this fold uses the MANIFEST protocol exclusively: each version
-    directory ``v-<n>`` holds BOTH tables (``fp/`` and ``counts/``),
-    and one atomic manifest replacement publishes them together — the
-    multi-table transactional commit is exactly what the manifest shape
-    buys over renames.  Exactly-once follows the sketch-fold
-    discipline: lineage + high-water mark live inside the manifest
-    (:func:`_fold_lineage`; a re-delivered batch id is skipped, a
-    foreign checkpoint lineage refuses).  Read the current tables with
-    :func:`ledger_state_dirs`.
+    wrong.  So this fold uses a manifest layout of
+    :mod:`streaming.state` exclusively — one manifest publish makes both
+    tables visible together, the multi-table commit renames cannot give.
+    Exactly-once follows the sketch-fold discipline (a re-delivered
+    batch id is skipped, a foreign checkpoint lineage refuses).
 
     ``mode`` picks the state layout:
 
     - ``"cow"`` (default, copy-on-write): each fold REWRITES both full
-      tables into its version dir — simplest reads (plain parquet),
-      per-fold cost O(delta) compute + O(standing corpus) rewrite
-      (measured ~4 µs/doc at sf0.1, SCALE.md r12 probe).
+      tables into its version dir — simplest reads (plain parquet, via
+      :func:`ledger_state_dirs`), per-fold cost O(delta) compute +
+      O(standing corpus) rewrite (measured ~4 µs/doc at sf0.1, SCALE.md
+      r12 probe).
     - ``"mor"`` (merge-on-read): each fold writes only its DELTA pair
       (fp upserts with a sequence number, signed count deltas) —
       per-fold write cost O(batch); every ``compact_every`` folds the
@@ -1160,36 +785,47 @@ def stream_ledger_ingest(
       write.  Read with :func:`ledger_state_mor` (latest-seq-wins +
       tombstone drop + counts sum — operators.ledger.ledger_mor_*).
       Retire docs with :func:`ledger_mor_retire` (a tombstone-delta
-      transaction).  The two layouts share the manifest's atomicity
-      and exactly-once discipline but refuse each other's state."""
-    ck = checkpoint or tempfile.mkdtemp(prefix="slck_")
-    lineage = _fold_lineage(ck, (state_path,))
-    if mode == "cow":
-        fold = _ledger_ingest_fn(state_path, lineage, id_col, text_col, shingle_k)
-    elif mode == "mor":
-        fold = _ledger_ingest_fn_mor(
+      transaction).  The two layouts refuse each other's state."""
+    if mode not in ("cow", "mor"):
+        raise ValueError(f"unknown ledger mode {mode!r}: expected cow | mor")
+
+    def make_fold(lineage):
+        if mode == "cow":
+            return _ledger_ingest_fn(
+                state_path, lineage, id_col, text_col, shingle_k
+            )
+        return _ledger_ingest_fn_mor(
             state_path, lineage, id_col, text_col, shingle_k, compact_every,
             bucket_rows,
         )
-    else:
-        raise ValueError(f"unknown ledger mode {mode!r}: expected cow | mor")
-    return (
-        stream_docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
+
+    return start_fold_stream(stream_docs, make_fold, checkpoint, "slck_", state_path)
 
 
 def ledger_state_dirs(state_path: str) -> tuple[str, str] | None:
     """(fp_dir, counts_dir) of the CURRENT published ledger version, or
     None if nothing has been published yet."""
-    import os
-
     base = manifest_state_dir(state_path)
     if base is None:
         return None
     return os.path.join(base, "fp"), os.path.join(base, "counts")
+
+
+def _ledger_batch_fp(batch_df: DataFrame, id_col, text_col, shingle_k):
+    """Fingerprints of a microbatch, one row per doc id.  A raw
+    microbatch can carry the SAME doc id twice (re-crawl inside one
+    trigger window); ledger_revise's contract is one row per id, and
+    duplicate ids would corrupt both state tables (double-added counts /
+    concatenated hash arrays).  Rows within one microbatch have NO
+    order, so "latest" is undefined — pick ONE version deterministically
+    (max text); callers needing true latest-wins must deliver at most
+    one version per batch (the checkpointed file source does) or carry
+    the version in a later batch, which revise then applies."""
+    from scholarmind_spark.operators.ledger import SHINGLE_K, ledger_fingerprints
+
+    uniq = batch_df.groupBy(F.col(id_col)).agg(F.max(text_col).alias(text_col))
+    k = SHINGLE_K if shingle_k is None else shingle_k
+    return ledger_fingerprints(uniq, id_col, text_col, k)
 
 
 def _ledger_ingest_fn(
@@ -1201,167 +837,40 @@ def _ledger_ingest_fn(
 ):
     """The foreachBatch body of :func:`stream_ledger_ingest`, exposed
     for deterministic re-delivery / lineage-refusal tests."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from scholarmind_spark.operators.ledger import (
-        ledger_fingerprints,
         ledger_revise,
         ledger_shingle_counts,
     )
 
-    def _fp(df):
-        if shingle_k is None:
-            return ledger_fingerprints(df, id_col, text_col)
-        return ledger_fingerprints(df, id_col, text_col, shingle_k)
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        version = _manifest_fold_gate(state_path, lineage, batch_id, "ledger")
-        if version is _SKIP:
+        head = fold_gate(state_path, lineage, batch_id, "cow", "ledger")
+        if head is SKIP:
             return
-        # a raw microbatch can carry the SAME doc id twice (re-crawl
-        # inside one trigger window); ledger_revise's contract is one
-        # row per id, and duplicate ids would corrupt both state tables
-        # (double-added counts / concatenated hash arrays).  Rows within
-        # one microbatch have NO order, so "latest" is undefined — pick
-        # ONE version deterministically (max text); callers needing true
-        # latest-wins must deliver at most one version per batch (the
-        # checkpointed file source does) or carry the version in a later
-        # batch, which revise then applies.
-        uniq = batch_df.groupBy(F.col(id_col)).agg(
-            F.max(text_col).alias(text_col)
-        )
-        rev_fp = _fp(uniq).persist()  # feeds revise twice (fp+counts)
+        spark = batch_df.sparkSession
+        v = head.version + 1 if head else 0
+        # feeds revise twice (fp + counts)
+        rev_fp = _ledger_batch_fp(batch_df, id_col, text_col, shingle_k).persist()
         try:
-            if version >= 0:
-                base = os.path.join(state_path, f"v-{version}")
-                fp_state = spark.read.parquet(os.path.join(base, "fp"))
-                counts_state = spark.read.parquet(
-                    os.path.join(base, "counts")
-                )
+            if head:
+                base = version_dir(state_path, head.version)
                 new_fp, new_counts = ledger_revise(
-                    fp_state, counts_state, rev_fp
+                    spark.read.parquet(os.path.join(base, "fp")),
+                    spark.read.parquet(os.path.join(base, "counts")),
+                    rev_fp,
                 )
             else:
                 new_fp, new_counts = rev_fp, ledger_shingle_counts(rev_fp)
-            new_dir = os.path.join(state_path, f"v-{version + 1}")
-            # both tables land INSIDE one version dir; the manifest
-            # publish below makes them visible together or not at all
-            new_fp.write.mode("overwrite").parquet(
-                os.path.join(new_dir, "fp")
-            )
+            new_dir = version_dir(state_path, v)
+            new_fp.write.mode("overwrite").parquet(os.path.join(new_dir, "fp"))
             new_counts.write.mode("overwrite").parquet(
                 os.path.join(new_dir, "counts")
             )
         finally:
             rev_fp.unpersist()
-        _manifest_publish(state_path, version + 1, lineage, batch_id)
-        _manifest_gc(state_path, version)
+        publish_manifest(state_path, Manifest(v, lineage, batch_id))
+        gc_versions(state_path, v - 1)
 
     return _fold
-
-
-# ------------------------------------------- merge-on-read ledger fold
-#
-# The copy-on-write fold above rewrites both full state tables per
-# version; SCALE.md's r12 probe measured the rewrite term (~4 µs/doc)
-# and named the scale path: merge-on-read.  This block is that path —
-# the transactional-table-format delta/compact shape reduced to the
-# same minimum as the manifest protocol itself:
-#
-# - version dir of an INCREMENTAL fold: ``v-n/dfp`` (fp upserts /
-#   tombstones with seq=n) + ``v-n/dcounts`` (signed count deltas) —
-#   O(batch) bytes written, never O(corpus);
-# - version dir of a COMPACTION fold (every ``compact_every`` folds):
-#   ``v-n/fp`` + ``v-n/counts`` — the resolved chain materialized as a
-#   new base (the base fp keeps the (seq, tomb) columns so base and
-#   delta files are union-compatible);
-# - manifest line ``mor <version> <lineage> <upto> <base_version>`` —
-#   readers resolve versions [base..version]; the extra field is what
-#   lets the CoW/MoR folds refuse each other's state cleanly;
-# - GC keeps the previous manifest's chain one cycle (a reader resolving
-#   the old manifest mid-publish may still be scanning any of it).
-
-
-def _manifest_read_mor(state_path: str, what: str = "ledger"):
-    """(version, lineage, folded_upto, base_version) or None.  Refuses
-    a copy-on-write manifest cleanly (see :func:`_manifest_read` for
-    the mirror-image guard) — with remediation advice matched to the
-    CALLER's state family: 'fold it with mode=cow' only makes sense
-    for the dedup ledger; a vector-index caller hitting a CoW manifest
-    has pointed its index at some other state's directory."""
-    import os
-
-    mp = _manifest_path(state_path)
-    if not os.path.exists(mp):
-        return None
-    with open(mp) as f:
-        parts = f.read().split()
-    if not parts or parts[0] != "mor":
-        if what == "vector index":
-            raise ValueError(
-                f"state at {state_path} carries a copy-on-write ledger "
-                "manifest, not a vector-index state — point the index "
-                "at a fresh state_path and re-fold the corpus into it"
-            )
-        raise ValueError(
-            f"state at {state_path} is copy-on-write; fold it with "
-            "mode='cow' (and read it with ledger_state_dirs), or start "
-            "a fresh state_path"
-        )
-    _, version, lineage, upto, base_v = parts
-    return int(version), lineage, int(upto), int(base_v)
-
-
-def _manifest_publish_mor(
-    state_path: str, version: int, lineage: str, batch_id: int, base_v: int
-) -> None:
-    import os
-
-    mp = _manifest_path(state_path)
-    tmp = f"{mp}.tmp-{version}"
-    with open(tmp, "w") as f:
-        f.write(f"mor {version} {lineage} {batch_id} {base_v}\n")
-    os.replace(tmp, mp)
-
-
-def _mor_fold_gate(
-    state_path: str, lineage: str, batch_id: int, what: str = "ledger"
-):
-    """(version, base_version) — (-1, -1) if never published — or the
-    ``_SKIP`` sentinel; same refusals as :func:`_manifest_fold_gate`
-    (rename layout, foreign lineage) plus the CoW-manifest refusal
-    built into :func:`_manifest_read_mor` (``what`` picks that
-    refusal's remediation text: 'ledger' | 'vector index')."""
-    import os
-
-    os.makedirs(state_path, exist_ok=True)
-    m = _manifest_read_mor(state_path, what)
-    if m is None:
-        if os.path.isdir(f"{state_path}.old") or any(
-            f.endswith(".parquet") or f.startswith("_folded_")
-            for f in os.listdir(state_path)
-        ):
-            raise ValueError(
-                f"state at {state_path} is rename-committed; folding it "
-                f"as a merge-on-read {what} would orphan it — start a "
-                "fresh state_path"
-            )
-        return -1, -1
-    version, mk_lineage, folded_upto, base_v = m
-    if mk_lineage != lineage:
-        raise ValueError(
-            f"{what} state at {state_path} was folded under a "
-            "different checkpoint lineage; batch ids from this "
-            "checkpoint cannot be deduplicated against it — "
-            "resume with the original checkpoint, or fold into "
-            "a fresh state_path"
-        )
-    if batch_id <= folded_upto:
-        return _SKIP
-    return version, base_v
 
 
 def _mor_bucket_expr(nb: int):
@@ -1373,31 +882,19 @@ def _mor_bucket_expr(nb: int):
     return F.pmod(F.xxhash64("id"), F.lit(nb))
 
 
-def _mor_nbuckets(state_path: str, base_v: int) -> int | None:
-    """Bucket count of the base at ``base_v`` (sidecar written by the
-    compaction that produced it), or None for a pre-bucketing base."""
-    import os
-
-    p = os.path.join(state_path, f"v-{base_v}", "nbuckets.txt")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return int(f.read().strip())
-
-
-def _mor_write_base_fp(full_fp, new_dir: str, n_rows: int, bucket_rows: int) -> None:
+def _mor_write_base_fp(
+    full_fp, state_path: str, version: int, n_rows: int, bucket_rows: int
+) -> None:
     """Materialize a base fp table partitioned by id-hash bucket, with
     the bucket count derived from the resolved size (sidecar-recorded
     for the pruned read path)."""
-    import math
-    import os
-
     nb = max(1, min(_MOR_MAX_BUCKETS, math.ceil(max(n_rows, 1) / bucket_rows)))
     full_fp.withColumn("bucket", _mor_bucket_expr(nb)).write.mode(
         "overwrite"
-    ).partitionBy("bucket").parquet(os.path.join(new_dir, "fp"))
-    with open(os.path.join(new_dir, "nbuckets.txt"), "w") as f:
-        f.write(f"{nb}\n")
+    ).partitionBy("bucket").parquet(
+        os.path.join(version_dir(state_path, version), "fp")
+    )
+    write_sidecar(state_path, version, "nbuckets.txt", str(nb))
 
 
 def _mor_chains(
@@ -1410,26 +907,18 @@ def _mor_chains(
     iterable of bucket ids — prunes the base scan to those partitions
     (exact for any id whose bucket is in the set: an id's base rows
     live ONLY in its bucket, and every delta is still read)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    fp_base = spark.read.parquet(os.path.join(state_path, f"v-{base_v}", "fp"))
-    if "bucket" in fp_base.columns:
+    base = version_dir(state_path, base_v)
+    fp_chain = spark.read.parquet(os.path.join(base, "fp"))
+    if "bucket" in fp_chain.columns:
         if fp_buckets is not None:
-            fp_base = fp_base.where(F.col("bucket").isin(list(fp_buckets)))
-        fp_base = fp_base.select("id", "n", "hs", "seq", "tomb")
-    dfp_paths = [
-        os.path.join(state_path, f"v-{i}", "dfp")
-        for i in range(base_v + 1, upto_v + 1)
-    ]
-    fp_chain = fp_base
+            fp_chain = fp_chain.where(F.col("bucket").isin(list(fp_buckets)))
+        fp_chain = fp_chain.select("id", "n", "hs", "seq", "tomb")
+    dfp_paths = chain_dirs(state_path, base_v, upto_v, "dfp")
     if dfp_paths:
         fp_chain = fp_chain.unionByName(spark.read.parquet(*dfp_paths))
-    cnt_paths = [os.path.join(state_path, f"v-{base_v}", "counts")] + [
-        os.path.join(state_path, f"v-{i}", "dcounts")
-        for i in range(base_v + 1, upto_v + 1)
-    ]
+    cnt_paths = [os.path.join(base, "counts")] + chain_dirs(
+        state_path, base_v, upto_v, "dcounts"
+    )
     return fp_chain, spark.read.parquet(*cnt_paths)
 
 
@@ -1438,10 +927,8 @@ def _mor_touched_buckets(ids_df, state_path: str, base_v: int):
     None when the base predates bucketing.  The collect is bounded by
     min(|ids|, nbuckets) values: microbatch-sized driver data, the same
     bound the fold's own batch already satisfies."""
-    import os
-
-    nb = _mor_nbuckets(state_path, base_v)
-    if nb is None or nb <= 1:
+    nb = read_sidecar(state_path, base_v, "nbuckets.txt")
+    if nb is None or int(nb) <= 1:
         return None
     # Cast the probe ids to the BASE fp schema's id type before hashing:
     # a caller-supplied id column of a different type (IntegerType retire
@@ -1450,12 +937,12 @@ def _mor_touched_buckets(ids_df, state_path: str, base_v: int):
     # no-ops (tombstones skipped, counts never decremented).  Footer-only
     # schema read; no data scan.
     fp_schema = ids_df.sparkSession.read.parquet(
-        os.path.join(state_path, f"v-{base_v}", "fp")
+        os.path.join(version_dir(state_path, base_v), "fp")
     ).schema
     ids = ids_df.select(F.col("id").cast(fp_schema["id"].dataType).alias("id"))
     return [
         r["b"]
-        for r in ids.select(_mor_bucket_expr(nb).alias("b")).distinct().collect()
+        for r in ids.select(_mor_bucket_expr(int(nb)).alias("b")).distinct().collect()
     ]
 
 
@@ -1471,11 +958,10 @@ def ledger_state_mor(spark, state_path: str):
         ledger_mor_resolve_fp,
     )
 
-    m = _manifest_read_mor(state_path)
+    m = read_manifest(state_path, "mor")
     if m is None:
         return None
-    version, _, _, base_v = m
-    fp_chain, cnt_chain = _mor_chains(spark, state_path, base_v, version)
+    fp_chain, cnt_chain = _mor_chains(spark, state_path, m.base, m.version)
     return ledger_mor_resolve_fp(fp_chain), ledger_mor_resolve_counts(cnt_chain)
 
 
@@ -1501,13 +987,9 @@ def _ledger_ingest_fn_mor(
     Every ``compact_every`` folds the chain is resolved (unpruned —
     the one deliberately O(state) read, amortized) and materialized as
     a new base, amortizing the O(state) write the CoW fold pays every
-    time."""
-    import os
-
-    from pyspark.sql import functions as F
-
+    time.  The base fp keeps the (seq, tomb) columns so base and delta
+    files are union-compatible."""
     from scholarmind_spark.operators.ledger import (
-        ledger_fingerprints,
         ledger_mor_resolve_counts,
         ledger_mor_resolve_fp,
         ledger_shingle_counts,
@@ -1516,26 +998,18 @@ def _ledger_ingest_fn_mor(
     if compact_every < 1:
         raise ValueError("compact_every must be >= 1")
 
-    def _fp(df):
-        if shingle_k is None:
-            return ledger_fingerprints(df, id_col, text_col)
-        return ledger_fingerprints(df, id_col, text_col, shingle_k)
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        gate = _mor_fold_gate(state_path, lineage, batch_id)
-        if gate is _SKIP:
+        head = fold_gate(state_path, lineage, batch_id, "mor", "ledger")
+        if head is SKIP:
             return
-        version, base_v = gate
+        spark = batch_df.sparkSession
+        version, base_v = (head.version, head.base) if head else (-1, -1)
         new_v = version + 1
-        # same within-batch dedup contract as the CoW fold
-        uniq = batch_df.groupBy(F.col(id_col)).agg(
-            F.max(text_col).alias(text_col)
-        )
-        rev_fp = _fp(uniq).persist()  # feeds dfp + pos counts (+ compact)
+        # feeds dfp + pos counts (+ compact)
+        rev_fp = _ledger_batch_fp(batch_df, id_col, text_col, shingle_k).persist()
         try:
             pos = ledger_shingle_counts(rev_fp)
-            if version >= 0:
+            if head:
                 # the neg-lookup needs ONLY the batch ids' current rows:
                 # prune the base scan to the buckets the batch touches —
                 # O(batch) read against a bucketed base, vs the full
@@ -1565,13 +1039,12 @@ def _ledger_ingest_fn_mor(
                 F.lit(new_v).cast("int").alias("seq"),
                 F.lit(False).alias("tomb"),
             )
-            new_dir = os.path.join(state_path, f"v-{new_v}")
-            compact = version >= 0 and (new_v - base_v) >= compact_every
-            if compact or version < 0:
+            new_dir = version_dir(state_path, new_v)
+            if head is None or new_v - base_v >= compact_every:
                 # materialize a new BASE: resolved chain + this delta —
                 # the one path that reads the UNPRUNED chain (O(state)
                 # by design, amortized over compact_every folds)
-                if version >= 0:
+                if head:
                     fp_chain, cnt_chain = _mor_chains(
                         spark, state_path, base_v, version
                     )
@@ -1593,7 +1066,7 @@ def _ledger_ingest_fn_mor(
                     # resolved table is about to be written anyway, so
                     # the extra action stays inside the amortized path
                     _mor_write_base_fp(
-                        full_fp, new_dir, full_fp.count(), bucket_rows
+                        full_fp, state_path, new_v, full_fp.count(), bucket_rows
                     )
                 finally:
                     full_fp.unpersist()
@@ -1602,19 +1075,15 @@ def _ledger_ingest_fn_mor(
                 )
                 new_base = new_v
             else:
-                dfp.write.mode("overwrite").parquet(
-                    os.path.join(new_dir, "dfp")
-                )
+                dfp.write.mode("overwrite").parquet(os.path.join(new_dir, "dfp"))
                 dcounts.write.mode("overwrite").parquet(
                     os.path.join(new_dir, "dcounts")
                 )
                 new_base = base_v
         finally:
             rev_fp.unpersist()
-        _manifest_publish_mor(state_path, new_v, lineage, batch_id, new_base)
-        # the previous manifest's readers need [base_v..version]; keep
-        # that whole chain one cycle
-        _manifest_gc(state_path, base_v if base_v >= 0 else 0)
+        publish_manifest(state_path, Manifest(new_v, lineage, batch_id, new_base))
+        gc_versions(state_path, max(base_v, 0))
 
     return _fold
 
@@ -1628,26 +1097,21 @@ def ledger_mor_retire(spark, state_path: str, retired_ids) -> None:
     unchanged), exactly like the CoW retirement transactions the r12
     ledger_sim runs; ids absent from the state are no-ops.
     ``retired_ids``: a one-column ``id`` DataFrame."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from scholarmind_spark.operators.ledger import (
         ledger_mor_resolve_fp,
         ledger_shingle_counts,
     )
 
-    m = _manifest_read_mor(state_path)
+    m = read_manifest(state_path, "mor")
     if m is None:
         raise ValueError(f"no published merge-on-read state at {state_path}")
-    version, lineage, upto, base_v = m
-    new_v = version + 1
+    new_v = m.version + 1
     ids = retired_ids.select("id").distinct()
     # same bucket pruning as the fold's neg-lookup: only the retired
     # ids' current rows are needed
-    touched = _mor_touched_buckets(ids, state_path, base_v)
+    touched = _mor_touched_buckets(ids, state_path, m.base)
     fp_chain, _ = _mor_chains(
-        spark, state_path, base_v, version, fp_buckets=touched
+        spark, state_path, m.base, m.version, fp_buckets=touched
     )
     removed = ledger_mor_resolve_fp(fp_chain).join(ids, "id", "left_semi")
     neg = ledger_shingle_counts(removed).select(
@@ -1664,73 +1128,11 @@ def ledger_mor_retire(spark, state_path: str, retired_ids) -> None:
         F.lit(new_v).cast("int").alias("seq"),
         F.lit(True).alias("tomb"),
     )
-    new_dir = os.path.join(state_path, f"v-{new_v}")
+    new_dir = version_dir(state_path, new_v)
     tomb.write.mode("overwrite").parquet(os.path.join(new_dir, "dfp"))
     neg.write.mode("overwrite").parquet(os.path.join(new_dir, "dcounts"))
-    _manifest_publish_mor(state_path, new_v, lineage, upto, base_v)
-    _manifest_gc(state_path, base_v)
-
-
-# ------------------------------------------- streaming ANN index fold
-#
-# The IVF-PQ index as MAINTAINED STATE: microbatches of vectors fold
-# into a manifest-committed (routing, codes) table — the
-# production-vector-store shape (new embeddings arrive continuously;
-# rebuilding the index per batch is the naive O(corpus) path) — and
-# queries read the PUBLISHED version (atomic, exactly-once, the same
-# manifest protocol as the sketch/ledger folds).
-#
-# MERGE-ON-READ layout (round 14 — the r13 verdict's named scale
-# regression closed with the repo's own devices, the mode="mor" ledger
-# fold and its pruned chain reads):
-#
-# - incremental fold version dir: ``v-n/denc`` (id, cell, pq, seq=n) —
-#   the ENCODED BATCH ONLY.  The fold never reads prior state at all
-#   (unlike the ledger fold, no negative contributions exist here), so
-#   the per-fold write AND read are O(batch), never O(corpus);
-# - compaction version dir (every ``compact_every`` versions — folds
-#   AND retires consume slots): ``v-n/enc`` — a base FRAGMENT holding
-#   only the cells the delta stack touched, PARTITIONED BY ``cell`` so
-#   a query's probe set prunes the scan to Σ probed cell sizes
-#   (parquet partition pruning on the routing key — the inverted-list
-#   file layout, literally), plus ``v-n/cellmap`` naming, for every
-#   live cell, the fragment that owns it: untouched cells are carried
-#   forward BY REFERENCE, so compaction writes ∝ touched cells, not
-#   the standing corpus (round 15; full-rewrite fallback at
-#   ``_VEC_MAX_FRAGS`` fan-in — see the fragment block comment above
-#   :data:`_VEC_MAX_FRAGS`);
-# - every version dir also carries ``coarse`` (cid, cvec) and ``cb``
-#   (sub, code, cw): the codebooks are IMMUTABLE for the state's
-#   lifetime and tiny by contract, copied forward so GC never strands
-#   them and a reader needs only the current manifest.  Retraining
-#   codebooks means a new state path — the Faiss operational reality,
-#   stated rather than hidden;
-# - manifest: the MoR protocol (``mor <v> <lineage> <upto> <base_v>``),
-#   so readers resolve versions [base..v] and a CoW fold pointed here
-#   refuses cleanly.
-#
-# Re-ingested ids REPLACE their rows (latest-seq-wins, the ledger
-# revise semantics), resolved at read time by one window over
-# (pruned fragments ∪ deltas) — the delta stack is ≤ compact_every
-# versions by construction (retire compacts at the same bound), so the
-# resolve term is bounded.  Gates: ``ann_index_stream`` /
-# ``ann_index_residual`` (state query over a folded corpus == the
-# batch ``ivfadc_topk`` DuckDB oracle, raw and residual modes) and
-# ``ann_index_rerank`` (the refined read path == the batch IVFADC+R
-# oracle); probe: ``tools/fold_probe.py vector`` measures fold-write,
-# query-read AND compaction-write volumes flat in the standing corpus.
-#
-# Two production surfaces on top (round 14):
-# - ENCODING MODE is state, not an argument: ``by_residual=True``
-#   freezes residual encoding (vector − routed centroid; SCALE.md's
-#   clustered table measures it load-bearing there) into a per-version
-#   ``encmode.txt`` sidecar; folds and queries read the mode back, so
-#   raw and residual codes can never mix in one table.
-# - RETIREMENT (:func:`vector_index_retire`): a tombstone delta
-#   published as its own manifest version — O(|retired|) written,
-#   NOTHING read (unlike the ledger retire, no counts need negating) —
-#   dropped at resolve time and purged physically at the next
-#   compaction.
+    publish_manifest(state_path, Manifest(new_v, m.lineage, m.upto, m.base))
+    gc_versions(state_path, m.base)
 
 
 def stream_vector_ingest(
@@ -1748,9 +1150,20 @@ def stream_vector_ingest(
     compact_every: int = 8,
     by_residual: bool = False,
 ):
-    """Maintain an IVF-PQ vector index from a stream of embeddings
-    (merge-on-read: per-fold encode deltas, periodic compaction into a
-    cell-partitioned base — see the block comment above).
+    """Maintain an IVF-PQ vector index from a stream of embeddings: the
+    index as MAINTAINED STATE, the production-vector-store shape (new
+    embeddings arrive continuously; rebuilding the index per batch is
+    the naive O(corpus) path).  Microbatches fold into the merge-on-read
+    layout of :mod:`streaming.state`: an incremental fold writes ONLY
+    the encoded batch (``denc``) and never reads prior state (unlike the
+    ledger fold, no negative contributions exist here), so per-fold
+    write AND read are O(batch); every ``compact_every`` versions (folds
+    AND retires consume slots) a per-cell compaction (:func:`_vec_compact`)
+    writes a cell-partitioned base fragment.  Re-ingested ids REPLACE
+    their rows (latest-seq-wins, resolved at read time over a delta
+    stack ≤ compact_every versions).  Gates: ``ann_index_stream`` /
+    ``ann_index_residual`` / ``ann_index_rerank``; probe:
+    ``tools/fold_probe.py vector``.
 
     First fold CREATES the state: the coarse codebook (``coarse_df`` or
     ``coarse_ids`` rows of the first batch), the PQ codebook
@@ -1762,83 +1175,27 @@ def stream_vector_ingest(
     are all frozen into the state.  Later folds read codebooks AND mode
     FROM the state (the creation args are ignored), so a resumed stream
     can neither re-encode under different codewords nor silently mix
-    raw and residual codes.  Query with :func:`ann_state_query` (reads
-    the mode from the state); retire ids with
-    :func:`vector_index_retire`."""
-    ck = checkpoint or tempfile.mkdtemp(prefix="svck_")
-    lineage = _fold_lineage(ck, (state_path,))
-    fold = _vector_ingest_fn(
-        state_path, lineage, id_col, vec_col, m, dim,
-        coarse_df, coarse_ids, subspace_codebook_df, codebook_ids,
-        compact_every, by_residual,
+    raw and residual codes.  The codebooks are tiny by contract and
+    copied forward into every version, so a reader needs only the
+    current manifest; retraining them means a new state path — the
+    Faiss operational reality, stated rather than hidden.  Query with
+    :func:`ann_state_query` (reads the mode from the state); retire ids
+    with :func:`vector_index_retire`."""
+    return start_fold_stream(
+        stream_vecs,
+        lambda lineage: _vector_ingest_fn(
+            state_path, lineage, id_col, vec_col, m, dim,
+            coarse_df, coarse_ids, subspace_codebook_df, codebook_ids,
+            compact_every, by_residual,
+        ),
+        checkpoint, "svck_", state_path,
     )
-    return (
-        stream_vecs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
-def _vec_mode_write(version_dir: str, mode: str) -> None:
-    import os
-
-    with open(os.path.join(version_dir, "encmode.txt"), "w") as f:
-        f.write(f"{mode}\n")
-
-
-def _vec_mode(state_path: str, version: int) -> str:
-    """The state's frozen encoding mode (``raw`` | ``residual``) —
-    a per-version sidecar like the codebooks.  Every published version
-    writes the sidecar, so absence means a hand-assembled or truncated
-    state dir; default raw rather than failing the read (the defensive
-    choice — a wrong guess surfaces as a parity mismatch, not silent
-    code-space mixing, because folds copy the sidecar forward)."""
-    import os
-
-    p = os.path.join(state_path, f"v-{version}", "encmode.txt")
-    if not os.path.exists(p):
-        return "raw"
-    with open(p) as f:
-        return f.read().strip()
-
-
-# Per-cell incremental compaction (round 15): a compaction no longer
-# rewrites the whole standing corpus.  The base is a set of immutable
-# FRAGMENTS — each a cell-partitioned enc dir from some past compaction
-# — and a CELLMAP (cell -> fragment version) names, for every live
-# cell, the one fragment that currently owns it.  Compaction rewrites
-# ONLY the cells the delta stack touched (insert cells + tombstone
-# victims' cells), points those cells at the new fragment, and carries
-# every untouched cell forward BY REFERENCE — write volume is
-# proportional to touched cells, not the standing corpus (the LSM
-# leveling discipline; fold_probe.py vector measures it).  Reads stay
-# exact because each fragment is consulted ONLY for the cells the
-# cellmap assigns it: a cell rewritten by a newer fragment is never
-# read from an older one, so purged (tombstoned-then-compacted) ids
-# cannot resurrect out of stale partitions.  Fragment fan-in is capped
-# at _VEC_MAX_FRAGS — crossing it (or a touched set too large to prune
-# by literal lists) falls back to a FULL rewrite, which re-bases every
-# cell onto one fragment and lets GC reclaim the rest.
+# Fragment fan-in cap of the per-cell compaction (:func:`_vec_compact`)
+# and the largest touched-cell set still pruned by literal lists.
 _VEC_MAX_FRAGS = 8
 _VEC_TOUCHED_ISIN_MAX = 10_000
-
-
-def _vec_sidecar_write(version_dir: str, name: str, text: str) -> None:
-    import os
-
-    with open(os.path.join(version_dir, name), "w") as f:
-        f.write(text if text.endswith("\n") else text + "\n")
-
-
-def _vec_sidecar(state_path: str, version: int, name: str) -> str | None:
-    import os
-
-    p = os.path.join(state_path, f"v-{version}", name)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return f.read().strip()
 
 
 def _vec_frags(state_path: str, version: int) -> list[int]:
@@ -1846,64 +1203,24 @@ def _vec_frags(state_path: str, version: int) -> list[int]:
     ``version`` (frags.txt sidecar, written at every publish).  Absent
     sidecar (a hand-assembled state) degrades to the single-fragment
     reading of the version's own enc dir."""
-    txt = _vec_sidecar(state_path, version, "frags.txt")
+    txt = read_sidecar(state_path, version, "frags.txt")
     if txt is None:
         return [version]
     return sorted(int(x) for x in txt.split())
-
-
-def _vec_compact_every(state_path: str, version: int) -> int | None:
-    """The fold's compaction cadence, recorded per version so an
-    out-of-band transaction (retire) can honor the same bound without
-    being handed the stream's argument."""
-    txt = _vec_sidecar(state_path, version, "compactevery.txt")
-    return int(txt) if txt else None
 
 
 def _vec_enc_schema(spark, state_path: str, version: int):
     """The enc relation's schema — from the encschema.txt sidecar
     (written at every publish since the fragment layout landed), or by
     probing the version's enc/denc files for older/hand-built states."""
-    import json
-    import os
-
-    txt = _vec_sidecar(state_path, version, "encschema.txt")
+    txt = read_sidecar(state_path, version, "encschema.txt")
     if txt is not None:
         from pyspark.sql.types import StructType
 
         return StructType.fromJson(json.loads(txt))
-    cur = os.path.join(state_path, f"v-{version}")
+    cur = version_dir(state_path, version)
     part = "enc" if os.path.isdir(os.path.join(cur, "enc")) else "denc"
     return spark.read.parquet(os.path.join(cur, part)).schema
-
-
-def _vec_gc(state_path: str, live_frags, floor: int) -> None:
-    """Vector-state GC: a version dir survives if it is a live base
-    fragment (referenced by the current cellmap — fragments may be
-    arbitrarily older than the manifest's base version) or at/above
-    ``floor`` (the previous manifest's chain, kept one cycle for
-    readers mid-resolve).  The ledger's simpler delete-below-base rule
-    would destroy referenced fragments here."""
-    import os
-    import shutil as _shutil
-
-    keep = set(live_frags)
-    for f in os.listdir(state_path):
-        if (
-            f.startswith("v-")
-            and f[2:].isdigit()
-            and os.path.isdir(os.path.join(state_path, f))
-        ):
-            n = int(f[2:])
-            if n < floor and n not in keep:
-                _shutil.rmtree(
-                    os.path.join(state_path, f), ignore_errors=True
-                )
-        elif f.startswith("MANIFEST.tmp-"):
-            try:
-                os.remove(os.path.join(state_path, f))
-            except OSError:
-                pass
 
 
 def _vec_resolve(chain: DataFrame) -> DataFrame:
@@ -1912,8 +1229,6 @@ def _vec_resolve(chain: DataFrame) -> DataFrame:
     is unique per version so the pick is deterministic; a retired id's
     tombstone wins the seq race and the id vanishes; a later re-ingest
     outranks the tombstone)."""
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("id").orderBy(F.desc("seq"))
     return (
         chain.withColumn("__rn", F.row_number().over(w))
@@ -1936,7 +1251,6 @@ def _vec_chain(spark, state_path: str, base_v: int, upto_v: int, cells=None):
     candidates at all) — unioned with one multi-path delta scan.
     ``cell`` normalizes to long: partition discovery re-infers the
     partition column as int."""
-    import os
 
     def _std(df):
         return df.select(
@@ -1944,7 +1258,12 @@ def _vec_chain(spark, state_path: str, base_v: int, upto_v: int, cells=None):
             "pq", "seq", "tomb",
         )
 
-    cm_path = os.path.join(state_path, f"v-{base_v}", "cellmap")
+    def _enc(frag):
+        return spark.read.parquet(
+            os.path.join(version_dir(state_path, frag), "enc")
+        )
+
+    cm_path = os.path.join(version_dir(state_path, base_v), "cellmap")
     parts = []
     if os.path.isdir(cm_path):
         cm = spark.read.parquet(cm_path)
@@ -1956,14 +1275,11 @@ def _vec_chain(spark, state_path: str, base_v: int, upto_v: int, cells=None):
             for r in cm.where(F.col("cell").isin(list(cells))).collect():
                 by_frag.setdefault(int(r["frag"]), []).append(r["cell"])
             for frag in sorted(by_frag):
-                enc = spark.read.parquet(
-                    os.path.join(state_path, f"v-{frag}", "enc")
-                )
                 # the isin doubles as partition pruning AND fragment
                 # ownership: by_frag[frag] lists exactly the probed
                 # cells this fragment currently owns
                 parts.append(
-                    _std(enc.where(F.col("cell").isin(by_frag[frag])))
+                    _std(_enc(frag).where(F.col("cell").isin(by_frag[frag])))
                 )
         else:
             frags = sorted(
@@ -1971,9 +1287,7 @@ def _vec_chain(spark, state_path: str, base_v: int, upto_v: int, cells=None):
                 for r in cm.select("frag").distinct().collect()
             )  # ≤ _VEC_MAX_FRAGS by the compaction cap
             for frag in frags:
-                enc = _std(spark.read.parquet(
-                    os.path.join(state_path, f"v-{frag}", "enc")
-                ))
+                enc = _std(_enc(frag))
                 if frag != base_v:
                     # an older fragment may still hold partitions for
                     # cells a newer one rewrote — keep only its OWN
@@ -1985,16 +1299,11 @@ def _vec_chain(spark, state_path: str, base_v: int, upto_v: int, cells=None):
     else:
         # pre-fragment layout (hand-assembled state): the base version's
         # own enc dir holds every cell
-        base = spark.read.parquet(
-            os.path.join(state_path, f"v-{base_v}", "enc")
-        )
+        base = _enc(base_v)
         if cells is not None:
             base = base.where(F.col("cell").isin(list(cells)))
         parts.append(_std(base))
-    denc_paths = [
-        os.path.join(state_path, f"v-{i}", "denc")
-        for i in range(base_v + 1, upto_v + 1)
-    ]
+    denc_paths = chain_dirs(state_path, base_v, upto_v, "denc")
     if denc_paths:
         parts.append(
             spark.read.parquet(*denc_paths).select(
@@ -2018,36 +1327,31 @@ def vector_state_enc(spark, state_path: str) -> DataFrame | None:
     per id, latest version wins — or None if nothing is published.
     Full-chain resolve (no pruning): the parity/test reader, and the
     input a from-scratch rebuild is compared against."""
-    m_ = _manifest_read_mor(state_path, "vector index")
+    m_ = read_manifest(state_path, "mor", "vector index")
     if m_ is None:
         return None
-    version, _, _, base_v = m_
-    return _vec_resolve(_vec_chain(spark, state_path, base_v, version)).select(
-        "id", "cell", "pq"
-    )
+    return _vec_resolve(
+        _vec_chain(spark, state_path, m_.base, m_.version)
+    ).select("id", "cell", "pq")
 
 
 def _vec_write_base(
     spark,
     state_path: str,
-    new_dir: str,
     resolved: DataFrame,
     new_v: int,
     untouched_cm: DataFrame | None = None,
     keep_frags: list[int] | None = None,
 ) -> list[int]:
-    """Materialize a base fragment at ``new_dir``: write ``resolved``
-    (already re-stamped) partitioned by cell, then publish the cellmap
-    = untouched cells keeping their old fragments + the cells actually
-    present in this write pointing at ``new_v`` (a touched cell whose
-    every row was tombstoned simply vanishes from the map — dead cells
-    own no partition and no reader ever asks for them).  Also records
-    the frags.txt / encschema.txt sidecars.  Returns the live fragment
-    list for GC."""
-    import json
-    import os
-    import shutil as _shutil
-
+    """Materialize a base fragment at version ``new_v``: write
+    ``resolved`` (already re-stamped) partitioned by cell, then publish
+    the cellmap = untouched cells keeping their old fragments + the
+    cells actually present in this write pointing at ``new_v`` (a
+    touched cell whose every row was tombstoned simply vanishes from the
+    map — dead cells own no partition and no reader ever asks for them).
+    Also records the frags.txt / encschema.txt sidecars.  Returns the
+    live fragment list for GC."""
+    new_dir = version_dir(state_path, new_v)
     schema_json = json.dumps(resolved.schema.jsonValue())
     enc_dir = os.path.join(new_dir, "enc")
     resolved.write.mode("overwrite").partitionBy("cell").parquet(enc_dir)
@@ -2059,7 +1363,7 @@ def _vec_write_base(
     if not present:
         # a partitioned write of an empty frame leaves an unreadable
         # _SUCCESS-only dir; no cellmap entry will ever point here
-        _shutil.rmtree(enc_dir, ignore_errors=True)
+        shutil.rmtree(enc_dir, ignore_errors=True)
     present_cm = spark.createDataFrame(
         [(c, new_v) for c in present], "cell long, frag int"
     )
@@ -2080,10 +1384,10 @@ def _vec_write_base(
     frags_new = sorted(
         set(keep_frags or []) | ({new_v} if present else set())
     )
-    _vec_sidecar_write(
-        new_dir, "frags.txt", " ".join(str(f) for f in frags_new)
+    write_sidecar(
+        state_path, new_v, "frags.txt", " ".join(str(f) for f in frags_new)
     )
-    _vec_sidecar_write(new_dir, "encschema.txt", schema_json)
+    write_sidecar(state_path, new_v, "encschema.txt", schema_json)
     return frags_new
 
 
@@ -2094,27 +1398,29 @@ def _vec_compact(
     version: int,
     new_v: int,
     extra_delta: DataFrame,
-    new_dir: str,
 ) -> list[int]:
-    """Per-cell incremental compaction (see the fragment block comment
-    above :data:`_VEC_MAX_FRAGS`): resolve and rewrite ONLY the cells
-    touched since the last compaction — the delta stack's insert cells,
-    this transaction's own rows (``extra_delta``: the fold's encoded
-    batch, or a retire's tombstones), and tombstone victims' current
-    cells (resolved by a column-pruned (id, cell) scan of the live
-    fragments — tombstones carry a NULL cell by design) — carrying
-    every untouched cell forward by cellmap reference.  Falls back to
-    a FULL rewrite when the prospective fragment count would exceed
-    ``_VEC_MAX_FRAGS`` or the touched set outgrows literal-list
-    pruning (``_VEC_TOUCHED_ISIN_MAX``): write volume is then the
-    standing corpus, the classic amortized leveling merge.  Returns
-    the live fragment list for GC."""
-    import os
-
-    deltas = [
-        os.path.join(state_path, f"v-{i}", "denc")
-        for i in range(base_v + 1, version + 1)
-    ]
+    """Per-cell incremental compaction: a compaction does not rewrite
+    the whole standing corpus.  The base is a set of immutable
+    FRAGMENTS — each a cell-partitioned enc dir from some past
+    compaction — and a CELLMAP (cell -> fragment version) names, for
+    every live cell, the one fragment that owns it.  This resolves and
+    rewrites ONLY the cells touched since the last compaction — the
+    delta stack's insert cells, this transaction's own rows
+    (``extra_delta``: the fold's encoded batch, or a retire's
+    tombstones), and tombstone victims' current cells (resolved by a
+    column-pruned (id, cell) scan of the live fragments — tombstones
+    carry a NULL cell by design) — points those cells at the new
+    fragment, and carries every untouched cell forward BY REFERENCE:
+    write volume ∝ touched cells (the LSM leveling discipline;
+    fold_probe.py vector measures it).  Reads stay exact because each
+    fragment is consulted only for the cells the cellmap assigns it, so
+    purged ids cannot resurrect out of stale partitions.  Falls back to
+    a FULL rewrite, which re-bases every cell onto one fragment and lets
+    GC reclaim the rest, when the prospective fragment count would
+    exceed ``_VEC_MAX_FRAGS`` or the touched set outgrows literal-list
+    pruning (``_VEC_TOUCHED_ISIN_MAX``).  Returns the live fragment list
+    for GC."""
+    deltas = chain_dirs(state_path, base_v, version, "denc")
     stack = extra_delta.select("id", "cell", "pq", "seq", "tomb")
     if deltas:
         stack = stack.unionByName(
@@ -2134,15 +1440,14 @@ def _vec_compact(
     # time that cell alone is compacted, resurrecting the old row
     # over the current one.
     stack_ids = stack.select("id").distinct()
-    has_cm = os.path.isdir(
-        os.path.join(state_path, f"v-{base_v}", "cellmap")
-    )
+    cm_path = os.path.join(version_dir(state_path, base_v), "cellmap")
+    has_cm = os.path.isdir(cm_path)
     frag_list = _vec_frags(state_path, base_v) if has_cm else [base_v]
     for frag in frag_list:
         # (id, cell) is a 2-column scan where cell is the partition
         # value — parquet reads one column of data
         enc = spark.read.parquet(
-            os.path.join(state_path, f"v-{frag}", "enc")
+            os.path.join(version_dir(state_path, frag), "enc")
         )
         touched_df = touched_df.unionByName(
             enc.select("id", F.col("cell").cast("long").alias("cell"))
@@ -2156,9 +1461,7 @@ def _vec_compact(
     untouched_cm = None
     keep_frags: list[int] = []
     if not full:
-        cm = spark.read.parquet(
-            os.path.join(state_path, f"v-{base_v}", "cellmap")
-        )
+        cm = spark.read.parquet(cm_path)
         touched_lit = spark.createDataFrame(
             [(int(c),) for c in touched], "cell long"
         )
@@ -2182,9 +1485,47 @@ def _vec_compact(
         F.lit(False).alias("tomb"),
     )
     return _vec_write_base(
-        spark, state_path, new_dir, resolved, new_v,
+        spark, state_path, resolved, new_v,
         untouched_cm=untouched_cm, keep_frags=keep_frags,
     )
+
+
+def _vec_commit(
+    spark, state_path: str, head, lineage: str, upto: int,
+    delta: DataFrame, compact: bool, coarse, cb, mode: str, cadence,
+) -> None:
+    """Write and publish the vector-index version after ``head`` (None:
+    state creation) — shared by the fold and the retire transaction.
+    ``delta`` becomes the first base fragment on creation, a per-cell
+    compaction when ``compact`` (:func:`_vec_compact` drops tombstones,
+    so compaction PURGES retired ids physically), else a ``denc`` delta —
+    O(batch) written, nothing read back.  Codebooks, encoding ``mode``
+    and compaction ``cadence`` copy forward so GC of old versions never
+    strands them; GC never drops a live fragment."""
+    version, base_v = (head.version, head.base) if head else (-1, -1)
+    new_v = version + 1
+    new_dir = version_dir(state_path, new_v)
+    if head is None:
+        live_frags = _vec_write_base(spark, state_path, delta, new_v)
+    elif compact:
+        live_frags = _vec_compact(
+            spark, state_path, base_v, version, new_v, delta
+        )
+    else:
+        delta.write.mode("overwrite").parquet(os.path.join(new_dir, "denc"))
+        live_frags = _vec_frags(state_path, base_v)
+        for name in ("frags.txt", "encschema.txt"):
+            txt = read_sidecar(state_path, base_v, name)
+            if txt is not None:
+                write_sidecar(state_path, new_v, name, txt)
+    coarse.write.mode("overwrite").parquet(os.path.join(new_dir, "coarse"))
+    cb.write.mode("overwrite").parquet(os.path.join(new_dir, "cb"))
+    write_sidecar(state_path, new_v, "encmode.txt", mode)
+    if cadence is not None:
+        write_sidecar(state_path, new_v, "compactevery.txt", cadence)
+    new_base = new_v if head is None or compact else base_v
+    publish_manifest(state_path, Manifest(new_v, lineage, upto, new_base))
+    gc_versions(state_path, max(base_v, 0), keep=live_frags)
 
 
 def _vector_ingest_fn(
@@ -2203,10 +1544,6 @@ def _vector_ingest_fn(
 ):
     """The foreachBatch body of :func:`stream_vector_ingest`, exposed
     for deterministic re-delivery / lineage tests."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from scholarmind_spark.operators.kmeans import _assign
     from scholarmind_spark.operators.pq import (
         _build_sub_lits,
@@ -2222,25 +1559,27 @@ def _vector_ingest_fn(
         return F.zip_with(v, c, lambda x, y: x.cast("double") - y.cast("double"))
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        gate = _mor_fold_gate(state_path, lineage, batch_id, "vector index")
-        if gate is _SKIP:
+        head = fold_gate(state_path, lineage, batch_id, "mor", "vector index")
+        if head is SKIP:
             return
-        version, base_v = gate
-        new_v = version + 1
+        spark = batch_df.sparkSession
+        new_v = head.version + 1 if head else 0
         # one row per id within the batch: arrays order lexicographically,
         # so max(vec) is a deterministic pick (the ledger fold's contract)
         uniq = batch_df.groupBy(F.col(id_col)).agg(
             F.max(vec_col).alias(vec_col)
         )
-        if version >= 0:
-            cur = os.path.join(state_path, f"v-{version}")
+        if head:
+            cur = version_dir(state_path, head.version)
             coarse = spark.read.parquet(os.path.join(cur, "coarse"))
             cb = spark.read.parquet(os.path.join(cur, "cb"))
             # encoding mode is STATE, not a call argument: a resumed
             # stream passing the wrong by_residual must not silently
             # mix raw and residual codes in one table
-            residual = _vec_mode(state_path, version) == "residual"
+            residual = (
+                read_sidecar(state_path, head.version, "encmode.txt")
+                == "residual"
+            )
         else:
             residual = by_residual
             if coarse_df is not None:
@@ -2299,50 +1638,11 @@ def _vector_ingest_fn(
             F.lit(new_v).cast("int").alias("seq"),
             F.lit(False).alias("tomb"),
         )
-        new_dir = os.path.join(state_path, f"v-{new_v}")
-        compact = version >= 0 and (new_v - base_v) >= compact_every
-        if version < 0:
-            # creation: the encoded first batch IS the base fragment
-            live_frags = _vec_write_base(
-                spark, state_path, new_dir, enc_new, new_v
-            )
-            new_base = new_v
-        elif compact:
-            # per-cell compaction: rewrite ONLY the cells the delta
-            # stack (and this batch) touched, carry the rest forward
-            # by cellmap reference — write ∝ touched cells, never the
-            # standing corpus (_vec_compact; full-rewrite fallback at
-            # the fragment cap).  _vec_resolve drops tombstones, so
-            # compaction PURGES retired ids physically — the erasure
-            # lands on disk for every touched cell
-            live_frags = _vec_compact(
-                spark, state_path, base_v, version, new_v, enc_new,
-                new_dir,
-            )
-            new_base = new_v
-        else:
-            # incremental fold: the encoded batch IS the delta —
-            # O(batch) written, nothing read back
-            enc_new.write.mode("overwrite").parquet(
-                os.path.join(new_dir, "denc")
-            )
-            live_frags = _vec_frags(state_path, base_v)
-            for name in ("frags.txt", "encschema.txt"):
-                txt = _vec_sidecar(state_path, base_v, name)
-                if txt is not None:
-                    _vec_sidecar_write(new_dir, name, txt)
-            new_base = base_v
-        # codebooks, encoding mode and compaction cadence copy forward
-        # so GC of old versions never strands them (the cadence lets
-        # out-of-band retires honor the same delta-stack bound)
-        coarse.write.mode("overwrite").parquet(os.path.join(new_dir, "coarse"))
-        cb.write.mode("overwrite").parquet(os.path.join(new_dir, "cb"))
-        _vec_mode_write(new_dir, "residual" if residual else "raw")
-        _vec_sidecar_write(new_dir, "compactevery.txt", str(compact_every))
-        _manifest_publish_mor(state_path, new_v, lineage, batch_id, new_base)
-        # the previous manifest's readers need [base_v..version]; keep
-        # that whole chain one cycle, and NEVER drop a live fragment
-        _vec_gc(state_path, live_frags, base_v if base_v >= 0 else 0)
+        _vec_commit(
+            spark, state_path, head, lineage, batch_id, enc_new,
+            head is not None and new_v - head.base >= compact_every,
+            coarse, cb, "residual" if residual else "raw", str(compact_every),
+        )
 
     return _fold
 
@@ -2373,11 +1673,6 @@ def ann_state_query(
     sizes + a bounded stack, independent of the standing corpus.  Returns
     ``query_id, neighbor_id, adc, rank`` (the :func:`operators.pq.
     ivfadc_topk` contract), or None if nothing is published."""
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
     from scholarmind_spark.operators.pq import (
         _adc_expr,
         _build_sub_lits,
@@ -2385,11 +1680,10 @@ def ann_state_query(
         _sq,
     )
 
-    m_ = _manifest_read_mor(state_path, "vector index")
+    m_ = read_manifest(state_path, "mor", "vector index")
     if m_ is None:
         return None
-    version, _, _, base_v = m_
-    cur = os.path.join(state_path, f"v-{version}")
+    cur = version_dir(state_path, m_.version)
     w = dim // m
     coarse = spark.read.parquet(os.path.join(cur, "coarse"))
     cb = spark.read.parquet(os.path.join(cur, "cb"))
@@ -2410,7 +1704,7 @@ def ann_state_query(
         .filter(F.col("rn") <= nprobe)
         .select("query_id", "qvec", "cell")
     )
-    if _vec_mode(state_path, version) == "residual":
+    if read_sidecar(state_path, m_.version, "encmode.txt") == "residual":
         # residual-encoded state: compare (query − PROBED cell centroid)
         # against resident codes, per probe — the ivfadc_topk
         # by_residual device, one broadcast join of the k-row coarse
@@ -2429,7 +1723,7 @@ def ann_state_query(
     # same bounded-collect contract as the MoR ledger's touched buckets
     cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
     enc = _vec_resolve(
-        _vec_chain(spark, state_path, base_v, version, cells=cells)
+        _vec_chain(spark, state_path, m_.base, m_.version, cells=cells)
     )
     adc = _adc_expr(sub_lits, F.col("qvec"), F.col("pq"), m, w)
     scored = (
@@ -2488,9 +1782,6 @@ def ann_state_query_refined(
     the standing state.  Returns ``query_id, neighbor_id, dist, rank``
     (exact distances, the refine contract), or None if nothing is
     published."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
     from scholarmind_spark.operators.pq import _sq
 
     cand = ann_state_query(
@@ -2555,53 +1846,28 @@ def vector_index_retire(
     delta, keeping the documented "deltas ≤ compact_every versions"
     read bound true under repeated retires on a quiescent stream.
     ``retired_ids``: a one-column ``id`` DataFrame."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    m = _manifest_read_mor(state_path, "vector index")
+    m = read_manifest(state_path, "mor", "vector index")
     if m is None:
         raise ValueError(f"no published vector-index state at {state_path}")
-    version, lineage, upto, base_v = m
-    new_v = version + 1
-    cur = os.path.join(state_path, f"v-{version}")
-    enc_schema = _vec_enc_schema(spark, state_path, version)
-    id_type = enc_schema["id"].dataType
-    pq_type = enc_schema["pq"].dataType
+    new_v = m.version + 1
+    cur = version_dir(state_path, m.version)
+    enc_schema = _vec_enc_schema(spark, state_path, m.version)
     tomb = retired_ids.select(
-        F.col("id").cast(id_type).alias("id"),
+        F.col("id").cast(enc_schema["id"].dataType).alias("id"),
         F.lit(None).cast("long").alias("cell"),
-        F.lit(None).cast(pq_type).alias("pq"),
+        F.lit(None).cast(enc_schema["pq"].dataType).alias("pq"),
         F.lit(new_v).cast("int").alias("seq"),
         F.lit(True).alias("tomb"),
     ).distinct()
-    new_dir = os.path.join(state_path, f"v-{new_v}")
-    ce = (
-        compact_every
-        if compact_every is not None
-        else _vec_compact_every(state_path, version)
+    cadence = read_sidecar(state_path, m.version, "compactevery.txt")
+    ce = compact_every if compact_every is not None else (
+        int(cadence) if cadence else None
     )
-    if ce is not None and (new_v - base_v) >= ce:
-        live_frags = _vec_compact(
-            spark, state_path, base_v, version, new_v, tomb, new_dir
-        )
-        new_base = new_v
-    else:
-        tomb.write.mode("overwrite").parquet(os.path.join(new_dir, "denc"))
-        live_frags = _vec_frags(state_path, base_v)
-        for name in ("frags.txt", "encschema.txt"):
-            txt = _vec_sidecar(state_path, base_v, name)
-            if txt is not None:
-                _vec_sidecar_write(new_dir, name, txt)
-        new_base = base_v
-    # codebooks + mode + cadence copy forward (the fold's GC contract)
-    for part in ("coarse", "cb"):
-        spark.read.parquet(os.path.join(cur, part)).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(new_dir, part))
-    _vec_mode_write(new_dir, _vec_mode(state_path, version))
-    prev_ce = _vec_sidecar(state_path, version, "compactevery.txt")
-    if prev_ce is not None:
-        _vec_sidecar_write(new_dir, "compactevery.txt", prev_ce)
-    _manifest_publish_mor(state_path, new_v, lineage, upto, new_base)
-    _vec_gc(state_path, live_frags, base_v)
+    _vec_commit(
+        spark, state_path, m, m.lineage, m.upto, tomb,
+        ce is not None and new_v - m.base >= ce,
+        spark.read.parquet(os.path.join(cur, "coarse")),
+        spark.read.parquet(os.path.join(cur, "cb")),
+        read_sidecar(state_path, m.version, "encmode.txt") or "raw",
+        cadence,
+    )

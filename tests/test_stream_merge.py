@@ -24,6 +24,13 @@ def _drain(spark, src, snap, ck):
     q.awaitTermination()
 
 
+def _manifest_text(state):
+    import os
+
+    with open(os.path.join(state, "MANIFEST")) as f:
+        return f.read()
+
+
 def test_two_increments_upsert(spark, tmp_path):
     src = str(tmp_path / "src")
     snap = str(tmp_path / "snap")
@@ -153,9 +160,10 @@ def test_stream_fold_equals_batch_and_exactly_once(spark, tmp_path):
     # high-water marker must skip it.  The lineage is checkpoint
     # IDENTITY (the token minted into the checkpoint on first use),
     # not a path hash
-    from scholarmind_spark.streaming.pipeline import _fold_lineage, _sketch_fold_fn
+    from scholarmind_spark.streaming.pipeline import _sketch_fold_fn
+    from scholarmind_spark.streaming.state import fold_lineage
 
-    lineage = _fold_lineage(ck)
+    lineage = fold_lineage(ck)
     fold = _sketch_fold_fn(state, ["day", "seg"], "value", 5, lineage)
     fold(b2, 1)  # re-delivery of the last batch
     fold(b1, 0)  # and of an older one
@@ -297,7 +305,8 @@ def test_stream_fold_kmv_and_bloom_families(spark, tmp_path):
         kmv_state_build,
     )
     from scholarmind_spark.streaming import stream_fold_sketch_state
-    from scholarmind_spark.streaming.pipeline import _fold_lineage, _sketch_fold_fn
+    from scholarmind_spark.streaming.pipeline import _sketch_fold_fn
+    from scholarmind_spark.streaming.state import fold_lineage
 
     b1 = spark.createDataFrame(_uid_rows(0), UID_SCHEMA)
     b2 = spark.createDataFrame(_uid_rows(10), UID_SCHEMA)  # overlaps b1
@@ -351,7 +360,7 @@ def test_stream_fold_kmv_and_bloom_families(spark, tmp_path):
         ), family
 
         # re-delivery: the marker skips already-folded batch ids
-        lineage = _fold_lineage(ck)
+        lineage = fold_lineage(ck)
         fold = _sketch_fold_fn(
             state, keys, "uid", 5, lineage, **case["kwargs"]
         )
@@ -385,11 +394,8 @@ def test_stream_fold_manifest_commit(spark, tmp_path):
         manifest_state_dir,
         stream_fold_sketch_state,
     )
-    from scholarmind_spark.streaming.pipeline import (
-        _fold_lineage,
-        _manifest_read,
-        _sketch_fold_fn_manifest,
-    )
+    from scholarmind_spark.streaming.pipeline import _sketch_fold_fn
+    from scholarmind_spark.streaming.state import fold_lineage
 
     src = str(tmp_path / "src")
     state = str(tmp_path / "state")
@@ -429,22 +435,22 @@ def test_stream_fold_manifest_commit(spark, tmp_path):
         ).collect()
     )
     assert state_rows() == direct
-    version, lineage_tag, upto = _manifest_read(state)
-    assert (version, upto) == (1, 1)
-    assert lineage_tag == _fold_lineage(ck)
+    lineage_tag = fold_lineage(ck)
+    assert _manifest_text(state) == f"1 {lineage_tag} 1\n"
 
     # re-delivery: manifest high-water mark skips already-folded ids
-    fold = _sketch_fold_fn_manifest(
-        state, ["day", "seg"], "value", 5, _fold_lineage(ck)
+    fold = _sketch_fold_fn(
+        state, ["day", "seg"], "value", 5, lineage_tag, commit="manifest"
     )
     fold(b2, 1)
     fold(b1, 0)
     assert state_rows() == direct
-    assert _manifest_read(state)[0] == 1  # no new version published
+    # no new version published
+    assert _manifest_text(state) == f"1 {lineage_tag} 1\n"
 
     # foreign lineage refuses, state untouched
-    other = _sketch_fold_fn_manifest(
-        state, ["day", "seg"], "value", 5, "deadbeef"
+    other = _sketch_fold_fn(
+        state, ["day", "seg"], "value", 5, "deadbeef", commit="manifest"
     )
     with _pytest.raises(ValueError, match="different checkpoint lineage"):
         other(b1, 0)
@@ -467,7 +473,7 @@ def test_stream_fold_manifest_commit(spark, tmp_path):
         ).collect()
     )
     assert state_rows() == direct3
-    assert _manifest_read(state) == (2, lineage_tag, 2)
+    assert _manifest_text(state) == f"2 {lineage_tag} 2\n"
 
     # GC: after the publish of v-2, v-0 (older than the kept-one-back
     # window) is gone
@@ -614,11 +620,8 @@ def test_stream_ledger_ingest_atomic_pair(spark, tmp_path):
         ledger_state_dirs,
         stream_ledger_ingest,
     )
-    from scholarmind_spark.streaming.pipeline import (
-        _fold_lineage,
-        _ledger_ingest_fn,
-        _manifest_read,
-    )
+    from scholarmind_spark.streaming.pipeline import _ledger_ingest_fn
+    from scholarmind_spark.streaming.state import fold_lineage
 
     b1 = spark.createDataFrame(
         [(i, f"alpha beta gamma delta epsilon doc {i} zeta") for i in range(1, 7)],
@@ -678,14 +681,14 @@ def test_stream_ledger_ingest_atomic_pair(spark, tmp_path):
     )
     assert fp_rows() == want_fp
     assert count_rows() == want_counts
-    lineage = _fold_lineage(ck)
-    assert _manifest_read(state) == (1, lineage, 1)
+    lineage = fold_lineage(ck)
+    assert _manifest_text(state) == f"1 {lineage} 1\n"
 
     # re-delivery: already-applied batch ids are skipped, no publish
     fold = _ledger_ingest_fn(state, lineage, shingle_k=3)
     fold(b2, 1)
     fold(b1, 0)
-    assert _manifest_read(state) == (1, lineage, 1)
+    assert _manifest_text(state) == f"1 {lineage} 1\n"
     assert fp_rows() == want_fp
 
     # foreign lineage refuses
@@ -703,7 +706,7 @@ def test_stream_ledger_ingest_atomic_pair(spark, tmp_path):
     ledger_fingerprints(b3, k=3).write.mode("overwrite").parquet(orphan)
     assert ledger_state_dirs(state)[0] == os.path.join(state, "v-1", "fp")
     fold(b3, 2)
-    assert _manifest_read(state) == (2, lineage, 2)
+    assert _manifest_text(state) == f"2 {lineage} 2\n"
     latest[9] = "a ninth document arriving after the crash"
     direct3 = ledger_fingerprints(
         spark.createDataFrame(sorted(latest.items()), DOC_SCHEMA), k=3
@@ -912,10 +915,8 @@ def test_fold_lineage_adopts_legacy_tag(spark, tmp_path):
     import hashlib
     import os
 
-    from scholarmind_spark.streaming.pipeline import (
-        _fold_lineage,
-        _sketch_fold_fn,
-    )
+    from scholarmind_spark.streaming.pipeline import _sketch_fold_fn
+    from scholarmind_spark.streaming.state import fold_lineage
 
     ck = str(tmp_path / "ck")
     os.makedirs(ck)  # pre-existing legacy checkpoint: no lineage file
@@ -926,26 +927,26 @@ def test_fold_lineage_adopts_legacy_tag(spark, tmp_path):
     _sketch_fold_fn(state, ["day", "seg"], "value", 5, legacy)(b1, 0)
 
     # resume: the lineage for this checkpoint+state pair is the legacy tag
-    assert _fold_lineage(ck, (state,)) == legacy
+    assert fold_lineage(ck, (state,)) == legacy
     # and it is now persisted as the checkpoint's identity
-    assert _fold_lineage(ck, ()) == legacy
+    assert fold_lineage(ck, ()) == legacy
 
     # a state marked under a FOREIGN tag must NOT trigger adoption
     ck2 = str(tmp_path / "ck2")
     os.makedirs(ck2)
     state2 = str(tmp_path / "state2")
     _sketch_fold_fn(state2, ["day", "seg"], "value", 5, "deadbeef")(b1, 0)
-    assert _fold_lineage(ck2, (state2,)) != "deadbeef"
+    assert fold_lineage(ck2, (state2,)) != "deadbeef"
 
 
 def test_manifest_gc_ignores_stray_entries(spark, tmp_path):
-    """_manifest_gc runs AFTER the manifest publish; a stray
+    """Version GC runs AFTER the manifest publish; a stray
     non-numeric 'v-*' entry (user backup dir, partial name) must be
     skipped, not crash the microbatch on already-committed state
     (r12 advice)."""
     import os
 
-    from scholarmind_spark.streaming.pipeline import _manifest_gc
+    from scholarmind_spark.streaming.state import gc_versions
 
     state = str(tmp_path / "state")
     os.makedirs(os.path.join(state, "v-backup"))
@@ -953,7 +954,7 @@ def test_manifest_gc_ignores_stray_entries(spark, tmp_path):
     open(os.path.join(state, "v-1"), "w").close()  # FILE named like a version
     os.makedirs(os.path.join(state, "v-2"))
 
-    _manifest_gc(state, keep_from_version=2)  # must not raise
+    gc_versions(state, 2)  # must not raise
 
     left = sorted(os.listdir(state))
     # v-0 (dir, old) collected; v-backup and the v-1 FILE survive
@@ -1017,10 +1018,7 @@ def test_mor_fold_equals_from_scratch_with_compaction(spark, tmp_path):
     files (the O(batch)-write claim, checked on disk)."""
     import os
 
-    from scholarmind_spark.streaming.pipeline import (
-        _ledger_ingest_fn_mor,
-        _manifest_read_mor,
-    )
+    from scholarmind_spark.streaming.pipeline import _ledger_ingest_fn_mor
 
     state = str(tmp_path / "state")
     fold = _ledger_ingest_fn_mor(state, "cafebabe", compact_every=2)
@@ -1048,7 +1046,7 @@ def test_mor_fold_equals_from_scratch_with_compaction(spark, tmp_path):
     # fold 0 wrote the first base (v-0); fold 1 was incremental; fold 2
     # compacted (new_v - base_v = 2 hits compact_every); fold 3 is
     # incremental again on the new base
-    assert _manifest_read_mor(state) == (3, "cafebabe", 3, 2)
+    assert _manifest_text(state) == "mor 3 cafebabe 3 2\n"
     assert os.path.isdir(os.path.join(state, "v-2", "fp"))  # base
     assert os.path.isdir(os.path.join(state, "v-3", "dfp"))
     # the incremental dir holds ONLY deltas — never a full table
@@ -1113,10 +1111,7 @@ def test_mor_retire_transaction(spark, tmp_path):
     the stream's batch high-water mark is unchanged so the next fold
     proceeds."""
     from scholarmind_spark.streaming import ledger_mor_retire
-    from scholarmind_spark.streaming.pipeline import (
-        _ledger_ingest_fn_mor,
-        _manifest_read_mor,
-    )
+    from scholarmind_spark.streaming.pipeline import _ledger_ingest_fn_mor
 
     state = str(tmp_path / "state")
     batches = _mor_batches(spark)
@@ -1133,7 +1128,8 @@ def test_mor_retire_transaction(spark, tmp_path):
         [(i, rows[i]) for i in range(9) if i not in (4, 7)], DOC_SCHEMA
     )
     _assert_mor_state_equals(spark, state, exp)
-    assert _manifest_read_mor(state)[2] == 2  # high-water unchanged
+    # high-water unchanged: upto 2 at the retire's version 3
+    assert _manifest_text(state) == "mor 3 cafebabe 2 0\n"
 
     fold(batches[3], 3)  # stream resumes over the retired state
     rows[0] = dict(MOR_DOCS)[0] + " r3"
@@ -1150,10 +1146,7 @@ def test_mor_crash_before_publish_recovers(spark, tmp_path):
     batch — the previous manifest stays live throughout."""
     import shutil as _shutil
 
-    from scholarmind_spark.streaming.pipeline import (
-        _ledger_ingest_fn_mor,
-        _manifest_read_mor,
-    )
+    from scholarmind_spark.streaming.pipeline import _ledger_ingest_fn_mor
 
     state = str(tmp_path / "state")
     batches = _mor_batches(spark)
@@ -1174,7 +1167,7 @@ def test_mor_crash_before_publish_recovers(spark, tmp_path):
     )
     _assert_mor_state_equals(spark, state, exp0)  # old state still live
     fold(batches[1], 1)  # retry overwrites the orphan and publishes
-    assert _manifest_read_mor(state) == (1, "cafebabe", 1, 0)
+    assert _manifest_text(state) == "mor 1 cafebabe 1 0\n"
     exp = spark.createDataFrame(
         [(i, dict(MOR_DOCS)[i]) for i in range(6)], DOC_SCHEMA
     )
@@ -1225,11 +1218,10 @@ def test_mor_base_bucketed_and_pruned_lookup_exact(spark, tmp_path):
     from scholarmind_spark.operators.ledger import ledger_mor_resolve_fp
     from scholarmind_spark.streaming.pipeline import (
         _ledger_ingest_fn_mor,
-        _manifest_read_mor,
         _mor_chains,
-        _mor_nbuckets,
         _mor_touched_buckets,
     )
+    from scholarmind_spark.streaming.state import read_sidecar
 
     state = str(tmp_path / "state")
     # bucket_rows=3 over 12 docs → 4 buckets in the compacted base
@@ -1238,12 +1230,12 @@ def test_mor_base_bucketed_and_pruned_lookup_exact(spark, tmp_path):
     )
     for bid, batch in enumerate(_mor_batches(spark)):
         fold(batch, bid)
-    version, _, _, base_v = _manifest_read_mor(state)
-    assert base_v == 2 and version == 3
+    assert _manifest_text(state) == "mor 3 cafebabe 3 2\n"
+    version, base_v = 3, 2
 
     # base layout: bucket=N partition dirs + the sidecar — the v-2 base
     # resolves 9 docs (fold 3's three live in the delta): ceil(9/3) = 3
-    nb = _mor_nbuckets(state, base_v)
+    nb = int(read_sidecar(state, base_v, "nbuckets.txt"))
     assert nb == 3
     bucket_dirs = [
         d
@@ -1286,9 +1278,9 @@ def test_mor_touched_buckets_canonicalize_id_type(spark, tmp_path):
     from scholarmind_spark.streaming import ledger_mor_retire
     from scholarmind_spark.streaming.pipeline import (
         _ledger_ingest_fn_mor,
-        _manifest_read_mor,
         _mor_touched_buckets,
     )
+    from scholarmind_spark.streaming.state import read_manifest
 
     state = str(tmp_path / "state")
     fold = _ledger_ingest_fn_mor(
@@ -1296,7 +1288,7 @@ def test_mor_touched_buckets_canonicalize_id_type(spark, tmp_path):
     )
     for bid, batch in enumerate(_mor_batches(spark)):
         fold(batch, bid)
-    _, _, _, base_v = _manifest_read_mor(state)
+    base_v = read_manifest(state).base
 
     # per-id bucket parity: probe typed int == probe typed long
     for i in range(12):
@@ -1344,7 +1336,6 @@ def test_stream_vector_ingest_state_equals_full_rebuild(spark, tmp_path):
 
     from scholarmind_spark.operators.pq import ivfadc_topk
     from scholarmind_spark.streaming.pipeline import (
-        _manifest_read_mor,
         _vector_ingest_fn,
         ann_state_query,
         vector_state_enc,
@@ -1362,7 +1353,7 @@ def test_stream_vector_ingest_state_equals_full_rebuild(spark, tmp_path):
     fold(spark.createDataFrame(b1, VS), 1)
     fold(spark.createDataFrame(rev, VS), 2)
     # MoR manifest: version 2, base = the creation compaction (v-0)
-    assert _manifest_read_mor(state) == (2, "feedbeef", 2, 0)
+    assert _manifest_text(state) == "mor 2 feedbeef 2 0\n"
 
     latest = {i: v for i, v in b0 + b1}
     latest.update(dict(rev))
@@ -1421,7 +1412,6 @@ def test_vector_ingest_delta_layout_and_pruned_query(spark, tmp_path):
 
     from scholarmind_spark.operators.pq import ivfadc_topk
     from scholarmind_spark.streaming.pipeline import (
-        _manifest_read_mor,
         _vector_ingest_fn,
         ann_state_query,
     )
@@ -1440,7 +1430,7 @@ def test_vector_ingest_delta_layout_and_pruned_query(spark, tmp_path):
     fold(spark.createDataFrame(_vec_rows(10, 2), VS), 2)
     moved = [(0, [float(x) + 10.0 for x in dict(b0)[1]])]
     fold(spark.createDataFrame(moved, VS), 3)
-    assert _manifest_read_mor(state) == (3, "feedbeef", 3, 2)
+    assert _manifest_text(state) == "mor 3 feedbeef 3 2\n"
 
     # disk layout: v-1/v-3 are deltas, v-2 is a cell-partitioned base
     assert os.path.isdir(os.path.join(state, "v-3", "denc"))
@@ -1503,10 +1493,7 @@ def test_vector_ingest_empty_coarse_raises(spark, tmp_path):
 def test_stream_vector_ingest_redelivery_and_lineage(spark, tmp_path):
     import pytest
 
-    from scholarmind_spark.streaming.pipeline import (
-        _manifest_read_mor,
-        _vector_ingest_fn,
-    )
+    from scholarmind_spark.streaming.pipeline import _vector_ingest_fn
 
     VS = "vec_id long, embedding array<double>"
     state = str(tmp_path / "state")
@@ -1514,9 +1501,9 @@ def test_stream_vector_ingest_redelivery_and_lineage(spark, tmp_path):
         state, "feedbeef", m=2, dim=8, coarse_ids=[0, 1], codebook_ids=[0, 1]
     )
     fold(spark.createDataFrame(_vec_rows(0, 4), VS), 0)
-    v1 = _manifest_read_mor(state)
+    assert _manifest_text(state) == "mor 0 feedbeef 0 0\n"
     fold(spark.createDataFrame(_vec_rows(0, 4), VS), 0)  # re-delivery
-    assert _manifest_read_mor(state) == v1
+    assert _manifest_text(state) == "mor 0 feedbeef 0 0\n"
     other = _vector_ingest_fn(
         state, "0ddba11", m=2, dim=8, coarse_ids=[0, 1], codebook_ids=[0, 1]
     )
@@ -1577,10 +1564,10 @@ def test_vector_ingest_residual_mode_frozen_and_matches_batch(spark, tmp_path):
 
     from scholarmind_spark.operators.pq import ivfadc_topk
     from scholarmind_spark.streaming.pipeline import (
-        _vec_mode,
         _vector_ingest_fn,
         ann_state_query,
     )
+    from scholarmind_spark.streaming.state import read_sidecar
 
     VS = "vec_id long, embedding array<double>"
     state = str(tmp_path / "state")
@@ -1596,7 +1583,7 @@ def test_vector_ingest_residual_mode_frozen_and_matches_batch(spark, tmp_path):
         state, "feedbeef", m=2, dim=8, by_residual=False
     )
     wrong(spark.createDataFrame(b1, VS), 1)
-    assert _vec_mode(state, 1) == "residual"
+    assert read_sidecar(state, 1, "encmode.txt") == "residual"
 
     full = spark.createDataFrame(sorted(dict(b0 + b1).items()), VS)
     coarse = spark.createDataFrame(
@@ -1700,7 +1687,6 @@ def test_vector_index_retire(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from scholarmind_spark.streaming.pipeline import (
-        _manifest_read_mor,
         _vector_ingest_fn,
         ann_state_query,
         vector_index_retire,
@@ -1719,7 +1705,8 @@ def test_vector_index_retire(spark, tmp_path):
 
     retired = spark.createDataFrame([(3,), (7,), (999,)], "id bigint")
     vector_index_retire(spark, state, retired)
-    assert _manifest_read_mor(state) == (2, "feedbeef", 1, 0)  # upto unchanged
+    # upto unchanged
+    assert _manifest_text(state) == "mor 2 feedbeef 1 0\n"
     enc = vector_state_enc(spark, state)
     assert sorted(r.id for r in enc.collect()) == [
         i for i in range(12) if i not in (3, 7)
@@ -1742,8 +1729,8 @@ def test_vector_index_retire(spark, tmp_path):
     # NEXT fold compacts (new_v=4 - base 0 >= 4): tombstones purged
     fold(spark.createDataFrame([(3, [0.5] * 8)], VS), 2)
     fold(spark.createDataFrame(_vec_rows(12, 2), VS), 3)
-    version, _, _, base_v = _manifest_read_mor(state)
-    assert (version, base_v) == (4, 4)  # compacted base
+    # compacted base
+    assert _manifest_text(state) == "mor 4 feedbeef 3 4\n"
     base = spark.read.parquet(os.path.join(state, "v-4", "enc"))
     ids = sorted(r.id for r in base.collect())
     assert 7 not in ids and 3 in ids  # purged vs resurrected
@@ -1794,14 +1781,14 @@ def test_partial_compaction_rewrites_only_touched_cells(spark, tmp_path):
 
     from scholarmind_spark.operators.pq import ivfadc_topk
     from scholarmind_spark.streaming.pipeline import (
-        _manifest_read_mor,
         _vec_frags,
         ann_state_query,
         vector_state_enc,
     )
 
     state, b0, b1, b2 = _cells_state(spark, tmp_path, "pc")
-    assert _manifest_read_mor(state, "vector index")[3] == 2  # base moved
+    # base moved
+    assert _manifest_text(state) == "mor 2 feedbeef 2 2\n"
     enc2 = os.path.join(state, "v-2", "enc")
     assert sorted(
         d for d in os.listdir(enc2) if d.startswith("cell=")
@@ -1912,7 +1899,6 @@ def test_retire_triggers_compaction_at_bound(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from scholarmind_spark.streaming.pipeline import (
-        _manifest_read_mor,
         _vector_ingest_fn,
         vector_index_retire,
         vector_state_enc,
@@ -1930,11 +1916,10 @@ def test_retire_triggers_compaction_at_bound(spark, tmp_path):
     fold(spark.createDataFrame(b0, VS), 0)                 # v-0 base
     one = lambda i: spark.createDataFrame([(i,)], "id long")  # noqa: E731
     vector_index_retire(spark, state, one(3))              # v-1 delta
-    v, _, upto, base = _manifest_read_mor(state, "vector index")
-    assert (v, base) == (1, 0)
+    assert _manifest_text(state) == "mor 1 feedbeef 0 0\n"
     vector_index_retire(spark, state, one(4))              # v-2 COMPACTS
-    v, _, upto, base = _manifest_read_mor(state, "vector index")
-    assert (v, base) == (2, 2)  # chain reset: deltas <= compact_every
+    # chain reset: deltas <= compact_every
+    assert _manifest_text(state) == "mor 2 feedbeef 0 2\n"
     # tombstones purged physically from the touched cell partition
     enc2 = os.path.join(state, "v-2", "enc")
     assert sorted(

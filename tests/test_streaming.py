@@ -1,6 +1,8 @@
 """Streaming pipeline: availableNow drain equals the batch computation
 (Spark's unified batch/stream semantics make the batch frame the oracle)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -233,3 +235,44 @@ def test_ohlc_stream_equals_batch(spark, batch_events):
     cols = ["bucket_start", "n_events", "open_milli", "high_milli",
             "low_milli", "close_milli", "sum_milli"]
     assert _canon(got, cols) == _canon(want, cols) and got.count() > 0
+
+
+def test_append_agg_drain_emits_closed_windows(spark, batch_events, tmp_path):
+    """An append-mode windowed aggregation emits a window only once the
+    watermark passes it, which for a finite drain happens in the final
+    no-data microbatch.  run_to_memory turns that batch on for this shape
+    by itself, so a 4-file drain (one microbatch per file, in event-time
+    order) returns exactly the batch rows whose 5-minute window the final
+    10-minute watermark has closed: 986 of 987.  Skipping the batch
+    returned 737."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_DIR}/events.parquet").sort_by("ts")
+    cuts = [i * t.num_rows // 4 for i in range(5)]
+    for i in range(4):
+        part = str(tmp_path / f"part-{i}.parquet")
+        pq.write_table(t.slice(cuts[i], cuts[i + 1] - cuts[i]), part)
+        # the file source orders files by modification time
+        os.utime(part, ns=(10**18 + i * 10**9,) * 2)
+    stream = read_events_stream(spark, str(tmp_path), max_files_per_trigger=1)
+    got = run_to_memory(tumbling_agg(stream), mode="append")
+    watermark = batch_events.agg(F.unix_timestamp(F.max("ts"))).first()[0] - 600
+    want = tumbling_agg(batch_events).where(F.col("bucket_start") + 300 <= watermark)
+    cols = ["bucket_start", "event_type", "n_events", "total_value"]
+    assert _canon(got, cols) == _canon(want, cols)
+    assert got.count() == 986
+
+
+def test_schema_memo_sees_rewritten_probe(spark, tmp_path):
+    """Rewriting the probed parquet under the same path within one
+    session re-probes its schema: the memo key carries the file's mtime
+    and size."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_DIR}/events.parquet").slice(0, 10)
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(t, path)
+    assert "extra" not in read_events_stream(spark, path).columns
+    pq.write_table(t.append_column("extra", pa.array(range(10), pa.int64())), path)
+    assert "extra" in read_events_stream(spark, path).columns

@@ -267,15 +267,17 @@ def main() -> int:
             reset_shared_components()
         except Exception:
             pass
-        # nudge FIRST, then measure: the ContextCleaner unpersists GC'd
-        # handles asynchronously, and measuring at the top of the loop
-        # left the final iteration's gc+sleep dead work — the FAIL
-        # verdict could read a count one settle-window stale (r15 ADVICE)
+        # measure once up front: a clean battery pays no gc + sleep.  Only
+        # a nonzero count nudges FIRST, then re-measures: the
+        # ContextCleaner unpersists GC'd handles asynchronously, and
+        # measuring at the top of the loop left the final iteration's
+        # gc+sleep dead work — the FAIL verdict could read a count one
+        # settle-window stale (r15 ADVICE)
         import gc
 
-        n_left = -1
-        jmap = None
-        for attempt in range(6):
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        n_left = jmap.size()
+        for attempt in range(6 if n_left else 0):
             gc.collect()
             spark.sparkContext._jvm.System.gc()
             time.sleep(0.5 * (attempt + 1))

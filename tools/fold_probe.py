@@ -388,10 +388,13 @@ def main() -> None:
         )
         from scholarmind_spark.streaming.pipeline import (
             _ledger_ingest_fn,
-            _manifest_gc,
-            _manifest_publish,
-            _manifest_read,
             ledger_state_dirs,
+        )
+        from scholarmind_spark.streaming.state import (
+            Manifest,
+            gc_versions,
+            publish_manifest,
+            read_manifest,
         )
 
         root = tempfile.mkdtemp(prefix="ledgersim_")
@@ -427,7 +430,8 @@ def main() -> None:
                 ids = list(range(lo - 100, lo - 80))
                 retired_ids.extend(ids)
                 fp_dir, cnt_dir = ledger_state_dirs(state)
-                version, _, upto = _manifest_read(state)
+                m = read_manifest(state, "cow")
+                version, upto = m.version, m.upto
                 new_fp, new_counts = ledger_retire(
                     spark.read.parquet(fp_dir),
                     spark.read.parquet(cnt_dir),
@@ -440,8 +444,8 @@ def main() -> None:
                 new_counts.write.mode("overwrite").parquet(
                     os.path.join(new_dir, "counts")
                 )
-                _manifest_publish(state, version + 1, lineage, upto)
-                _manifest_gc(state, version)
+                publish_manifest(state, Manifest(version + 1, lineage, upto))
+                gc_versions(state, version)
         elapsed = time.time() - t_all
 
         # expected corpus: latest version per surviving doc — ids
@@ -502,7 +506,7 @@ def main() -> None:
         ledger_shingle_counts(
             spark.read.parquet(os.path.join(oneshot, "v-0/fp"))
         ).write.mode("overwrite").parquet(os.path.join(oneshot, "v-0/counts"))
-        _manifest_publish(oneshot, 0, lineage, n_batches - 2)
+        publish_manifest(oneshot, Manifest(0, lineage, n_batches - 2))
         fold_one = _ledger_ingest_fn(oneshot, lineage)
         final_batch = docs.where(
             (F.col("doc_id") >= pre_lo)
@@ -647,10 +651,10 @@ def main() -> None:
         )
         from scholarmind_spark.streaming.pipeline import (
             _ledger_ingest_fn_mor,
-            _manifest_read_mor,
             ledger_mor_retire,
             ledger_state_mor,
         )
+        from scholarmind_spark.streaming.state import read_manifest
 
         root = tempfile.mkdtemp(prefix="ledgersimmor_")
         state = os.path.join(root, "state")
@@ -674,13 +678,13 @@ def main() -> None:
                         F.concat("text", F.lit(f" rev{i}")).alias("text"),
                     )
                 )
-            pre = _manifest_read_mor(state) if i > 0 else None
+            pre = read_manifest(state, "mor") if i > 0 else None
             t0 = time.time()
             fold(batch, i)
             dt = time.time() - t0
-            post = _manifest_read_mor(state)
+            post = read_manifest(state, "mor")
             # a fold that moved the base forward was a compaction
-            if pre is None or post[3] > (pre[3] if pre else -1):
+            if pre is None or post.base > pre.base:
                 compact_times.append(dt)
             else:
                 inc_times.append(dt)
@@ -754,8 +758,8 @@ def main() -> None:
             _ledger_ingest_fn_mor,
             _mor_chains,
             _mor_touched_buckets,
-            _manifest_read_mor,
         )
+        from scholarmind_spark.streaming.state import read_manifest
 
         bucket_rows, batch_n = 500, 20
         rows_pruned: dict[int, float] = {}
@@ -783,7 +787,8 @@ def main() -> None:
                 ),
                 1,
             )
-            version, _, _, base_v = _manifest_read_mor(state)
+            head = read_manifest(state, "mor")
+            version, base_v = head.version, head.base
             batch_ids = spark.range(batch_n).select(F.col("id"))
             per_p, per_f = [], []
             for _ in range(REPS):
@@ -848,11 +853,11 @@ def main() -> None:
         # (probed cells + delta stack) vs the full chain (old path).
         # Exactness: pruned resolve == full resolve within probed cells.
         from scholarmind_spark.streaming.pipeline import (
-            _manifest_read_mor,
             _vec_chain,
             _vec_resolve,
             _vector_ingest_fn,
         )
+        from scholarmind_spark.streaming.state import read_manifest
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         n_emb = emb.count()
@@ -895,7 +900,8 @@ def main() -> None:
             dw[k] = float(
                 spark.read.parquet(os.path.join(state, "v-1", "denc")).count()
             )
-            version, _, _, base_v = _manifest_read_mor(state)
+            head = read_manifest(state, "mor", "vector index")
+            version, base_v = head.version, head.base
             q = emb.where(F.col("vec_id").isin(list(range(nq)))).select(
                 F.col("vec_id").alias("query_id"),
                 F.col("embedding").alias("query_vec"),
@@ -963,7 +969,8 @@ def main() -> None:
             t0 = time.time()
             fold(one_cell(910_000_000), 2)
             cwall[k] = time.time() - t0
-            v2, _, _, b2 = _manifest_read_mor(state)
+            head = read_manifest(state, "mor", "vector index")
+            v2, b2 = head.version, head.base
             assert b2 == v2, "fold 2 did not compact"
             crows[k] = float(
                 spark.read.parquet(
