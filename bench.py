@@ -351,6 +351,7 @@ def main() -> None:
 
     spark = get_spark(app_name="scholarmind-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     # warmup: JVM, parquet footer reads, codegen.  A full mid-weight
     # query through the noop sink (not just a limit-count) — with the
@@ -485,13 +486,19 @@ def main() -> None:
     if os.path.exists(anchors_path):
         with open(anchors_path) as f:
             _a = json.load(f)
-        # anchors are per-SF AND per-protocol: comparing an sf0.01 smoke
-        # to sf0.1 anchors would flag everything, and a single-rep or
+        # anchors are per-SF, per-parallelism AND per-protocol: comparing
+        # an sf0.01 smoke to sf0.1 anchors would flag everything, a
+        # local[4] run is no match for local[32] medians, and a single-rep or
         # BENCH_ONLY subset run pays cold fold/JIT costs the full-list
         # multi-rep protocol amortizes (observed: ann_index_stream 24.1s
         # on a 1-rep smoke vs its 3.2s in-context anchor — all warmup).
-        # Off-protocol runs triage as "new".
-        if str(_a.get("sf")) == sf and not only and n_reps >= 2:
+        # Off-protocol runs and other parallelisms triage as "new".
+        if (
+            str(_a.get("sf")) == sf
+            and _a.get("cpus") == cpus
+            and not only
+            and n_reps >= 2
+        ):
             raw_anchors = _a.get("anchors", {})
             # r15 format: {"med": x, "min": y}; older files stored a
             # bare float (the min basis) — read it as the med and let
@@ -576,6 +583,7 @@ def main() -> None:
             json.dump(
                 {
                     "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                    "cpus": cpus,
                     "n_reps": n_reps,
                     "load": load,
                     "clean_counts": clean_counts,

@@ -448,17 +448,19 @@ def embedding_neardup_pairs(
         F.col(vec_col).alias("__vb"),
         _norm(F.col(vec_col)).alias("__nb"),
     ).filter(F.col("__nb") > 0)
+    # per-PAIR dot: the Arrow batch path (bit-identical to _dot — see
+    # _dot_pairs_arrow; measured 1.56 → 0.86 s on the 252k sf0.1
+    # candidate pairs).  This copy is marked nondeterministic so the
+    # optimizer cannot inline cos_raw into the threshold filter: a
+    # deterministic one is evaluated twice, once under the filter and
+    # once in the projection (two ArrowEvalPython nodes).
+    dot_once = F.pandas_udf(_dot_pairs_arrow.func, DoubleType()).asNondeterministic()
     out = (
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .withColumn(
             "cos_raw",
-            # per-PAIR dot: the Arrow batch path (bit-identical to _dot —
-            # see _dot_pairs_arrow; one ArrowEvalPython node, no
-            # duplicated evaluation, measured 1.56 → 0.86 s on the 252k
-            # sf0.1 candidate pairs)
-            _dot_pairs_arrow(F.col("__va"), F.col("__vb"))
-            / (F.col("__na") * F.col("__nb")),
+            dot_once(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
         )
         .filter(F.col("cos_raw") >= threshold)
         .select("id_a", "id_b", F.round("cos_raw", 6).alias("cosine"))

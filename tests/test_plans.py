@@ -4,6 +4,8 @@ filters and broadcast joins where the design depends on them."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from scholarmind_spark.queries import SPARK_QUERIES
@@ -210,3 +212,11 @@ def test_scrub_hot_span_anti_join_broadcasts_via_aqe(spark):
         "hot-span anti-join did not resolve to broadcast via AQE:\n"
         + "\n".join(anti)
     )
+
+
+def test_embedding_pair_dot_evaluated_once(spark):
+    """The Arrow pair dot in embedding_neardup_pairs feeds both the
+    threshold filter and the rounded output column; it must run in ONE
+    ArrowEvalPython node, not be re-evaluated for the projection."""
+    plan = _plan(SPARK_QUERIES["dedup_embedding_cosine"](spark, SF))
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1

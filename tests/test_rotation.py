@@ -6,8 +6,11 @@ removes."""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
+
+import pytest
 
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -17,6 +20,7 @@ from tools.rotation import (  # noqa: E402
     MAX_STALENESS,
     STALENESS4_OK,
     WINDOW,
+    WINDOW_FILE,
     audit,
     generate_front,
     last_seen_rounds,
@@ -24,15 +28,14 @@ from tools.rotation import (  # noqa: E402
 
 
 def _fixture():
-    from scholarmind_spark.queries import (
-        _ROUND15_FRONT,
-        _WINDOW_BASIS_ROUND,
-        SPARK_QUERIES,
-    )
+    from scholarmind_spark.queries import SPARK_QUERIES
 
+    with open(WINDOW_FILE) as f:
+        window = json.load(f)
+    basis = window["basis_round"]
     registered = list(SPARK_QUERIES)
-    seen = last_seen_rounds(upto=_WINDOW_BASIS_ROUND)
-    return registered, seen, _WINDOW_BASIS_ROUND + 1, _ROUND15_FRONT
+    seen = last_seen_rounds(upto=basis)
+    return registered, seen, basis + 1, window["front"]
 
 
 def test_committed_window_is_tool_generated():
@@ -45,9 +48,8 @@ def test_window_leads_queries_and_oracle_dicts():
 
     registered, seen, target, committed = _fixture()
     assert list(SPARK_QUERIES)[: len(committed)] == committed
-    # oracle dict is rotated identically (keys it has, in window order)
-    with_oracle = [g for g in committed if g in ORACLE_SQL]
-    assert list(ORACLE_SQL)[: len(with_oracle)] == with_oracle
+    # both views come from one registry: same names, same order, all of them
+    assert list(SPARK_QUERIES) == list(ORACLE_SQL)
 
 
 def test_staleness_invariant_holds():
@@ -83,3 +85,15 @@ def test_staleness4_allowance_names_registered_gates():
     assert set(STALENESS4_OK) <= set(SPARK_QUERIES)
     # allowance stays deliberate: entries are unique and sorted-stable
     assert len(STALENESS4_OK) == len(set(STALENESS4_OK))
+
+
+def test_duplicate_gate_registration_raises():
+    """A second gate() with a registered name is refused (a duplicate
+    dict key used to silently replace the first entry)."""
+    from scholarmind_spark.queries import _GATES, ORACLE_SQL, SPARK_QUERIES, gate
+
+    name = "q1_pricing_summary"
+    with pytest.raises(ValueError, match=name):
+        gate(name, SPARK_QUERIES["dedup_exact"], ORACLE_SQL["dedup_exact"])
+    # the first registration is left in place
+    assert _GATES[name] == (SPARK_QUERIES[name], ORACLE_SQL[name])

@@ -6,8 +6,10 @@ round under the contract: every registered gate is driver-checked at
 least once every 4 rounds (max staleness 3).  Hand-authoring the window
 produced one wrong-arithmetic header already (r12, caught by r13
 ADVICE), and the registry is close to the 4x50 = 200 pigeonhole bound —
-so from round 14 the window is GENERATED here and a pytest
-(tests/test_rotation.py) pins the committed list to this tool's output.
+so the window is GENERATED here, into the data file
+``scholarmind_spark/rotation_window.json``; ``queries.py`` leads both
+registry views with it, and a pytest (tests/test_rotation.py) pins the
+committed file to this tool's output.
 
 Selection rule (deterministic):
 
@@ -32,9 +34,11 @@ means freezing gate additions, not silently stretching staleness.
 Usage:
     python tools/rotation.py [basis_round]
 
-Prints the ``_ROUND{N}_FRONT`` list for round N = basis + 1 (basis
-defaults to the newest CORRECTNESS_r*.json present) plus a staleness
-audit, and exits non-zero on any invariant violation.
+Writes ``{"basis_round": basis, "front": [...]}`` — the window for
+round basis + 1 — to ``scholarmind_spark/rotation_window.json`` (basis
+defaults to the newest CORRECTNESS_r*.json present) and prints a
+staleness audit.  On any invariant violation it exits non-zero and
+writes nothing.
 """
 
 from __future__ import annotations
@@ -73,6 +77,7 @@ STALENESS4_OK: list[str] = [
 ]
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WINDOW_FILE = os.path.join(REPO, "scholarmind_spark", "rotation_window.json")
 
 
 def last_seen_rounds(repo_root: str = REPO, upto: int | None = None) -> dict[str, int]:
@@ -167,14 +172,14 @@ def main() -> None:
     seen = last_seen_rounds(upto=basis)
     target = basis + 1
     front = generate_front(registered, seen, target)
-    print(f"# basis round {basis} -> window for round {target}")
-    print(f"_WINDOW_BASIS_ROUND = {basis}")
-    print(f"_ROUND{target}_FRONT = [")
-    for g in front:
-        print(f'    "{g}",')
-    print("]")
-    for line in audit(registered, seen, front, target):
-        print(f"# {line}")
+    lines = audit(registered, seen, front, target)
+    with open(WINDOW_FILE, "w") as f:
+        json.dump({"basis_round": basis, "front": front}, f, indent=2)
+        f.write("\n")
+    rel = os.path.relpath(WINDOW_FILE, REPO)
+    print(f"basis round {basis} -> window for round {target}: wrote {rel}")
+    for line in lines:
+        print(line)
 
 
 if __name__ == "__main__":

@@ -11,7 +11,9 @@ instead of by hand-editing:
   min-basis false `elevated_clean` flags r14 carried), with the
   clean-rep MIN kept alongside as the best-case reference;
 - rep-1 values for the fold-paying gates are carried into the file so
-  the state-build cost stays visible next to the standing-read anchor.
+  the state-build cost stays visible next to the standing-read anchor;
+- the run's ``sf`` and ``cpus`` (Spark's default parallelism) key the
+  file: bench.py triages against it only when both match.
 
 Usage: python tools/seed_anchors.py [--force] [note...]
 """
@@ -61,6 +63,8 @@ def main() -> None:
             "verdict requires a plan-digest diff before re-anchoring"
         ),
         "sf": run["sf"],
+        # bench.py triages against these anchors only at the same parallelism
+        "cpus": run.get("cpus"),
         "load": {k: load.get(k) for k in ("start", "ext_max", "n_suspect")},
         "anchors": anchors,
     }
@@ -68,7 +72,10 @@ def main() -> None:
     with open(dst, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
         f.write("\n")
-    print(f"seeded {len(anchors)} anchors -> {dst} (sf={run['sf']})")
+    print(
+        f"seeded {len(anchors)} anchors -> {dst} "
+        f"(sf={run['sf']}, cpus={run.get('cpus')})"
+    )
 
 
 if __name__ == "__main__":
