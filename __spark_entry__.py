@@ -28,7 +28,7 @@ def entry(spark: SparkSession) -> DataFrame:
     second pass (lit_fuzzy_dedup — the capability the reference lacks),
     enrich via broadcast lookup (J1), attach link columns (D6/D7/A2),
     run the U1/J2 LLM abstract-understanding map (deterministic mock
-    client, keyed attach) and text-quality metrics, and return
+    client, one call per key) and text-quality metrics, and return
     per-source corpus statistics."""
     from scholarmind_spark.operators.textstats import quality_score, token_count
     from scholarmind_spark.queries import (
@@ -37,6 +37,7 @@ def entry(spark: SparkSession) -> DataFrame:
         lit_fuzzy_dedup,
         lit_llm_extract,
     )
+    from scholarmind_spark.util import carry_caches
 
     sf_dir = "/root/testdata/sf0.001"
     kept = lit_fuzzy_dedup(spark, sf_dir)
@@ -47,14 +48,14 @@ def entry(spark: SparkSession) -> DataFrame:
         quality_score(F.col("text")).alias("quality_score"),
     )
     enriched = lit_enrich_join(spark, sf_dir).select("record_id", "impact_factor")
-    # U1/J2 end-to-end each round: the mapInPandas LLM map with the
-    # deterministic mock + keyed attach; the summary field is non-empty
+    # U1/J2 end-to-end each round: the mapInArrow LLM map with the
+    # deterministic mock; the summary field is non-empty
     # by construction, so counting its prefix checks the whole path
-    llm = lit_llm_extract(spark, sf_dir).select("record_id", "summary")
+    llm = lit_llm_extract(spark, sf_dir)
     out = (
         kept.join(stats, "record_id")
         .join(enriched, "record_id")
-        .join(llm, "record_id")
+        .join(llm.select("record_id", "summary"), "record_id")
         .groupBy("source_type")
         .agg(
             F.count("*").alias("n_records"),
@@ -67,7 +68,8 @@ def entry(spark: SparkSession) -> DataFrame:
         )
         .orderBy("source_type")
     )
-    return out
+    # release_caches(out) frees the LLM map's checkpoint
+    return carry_caches(llm, out)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

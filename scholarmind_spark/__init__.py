@@ -10,7 +10,7 @@ Layout:
 - ``operators``  — DataFrame -> DataFrame transforms (priority dedup,
                    enrichment join, union, similarity search, text analytics,
                    multimodal plumbing).
-- ``llm``        — the LLM abstract-understanding map (mapInPandas) with a
+- ``llm``        — the LLM abstract-understanding map (mapInArrow) with a
                    pluggable, mockable client and YAML-style templates.
 - ``sinks``      — parquet engine sink + driver-side Excel presentation sink.
 - ``streaming``  — Structured Streaming extensions over the events stream.

@@ -63,6 +63,7 @@ def main(argv: list[str] | None = None) -> int:
     from scholarmind_spark import get_spark
     from scholarmind_spark.pipeline import PipelineConfig, run_pipeline
     from scholarmind_spark.sinks import write_excel, write_parquet, write_sheets_csv
+    from scholarmind_spark.util import release_caches
 
     sources = {
         k: v
@@ -134,6 +135,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.excel:
         write_excel(result, args.excel)
         print(f"wrote workbook: {args.excel}")
+    release_caches(result)
     return 0
 
 

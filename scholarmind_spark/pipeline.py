@@ -4,10 +4,15 @@ CLI lifecycle (``main.py:439-597``, SURVEY §3.1):
     parse+normalize+union → priority dedup (A1) → metrics join (J1)
     → link columns (D6/D7/A2) → publication-year (D2) → LLM map (U1) → sink
 
-Everything up to the sink is ONE lazy logical plan; Catalyst sees the whole
-pipeline and pushes filters/prunes columns into the scans.  Actions happen
-only at the sink plus the two driver-side materializations the reference
-also has (distinct-journal collect for the metrics fetch; SURVEY §3.1).
+Everything up to the LLM map is ONE lazy logical plan; Catalyst sees it
+whole and pushes filters/prunes columns into the scans.  The LLM map is the
+single materialization point: its output is a lazy local checkpoint
+(``llm.extract``), so the first sink runs the plan and calls the LLM once
+per record, and every later sink reads the same answers.  The only other
+driver-side materialization is the one the reference also has (the
+distinct-journal collect for the online metrics fetch; SURVEY §3.1).
+Release the checkpoint after the last sink with
+``util.release_caches(result)``.
 """
 
 from __future__ import annotations

@@ -28,6 +28,11 @@ def plan_digest(df_or_plan: DataFrame | str) -> dict[str, object]:
     - ``python_stages``: Arrow-batched Python hops (the slow path — should
       appear only where semantics require Python)
     - ``codegen_spans``: whole-stage codegen regions (wider is better)
+
+    A frame taken with :func:`scholarmind_spark.util.lazy_checkpoint`
+    plans as a ``LogicalRDD`` scan; the digest then also counts the plan
+    of the frame the checkpoint was taken from (its ``_sm_checkpoint_of``
+    tag), which runs once behind that scan.
     """
     plan = (
         df_or_plan if isinstance(df_or_plan, str) else explain_formatted(df_or_plan)
@@ -49,17 +54,24 @@ def plan_digest(df_or_plan: DataFrame | str) -> dict[str, object]:
             )
         }
     )
-    return {
+    digest = {
         # "Exchange" = shuffle; BroadcastExchange intentionally excluded
         "exchanges": nodes.count("Exchange"),
         "joins": joins,
         "pushed_filters": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
         "scans": nodes.count("Scan parquet"),
         "python_stages": sum(
-            nodes.count(n) for n in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+            nodes.count(n)
+            for n in ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython")
         ),
         # formatted-mode plans annotate codegen as "[codegen id : N]" on
         # detail headers; "WholeStageCodegen (N)" only appears in
         # simple/codegen modes, so the old pattern always counted 0
         "codegen_spans": len(set(re.findall(r"\[codegen id : (\d+)\]", plan))),
     }
+    src = getattr(df_or_plan, "_sm_checkpoint_of", None)
+    if src is not None:
+        inner = plan_digest(src)
+        for k, v in inner.items():
+            digest[k] = sorted({*digest[k], *v}) if k == "joins" else digest[k] + v
+    return digest

@@ -2230,12 +2230,14 @@ gate(
 
 
 def lit_llm_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U1 LLM abstract-understanding map under the oracle: mapInPandas +
-    keyed attach + D12 parse, with the deterministic mock client (reply =
-    md5-derived JSON of the prompt) that DuckDB reproduces field-by-field."""
+    """U1 LLM abstract-understanding map under the oracle: pass-through
+    mapInArrow (one call per key) + D12 parse, with the deterministic mock
+    client (reply = md5-derived JSON of the prompt) that DuckDB reproduces
+    field-by-field."""
     from scholarmind_spark.llm.client import MockLLMClient
     from scholarmind_spark.llm.extract import llm_extract
     from scholarmind_spark.llm.templates import PromptTemplate
+    from scholarmind_spark.util import carry_caches
 
     tpl = PromptTemplate(
         type="gate",
@@ -2249,7 +2251,7 @@ def lit_llm_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("record_id"), F.col("text").alias("abstract")
     )
     out = llm_extract(d, tpl, MockLLMClient(fields=tuple(tpl.fields), mode="json"))
-    return out.select("record_id", "summary", "method")
+    return carry_caches(out, out.select("record_id", "summary", "method"))
 
 
 LIT_LLM_SQL = """

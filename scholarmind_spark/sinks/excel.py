@@ -18,10 +18,10 @@ same sheet layout as CSV files.
 
 from __future__ import annotations
 
+import csv
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from scholarmind_spark.sinks.parquet import flatten_for_presentation
 
@@ -39,13 +39,27 @@ SHEET_SPECS: dict[str, tuple[str | None, list[str]]] = {
 }
 
 
-def _sheet_frames(df: DataFrame) -> dict[str, DataFrame]:
+def _sheet_rows(df: DataFrame) -> dict[str, tuple[list[str], list[list]]]:
+    """Sheet → (columns, rows) of the workbook layout, from ONE collect.
+
+    The flattened frame is collected once, with the ordered union of the
+    sheets' columns (each intersected with the frame's, reference P7), and
+    split per sheet on the driver.  Every sheet's rows end up in driver
+    memory anyway, so per-sheet scans would only re-run the plan."""
     flat = flatten_for_presentation(df)
+    sheet_cols = {
+        sheet: [c for c in wanted if c in flat.columns]
+        for sheet, (_, wanted) in SHEET_SPECS.items()
+    }
+    cols = list(dict.fromkeys(["source_type", *(c for cs in sheet_cols.values() for c in cs)]))
+    rows = flat.select(cols).collect()
     out = {}
-    for sheet, (stype, wanted) in SHEET_SPECS.items():
-        d = flat if stype is None else flat.filter(F.col("source_type") == stype)
-        cols = [c for c in wanted if c in flat.columns]  # P7 intersect
-        out[sheet] = d.select(cols)
+    for sheet, (stype, _) in SHEET_SPECS.items():
+        idx = [cols.index(c) for c in sheet_cols[sheet]]
+        out[sheet] = (
+            sheet_cols[sheet],
+            [[r[i] for i in idx] for r in rows if stype is None or r[0] == stype],
+        )
     return out
 
 
@@ -110,26 +124,24 @@ def write_excel(df: DataFrame, path: str) -> None:
     excel_formatter.py:280-345).
 
     Written with the vendored stdlib xlsx writer (:mod:`..xlsxlite`) —
-    deterministic output, no openpyxl dependency.  Rows stream to the
-    driver via ``toLocalIterator`` (one partition in memory at a time);
-    this is the presentation sink for human-sized outputs — the
-    engine-native pipeline sink is ``sinks.parquet``."""
+    deterministic output, no openpyxl dependency.  The rows reach the
+    driver in one collect (:func:`_sheet_rows`); this is the presentation
+    sink for human-sized outputs — the engine-native pipeline sink is
+    ``sinks.parquet``."""
     from scholarmind_spark.xlsxlite import Sheet, write_xlsx
 
     sheets: dict[str, Sheet] = {}
-    for sheet, frame in _sheet_frames(df).items():
-        cols = frame.columns
+    for sheet, (cols, data) in _sheet_rows(df).items():
         rows: list[list] = [list(cols)]
         # header row height 25 (excel_formatter.py:263)
         row_heights: dict[int, int] = {0: 25}
         hyperlinks: dict[tuple[int, int], str] = {}
-        for r, row in enumerate(frame.toLocalIterator(), 1):
-            values = [row[c] for c in cols]
+        for r, values in enumerate(data, 1):
             rows.append(values)
             h = content_row_height(values)
             if h is not None:
                 row_heights[r] = h
-            for i, url in hyperlink_targets(list(cols), values).items():
+            for i, url in hyperlink_targets(cols, values).items():
                 hyperlinks[(r, i)] = url
         sheets[sheet] = Sheet(
             rows,
@@ -145,12 +157,16 @@ def write_excel(df: DataFrame, path: str) -> None:
 
 
 def write_sheets_csv(df: DataFrame, out_dir: str) -> dict[str, str]:
-    """Same sheet layout as one CSV per sheet (openpyxl-free fallback).
-    Returns sheet → file path."""
+    """Same sheet layout as one CSV per sheet (openpyxl-free fallback),
+    from the same single collect as :func:`write_excel`.  Returns sheet →
+    file path."""
     os.makedirs(out_dir, exist_ok=True)
     paths = {}
-    for sheet, frame in _sheet_frames(df).items():
+    for sheet, (cols, data) in _sheet_rows(df).items():
         p = os.path.join(out_dir, f"{sheet}.csv")
-        frame.toPandas().to_csv(p, index=False)
+        with open(p, "w", newline="", encoding="utf-8") as f:
+            w = csv.writer(f, lineterminator="\n")
+            w.writerow(cols)
+            w.writerows(data)
         paths[sheet] = p
     return paths

@@ -93,7 +93,8 @@ def release_caches(df: DataFrame) -> None:
 
 
 def carry_caches(src: DataFrame, wrapped: DataFrame) -> DataFrame:
-    """Re-attach ``src``'s cache tags to a DataFrame that WRAPS it.
+    """Re-attach ``src``'s cache tags (and the frame a checkpoint was
+    taken from, see :func:`lazy_checkpoint`) to a DataFrame that WRAPS it.
 
     Any plain DataFrame method (``orderBy``, ``select``, ``crossJoin``,
     ...) returns a NEW object without the ``_sm_caches`` tag, so a
@@ -105,4 +106,30 @@ def carry_caches(src: DataFrame, wrapped: DataFrame) -> DataFrame:
         out = some_operator(df)           # tagged
         return carry_caches(out, out.orderBy("id"))
     """
-    return attach_caches(wrapped, list(getattr(src, "_sm_caches", ())))
+    out = attach_caches(wrapped, list(getattr(src, "_sm_caches", ())))
+    if hasattr(src, "_sm_checkpoint_of"):
+        out._sm_checkpoint_of = src._sm_checkpoint_of  # type: ignore[attr-defined]
+    return out
+
+
+def lazy_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=False)``: the plan runs once and keeps
+    its blocks; every later action reads the blocks.  Under adaptive
+    execution the shuffle stages of ``df`` already run when the checkpoint
+    is taken (the adaptive plan is finalized then); the stage after the
+    last shuffle runs at the first action.
+
+    A local checkpoint, not ``persist()``: the CacheManager matches a later,
+    plan-identical frame of the same session to an old cache, so a second
+    run of the same pipeline would silently read the first run's rows (and
+    skip its side effects, such as LLM calls).  A checkpoint is reachable
+    only through the frame returned here.
+
+    The result is tagged twice: with itself as its cache
+    (:func:`release_caches` frees the blocks), and with the frame it was
+    taken from (``_sm_checkpoint_of``), which
+    :func:`scholarmind_spark.plans.plan_digest` follows past the
+    checkpoint's ``LogicalRDD`` leaf."""
+    out = df.localCheckpoint(eager=False)
+    out._sm_checkpoint_of = df  # type: ignore[attr-defined]
+    return attach_caches(out, [out])

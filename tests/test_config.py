@@ -194,6 +194,7 @@ def test_config_drives_pipeline(spark, tmp_path):
     section, max_workers from processing."""
     from scholarmind_spark.config import load_config, pipeline_config_from
     from scholarmind_spark.pipeline import run_pipeline
+    from scholarmind_spark.util import release_caches
 
     tdir = _template_dir(tmp_path)
     p = _write(tmp_path / "config.yaml", f"""
@@ -212,7 +213,9 @@ def test_config_drives_pipeline(spark, tmp_path):
     )
     assert cfg.llm_max_workers == 2
     assert cfg.llm_template.type == "agriculture"
-    out = run_pipeline(spark, cfg).collect()
+    df = run_pipeline(spark, cfg)
+    out = df.collect()
+    release_caches(df)  # the LLM map's checkpoint
     assert len(out) > 0
     row = out[0].asDict()
     assert "crop_species" in row and row["crop_species"]

@@ -9,13 +9,17 @@ record's LLM summary attached (n_llm_ok == n_records)."""
 
 import sys
 
+from scholarmind_spark.util import release_caches
+
 sys.path.insert(0, "/root/repo")
 
 
 def test_entry_golden_sf0001(spark):
     import __spark_entry__ as e
 
-    rows = {r["source_type"]: r for r in e.entry(spark).collect()}
+    out = e.entry(spark)
+    rows = {r["source_type"]: r for r in out.collect()}
+    release_caches(out)
     assert {k: r["n_records"] for k, r in rows.items()} == {
         "other": 11,
         "pubmed": 35,
@@ -35,7 +39,9 @@ def test_entry_golden_sf0001(spark):
 def test_entry_schema_stable(spark):
     import __spark_entry__ as e
 
-    assert [f.name for f in e.entry(spark).schema.fields] == [
+    out = e.entry(spark)
+    release_caches(out)
+    assert [f.name for f in out.schema.fields] == [
         "source_type",
         "n_records",
         "avg_tokens",

@@ -169,7 +169,7 @@ def test_caches_released_through_gate_wrappers(spark):
     # present AFTER that was not present BEFORE
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     base_ids = set(jmap.keySet().toArray())
-    for name in ("lit_fuzzy_dedup", "link_fuzzy_vocab", "dedup_incremental"):
+    for name in ("lit_fuzzy_dedup", "link_fuzzy_vocab", "dedup_incremental", "lit_llm_extract"):
         out = SPARK_QUERIES[name](spark, "/root/testdata/sf0.001")
         assert getattr(out, "_sm_caches", []), name
         out.collect()

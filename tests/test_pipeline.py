@@ -11,6 +11,7 @@ from scholarmind_spark.llm.templates import PromptTemplate
 from scholarmind_spark.pipeline import PipelineConfig, build_corpus, process, run_pipeline
 from scholarmind_spark.schemas import METRICS_SCHEMA
 from scholarmind_spark.sinks import flatten_for_presentation, write_parquet, write_sheets_csv
+from scholarmind_spark.util import release_caches
 
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -45,7 +46,9 @@ def cfg(spark):
 def result(spark, cfg):
     df = run_pipeline(spark, cfg)
     df.cache().count()
-    return df
+    yield df
+    df.unpersist()
+    release_caches(df)  # the LLM map's checkpoint
 
 
 def test_pipeline_composes_all_stages(result):
@@ -97,6 +100,57 @@ def test_csv_sheet_sink_layout(tmp_path, result):
     with open(paths["Results"]) as f:
         header = next(csv.reader(f))
     assert "title_link" in header and "doi_link" in header
+
+
+def test_one_llm_call_per_record_across_sinks(spark, cfg, tmp_path):
+    """One run_pipeline result feeds both sinks from one set of answers:
+    the client sees exactly one call per distinct non-null abstract."""
+    from dataclasses import replace
+
+    from scholarmind_spark.sinks import write_excel
+    from scholarmind_spark.xlsxlite import read_xlsx
+
+    calls = spark.sparkContext.accumulator(0)
+    mock = cfg.llm_client
+
+    def client(messages):
+        calls.add(1)
+        return mock(messages)
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    df = run_pipeline(spark, replace(cfg, llm_client=client, llm_max_workers=1))
+    write_parquet(df, str(tmp_path / "corpus"))
+    write_excel(df, str(tmp_path / "corpus.xlsx"))
+    back = spark.read.parquet(str(tmp_path / "corpus"))
+    abstracts = back.filter(F.col("abstract").isNotNull()).select("abstract")
+    assert calls.value == abstracts.distinct().count() == abstracts.count() > 0
+    # the workbook holds the parquet's rows
+    results = read_xlsx(str(tmp_path / "corpus.xlsx"))["Results"]
+    assert len(results) - 1 == back.count()
+    # releasing the result frees the checkpoint the sinks read
+    release_caches(df)
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
+def test_write_excel_executes_plan_once(spark, cfg, tmp_path):
+    """write_excel runs its input plan once for all four sheets: a
+    pass-through filter upstream of the sink counts every row it sees."""
+    from pyspark.sql.types import BooleanType
+
+    from scholarmind_spark.sinks import write_excel
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(_):
+        seen.add(1)
+        return True
+
+    corpus = build_corpus(spark, cfg.sources)
+    n = corpus.count()
+    counted = corpus.filter(F.udf(count_row, BooleanType())(F.col("record_id")))
+    write_excel(counted, str(tmp_path / "wb.xlsx"))
+    assert seen.value == n
 
 
 def test_flatten_policy(result):
