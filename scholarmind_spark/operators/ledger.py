@@ -521,8 +521,8 @@ def ledger_expire_sql(
 # doc wins, tombstones delete, counts sum); compaction folds the stack
 # into a new base every K folds, amortizing the O(state) write over K
 # ingests.  The resolvers below are the pure-DataFrame algebra of that
-# read path — the streaming fold (streaming/pipeline.py, mode="mor")
-# owns the file/manifest layout.
+# read path — the streaming folds (streaming/pipeline.py) own the
+# file/manifest layout.
 #
 # Delta row conventions:
 # - fp delta: ``(id, n, hs, seq, tomb)`` — an upsert carries the new
@@ -533,18 +533,28 @@ def ledger_expire_sql(
 #   revise/retire subtraction algebra unchanged, just not yet summed.
 
 
-def ledger_mor_resolve_fp(chain: DataFrame) -> DataFrame:
-    """Resolve an fp base+delta chain to the current fingerprint table
-    ``(id, n, hs)``: the HIGHEST-seq row per id wins (base rows carry
-    their snapshot's seq, deltas their fold's), then tombstoned ids
-    drop.  One window pass over the chain — the read-side price of
-    writing O(batch) folds."""
+def mor_resolve(chain: DataFrame) -> DataFrame:
+    """Resolve a merge-on-read base+delta chain keyed by ``id``: the
+    HIGHEST-seq row per id wins (base rows carry their snapshot's seq,
+    deltas their fold's; seq is unique per version, so the pick is
+    deterministic), then tombstoned ids drop — a retired id's tombstone
+    wins the seq race and the id vanishes, a later re-ingest outranks
+    the tombstone.  Returns the payload columns (all but seq, tomb).
+    One window pass over the chain — the read-side price of writing
+    O(batch) folds.  Backs the ledger fp chain and the vector-index
+    enc chain alike."""
     w = Window.partitionBy("id").orderBy(F.desc("seq"))
     return (
-        chain.withColumn("rn", F.row_number().over(w))
-        .where((F.col("rn") == 1) & ~F.col("tomb"))
-        .select("id", "n", "hs")
+        chain.withColumn("__rn", F.row_number().over(w))
+        .where((F.col("__rn") == 1) & ~F.col("tomb"))
+        .drop("__rn", "seq", "tomb")
     )
+
+
+def ledger_mor_resolve_fp(chain: DataFrame) -> DataFrame:
+    """Resolve an fp base+delta chain ``(id, n, hs, seq, tomb)`` to the
+    current fingerprint table ``(id, n, hs)`` (:func:`mor_resolve`)."""
+    return mor_resolve(chain).select("id", "n", "hs")
 
 
 def ledger_mor_resolve_counts(chain: DataFrame) -> DataFrame:

@@ -7509,8 +7509,8 @@ gate("dedup_ledger_expire", dedup_ledger_expire, _dedup_ledger_expire_sql())
 
 def dedup_ledger_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read ledger resolve (operators/ledger.ledger_mor_* —
-    the O(batch)-write fold layout streaming/pipeline.py mode='mor'
-    publishes): a base snapshot (seq 0: odd docs except every 11th),
+    the O(batch)-write layout stream_ledger_ingest publishes): a base
+    snapshot (seq 0: odd docs except every 11th),
     one delta wave (seq 1: every 11th odd doc inserted, every 9th
     revised with new text, signed count deltas), and a tombstone wave
     (seq 2: every 7th odd doc retired with its contributions negated)

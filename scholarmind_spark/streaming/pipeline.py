@@ -38,9 +38,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from scholarmind_spark.streaming.state import (
-    SKIP, Manifest, chain_dirs, fold_gate, gc_versions, has_parquet,
-    publish_manifest, read_manifest, read_sidecar, recover_swap, rename_swap,
-    start_fold_stream, version_dir, write_marker, write_sidecar,
+    SKIP, Manifest, chain_dirs, commit_mor, fold_gate, gc_versions,
+    has_parquet, publish_manifest, read_manifest, read_sidecar, recover_swap,
+    rename_swap, start_fold_stream, version_dir, write_marker, write_sidecar,
 )
 
 # session -> {probe path: (file stamp, analyzed schema)}; weak on the
@@ -727,7 +727,7 @@ def manifest_state_dir(state_path: str) -> str | None:
     """Resolve the CURRENT version directory of a manifest-committed
     state snapshot (what a reader passes to ``spark.read.parquet``), or
     None if nothing has been published yet."""
-    m = read_manifest(state_path, "cow")
+    m = read_manifest(state_path, "cow", "sketch")
     return None if m is None else version_dir(state_path, m.version)
 
 
@@ -751,64 +751,43 @@ def stream_ledger_ingest(
     text_col: str = "text",
     shingle_k: int | None = None,
     checkpoint: str | None = None,
-    mode: str = "cow",
     compact_every: int = 8,
     bucket_rows: int = _MOR_BUCKET_ROWS,
 ):
     """Streaming maintenance of the DEDUP ledger: every microbatch of
     documents is applied to the (fingerprints, shingle-counts) state
-    pair via ``operators.ledger.ledger_revise`` — re-ingested doc ids
-    REPLACE their rows (old contributions subtracted), new ids insert —
-    so the standing state always equals a from-scratch build over the
-    latest version of every document seen, with no corpus recount.
+    pair with ``operators.ledger.ledger_revise``'s algebra — re-ingested
+    doc ids REPLACE their rows (old contributions subtracted), new ids
+    insert — so the standing state always equals a from-scratch build
+    over the latest version of every document seen, with no corpus
+    recount.
 
     The state pair MUST commit atomically: a crash between writing new
     fingerprints and new counts would leave the two halves describing
     different corpora, and every downstream match would be silently
-    wrong.  So this fold uses a manifest layout of
-    :mod:`streaming.state` exclusively — one manifest publish makes both
-    tables visible together, the multi-table commit renames cannot give.
+    wrong.  So this fold keeps the merge-on-read manifest layout of
+    :mod:`streaming.state` — one manifest publish makes both tables
+    visible together, the multi-table commit renames cannot give.
     Exactly-once follows the sketch-fold discipline (a re-delivered
     batch id is skipped, a foreign checkpoint lineage refuses).
 
-    ``mode`` picks the state layout:
-
-    - ``"cow"`` (default, copy-on-write): each fold REWRITES both full
-      tables into its version dir — simplest reads (plain parquet, via
-      :func:`ledger_state_dirs`), per-fold cost O(delta) compute +
-      O(standing corpus) rewrite (measured ~4 µs/doc at sf0.1, SCALE.md
-      r12 probe).
-    - ``"mor"`` (merge-on-read): each fold writes only its DELTA pair
-      (fp upserts with a sequence number, signed count deltas) —
-      per-fold write cost O(batch); every ``compact_every`` folds the
-      delta stack compacts into a new base, amortizing the O(state)
-      write.  Read with :func:`ledger_state_mor` (latest-seq-wins +
-      tombstone drop + counts sum — operators.ledger.ledger_mor_*).
-      Retire docs with :func:`ledger_mor_retire` (a tombstone-delta
-      transaction).  The two layouts refuse each other's state."""
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"unknown ledger mode {mode!r}: expected cow | mor")
-
-    def make_fold(lineage):
-        if mode == "cow":
-            return _ledger_ingest_fn(
-                state_path, lineage, id_col, text_col, shingle_k
-            )
-        return _ledger_ingest_fn_mor(
+    Each fold writes only its DELTA pair (fp upserts with a sequence
+    number, signed count deltas): per-fold write cost O(batch).  Every
+    ``compact_every`` versions the delta stack compacts into a new base,
+    amortizing the O(state) write; ``compact_every=1`` publishes a fully
+    resolved base at every fold.  Read with :func:`ledger_state_mor`
+    (latest-seq-wins + tombstone drop + counts sum); retire docs with
+    :func:`ledger_mor_retire` (a tombstone-delta transaction under the
+    same bound).  A state written by the former copy-on-write ledger
+    layout is refused: start a fresh state_path."""
+    return start_fold_stream(
+        stream_docs,
+        lambda lineage: _ledger_ingest_fn_mor(
             state_path, lineage, id_col, text_col, shingle_k, compact_every,
             bucket_rows,
-        )
-
-    return start_fold_stream(stream_docs, make_fold, checkpoint, "slck_", state_path)
-
-
-def ledger_state_dirs(state_path: str) -> tuple[str, str] | None:
-    """(fp_dir, counts_dir) of the CURRENT published ledger version, or
-    None if nothing has been published yet."""
-    base = manifest_state_dir(state_path)
-    if base is None:
-        return None
-    return os.path.join(base, "fp"), os.path.join(base, "counts")
+        ),
+        checkpoint, "slck_", state_path,
+    )
 
 
 def _ledger_batch_fp(batch_df: DataFrame, id_col, text_col, shingle_k):
@@ -828,51 +807,6 @@ def _ledger_batch_fp(batch_df: DataFrame, id_col, text_col, shingle_k):
     return ledger_fingerprints(uniq, id_col, text_col, k)
 
 
-def _ledger_ingest_fn(
-    state_path: str,
-    lineage: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int | None = None,
-):
-    """The foreachBatch body of :func:`stream_ledger_ingest`, exposed
-    for deterministic re-delivery / lineage-refusal tests."""
-    from scholarmind_spark.operators.ledger import (
-        ledger_revise,
-        ledger_shingle_counts,
-    )
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        head = fold_gate(state_path, lineage, batch_id, "cow", "ledger")
-        if head is SKIP:
-            return
-        spark = batch_df.sparkSession
-        v = head.version + 1 if head else 0
-        # feeds revise twice (fp + counts)
-        rev_fp = _ledger_batch_fp(batch_df, id_col, text_col, shingle_k).persist()
-        try:
-            if head:
-                base = version_dir(state_path, head.version)
-                new_fp, new_counts = ledger_revise(
-                    spark.read.parquet(os.path.join(base, "fp")),
-                    spark.read.parquet(os.path.join(base, "counts")),
-                    rev_fp,
-                )
-            else:
-                new_fp, new_counts = rev_fp, ledger_shingle_counts(rev_fp)
-            new_dir = version_dir(state_path, v)
-            new_fp.write.mode("overwrite").parquet(os.path.join(new_dir, "fp"))
-            new_counts.write.mode("overwrite").parquet(
-                os.path.join(new_dir, "counts")
-            )
-        finally:
-            rev_fp.unpersist()
-        publish_manifest(state_path, Manifest(v, lineage, batch_id))
-        gc_versions(state_path, v - 1)
-
-    return _fold
-
-
 def _mor_bucket_expr(nb: int):
     # xxhash64 is TYPE-sensitive (an int and a long with the same value
     # hash differently), so every bucket computation must hash the id AS
@@ -880,21 +814,6 @@ def _mor_bucket_expr(nb: int):
     # probe-time (:func:`_mor_touched_buckets`) casts caller ids to the
     # base schema's id type first.
     return F.pmod(F.xxhash64("id"), F.lit(nb))
-
-
-def _mor_write_base_fp(
-    full_fp, state_path: str, version: int, n_rows: int, bucket_rows: int
-) -> None:
-    """Materialize a base fp table partitioned by id-hash bucket, with
-    the bucket count derived from the resolved size (sidecar-recorded
-    for the pruned read path)."""
-    nb = max(1, min(_MOR_MAX_BUCKETS, math.ceil(max(n_rows, 1) / bucket_rows)))
-    full_fp.withColumn("bucket", _mor_bucket_expr(nb)).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(
-        os.path.join(version_dir(state_path, version), "fp")
-    )
-    write_sidecar(state_path, version, "nbuckets.txt", str(nb))
 
 
 def _mor_chains(
@@ -948,21 +867,107 @@ def _mor_touched_buckets(ids_df, state_path: str, base_v: int):
 
 def ledger_state_mor(spark, state_path: str):
     """Resolve a merge-on-read ledger to its current ``(fp, counts)``
-    DataFrames (the same shapes :func:`ledger_state_dirs` reads for
-    copy-on-write state), or None if nothing is published.  Cost: one
-    window pass over base+deltas for fp, one groupBy-sum for counts —
-    the read-side price of O(batch) folds; compaction keeps the chain
-    short (≤ compact_every deltas)."""
+    DataFrames — ``(id, n, hs)`` and ``(sh, df_count)``, the shapes of a
+    from-scratch ``ledger_fingerprints`` / ``ledger_shingle_counts``
+    build — or None if nothing is published.  Cost: one window pass over
+    base+deltas for fp, one groupBy-sum for counts — the read-side price
+    of O(batch) folds; compaction keeps the chain short (≤ compact_every
+    deltas, retires included)."""
     from scholarmind_spark.operators.ledger import (
         ledger_mor_resolve_counts,
         ledger_mor_resolve_fp,
     )
 
-    m = read_manifest(state_path, "mor")
+    m = read_manifest(state_path, "mor", "ledger")
     if m is None:
         return None
     fp_chain, cnt_chain = _mor_chains(spark, state_path, m.base, m.version)
     return ledger_mor_resolve_fp(fp_chain), ledger_mor_resolve_counts(cnt_chain)
+
+
+def _versioned(v: int, tomb: bool = False) -> list:
+    """The ``(seq, tomb)`` columns of a merge-on-read row written at
+    version ``v``."""
+    return [F.lit(v).cast("int").alias("seq"), F.lit(tomb).alias("tomb")]
+
+
+def _ledger_replaced(spark, state_path: str, head, ids):
+    """(current fp rows, negated count contributions) of ``ids`` (a
+    one-column ``id`` frame): the chain resolve PRUNED to the id-hash
+    buckets the ids touch — O(|ids|) against a bucketed base, where a
+    compaction (rightly) reads the whole chain."""
+    from scholarmind_spark.operators.ledger import (
+        ledger_mor_resolve_fp,
+        ledger_shingle_counts,
+    )
+
+    touched = _mor_touched_buckets(ids, state_path, head.base)
+    chain, _ = _mor_chains(
+        spark, state_path, head.base, head.version, fp_buckets=touched
+    )
+    rows = ledger_mor_resolve_fp(chain).join(ids, "id", "left_semi")
+    neg = ledger_shingle_counts(rows).select(
+        "sh", (-F.col("df_count")).alias("df_count")
+    )
+    return rows, neg
+
+
+def _ledger_commit(
+    spark, state_path: str, head, lineage: str, upto: int,
+    compact_every: int | None, dfp: DataFrame, dcounts: DataFrame,
+    bucket_rows: int = _MOR_BUCKET_ROWS,
+) -> None:
+    """Publish the ledger version after ``head`` through
+    :func:`state.commit_mor` — shared by the fold and the retire.
+    ``dfp``/``dcounts`` are the transaction's delta pair: fp upserts or
+    tombstones stamped with the new version, and signed count deltas.
+    A base resolves the whole chain plus this delta (unpruned: the one
+    deliberately O(state) read, amortized over ``compact_every``
+    versions) and writes fp partitioned by id-hash bucket, with the
+    bucket count sized from the resolved row count (``bucket_rows`` per
+    bucket, ``nbuckets.txt`` sidecar).  The base fp keeps the (seq,
+    tomb) columns so base and delta files stay union-compatible."""
+    from scholarmind_spark.operators.ledger import (
+        ledger_mor_resolve_counts,
+        ledger_mor_resolve_fp,
+    )
+
+    def write_delta(new_v):
+        new_dir = version_dir(state_path, new_v)
+        dfp.write.mode("overwrite").parquet(os.path.join(new_dir, "dfp"))
+        dcounts.write.mode("overwrite").parquet(os.path.join(new_dir, "dcounts"))
+        return ()
+
+    def write_base(new_v):
+        full_fp, full_counts = dfp, dcounts
+        if head:
+            fp_chain, cnt_chain = _mor_chains(
+                spark, state_path, head.base, head.version
+            )
+            full_fp = ledger_mor_resolve_fp(fp_chain.unionByName(dfp)).select(
+                "id", "n", "hs", *_versioned(new_v)
+            )
+            full_counts = ledger_mor_resolve_counts(cnt_chain.unionByName(dcounts))
+        new_dir = version_dir(state_path, new_v)
+        full_fp = full_fp.persist()
+        try:
+            # the count sizes the bucket layout; the resolved table is
+            # about to be written anyway, so the extra action stays
+            # inside the amortized path
+            n_rows = full_fp.count()
+            nb = max(1, min(_MOR_MAX_BUCKETS, math.ceil(max(n_rows, 1) / bucket_rows)))
+            full_fp.withColumn("bucket", _mor_bucket_expr(nb)).write.mode(
+                "overwrite"
+            ).partitionBy("bucket").parquet(os.path.join(new_dir, "fp"))
+        finally:
+            full_fp.unpersist()
+        write_sidecar(state_path, new_v, "nbuckets.txt", str(nb))
+        full_counts.write.mode("overwrite").parquet(os.path.join(new_dir, "counts"))
+        return ()
+
+    commit_mor(
+        state_path, head, lineage, upto, compact_every, write_delta, write_base
+    )
 
 
 def _ledger_ingest_fn_mor(
@@ -974,24 +979,17 @@ def _ledger_ingest_fn_mor(
     compact_every: int = 8,
     bucket_rows: int = _MOR_BUCKET_ROWS,
 ):
-    """The foreachBatch body of merge-on-read
-    :func:`stream_ledger_ingest`, exposed for deterministic tests.
+    """The foreachBatch body of :func:`stream_ledger_ingest`, exposed
+    for deterministic tests.
 
     Per fold: fingerprint the (within-batch-deduped) docs; the fp delta
     is those rows at seq = new version (tomb false); the counts delta is
     new contributions MINUS the replaced ids' old contributions, looked
-    up by resolving base+deltas PRUNED to the id-hash buckets the batch
-    touches — the base is bucket-partitioned at compaction with the
-    bucket count sized to the corpus (``bucket_rows`` per bucket), so
-    this read is O(batch), not O(state); the r12 residual closed.
-    Every ``compact_every`` folds the chain is resolved (unpruned —
-    the one deliberately O(state) read, amortized) and materialized as
-    a new base, amortizing the O(state) write the CoW fold pays every
-    time.  The base fp keeps the (seq, tomb) columns so base and delta
-    files are union-compatible."""
+    up by :func:`_ledger_replaced` — O(batch), not O(state).  The commit
+    (:func:`_ledger_commit`) writes the delta pair, or a new base when
+    compaction is due."""
     from scholarmind_spark.operators.ledger import (
         ledger_mor_resolve_counts,
-        ledger_mor_resolve_fp,
         ledger_shingle_counts,
     )
 
@@ -1003,87 +1001,23 @@ def _ledger_ingest_fn_mor(
         if head is SKIP:
             return
         spark = batch_df.sparkSession
-        version, base_v = (head.version, head.base) if head else (-1, -1)
-        new_v = version + 1
-        # feeds dfp + pos counts (+ compact)
+        new_v = head.version + 1 if head else 0
+        # feeds dfp + pos counts (+ neg-lookup, + compaction)
         rev_fp = _ledger_batch_fp(batch_df, id_col, text_col, shingle_k).persist()
         try:
-            pos = ledger_shingle_counts(rev_fp)
+            dcounts = ledger_shingle_counts(rev_fp)
             if head:
-                # the neg-lookup needs ONLY the batch ids' current rows:
-                # prune the base scan to the buckets the batch touches —
-                # O(batch) read against a bucketed base, vs the full
-                # O(state) chain the compaction path still (rightly) pays
-                touched = _mor_touched_buckets(
-                    rev_fp.select("id"), state_path, base_v
+                _, neg = _ledger_replaced(
+                    spark, state_path, head, rev_fp.select("id")
                 )
-                lookup_chain, _ = _mor_chains(
-                    spark, state_path, base_v, version, fp_buckets=touched
-                )
-                old = ledger_mor_resolve_fp(lookup_chain).join(
-                    rev_fp.select("id"), "id", "left_semi"
-                )
-                neg = ledger_shingle_counts(old).select(
-                    "sh", (-F.col("df_count")).alias("df_count")
-                )
-                dcounts = (
-                    pos.unionByName(neg)
-                    .groupBy("sh")
-                    .agg(F.sum("df_count").alias("df_count"))
-                    .where(F.col("df_count") != 0)
-                )
-            else:
-                dcounts = pos
-            dfp = rev_fp.select(
-                "id", "n", "hs",
-                F.lit(new_v).cast("int").alias("seq"),
-                F.lit(False).alias("tomb"),
+                dcounts = ledger_mor_resolve_counts(dcounts.unionByName(neg))
+            dfp = rev_fp.select("id", "n", "hs", *_versioned(new_v))
+            _ledger_commit(
+                spark, state_path, head, lineage, batch_id, compact_every,
+                dfp, dcounts, bucket_rows,
             )
-            new_dir = version_dir(state_path, new_v)
-            if head is None or new_v - base_v >= compact_every:
-                # materialize a new BASE: resolved chain + this delta —
-                # the one path that reads the UNPRUNED chain (O(state)
-                # by design, amortized over compact_every folds)
-                if head:
-                    fp_chain, cnt_chain = _mor_chains(
-                        spark, state_path, base_v, version
-                    )
-                    full_fp = ledger_mor_resolve_fp(
-                        fp_chain.unionByName(dfp)
-                    ).select(
-                        "id", "n", "hs",
-                        F.lit(new_v).cast("int").alias("seq"),
-                        F.lit(False).alias("tomb"),
-                    )
-                    full_counts = ledger_mor_resolve_counts(
-                        cnt_chain.unionByName(dcounts)
-                    )
-                else:
-                    full_fp, full_counts = dfp, dcounts
-                full_fp = full_fp.persist()
-                try:
-                    # the count sizes the new base's bucket layout; the
-                    # resolved table is about to be written anyway, so
-                    # the extra action stays inside the amortized path
-                    _mor_write_base_fp(
-                        full_fp, state_path, new_v, full_fp.count(), bucket_rows
-                    )
-                finally:
-                    full_fp.unpersist()
-                full_counts.write.mode("overwrite").parquet(
-                    os.path.join(new_dir, "counts")
-                )
-                new_base = new_v
-            else:
-                dfp.write.mode("overwrite").parquet(os.path.join(new_dir, "dfp"))
-                dcounts.write.mode("overwrite").parquet(
-                    os.path.join(new_dir, "dcounts")
-                )
-                new_base = base_v
         finally:
             rev_fp.unpersist()
-        publish_manifest(state_path, Manifest(new_v, lineage, batch_id, new_base))
-        gc_versions(state_path, max(base_v, 0))
 
     return _fold
 
@@ -1094,28 +1028,17 @@ def ledger_mor_retire(spark, state_path: str, retired_ids) -> None:
     delta — fp rows (id, NULL, NULL, seq, tomb=true) plus the retired
     docs' negative count contributions — as its own manifest version.
     Consumes no stream batch id (the high-water mark is republished
-    unchanged), exactly like the CoW retirement transactions the r12
-    ledger_sim runs; ids absent from the state are no-ops.
+    unchanged); ids absent from the state are no-ops.  A retire takes a
+    delta-stack slot like any fold and honours the fold's recorded
+    compaction cadence: once the chain reaches ``compact_every``
+    versions it publishes a new base (bucketed at the default
+    ``bucket_rows``) instead of another delta.
     ``retired_ids``: a one-column ``id`` DataFrame."""
-    from scholarmind_spark.operators.ledger import (
-        ledger_mor_resolve_fp,
-        ledger_shingle_counts,
-    )
-
-    m = read_manifest(state_path, "mor")
+    m = read_manifest(state_path, "mor", "ledger")
     if m is None:
         raise ValueError(f"no published merge-on-read state at {state_path}")
-    new_v = m.version + 1
-    ids = retired_ids.select("id").distinct()
-    # same bucket pruning as the fold's neg-lookup: only the retired
-    # ids' current rows are needed
-    touched = _mor_touched_buckets(ids, state_path, m.base)
-    fp_chain, _ = _mor_chains(
-        spark, state_path, m.base, m.version, fp_buckets=touched
-    )
-    removed = ledger_mor_resolve_fp(fp_chain).join(ids, "id", "left_semi")
-    neg = ledger_shingle_counts(removed).select(
-        "sh", (-F.col("df_count")).alias("df_count")
+    removed, neg = _ledger_replaced(
+        spark, state_path, m, retired_ids.select("id").distinct()
     )
     # tombstone only ids actually present — a no-op retire publishes
     # empty deltas, which resolve harmlessly.  NULL columns take their
@@ -1125,14 +1048,9 @@ def ledger_mor_retire(spark, state_path: str, retired_ids) -> None:
         "id",
         F.lit(None).cast(removed.schema["n"].dataType).alias("n"),
         F.lit(None).cast(removed.schema["hs"].dataType).alias("hs"),
-        F.lit(new_v).cast("int").alias("seq"),
-        F.lit(True).alias("tomb"),
+        *_versioned(m.version + 1, tomb=True),
     )
-    new_dir = version_dir(state_path, new_v)
-    tomb.write.mode("overwrite").parquet(os.path.join(new_dir, "dfp"))
-    neg.write.mode("overwrite").parquet(os.path.join(new_dir, "dcounts"))
-    publish_manifest(state_path, Manifest(new_v, m.lineage, m.upto, m.base))
-    gc_versions(state_path, m.base)
+    _ledger_commit(spark, state_path, m, m.lineage, m.upto, None, tomb, neg)
 
 
 def stream_vector_ingest(
@@ -1223,20 +1141,6 @@ def _vec_enc_schema(spark, state_path: str, version: int):
     return spark.read.parquet(os.path.join(cur, part)).schema
 
 
-def _vec_resolve(chain: DataFrame) -> DataFrame:
-    """Latest-seq-wins per id over a (base ∪ deltas) enc chain, then
-    tombstone drop — the vector twin of ``ledger_mor_resolve_fp`` (seq
-    is unique per version so the pick is deterministic; a retired id's
-    tombstone wins the seq race and the id vanishes; a later re-ingest
-    outranks the tombstone)."""
-    w = Window.partitionBy("id").orderBy(F.desc("seq"))
-    return (
-        chain.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & ~F.col("tomb"))
-        .drop("__rn", "tomb")
-    )
-
-
 def _vec_chain(spark, state_path: str, base_v: int, upto_v: int, cells=None):
     """The enc chain over versions [base_v..upto_v]: the base — one or
     more cell-partitioned FRAGMENTS named by the cellmap at ``base_v``,
@@ -1246,7 +1150,7 @@ def _vec_chain(spark, state_path: str, base_v: int, upto_v: int, cells=None):
     purged) and possibly PRUNED to ``cells`` (exact, because an id's
     base row lives only in its owning fragment's cell partition and
     every delta is still read; stale base rows a delta superseded lose
-    the seq race in :func:`_vec_resolve` regardless of which side was
+    the seq race in ``mor_resolve`` regardless of which side was
     pruned — and tombstone deltas, whose cell is NULL, are never prune
     candidates at all) — unioned with one multi-path delta scan.
     ``cell`` normalizes to long: partition discovery re-infers the
@@ -1327,10 +1231,12 @@ def vector_state_enc(spark, state_path: str) -> DataFrame | None:
     per id, latest version wins — or None if nothing is published.
     Full-chain resolve (no pruning): the parity/test reader, and the
     input a from-scratch rebuild is compared against."""
-    m_ = read_manifest(state_path, "mor", "vector index")
+    from scholarmind_spark.operators.ledger import mor_resolve
+
+    m_ = read_manifest(state_path, "mor", "vector-index")
     if m_ is None:
         return None
-    return _vec_resolve(
+    return mor_resolve(
         _vec_chain(spark, state_path, m_.base, m_.version)
     ).select("id", "cell", "pq")
 
@@ -1420,6 +1326,8 @@ def _vec_compact(
     exceed ``_VEC_MAX_FRAGS`` or the touched set outgrows literal-list
     pruning (``_VEC_TOUCHED_ISIN_MAX``).  Returns the live fragment list
     for GC."""
+    from scholarmind_spark.operators.ledger import mor_resolve
+
     deltas = chain_dirs(state_path, base_v, version, "denc")
     stack = extra_delta.select("id", "cell", "pq", "seq", "tomb")
     if deltas:
@@ -1477,13 +1385,9 @@ def _vec_compact(
         spark, state_path, base_v, version,
         cells=None if full else touched,
     )
-    resolved = _vec_resolve(
+    resolved = mor_resolve(
         chain.unionByName(extra_delta.select(*chain.columns))
-    ).select(
-        "id", "cell", "pq",
-        F.lit(new_v).cast("int").alias("seq"),
-        F.lit(False).alias("tomb"),
-    )
+    ).select("id", "cell", "pq", *_versioned(new_v))
     return _vec_write_base(
         spark, state_path, resolved, new_v,
         untouched_cm=untouched_cm, keep_frags=keep_frags,
@@ -1492,40 +1396,43 @@ def _vec_compact(
 
 def _vec_commit(
     spark, state_path: str, head, lineage: str, upto: int,
-    delta: DataFrame, compact: bool, coarse, cb, mode: str, cadence,
+    delta: DataFrame, compact_every: int | None, coarse, cb, mode: str,
 ) -> None:
-    """Write and publish the vector-index version after ``head`` (None:
-    state creation) — shared by the fold and the retire transaction.
-    ``delta`` becomes the first base fragment on creation, a per-cell
-    compaction when ``compact`` (:func:`_vec_compact` drops tombstones,
-    so compaction PURGES retired ids physically), else a ``denc`` delta —
-    O(batch) written, nothing read back.  Codebooks, encoding ``mode``
-    and compaction ``cadence`` copy forward so GC of old versions never
-    strands them; GC never drops a live fragment."""
-    version, base_v = (head.version, head.base) if head else (-1, -1)
-    new_v = version + 1
-    new_dir = version_dir(state_path, new_v)
-    if head is None:
-        live_frags = _vec_write_base(spark, state_path, delta, new_v)
-    elif compact:
-        live_frags = _vec_compact(
-            spark, state_path, base_v, version, new_v, delta
-        )
-    else:
-        delta.write.mode("overwrite").parquet(os.path.join(new_dir, "denc"))
-        live_frags = _vec_frags(state_path, base_v)
+    """Publish the vector-index version after ``head`` (None: state
+    creation) through :func:`state.commit_mor` — shared by the fold and
+    the retire transaction.  ``delta`` becomes the first base fragment on
+    creation, a per-cell compaction when one is due (:func:`_vec_compact`
+    drops tombstones, so compaction PURGES retired ids physically), else
+    a ``denc`` delta — O(batch) written, nothing read back.  Codebooks
+    and the encoding ``mode`` copy forward into every version so GC of
+    old versions never strands them; GC never drops a live fragment."""
+
+    def carry(new_v):
+        new_dir = version_dir(state_path, new_v)
+        coarse.write.mode("overwrite").parquet(os.path.join(new_dir, "coarse"))
+        cb.write.mode("overwrite").parquet(os.path.join(new_dir, "cb"))
+        write_sidecar(state_path, new_v, "encmode.txt", mode)
+        return new_dir
+
+    def write_delta(new_v):
+        delta.write.mode("overwrite").parquet(os.path.join(carry(new_v), "denc"))
         for name in ("frags.txt", "encschema.txt"):
-            txt = read_sidecar(state_path, base_v, name)
+            txt = read_sidecar(state_path, head.base, name)
             if txt is not None:
                 write_sidecar(state_path, new_v, name, txt)
-    coarse.write.mode("overwrite").parquet(os.path.join(new_dir, "coarse"))
-    cb.write.mode("overwrite").parquet(os.path.join(new_dir, "cb"))
-    write_sidecar(state_path, new_v, "encmode.txt", mode)
-    if cadence is not None:
-        write_sidecar(state_path, new_v, "compactevery.txt", cadence)
-    new_base = new_v if head is None or compact else base_v
-    publish_manifest(state_path, Manifest(new_v, lineage, upto, new_base))
-    gc_versions(state_path, max(base_v, 0), keep=live_frags)
+        return _vec_frags(state_path, head.base)
+
+    def write_base(new_v):
+        carry(new_v)
+        if head is None:
+            return _vec_write_base(spark, state_path, delta, new_v)
+        return _vec_compact(
+            spark, state_path, head.base, head.version, new_v, delta
+        )
+
+    commit_mor(
+        state_path, head, lineage, upto, compact_every, write_delta, write_base
+    )
 
 
 def _vector_ingest_fn(
@@ -1559,7 +1466,7 @@ def _vector_ingest_fn(
         return F.zip_with(v, c, lambda x, y: x.cast("double") - y.cast("double"))
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        head = fold_gate(state_path, lineage, batch_id, "mor", "vector index")
+        head = fold_gate(state_path, lineage, batch_id, "mor", "vector-index")
         if head is SKIP:
             return
         spark = batch_df.sparkSession
@@ -1635,13 +1542,11 @@ def _vector_ingest_fn(
             F.col(id_col).alias("id"),
             F.col("cell").cast("long").alias("cell"),
             _encode_expr(sub_lits, enc_in, m, w).alias("pq"),
-            F.lit(new_v).cast("int").alias("seq"),
-            F.lit(False).alias("tomb"),
+            *_versioned(new_v),
         )
         _vec_commit(
             spark, state_path, head, lineage, batch_id, enc_new,
-            head is not None and new_v - head.base >= compact_every,
-            coarse, cb, "residual" if residual else "raw", str(compact_every),
+            compact_every, coarse, cb, "residual" if residual else "raw",
         )
 
     return _fold
@@ -1673,6 +1578,7 @@ def ann_state_query(
     sizes + a bounded stack, independent of the standing corpus.  Returns
     ``query_id, neighbor_id, adc, rank`` (the :func:`operators.pq.
     ivfadc_topk` contract), or None if nothing is published."""
+    from scholarmind_spark.operators.ledger import mor_resolve
     from scholarmind_spark.operators.pq import (
         _adc_expr,
         _build_sub_lits,
@@ -1680,7 +1586,7 @@ def ann_state_query(
         _sq,
     )
 
-    m_ = read_manifest(state_path, "mor", "vector index")
+    m_ = read_manifest(state_path, "mor", "vector-index")
     if m_ is None:
         return None
     cur = version_dir(state_path, m_.version)
@@ -1722,7 +1628,7 @@ def ann_state_query(
     # the probed cell set is ≤ nprobe × |queries| driver values — the
     # same bounded-collect contract as the MoR ledger's touched buckets
     cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
-    enc = _vec_resolve(
+    enc = mor_resolve(
         _vec_chain(spark, state_path, m_.base, m_.version, cells=cells)
     )
     adc = _adc_expr(sub_lits, F.col("qvec"), F.col("pq"), m, w)
@@ -1820,9 +1726,7 @@ def ann_state_query_refined(
     )
 
 
-def vector_index_retire(
-    spark, state_path: str, retired_ids, compact_every: int | None = None
-) -> None:
+def vector_index_retire(spark, state_path: str, retired_ids) -> None:
     """Out-of-band retirement TRANSACTION on the vector index (takedown
     / retention expiry / erasure — the :func:`ledger_mor_retire` twin):
     publish one tombstone delta — rows ``(id, NULL cell, NULL pq,
@@ -1835,39 +1739,31 @@ def vector_index_retire(
     vector index needs nothing back — a tombstone is self-contained —
     so the delta write is O(|retired|) and reads NOTHING.  Tombstones
     of ids absent from the state resolve harmlessly; compaction purges
-    tombstones physically (``_vec_resolve`` drops them before the base
+    tombstones physically (``mor_resolve`` drops them before the base
     write), which is when the erasure lands on disk.
 
     A retire consumes a delta-stack slot like any fold, so it honors
     the SAME compaction bound: when the chain since the last base
-    reaches ``compact_every`` versions (the fold's recorded cadence —
-    the per-version compactevery.txt sidecar — or this call's explicit
-    override), the transaction compacts instead of publishing another
-    delta, keeping the documented "deltas ≤ compact_every versions"
-    read bound true under repeated retires on a quiescent stream.
-    ``retired_ids``: a one-column ``id`` DataFrame."""
-    m = read_manifest(state_path, "mor", "vector index")
+    reaches the fold's recorded cadence (the per-version
+    compactevery.txt sidecar), the transaction compacts instead of
+    publishing another delta, keeping the documented "deltas ≤
+    compact_every versions" read bound true under repeated retires on
+    a quiescent stream.  ``retired_ids``: a one-column ``id``
+    DataFrame."""
+    m = read_manifest(state_path, "mor", "vector-index")
     if m is None:
         raise ValueError(f"no published vector-index state at {state_path}")
-    new_v = m.version + 1
     cur = version_dir(state_path, m.version)
     enc_schema = _vec_enc_schema(spark, state_path, m.version)
     tomb = retired_ids.select(
         F.col("id").cast(enc_schema["id"].dataType).alias("id"),
         F.lit(None).cast("long").alias("cell"),
         F.lit(None).cast(enc_schema["pq"].dataType).alias("pq"),
-        F.lit(new_v).cast("int").alias("seq"),
-        F.lit(True).alias("tomb"),
+        *_versioned(m.version + 1, tomb=True),
     ).distinct()
-    cadence = read_sidecar(state_path, m.version, "compactevery.txt")
-    ce = compact_every if compact_every is not None else (
-        int(cadence) if cadence else None
-    )
     _vec_commit(
-        spark, state_path, m, m.lineage, m.upto, tomb,
-        ce is not None and new_v - m.base >= ce,
+        spark, state_path, m, m.lineage, m.upto, tomb, None,
         spark.read.parquet(os.path.join(cur, "coarse")),
         spark.read.parquet(os.path.join(cur, "cb")),
         read_sidecar(state_path, m.version, "encmode.txt") or "raw",
-        cadence,
     )

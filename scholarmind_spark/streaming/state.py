@@ -30,16 +30,16 @@ The lineage and the folded-upto high-water mark travel inside the manifest,
 so mark and data publish in the same atomic step.  Two line formats:
 
 - copy-on-write, ``"{v} {lineage} {upto}"``: ``v-<n>`` holds the whole
-  state (the sketch fold's ``commit="manifest"``; the ledger's ``fp/`` and
-  ``counts/`` pair, which only a manifest can publish together — two
-  directory renames are never atomic as a pair);
+  state.  Only the sketch fold's ``commit="manifest"`` writes it;
 - merge-on-read, ``"mor {v} {lineage} {upto} {base}"``: readers resolve
   versions ``[base..v]``.  ``v-<base>`` holds a base (ledger ``fp/`` +
   ``counts/``; vector ``enc/`` + ``cellmap/``), every later version only its
   delta (ledger ``dfp/`` + ``dcounts/``; vector ``denc/``), so a fold writes
   O(batch) and every ``compact_every`` versions a compaction writes a new
-  base.  The extra field is what lets copy-on-write and merge-on-read folds
-  and readers refuse each other's state.
+  base.  The dedup ledger and the vector index use only this format; their
+  two folds and two retire transactions all publish through
+  :func:`commit_mor`.  The leading field is what lets copy-on-write and
+  merge-on-read folds and readers refuse each other's state.
 
 Each version directory may carry one-line sidecar files: ``nbuckets.txt``
 (ledger base bucket count), ``encmode.txt`` (vector encoding mode, frozen at
@@ -109,14 +109,12 @@ def has_parquet(path: str) -> bool:
 
 
 def read_manifest(
-    state_path: str, layout: str | None = None, what: str = "ledger"
+    state_path: str, layout: str | None = None, what: str = "state"
 ) -> Manifest | None:
     """The published manifest, or None.  ``layout`` (``"cow"`` | ``"mor"``)
     refuses the other line format: a copy-on-write reader of merge-on-read
     state would read the base as the whole state and drop every delta.
-    ``what`` picks the refusal's remedy — "fold it with mode='cow'" only
-    makes sense for the ledger; a vector index pointed at a copy-on-write
-    manifest has been pointed at some other state's directory."""
+    ``what`` names the reader's state in the refusal."""
     mp = os.path.join(state_path, "MANIFEST")
     if not os.path.exists(mp):
         return None
@@ -125,21 +123,14 @@ def read_manifest(
     mor = parts[:1] == ["mor"]
     if layout == "cow" and mor:
         raise ValueError(
-            f"state at {state_path} is merge-on-read; fold it with "
-            "mode='mor' (and read it with ledger_state_mor), or start "
-            "a fresh state_path"
+            f"state at {state_path} is merge-on-read, not a copy-on-write "
+            f"{what} state — start a fresh state_path"
         )
     if layout == "mor" and not mor:
-        if what == "vector index":
-            raise ValueError(
-                f"state at {state_path} carries a copy-on-write ledger "
-                "manifest, not a vector-index state — point the index "
-                "at a fresh state_path and re-fold the corpus into it"
-            )
         raise ValueError(
-            f"state at {state_path} is copy-on-write; fold it with "
-            "mode='cow' (and read it with ledger_state_dirs), or start "
-            "a fresh state_path"
+            f"state at {state_path} carries a copy-on-write manifest, not "
+            f"a {what} state ({what} state is merge-on-read only) — start "
+            "a fresh state_path and re-fold the corpus into it"
         )
     if mor:
         _, v, lineage, upto, base = parts
@@ -213,8 +204,8 @@ def fold_gate(
                     "with commit='manifest' would orphan it — resume with "
                     "commit='rename', or start a fresh state_path"
                     if layout == "cow"
-                    else f"as a merge-on-read {what} would orphan it — "
-                    "start a fresh state_path"
+                    else f"as merge-on-read {what} state would orphan it "
+                    "— start a fresh state_path"
                 )
             )
     if head is None:
@@ -256,6 +247,42 @@ def gc_versions(state_path: str, floor: int, keep=()) -> None:
                 os.remove(p)
             except OSError:
                 pass
+
+
+def commit_mor(
+    state_path: str,
+    head: Manifest | None,
+    lineage: str,
+    upto: int,
+    compact_every: int | None,
+    write_delta,
+    write_base,
+) -> None:
+    """Write and publish the merge-on-read version after ``head`` (None:
+    state creation) — the one commit of every merge-on-read fold and
+    retire.  ``compact_every`` None (a retire) takes the cadence the fold
+    recorded at ``head`` (``compactevery.txt``; a state without one never
+    compacts after creation).  A new base is due on creation and once the
+    chain since the base would reach ``compact_every`` versions; then
+    ``write_base(new_v)`` writes ``v-<new_v>`` as a base, else
+    ``write_delta(new_v)`` as a delta.  Each writer returns the versions
+    below the GC floor that must survive.  The cadence is recorded
+    again, the manifest published, and GC run."""
+    version, base = (head.version, head.base) if head else (-1, -1)
+    new_v = version + 1
+    if compact_every is None and head is not None:
+        txt = read_sidecar(state_path, version, "compactevery.txt")
+        compact_every = int(txt) if txt else None
+    compact = head is None or (
+        compact_every is not None and new_v - base >= compact_every
+    )
+    keep = (write_base if compact else write_delta)(new_v)
+    if compact_every is not None:
+        write_sidecar(state_path, new_v, "compactevery.txt", str(compact_every))
+    publish_manifest(
+        state_path, Manifest(new_v, lineage, upto, new_v if compact else base)
+    )
+    gc_versions(state_path, max(base, 0), keep=keep)
 
 
 def recover_swap(path: str) -> None:

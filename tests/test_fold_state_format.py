@@ -13,14 +13,12 @@ from pyspark.sql import functions as F
 
 from scholarmind_spark.streaming import (
     ledger_mor_retire,
-    ledger_state_dirs,
     ledger_state_mor,
     manifest_state_dir,
     vector_index_retire,
     vector_state_enc,
 )
 from scholarmind_spark.streaming.pipeline import (
-    _ledger_ingest_fn,
     _ledger_ingest_fn_mor,
     _sketch_fold_fn,
     _vector_ingest_fn,
@@ -75,6 +73,26 @@ def _doc_batches(spark):
         DOCS,
     )
     return d1, d2, latest
+
+
+def _mor_ledger_base(state, docs):
+    """A merge-on-read ledger base ``v-0`` written by hand: fp rows with
+    their (seq, tomb) columns, the counts table, the bucket sidecar."""
+    from scholarmind_spark.operators.ledger import (
+        ledger_fingerprints,
+        ledger_shingle_counts,
+    )
+
+    fp = ledger_fingerprints(docs)
+    fp.select(
+        "id", "n", "hs", F.lit(0).cast("int").alias("seq"), F.lit(False).alias("tomb")
+    ).write.parquet(os.path.join(state, "v-0", "fp"))
+    ledger_shingle_counts(fp).write.parquet(os.path.join(state, "v-0", "counts"))
+    _write(os.path.join(state, "v-0", "nbuckets.txt"), "1\n")
+
+
+def _cow_fold(state, lineage):
+    return _sketch_fold_fn(state, KEYS, "value", 5, lineage, commit="manifest")
 
 
 def test_checkpoint_lineage_file_is_read_back(tmp_path):
@@ -132,7 +150,7 @@ def test_manifest_sketch_and_cow_ledger_state_by_hand(spark, tmp_path):
     with pytest.raises(ValueError, match="not a vector-index state"):
         _vector_ingest_fn(state, "cafebabe", m=2, dim=8)(b2, 4)
 
-    fold = _sketch_fold_fn(state, KEYS, "value", 5, "cafebabe", commit="manifest")
+    fold = _cow_fold(state, "cafebabe")
     fold(b2, 3)  # re-delivery
     assert _read(os.path.join(state, "MANIFEST")) == "0 cafebabe 3\n"
     fold(b2, 4)
@@ -141,15 +159,25 @@ def test_manifest_sketch_and_cow_ledger_state_by_hand(spark, tmp_path):
         hdr_state_build(b1.unionByName(b2), KEYS, "value")
     )
 
+    # a ledger in the former copy-on-write layout is refused unchanged
     d1, d2, latest = _doc_batches(spark)
-    ledger = str(tmp_path / "ledger")
+    old = str(tmp_path / "old_ledger")
     fp = ledger_fingerprints(d1)
-    fp.write.parquet(os.path.join(ledger, "v-0", "fp"))
-    ledger_shingle_counts(fp).write.parquet(os.path.join(ledger, "v-0", "counts"))
-    _write(os.path.join(ledger, "MANIFEST"), "0 cafebabe 0\n")
-    _ledger_ingest_fn(ledger, "cafebabe")(d2, 1)
-    assert _read(os.path.join(ledger, "MANIFEST")) == "1 cafebabe 1\n"
-    fp_dir, counts_dir = ledger_state_dirs(ledger)
+    fp.write.parquet(os.path.join(old, "v-0", "fp"))
+    ledger_shingle_counts(fp).write.parquet(os.path.join(old, "v-0", "counts"))
+    _write(os.path.join(old, "MANIFEST"), "0 cafebabe 0\n")
+    with pytest.raises(ValueError, match="start a fresh state_path"):
+        _ledger_ingest_fn_mor(old, "cafebabe")(d2, 1)
+    assert _read(os.path.join(old, "MANIFEST")) == "0 cafebabe 0\n"
+
+    # compact_every=1: every fold publishes a fully resolved base, read
+    # as plain parquet — the copy-on-write behaviour
+    ledger = str(tmp_path / "ledger")
+    _mor_ledger_base(ledger, d1)
+    _write(os.path.join(ledger, "MANIFEST"), "mor 0 cafebabe 0 0\n")
+    _ledger_ingest_fn_mor(ledger, "cafebabe", compact_every=1)(d2, 1)
+    assert _read(os.path.join(ledger, "MANIFEST")) == "mor 1 cafebabe 1 1\n"
+    fp_dir, counts_dir = (os.path.join(ledger, "v-1", t) for t in ("fp", "counts"))
     want = ledger_fingerprints(latest)
     assert _fp_rows(spark.read.parquet(fp_dir)) == _fp_rows(want)
     assert _rows(spark.read.parquet(counts_dir)) == _rows(ledger_shingle_counts(want))
@@ -163,16 +191,11 @@ def test_mor_ledger_state_by_hand(spark, tmp_path):
 
     d1, d2, latest = _doc_batches(spark)
     state = str(tmp_path / "state")
-    fp = ledger_fingerprints(d1)
-    fp.select(
-        "id", "n", "hs", F.lit(0).cast("int").alias("seq"), F.lit(False).alias("tomb")
-    ).write.parquet(os.path.join(state, "v-0", "fp"))
-    ledger_shingle_counts(fp).write.parquet(os.path.join(state, "v-0", "counts"))
-    _write(os.path.join(state, "v-0", "nbuckets.txt"), "1\n")
+    _mor_ledger_base(state, d1)
     _write(os.path.join(state, "MANIFEST"), "mor 0 cafebabe 0 0\n")
 
     with pytest.raises(ValueError, match="merge-on-read"):
-        _ledger_ingest_fn(state, "cafebabe")(d2, 1)
+        _cow_fold(state, "cafebabe")(d2, 1)
     with pytest.raises(ValueError, match="manifest-committed"):
         _sketch_fold_fn(state, KEYS, "value", 5, "cafebabe")(d2, 1)
     with pytest.raises(ValueError, match="different checkpoint lineage"):
@@ -222,7 +245,7 @@ def test_vector_state_by_hand(spark, tmp_path):
     VS = "vec_id long, embedding array<double>"
     batch = spark.createDataFrame([(4, [99.0] * 8), (5, [1.0] * 8)], VS)
     with pytest.raises(ValueError, match="merge-on-read"):
-        _ledger_ingest_fn(state, "feedbeef")(batch, 1)
+        _cow_fold(state, "feedbeef")(batch, 1)
     with pytest.raises(ValueError, match="different checkpoint lineage"):
         _vector_ingest_fn(state, "deadbeef", m=2, dim=8)(batch, 1)
 

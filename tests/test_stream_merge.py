@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -604,10 +605,10 @@ DOC_SCHEMA = T.StructType(
 def test_stream_ledger_ingest_atomic_pair(spark, tmp_path):
     """Streaming dedup-ledger maintenance: microbatches of documents
     revise the (fingerprints, counts) state PAIR, committed atomically
-    through one manifest (both tables in one version dir — a crash can
-    never publish one half).  Checks: state == from-scratch build over
-    the latest doc versions, re-delivery no-op, foreign-lineage
-    refusal, crash-before-publish recovery."""
+    through one manifest (both delta tables in one version dir — a
+    crash can never publish one half).  Checks: state == from-scratch
+    build over the latest doc versions, re-delivery no-op,
+    foreign-lineage refusal, crash-before-publish recovery."""
     import os
 
     import pytest as _pytest
@@ -617,10 +618,10 @@ def test_stream_ledger_ingest_atomic_pair(spark, tmp_path):
         ledger_shingle_counts,
     )
     from scholarmind_spark.streaming import (
-        ledger_state_dirs,
+        ledger_state_mor,
         stream_ledger_ingest,
     )
-    from scholarmind_spark.streaming.pipeline import _ledger_ingest_fn
+    from scholarmind_spark.streaming.pipeline import _ledger_ingest_fn_mor
     from scholarmind_spark.streaming.state import fold_lineage
 
     b1 = spark.createDataFrame(
@@ -656,17 +657,15 @@ def test_stream_ledger_ingest_atomic_pair(spark, tmp_path):
     b2.coalesce(1).write.mode("append").parquet(src)
     drain()
 
-    fp_dir, counts_dir = ledger_state_dirs(state)
-
     def fp_rows():
         return sorted(
             (r.id, r.n, tuple(r.hs))
-            for r in spark.read.parquet(fp_dir).collect()
+            for r in ledger_state_mor(spark, state)[0].collect()
         )
 
     def count_rows():
         return sorted(
-            tuple(r) for r in spark.read.parquet(counts_dir).collect()
+            tuple(r) for r in ledger_state_mor(spark, state)[1].collect()
         )
 
     latest = {r.doc_id: r.text for r in b1.collect()}
@@ -682,45 +681,43 @@ def test_stream_ledger_ingest_atomic_pair(spark, tmp_path):
     assert fp_rows() == want_fp
     assert count_rows() == want_counts
     lineage = fold_lineage(ck)
-    assert _manifest_text(state) == f"1 {lineage} 1\n"
+    assert _manifest_text(state) == f"mor 1 {lineage} 1 0\n"
 
     # re-delivery: already-applied batch ids are skipped, no publish
-    fold = _ledger_ingest_fn(state, lineage, shingle_k=3)
+    fold = _ledger_ingest_fn_mor(state, lineage, shingle_k=3)
     fold(b2, 1)
     fold(b1, 0)
-    assert _manifest_text(state) == f"1 {lineage} 1\n"
+    assert _manifest_text(state) == f"mor 1 {lineage} 1 0\n"
     assert fp_rows() == want_fp
 
     # foreign lineage refuses
-    other = _ledger_ingest_fn(state, "deadbeef", shingle_k=3)
+    other = _ledger_ingest_fn_mor(state, "deadbeef", shingle_k=3)
     with _pytest.raises(ValueError, match="different checkpoint lineage"):
         other(b1, 0)
 
-    # crash-before-publish: an orphan half-written v-2 (fp only, no
-    # counts — the exact torn state the atomic pair commit prevents)
-    # is invisible to readers and overwritten by the retried batch
+    # crash-before-publish: an orphan half-written v-2 (fp delta only,
+    # no counts delta — the exact torn state the atomic pair commit
+    # prevents) is invisible to readers and overwritten by the retried
+    # batch
     b3 = spark.createDataFrame(
         [(9, "a ninth document arriving after the crash")], DOC_SCHEMA
     )
-    orphan = os.path.join(state, "v-2", "fp")
-    ledger_fingerprints(b3, k=3).write.mode("overwrite").parquet(orphan)
-    assert ledger_state_dirs(state)[0] == os.path.join(state, "v-1", "fp")
+    orphan = os.path.join(state, "v-2", "dfp")
+    ledger_fingerprints(b3, k=3).select(
+        "id", "n", "hs", F.lit(2).alias("seq"), F.lit(False).alias("tomb")
+    ).write.mode("overwrite").parquet(orphan)
+    assert _manifest_text(state) == f"mor 1 {lineage} 1 0\n"
+    assert fp_rows() == want_fp
     fold(b3, 2)
-    assert _manifest_text(state) == f"2 {lineage} 2\n"
+    assert _manifest_text(state) == f"mor 2 {lineage} 2 0\n"
     latest[9] = "a ninth document arriving after the crash"
     direct3 = ledger_fingerprints(
         spark.createDataFrame(sorted(latest.items()), DOC_SCHEMA), k=3
     )
-    fp_dir2, counts_dir2 = ledger_state_dirs(state)
-    got_fp3 = sorted(
-        (r.id, r.n, tuple(r.hs))
-        for r in spark.read.parquet(fp_dir2).collect()
-    )
+    got_fp3 = fp_rows()
     want_fp3 = sorted((r.id, r.n, tuple(r.hs)) for r in direct3.collect())
     assert got_fp3 == want_fp3
-    got_c3 = sorted(
-        tuple(r) for r in spark.read.parquet(counts_dir2).collect()
-    )
+    got_c3 = count_rows()
     want_c3 = sorted(
         tuple(r) for r in ledger_shingle_counts(direct3).collect()
     )
@@ -738,7 +735,7 @@ def test_stream_ledger_ingest_dedupes_batch_ids(spark, tmp_path):
         ledger_shingle_counts,
     )
     from scholarmind_spark.streaming import (
-        ledger_state_dirs,
+        ledger_state_mor,
         stream_ledger_ingest,
     )
 
@@ -761,8 +758,7 @@ def test_stream_ledger_ingest_dedupes_batch_ids(spark, tmp_path):
     q = stream_ledger_ingest(stream, state, shingle_k=3, checkpoint=ck)
     q.awaitTermination()
 
-    fp_dir, counts_dir = ledger_state_dirs(state)
-    got_fp = spark.read.parquet(fp_dir)
+    got_fp, got_counts = ledger_state_mor(spark, state)
     assert got_fp.count() == 2  # one row per id, not three
     # max-text wins: id 1 keeps "zeta..." (> "alpha..." lexically)
     expect = spark.createDataFrame(
@@ -775,7 +771,7 @@ def test_stream_ledger_ingest_dedupes_batch_ids(spark, tmp_path):
         (r.id, r.n, tuple(r.hs)) for r in got_fp.collect()
     ) == sorted((r.id, r.n, tuple(r.hs)) for r in direct.collect())
     assert sorted(
-        tuple(r) for r in spark.read.parquet(counts_dir).collect()
+        tuple(r) for r in got_counts.collect()
     ) == sorted(
         tuple(r) for r in ledger_shingle_counts(direct).collect()
     )
@@ -1078,30 +1074,40 @@ def test_mor_fold_redelivery_and_lineage(spark, tmp_path):
 
 
 def test_mor_cow_refuse_each_other(spark, tmp_path):
-    """A CoW fold pointed at MoR state would read the base version dir
-    as the whole state and silently drop every delta; an MoR fold on
-    CoW state would mis-parse its manifest.  Both directions refuse,
-    and the CoW reader refuses MoR state too."""
+    """A copy-on-write fold pointed at MoR state would read the base
+    version dir as the whole state and silently drop every delta; an
+    MoR fold on copy-on-write state (here a sketch ``commit="manifest"``
+    state) would mis-parse its manifest.  Both directions refuse, and
+    each layout's reader refuses the other's state too."""
     import pytest as _pytest
 
-    from scholarmind_spark.streaming import ledger_state_dirs
+    from scholarmind_spark.streaming import ledger_state_mor, manifest_state_dir
     from scholarmind_spark.streaming.pipeline import (
-        _ledger_ingest_fn,
         _ledger_ingest_fn_mor,
+        _sketch_fold_fn,
     )
 
     batches = _mor_batches(spark)
+    sketch_batch = spark.createDataFrame(_fold_rows(0), FOLD_SCHEMA)
+
+    def cow_fold(state):
+        return _sketch_fold_fn(
+            state, ["day", "seg"], "value", 5, "cafebabe", commit="manifest"
+        )
+
     mor_state = str(tmp_path / "mor")
     _ledger_ingest_fn_mor(mor_state, "cafebabe")(batches[0], 0)
     with _pytest.raises(ValueError, match="merge-on-read"):
-        _ledger_ingest_fn(mor_state, "cafebabe")(batches[1], 1)
+        cow_fold(mor_state)(sketch_batch, 1)
     with _pytest.raises(ValueError, match="merge-on-read"):
-        ledger_state_dirs(mor_state)
+        manifest_state_dir(mor_state)
 
     cow_state = str(tmp_path / "cow")
-    _ledger_ingest_fn(cow_state, "cafebabe")(batches[0], 0)
+    cow_fold(cow_state)(sketch_batch, 0)
     with _pytest.raises(ValueError, match="copy-on-write"):
         _ledger_ingest_fn_mor(cow_state, "cafebabe")(batches[1], 1)
+    with _pytest.raises(ValueError, match="copy-on-write"):
+        ledger_state_mor(spark, cow_state)
 
 
 def test_mor_retire_transaction(spark, tmp_path):
@@ -1523,24 +1529,23 @@ def test_ann_state_query_unpublished_returns_none(spark, tmp_path):
 def test_vector_surfaces_refuse_cow_manifest_with_vector_advice(
     spark, tmp_path
 ):
-    """A vector-index surface pointed at a CoW-ledger state must refuse
-    with VECTOR remediation (fresh state_path / re-fold the corpus),
-    not the ledger's 'fold it with mode=cow' advice, which cannot apply
-    to an index (the ADVICE-flagged wrong-remediation path)."""
+    """A vector-index surface pointed at a copy-on-write manifest state
+    (a sketch ``commit="manifest"`` fold) must refuse with VECTOR
+    remediation (fresh state_path / re-fold the corpus), naming the
+    vector index as the state it expected."""
     import pytest as _pytest
 
     from scholarmind_spark.streaming.pipeline import (
-        _ledger_ingest_fn,
+        _sketch_fold_fn,
         _vector_ingest_fn,
         ann_state_query,
         vector_state_enc,
     )
 
     cow = str(tmp_path / "cow")
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
-    )
-    _ledger_ingest_fn(cow, "cafebabe")(docs, 0)
+    _sketch_fold_fn(
+        cow, ["day", "seg"], "value", 5, "cafebabe", commit="manifest"
+    )(spark.createDataFrame(_fold_rows(0), FOLD_SCHEMA), 0)
     q = spark.createDataFrame([], "query_id long, query_vec array<double>")
     for attempt in (
         lambda: ann_state_query(spark, cow, q),
@@ -1887,57 +1892,89 @@ def test_partial_compaction_keeps_one_location_per_id(spark, tmp_path):
     assert res2[5] == 0 and len(res2) == 8
 
 
-def test_retire_triggers_compaction_at_bound(spark, tmp_path):
+@pytest.mark.parametrize("family", ["vector", "ledger"])
+def test_retire_triggers_compaction_at_bound(spark, tmp_path, family):
     """Repeated retires on a quiescent stream must not grow the delta
-    chain past compact_every (the ADVICE-flagged unbounded-read path):
-    the transaction reads the fold's recorded cadence and compacts in
-    place of publishing another delta — tombstones purge physically,
-    survivors in untouched cells stay referenced, and the documented
-    'deltas <= compact_every versions' bound holds after every call."""
+    chain past compact_every (the ADVICE-flagged unbounded-read path),
+    for the vector index and the dedup ledger alike: the transaction
+    reads the fold's recorded cadence and compacts in place of
+    publishing another delta — tombstones purge physically, survivors
+    stay, and the documented 'deltas <= compact_every versions' bound
+    holds after every call."""
     import os
 
-    from pyspark.sql import functions as F
-
+    from scholarmind_spark.streaming import ledger_mor_retire, ledger_state_mor
     from scholarmind_spark.streaming.pipeline import (
+        _ledger_ingest_fn_mor,
         _vector_ingest_fn,
         vector_index_retire,
         vector_state_enc,
     )
 
-    VS = "vec_id long, embedding array<double>"
     state = str(tmp_path / "ret")
-    fold = _vector_ingest_fn(
-        state, "feedbeef", m=2, dim=8, coarse_ids=[0, 1, 2],
-        codebook_ids=[0, 1, 2, 3], compact_every=2,
-    )
-    b0 = [(0, [0.0] * 8), (1, [100.0] * 8), (2, [200.0] * 8),
-          (3, _cellvec(0, 3)), (4, _cellvec(0, 4)),
-          (5, _cellvec(1, 5)), (7, _cellvec(2, 7))]
-    fold(spark.createDataFrame(b0, VS), 0)                 # v-0 base
+    if family == "vector":
+        VS = "vec_id long, embedding array<double>"
+        fold = _vector_ingest_fn(
+            state, "feedbeef", m=2, dim=8, coarse_ids=[0, 1, 2],
+            codebook_ids=[0, 1, 2, 3], compact_every=2,
+        )
+        b0 = [(0, [0.0] * 8), (1, [100.0] * 8), (2, [200.0] * 8),
+              (3, _cellvec(0, 3)), (4, _cellvec(0, 4)),
+              (5, _cellvec(1, 5)), (7, _cellvec(2, 7))]
+        batch0 = spark.createDataFrame(b0, VS)
+        batch1 = spark.createDataFrame([(9, _cellvec(0, 9))], VS)
+        retire = vector_index_retire
+
+        def live():
+            return {r["id"] for r in vector_state_enc(spark, state).collect()}
+    else:
+        docs = dict(MOR_DOCS)
+        fold = _ledger_ingest_fn_mor(state, "feedbeef", compact_every=2)
+        batch0 = spark.createDataFrame(
+            [(i, docs[i]) for i in (0, 1, 2, 3, 4, 5, 7)], DOC_SCHEMA
+        )
+        batch1 = spark.createDataFrame([(9, docs[9])], DOC_SCHEMA)
+        retire = ledger_mor_retire
+
+        def live():
+            return {r["id"] for r in ledger_state_mor(spark, state)[0].collect()}
+
+    fold(batch0, 0)                                        # v-0 base
     one = lambda i: spark.createDataFrame([(i,)], "id long")  # noqa: E731
-    vector_index_retire(spark, state, one(3))              # v-1 delta
+    retire(spark, state, one(3))                           # v-1 delta
     assert _manifest_text(state) == "mor 1 feedbeef 0 0\n"
-    vector_index_retire(spark, state, one(4))              # v-2 COMPACTS
+    retire(spark, state, one(4))                           # v-2 COMPACTS
     # chain reset: deltas <= compact_every
     assert _manifest_text(state) == "mor 2 feedbeef 0 2\n"
-    # tombstones purged physically from the touched cell partition
-    enc2 = os.path.join(state, "v-2", "enc")
-    assert sorted(
-        d for d in os.listdir(enc2) if d.startswith("cell=")
-    ) == ["cell=0"]
-    ids0 = {
-        r["id"]
-        for r in spark.read.parquet(
-            os.path.join(enc2, "cell=0")
-        ).collect()
-    }
-    assert ids0 == {0}
-    res = {r["id"] for r in vector_state_enc(spark, state).collect()}
-    assert res == {0, 1, 2, 5, 7}
+    if family == "vector":
+        # tombstones purged physically from the touched cell partition
+        enc2 = os.path.join(state, "v-2", "enc")
+        assert sorted(
+            d for d in os.listdir(enc2) if d.startswith("cell=")
+        ) == ["cell=0"]
+        ids0 = {
+            r["id"]
+            for r in spark.read.parquet(
+                os.path.join(enc2, "cell=0")
+            ).collect()
+        }
+        assert ids0 == {0}
+    else:
+        # the new base holds only the survivors, counts resolved with it
+        base_ids = {
+            r["id"]
+            for r in spark.read.parquet(
+                os.path.join(state, "v-2", "fp")
+            ).collect()
+        }
+        assert base_ids == {0, 1, 2, 5, 7}
+        _assert_mor_state_equals(spark, state, spark.createDataFrame(
+            [(i, docs[i]) for i in (0, 1, 2, 5, 7)], DOC_SCHEMA
+        ))
+    assert live() == {0, 1, 2, 5, 7}
     # stream resumes: the high-water mark survived both transactions
-    fold(spark.createDataFrame([(9, _cellvec(0, 9))], VS), 1)
-    res = {r["id"] for r in vector_state_enc(spark, state).collect()}
-    assert res == {0, 1, 2, 5, 7, 9}
+    fold(batch1, 1)
+    assert live() == {0, 1, 2, 5, 7, 9}
 
 
 def test_fragment_cap_forces_full_rewrite(spark, tmp_path, monkeypatch):

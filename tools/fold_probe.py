@@ -26,7 +26,7 @@ compacted state equals a direct mixed-grain build over all 90 batches
 state-size ceiling the compaction enforces.
 
 Round 12 extends the same certification to the STREAMING DEDUP LEDGER
-(``stream_ledger_ingest`` / ``_ledger_ingest_fn``, manifest protocol):
+(``stream_ledger_ingest``, manifest protocol):
 
 - ``ledger_probe`` — fold ONE FIXED revision batch into standing
   fp+counts state of 1x/10x/20x corpus size (state read from parquet,
@@ -37,16 +37,17 @@ Round 12 extends the same certification to the STREAMING DEDUP LEDGER
   not an adjective (the scale path past it is partitioning the state
   write or a merge-on-read table format; the COUNTS delta itself is
   bounded by the batch).
-- ``ledger_sim`` — 30 sequential doc microbatches through the REAL
-  ``_ledger_ingest_fn`` manifest fold with revisions (ids [0,50)
-  re-ingested every 3rd batch) and out-of-band retirement
-  transactions (20 ids after folds 9/19/29, published as their own
-  manifest version) mixed in; verifies the final published state pair
-  equals a from-scratch build over the latest version of every
-  surviving doc (full-outer mismatch 0 on both tables) and that
-  per-fold wall time tracks CURRENT state size, not fold history —
-  the last sim fold is re-run against a ONE-SHOT rebuild of the same
-  corpus and must cost the same.
+- ``ledger_sim_mor`` — 30 sequential doc microbatches through the REAL
+  ``_ledger_ingest_fn_mor`` fold (compact_every=8) with revisions (ids
+  [0,50) re-ingested every 3rd batch) and out-of-band tombstone
+  retirement transactions (20 ids after folds 9/19/29) mixed in;
+  verifies the final resolved state pair equals a from-scratch build
+  over the latest version of every surviving doc (full-outer mismatch
+  0 on both tables) and reports incremental vs compaction fold
+  medians.
+- ``ledger_write_probe`` — the write cost of one fixed revision batch,
+  copy-on-write rewrite (``ledger_revise`` + both full tables) vs the
+  merge-on-read delta pair, at 1x/10x/20x standing corpus.
 
 Round 13 adds ``mor_read`` — the merge-on-read CHAIN-READ term, made
 measurable and pinned (the r12 verdict's named residual): standing
@@ -74,7 +75,7 @@ corpus vs the full-rewrite baseline's corpus slope, with the other
 ~31 cells carried forward by cellmap reference (asserted in-probe).
 
 Usage: python tools/fold_probe.py [sf_dir]
-[probe|simulate|ledger_probe|ledger_sim|ledger_sim_mor|mor_read|vector]
+[probe|simulate|ledger_probe|ledger_write_probe|ledger_sim_mor|mor_read|vector]
 ... (default: probe+simulate, sf0.1).  Prints markdown rows to paste
 into SCALE.md.
 """
@@ -380,158 +381,6 @@ def main() -> None:
         print(_fit_row("ledger_revise_fold (fixed 500-doc batch)", medians["ledger_revise_fold"]))
         shutil.rmtree(root, ignore_errors=True)
 
-    if "ledger_sim" in modes:
-        from scholarmind_spark.operators.ledger import (
-            ledger_fingerprints,
-            ledger_retire,
-            ledger_shingle_counts,
-        )
-        from scholarmind_spark.streaming.pipeline import (
-            _ledger_ingest_fn,
-            ledger_state_dirs,
-        )
-        from scholarmind_spark.streaming.state import (
-            Manifest,
-            gc_versions,
-            publish_manifest,
-            read_manifest,
-        )
-
-        root = tempfile.mkdtemp(prefix="ledgersim_")
-        state = os.path.join(root, "state")
-        lineage = "cafef00d"
-        fold = _ledger_ingest_fn(state, lineage)
-        n_batches, batch_sz, n_rev = 30, 150, 50
-        retired_ids: list[int] = []
-        fold_times: list[float] = []
-        t_all = time.time()
-        for i in range(n_batches):
-            lo = i * batch_sz
-            batch = docs.where(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < lo + batch_sz)
-            ).select("doc_id", "text")
-            if i > 0 and i % 3 == 0:
-                # revision wave: ids [0, n_rev) re-ingested with new text
-                batch = batch.unionByName(
-                    docs.where(F.col("doc_id") < n_rev).select(
-                        "doc_id",
-                        F.concat("text", F.lit(f" rev{i}")).alias("text"),
-                    )
-                )
-            t0 = time.time()
-            fold(batch, i)
-            fold_times.append(time.time() - t0)
-            if i % 10 == 9:
-                # out-of-band retirement TRANSACTION: retire 20
-                # recently-ingested ids from the published state and
-                # publish the result as its own manifest version (same
-                # lineage, same batch high-water — retirement consumes
-                # no stream batch id)
-                ids = list(range(lo - 100, lo - 80))
-                retired_ids.extend(ids)
-                fp_dir, cnt_dir = ledger_state_dirs(state)
-                m = read_manifest(state, "cow")
-                version, upto = m.version, m.upto
-                new_fp, new_counts = ledger_retire(
-                    spark.read.parquet(fp_dir),
-                    spark.read.parquet(cnt_dir),
-                    spark.createDataFrame([(x,) for x in ids], "id bigint"),
-                )
-                new_dir = os.path.join(state, f"v-{version + 1}")
-                new_fp.write.mode("overwrite").parquet(
-                    os.path.join(new_dir, "fp")
-                )
-                new_counts.write.mode("overwrite").parquet(
-                    os.path.join(new_dir, "counts")
-                )
-                publish_manifest(state, Manifest(version + 1, lineage, upto))
-                gc_versions(state, version)
-        elapsed = time.time() - t_all
-
-        # expected corpus: latest version per surviving doc — ids
-        # [0, n_rev) carry the LAST revision wave's text, retired ids
-        # are gone, everything else is the original text
-        last_rev = max(i for i in range(n_batches) if i > 0 and i % 3 == 0)
-        expected = (
-            docs.where(F.col("doc_id") < n_batches * batch_sz)
-            .where(~F.col("doc_id").isin(retired_ids))
-            .select(
-                "doc_id",
-                F.when(
-                    F.col("doc_id") < n_rev,
-                    F.concat("text", F.lit(f" rev{last_rev}")),
-                )
-                .otherwise(F.col("text"))
-                .alias("text"),
-            )
-        )
-        fp_direct = ledger_fingerprints(expected).persist()
-        counts_direct = ledger_shingle_counts(fp_direct)
-        fp_dir, cnt_dir = ledger_state_dirs(state)
-        got_fp = spark.read.parquet(fp_dir)
-        got_counts = spark.read.parquet(cnt_dir)
-        fp_mism = (
-            got_fp.alias("a")
-            .join(fp_direct.alias("b"), "id", "full")
-            .where(
-                ~F.col("a.n").eqNullSafe(F.col("b.n"))
-                | ~F.col("a.hs").eqNullSafe(F.col("b.hs"))
-            )
-            .count()
-        )
-        cnt_mism = (
-            got_counts.alias("a")
-            .join(counts_direct.alias("b"), "sh", "full")
-            .where(~F.col("a.df_count").eqNullSafe(F.col("b.df_count")))
-            .count()
-        )
-        n_state = got_fp.count()
-
-        # history-independence: rebuild the SAME pre-final corpus in one
-        # shot, fold the final batch again — cost must match the sim's
-        # final fold (state size, not fold count, sets the price)
-        oneshot = os.path.join(root, "oneshot")
-        pre_lo = (n_batches - 1) * batch_sz
-        # the state the final fold actually saw: every batch-0..28 doc
-        # at its latest revision, minus the wave-9/19 retirements
-        # (already absent from `expected`), PLUS the wave-29 ids —
-        # their retirement happened after the final fold
-        pre_corpus = expected.where(F.col("doc_id") < pre_lo).unionByName(
-            docs.where(
-                F.col("doc_id").isin(retired_ids[-20:])
-            ).select("doc_id", "text")
-        )
-        fp_pre = ledger_fingerprints(pre_corpus)
-        fp_pre.write.mode("overwrite").parquet(os.path.join(oneshot, "v-0/fp"))
-        ledger_shingle_counts(
-            spark.read.parquet(os.path.join(oneshot, "v-0/fp"))
-        ).write.mode("overwrite").parquet(os.path.join(oneshot, "v-0/counts"))
-        publish_manifest(oneshot, Manifest(0, lineage, n_batches - 2))
-        fold_one = _ledger_ingest_fn(oneshot, lineage)
-        final_batch = docs.where(
-            (F.col("doc_id") >= pre_lo)
-            & (F.col("doc_id") < pre_lo + batch_sz)
-        ).select("doc_id", "text")
-        t0 = time.time()
-        fold_one(final_batch, n_batches - 1)
-        oneshot_t = time.time() - t0
-
-        third = max(1, len(fold_times) // 3)
-        med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
-        print(
-            f"| stream_ledger_ingest 30-fold sim (revisions + retirement "
-            f"transactions) | final state {n_state} docs | state == "
-            f"from-scratch: fp mismatch {fp_mism}, counts mismatch "
-            f"{cnt_mism} | per-fold med first/mid/last third "
-            f"{med(fold_times[:third]):.2f}/"
-            f"{med(fold_times[third:2 * third]):.2f}/"
-            f"{med(fold_times[2 * third:]):.2f}s; final fold "
-            f"{fold_times[-1]:.2f}s vs one-shot-state refold "
-            f"{oneshot_t:.2f}s | {elapsed:.0f}s total |"
-        )
-        fp_direct.unpersist()
-        shutil.rmtree(root, ignore_errors=True)
-
     if "ledger_write_probe" in modes:
         # head-to-head WRITE cost, CoW vs MoR incremental, ACTUAL parquet
         # writes (the ledger_probe above forces noop sinks, so it times
@@ -640,11 +489,11 @@ def main() -> None:
         shutil.rmtree(root, ignore_errors=True)
 
     if "ledger_sim_mor" in modes:
-        # the SAME 30-fold scenario through the merge-on-read fold
-        # (mode='mor', compact_every=8) — O(batch) incremental writes,
-        # periodic compaction; retirement as tombstone-delta
-        # transactions.  Reported separately: incremental-fold vs
-        # compaction-fold medians, so the amortization is a number.
+        # 30 folds through the merge-on-read fold (compact_every=8) —
+        # O(batch) incremental writes, periodic compaction; retirement
+        # as tombstone-delta transactions under the same bound.
+        # Reported separately: incremental-fold vs compaction-fold
+        # medians, so the amortization is a number.
         from scholarmind_spark.operators.ledger import (
             ledger_fingerprints,
             ledger_shingle_counts,
@@ -852,9 +701,9 @@ def main() -> None:
         # enc table); (b) a 5-query nprobe=2 read — rows scanned pruned
         # (probed cells + delta stack) vs the full chain (old path).
         # Exactness: pruned resolve == full resolve within probed cells.
+        from scholarmind_spark.operators.ledger import mor_resolve
         from scholarmind_spark.streaming.pipeline import (
             _vec_chain,
-            _vec_resolve,
             _vector_ingest_fn,
         )
         from scholarmind_spark.streaming.state import read_manifest
@@ -900,7 +749,7 @@ def main() -> None:
             dw[k] = float(
                 spark.read.parquet(os.path.join(state, "v-1", "denc")).count()
             )
-            head = read_manifest(state, "mor", "vector index")
+            head = read_manifest(state, "mor", "vector-index")
             version, base_v = head.version, head.base
             q = emb.where(F.col("vec_id").isin(list(range(nq)))).select(
                 F.col("vec_id").alias("query_id"),
@@ -941,10 +790,10 @@ def main() -> None:
                 per_f.append(time.time() - t0)
                 spark.catalog.clearCache()
             # exactness: pruned resolve == full resolve within probed cells
-            r_p = _vec_resolve(
+            r_p = mor_resolve(
                 _vec_chain(spark, state, base_v, version, cells=cells)
             ).where(F.col("cell").isin(cells))
-            r_f = _vec_resolve(
+            r_f = mor_resolve(
                 _vec_chain(spark, state, base_v, version)
             ).where(F.col("cell").isin(cells))
             mism = (
@@ -969,7 +818,7 @@ def main() -> None:
             t0 = time.time()
             fold(one_cell(910_000_000), 2)
             cwall[k] = time.time() - t0
-            head = read_manifest(state, "mor", "vector index")
+            head = read_manifest(state, "mor", "vector-index")
             v2, b2 = head.version, head.base
             assert b2 == v2, "fold 2 did not compact"
             crows[k] = float(
