@@ -49,10 +49,6 @@ class PipelineConfig:
     # opt-in: run assert_unique_record_ids on the parsed corpus (one extra
     # aggregation pass) before processing — CI/harness use, off by default
     check_id_collisions: bool = False
-    # opt-in second dedup pass the reference lacks (main.py:104-151 never
-    # dedups null/empty-DOI records): fuzzy title matching among no-DOI
-    # survivors, same source-priority rule (operators.dedup docstring)
-    fuzzy_nodoi_dedup: bool = False
 
 
 def build_corpus(spark: SparkSession, sources: dict[str, str]) -> DataFrame:
@@ -123,7 +119,7 @@ def process(
     row set (the reference's one deliberate physical tactic, SURVEY §4 —
     preserved here by authoring order; Catalyst cannot reorder through the
     non-deterministic LLM stage anyway)."""
-    out = priority_dedup(df, fuzzy_nodoi=cfg.fuzzy_nodoi_dedup)
+    out = priority_dedup(df)
     metrics_df = cfg.metrics_df
     if metrics_df is None and cfg.metrics_fetch_one is not None:
         from scholarmind_spark.operators.enrich import distinct_journals, fetch_metrics_df

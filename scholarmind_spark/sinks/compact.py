@@ -7,16 +7,18 @@ rewrites a dataset into ~``target_bytes``-sized files: size from the
 current on-disk footprint (driver-side listing, no data pass), then one
 ``coalesce`` write — coalesce, not repartition, so existing partitions
 are concatenated WITHOUT a shuffle.  The rewrite lands in a staging
-directory swapped in by rename, so readers never observe a half-written
-dataset.
+directory swapped in by the rename swap of :mod:`streaming.state`, so
+readers never observe a half-written dataset, and a dataset a crash left
+parked aside is restored by the next call.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import SparkSession
+
+from scholarmind_spark.streaming.state import recover_swap, rename_swap
 
 
 def _dir_bytes(path: str) -> int:
@@ -37,6 +39,7 @@ def compact_parquet(
     Refuses hive-partitioned datasets: a flat rewrite would silently
     DROP the directory layout (and with it partition pruning) — compact
     those per partition directory instead."""
+    recover_swap(path)
     if any(
         "=" in d
         for d in os.listdir(path)
@@ -55,20 +58,8 @@ def compact_parquet(
             "drop files committed by concurrent microbatches — stop the "
             "stream and write through a batch copy instead"
         )
-    staging = f"{path}.compacting"
-    df.coalesce(n_files).write.mode("overwrite").parquet(staging)
-    # two renames, not rmtree-then-rename: the old rmtree left a window as
-    # wide as the directory delete during which readers saw NO dataset at
-    # all.  Each rename is atomic; the only remaining gap is the instant
-    # between them, and on failure the original is restored.
-    old = f"{path}.old-{os.getpid()}"
-    os.rename(path, old)
-    try:
-        os.rename(staging, path)
-    except BaseException:
-        os.rename(old, path)
-        raise
-    shutil.rmtree(old)
+    # a fixed staging suffix: a retry overwrites a crashed run's staging dir
+    rename_swap(path, 0, df.coalesce(n_files).write.mode("overwrite").parquet)
     return sum(
         1 for f in os.listdir(path) if f.endswith(".parquet")
     )

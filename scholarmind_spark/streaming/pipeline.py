@@ -38,9 +38,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from scholarmind_spark.streaming.state import (
-    SKIP, Manifest, chain_dirs, commit_mor, fold_gate, gc_versions,
-    has_parquet, publish_manifest, read_manifest, read_sidecar, recover_swap,
-    rename_swap, start_fold_stream, version_dir, write_marker, write_sidecar,
+    SKIP, chain_dirs, commit_mor, fold_gate, has_parquet, read_manifest,
+    read_sidecar, recover_swap, rename_swap, start_fold_stream, version_dir,
+    write_marker, write_sidecar,
 )
 
 # session -> {probe path: (file stamp, analyzed schema)}; weak on the
@@ -480,7 +480,6 @@ def stream_fold_sketch_state(
     k: int = 64,
     m_words: int = 64,
     bloom_k: int = 4,
-    commit: str = "rename",
     retain_days: int | None = None,
     compact_day: str | None = None,
 ):
@@ -494,11 +493,11 @@ def stream_fold_sketch_state(
     fold), ``"bloom"`` (``bloom_state_build``/``bloom_state_merge``,
     geometry ``m_words``/``bloom_k``).
 
-    Exactly-once (the marker/manifest discipline and checkpoint lineage
-    of :mod:`streaming.state`) applies to ALL THREE families.  For HDR
-    it is correctness-critical: an additive fold, unlike a keyed upsert,
-    is NOT naturally idempotent — a re-delivered batch would double its
-    bucket counts.  A KMV re-fold (union → distinct → rank-cap) and a
+    Exactly-once (the rename layout's marker discipline and checkpoint
+    lineage of :mod:`streaming.state`) applies to ALL THREE families.
+    For HDR it is correctness-critical: an additive fold, unlike a keyed
+    upsert, is NOT naturally idempotent — a re-delivered batch would
+    double its bucket counts.  A KMV re-fold (union → distinct → rank-cap) and a
     Bloom re-fold (``bit_or``) are no-ops only when the geometry
     matches: a re-fold under a different ``k`` re-caps the state and
     silently corrupts the estimator.  The mark keeps all three families
@@ -508,12 +507,10 @@ def stream_fold_sketch_state(
     a different checkpoint lineage raises: resume with the original
     checkpoint, or start a fresh ``state_path``.
 
-    ``commit`` picks the layout: ``"rename"`` (default) swaps whole
-    directories (the stream_merge_to_snapshot discipline; shared POSIX
-    filesystem); ``"manifest"`` uses immutable version directories plus
-    one atomically-replaced manifest — the transactional-table-format
-    shape whose only atomicity requirement (single-file replace) object
-    stores DO provide, read back via :func:`manifest_state_dir`.
+    Every fold swaps whole directories (the rename layout, shared with
+    stream_merge_to_snapshot; shared POSIX filesystem), so
+    ``state_path`` itself is the state snapshot a reader passes to
+    ``spark.read.parquet``; a state in another layout is refused.
     ``retain_days`` turns on in-loop retention/compaction: after every
     merge, days older than (newest numeric day − retain_days + 1) in
     ``compact_day`` (default: the first key) are rekeyed to the
@@ -525,7 +522,7 @@ def stream_fold_sketch_state(
         lambda lineage: _sketch_fold_fn(
             state_path, keys, value, p, lineage, family=family, k=k,
             m_words=m_words, bloom_k=bloom_k, retain_days=retain_days,
-            compact_day=compact_day, commit=commit,
+            compact_day=compact_day,
         ),
         checkpoint, "sfck_", state_path,
     )
@@ -542,8 +539,7 @@ def _family_ops(
 ):
     """(build, merge) pair for a sketch-state family — the SAME
     single-home batch folds the ``sketch_ledger_roundtrip`` gate pins,
-    shared by both commit protocols so the streaming path can never
-    diverge from the batch one."""
+    so the streaming path can never diverge from the batch one."""
     from scholarmind_spark.operators.sketchledger import (
         bloom_state_build,
         bloom_state_merge,
@@ -644,9 +640,6 @@ def _maybe_compact(
     return bloom_state_compact(merged, day_col, cutoff)
 
 
-_SKETCH_LAYOUTS = {"rename": "rename", "manifest": "cow"}
-
-
 def _sketch_fold_fn(
     state_path: str,
     keys: list[str],
@@ -659,50 +652,23 @@ def _sketch_fold_fn(
     bloom_k: int = 4,
     retain_days: int | None = None,
     compact_day: str | None = None,
-    commit: str = "rename",
 ):
     """The foreachBatch fold of :func:`stream_fold_sketch_state`, exposed
     so tests can exercise re-delivery (same batch id twice) and
-    lineage-mismatch refusal deterministically.  One body for both
-    ``commit`` protocols: only where the live state sits and the commit
-    step differ.  ``"rename"`` stages the folded state with its
-    ``_folded_`` mark and swaps it in; ``"manifest"`` writes the
-    immutable ``v-(n+1)``, publishes it with the new high-water mark, and
-    collects versions older than n."""
-    layout = _SKETCH_LAYOUTS.get(commit)
-    if layout is None:
-        raise ValueError(
-            f"unknown commit protocol {commit!r}: expected rename | manifest"
-        )
+    lineage-mismatch refusal deterministically.  It merges the batch's
+    sketch into the live state, stages the result with its ``_folded_``
+    mark and swaps it in for ``state_path``."""
     build, merge = _family_ops(family, keys, value, p, k, m_words, bloom_k)
 
-    def _commit(merged: DataFrame, head, batch_id: int) -> None:
-        if layout == "rename":
-            def write(staging):
-                merged.write.mode("overwrite").parquet(staging)
-                write_marker(staging, lineage, batch_id)
-
-            rename_swap(state_path, batch_id, write)
-            return
-        v = head.version + 1 if head else 0
-        # overwrite mode: a crashed predecessor's orphan for the SAME
-        # version is replaced, never merged with
-        merged.write.mode("overwrite").parquet(version_dir(state_path, v))
-        publish_manifest(state_path, Manifest(v, lineage, batch_id))
-        gc_versions(state_path, v - 1)
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        head = fold_gate(state_path, lineage, batch_id, layout, "sketch")
-        if head is SKIP:
+        if fold_gate(state_path, lineage, batch_id, "rename", "sketch") is SKIP:
             return
         delta = build(batch_df)
-        if layout == "rename":
-            live = state_path
-        else:
-            live = version_dir(state_path, head.version) if head else ""
         merged = delta
-        if has_parquet(live):
-            snap = batch_df.sparkSession.read.schema(delta.schema).parquet(live)
+        if has_parquet(state_path):
+            snap = batch_df.sparkSession.read.schema(delta.schema).parquet(
+                state_path
+            )
             merged = merge(snap, delta)
         cached = None
         if retain_days is not None:
@@ -715,20 +681,17 @@ def _sketch_fold_fn(
             merged = _maybe_compact(
                 merged, family, compact_day or keys[0], retain_days, k
             )
-            _commit(merged, head, batch_id)
+
+            def write(staging):
+                merged.write.mode("overwrite").parquet(staging)
+                write_marker(staging, lineage, batch_id)
+
+            rename_swap(state_path, batch_id, write)
         finally:
             if cached is not None:
                 cached.unpersist()
 
     return _fold
-
-
-def manifest_state_dir(state_path: str) -> str | None:
-    """Resolve the CURRENT version directory of a manifest-committed
-    state snapshot (what a reader passes to ``spark.read.parquet``), or
-    None if nothing has been published yet."""
-    m = read_manifest(state_path, "cow", "sketch")
-    return None if m is None else version_dir(state_path, m.version)
 
 
 # Merge-on-read base fp files are hash-partitioned by a bucket of the
@@ -878,7 +841,7 @@ def ledger_state_mor(spark, state_path: str):
         ledger_mor_resolve_fp,
     )
 
-    m = read_manifest(state_path, "mor", "ledger")
+    m = read_manifest(state_path, "ledger")
     if m is None:
         return None
     fp_chain, cnt_chain = _mor_chains(spark, state_path, m.base, m.version)
@@ -1034,7 +997,7 @@ def ledger_mor_retire(spark, state_path: str, retired_ids) -> None:
     versions it publishes a new base (bucketed at the default
     ``bucket_rows``) instead of another delta.
     ``retired_ids``: a one-column ``id`` DataFrame."""
-    m = read_manifest(state_path, "mor", "ledger")
+    m = read_manifest(state_path, "ledger")
     if m is None:
         raise ValueError(f"no published merge-on-read state at {state_path}")
     removed, neg = _ledger_replaced(
@@ -1233,7 +1196,7 @@ def vector_state_enc(spark, state_path: str) -> DataFrame | None:
     input a from-scratch rebuild is compared against."""
     from scholarmind_spark.operators.ledger import mor_resolve
 
-    m_ = read_manifest(state_path, "mor", "vector-index")
+    m_ = read_manifest(state_path, "vector-index")
     if m_ is None:
         return None
     return mor_resolve(
@@ -1586,7 +1549,7 @@ def ann_state_query(
         _sq,
     )
 
-    m_ = read_manifest(state_path, "mor", "vector-index")
+    m_ = read_manifest(state_path, "vector-index")
     if m_ is None:
         return None
     cur = version_dir(state_path, m_.version)
@@ -1750,7 +1713,7 @@ def vector_index_retire(spark, state_path: str, retired_ids) -> None:
     compact_every versions" read bound true under repeated retires on
     a quiescent stream.  ``retired_ids``: a one-column ``id``
     DataFrame."""
-    m = read_manifest(state_path, "mor", "vector-index")
+    m = read_manifest(state_path, "vector-index")
     if m is None:
         raise ValueError(f"no published vector-index state at {state_path}")
     cur = version_dir(state_path, m.version)

@@ -2,10 +2,10 @@
 
 The streaming folds in :mod:`streaming.pipeline` (sketch, dedup ledger,
 vector index) and the two retire transactions keep their state under one
-``state_path`` in one of three layouts, all exactly-once per stream batch.
+``state_path`` in one of two layouts, each exactly-once per stream batch.
 
-Rename layout (``stream_fold_sketch_state(commit="rename")``, the default,
-and ``stream_merge_to_snapshot``): ``state_path`` itself holds the parquet
+Rename layout (``stream_fold_sketch_state`` and
+``stream_merge_to_snapshot``): ``state_path`` itself holds the parquet
 files.  A fold writes the new state to ``<state_path>.staging-<batch id>``
 and swaps it in with renames ordered so every failure point leaves a
 recoverable state: move current aside (``.old``), move staging in, drop
@@ -19,27 +19,22 @@ Spark's parquet reader), atomic with the swap because it travels inside the
 renamed directory, O(1) forever because batch ids are monotone within a
 lineage.
 
-Manifest layouts: immutable version directories ``v-<n>/`` plus one small
-``MANIFEST`` file whose atomic replacement (staged write + ``os.replace``
-here; a conditional PUT on an object store) is the only primitive the
-protocol needs.  Readers resolve the manifest, then read exactly the
-versions it names.  A crash at any point before the publish leaves the
-previous version live; the orphan version directory is overwritten by the
-retried batch (batch ids are stable) and collected after the next publish.
-The lineage and the folded-upto high-water mark travel inside the manifest,
-so mark and data publish in the same atomic step.  Two line formats:
-
-- copy-on-write, ``"{v} {lineage} {upto}"``: ``v-<n>`` holds the whole
-  state.  Only the sketch fold's ``commit="manifest"`` writes it;
-- merge-on-read, ``"mor {v} {lineage} {upto} {base}"``: readers resolve
-  versions ``[base..v]``.  ``v-<base>`` holds a base (ledger ``fp/`` +
-  ``counts/``; vector ``enc/`` + ``cellmap/``), every later version only its
-  delta (ledger ``dfp/`` + ``dcounts/``; vector ``denc/``), so a fold writes
-  O(batch) and every ``compact_every`` versions a compaction writes a new
-  base.  The dedup ledger and the vector index use only this format; their
-  two folds and two retire transactions all publish through
-  :func:`commit_mor`.  The leading field is what lets copy-on-write and
-  merge-on-read folds and readers refuse each other's state.
+Merge-on-read layout (``stream_ledger_ingest``, ``stream_vector_ingest``
+and their retires, all through :func:`commit_mor`): immutable version
+directories ``v-<n>/`` plus one small ``MANIFEST`` file whose atomic
+replacement (staged write + ``os.replace`` here; a conditional PUT on an
+object store) is the only primitive the protocol needs.  The manifest is
+one line, ``"mor {v} {lineage} {upto} {base}"``; readers resolve versions
+``[base..v]``.  ``v-<base>`` holds a base (ledger ``fp/`` + ``counts/``;
+vector ``enc/`` + ``cellmap/``), every later version only its delta (ledger
+``dfp/`` + ``dcounts/``; vector ``denc/``), so a fold writes O(batch) and
+every ``compact_every`` versions a compaction writes a new base.  A crash at
+any point before the publish leaves the previous version live; the orphan
+version directory is overwritten by the retried batch (batch ids are
+stable) and collected after the next publish.  The lineage and the
+folded-upto high-water mark travel inside the manifest, so mark and data
+publish in the same atomic step.  A line without the leading ``mor`` field
+(the former copy-on-write ``"{v} {lineage} {upto}"`` format) is refused.
 
 Each version directory may carry one-line sidecar files: ``nbuckets.txt``
 (ledger base bucket count), ``encmode.txt`` (vector encoding mode, frozen at
@@ -65,7 +60,6 @@ double-counting batches.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import re
 import shutil
@@ -80,9 +74,9 @@ _MARKER_RE = re.compile(r"^_folded_([0-9a-f]{8})_(\d+)$")
 
 @dataclass(frozen=True)
 class Manifest:
-    """One published state: ``version`` (None for a rename-layout mark),
-    the checkpoint ``lineage``, the folded-upto batch id, and the base
-    version of a merge-on-read chain (None for copy-on-write)."""
+    """One published state: ``version``, the checkpoint ``lineage``, the
+    folded-upto batch id, and the ``base`` version of the merge-on-read
+    chain (``version`` and ``base`` are None for a rename-layout mark)."""
 
     version: int | None
     lineage: str
@@ -108,46 +102,32 @@ def has_parquet(path: str) -> bool:
     )
 
 
-def read_manifest(
-    state_path: str, layout: str | None = None, what: str = "state"
-) -> Manifest | None:
-    """The published manifest, or None.  ``layout`` (``"cow"`` | ``"mor"``)
-    refuses the other line format: a copy-on-write reader of merge-on-read
-    state would read the base as the whole state and drop every delta.
+def read_manifest(state_path: str, what: str = "state") -> Manifest | None:
+    """The published manifest, or None.  A line without the leading
+    ``mor`` field (a copy-on-write manifest, whose ``v-<n>`` holds the
+    whole state) is refused: read as merge-on-read it would mis-parse.
     ``what`` names the reader's state in the refusal."""
     mp = os.path.join(state_path, "MANIFEST")
     if not os.path.exists(mp):
         return None
     with open(mp) as f:
         parts = f.read().split()
-    mor = parts[:1] == ["mor"]
-    if layout == "cow" and mor:
-        raise ValueError(
-            f"state at {state_path} is merge-on-read, not a copy-on-write "
-            f"{what} state — start a fresh state_path"
-        )
-    if layout == "mor" and not mor:
+    if parts[:1] != ["mor"]:
         raise ValueError(
             f"state at {state_path} carries a copy-on-write manifest, not "
             f"a {what} state ({what} state is merge-on-read only) — start "
             "a fresh state_path and re-fold the corpus into it"
         )
-    if mor:
-        _, v, lineage, upto, base = parts
-        return Manifest(int(v), lineage, int(upto), int(base))
-    v, lineage, upto = parts
-    return Manifest(int(v), lineage, int(upto))
+    _, v, lineage, upto, base = parts
+    return Manifest(int(v), lineage, int(upto), int(base))
 
 
 def publish_manifest(state_path: str, m: Manifest) -> None:
     """Atomically point the manifest at ``m``: THE commit."""
-    line = f"{m.version} {m.lineage} {m.upto}"
-    if m.base is not None:
-        line = f"mor {line} {m.base}"
     mp = os.path.join(state_path, "MANIFEST")
     tmp = f"{mp}.tmp-{m.version}"
     with open(tmp, "w") as f:
-        f.write(line + "\n")
+        f.write(f"mor {m.version} {m.lineage} {m.upto} {m.base}\n")
     os.replace(tmp, mp)
 
 
@@ -168,29 +148,29 @@ def write_marker(path: str, lineage: str, batch_id: int) -> None:
 def fold_gate(
     state_path: str, lineage: str, batch_id: int, layout: str, what: str
 ):
-    """The pre-fold exactly-once discipline, for every layout
-    (``"rename"`` | ``"cow"`` | ``"mor"``).  Returns the current
-    :class:`Manifest` (None if nothing was folded yet) or :data:`SKIP` for
-    a re-delivered batch id.
+    """The pre-fold exactly-once discipline, for both layouts
+    (``"rename"`` | ``"mor"``).  Returns the current :class:`Manifest`
+    (None if nothing was folded yet) or :data:`SKIP` for a re-delivered
+    batch id.
 
-    Refuses a foreign checkpoint lineage and any state in another layout:
-    a rename fold would rmtree a manifest state's MANIFEST and every
-    version dir; a manifest fold would ignore loose parquet, its marker, or
-    a state parked at ``.old`` by an interrupted swap (the rename fold
+    Refuses a foreign checkpoint lineage and the other layout's state: a
+    rename fold would rmtree a manifest state's MANIFEST and every version
+    dir; a merge-on-read fold would ignore loose parquet, its marker, or a
+    state parked at ``.old`` by an interrupted swap (the rename fold
     self-heals that window) and publish v-0 holding one batch."""
     if layout == "rename":
         recover_swap(state_path)
         if os.path.exists(os.path.join(state_path, "MANIFEST")):
             raise ValueError(
-                f"state at {state_path} is manifest-committed; folding "
-                "it with commit='rename' would destroy it — resume with "
-                "commit='manifest', or start a fresh state_path"
+                f"state at {state_path} is manifest-committed; folding it "
+                f"as rename-layout {what} state would destroy it — start "
+                "a fresh state_path"
             )
         mk = read_marker(state_path)
         head = Manifest(None, *mk) if mk else None
     else:
         os.makedirs(state_path, exist_ok=True)
-        head = read_manifest(state_path, layout, what)
+        head = read_manifest(state_path, what)
         if head is None and (
             os.path.isdir(f"{state_path}.old")
             or any(
@@ -200,13 +180,8 @@ def fold_gate(
         ):
             raise ValueError(
                 f"state at {state_path} is rename-committed; folding it "
-                + (
-                    "with commit='manifest' would orphan it — resume with "
-                    "commit='rename', or start a fresh state_path"
-                    if layout == "cow"
-                    else f"as merge-on-read {what} state would orphan it "
-                    "— start a fresh state_path"
-                )
+                f"as merge-on-read {what} state would orphan it — start a "
+                "fresh state_path"
             )
     if head is None:
         return None
@@ -310,17 +285,7 @@ def rename_swap(path: str, batch_id: int, write) -> None:
         shutil.rmtree(old)
 
 
-def _state_lineage(state_path: str) -> str | None:
-    """The lineage an existing state was folded under, in any layout
-    (including a state parked at ``.old``), or None."""
-    m = read_manifest(state_path)
-    if m is not None:
-        return m.lineage
-    mk = read_marker(state_path) or read_marker(f"{state_path}.old")
-    return mk[0] if mk else None
-
-
-def fold_lineage(checkpoint: str, state_paths: tuple[str, ...] = ()) -> str:
+def fold_lineage(checkpoint: str) -> str:
     """The checkpoint's identity token, minted into
     ``<checkpoint>/_sketchfold_lineage`` on first use and read back on
     every resume.  The file shares the checkpoint's fate, which a
@@ -328,24 +293,13 @@ def fold_lineage(checkpoint: str, state_paths: tuple[str, ...] = ()) -> str:
     restarts batch ids at 0 but would keep the tag, and every batch id
     below the stored mark would be silently skipped.  Single writer by
     Spark's contract; the write is staged + renamed so a crash never
-    leaves a torn tag.
-
-    Legacy migration: tags used to be ``md5(abspath(checkpoint))[:8]``
-    with no identity file.  On first use of an identity-less checkpoint,
-    if any of ``state_paths`` carries that derived tag, adopt it — the
-    match proves state and checkpoint were already paired, and a fresh
-    token would make the resume the lineage error advises fail.  A
-    non-matching mark gets a fresh token and the gate refuses, as it
-    must."""
+    leaves a torn tag."""
     os.makedirs(checkpoint, exist_ok=True)
     lf = os.path.join(checkpoint, "_sketchfold_lineage")
     if os.path.exists(lf):
         with open(lf) as f:
             return f.read().strip()
     tag = uuid.uuid4().hex[:8]
-    legacy = hashlib.md5(os.path.abspath(checkpoint).encode()).hexdigest()[:8]
-    if any(_state_lineage(sp) == legacy for sp in state_paths):
-        tag = legacy
     tmp = f"{lf}.tmp-{tag}"
     with open(tmp, "w") as f:
         f.write(tag)
@@ -368,7 +322,7 @@ def start_fold_stream(
     lineage is :func:`fold_lineage` of the checkpoint when ``state_path``
     is given, else None (a keyed upsert is idempotent without one)."""
     ck = checkpoint or tempfile.mkdtemp(prefix=prefix)
-    lineage = fold_lineage(ck, (state_path,)) if state_path is not None else None
+    lineage = fold_lineage(ck) if state_path is not None else None
     return (
         stream_df.writeStream.foreachBatch(make_fold(lineage))
         .option("checkpointLocation", ck)

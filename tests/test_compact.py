@@ -45,3 +45,19 @@ def test_compaction_refuses_partitioned_layout(spark, tmp_path):
     write_partitioned(df, path, "k")
     with pytest.raises(ValueError, match="hive-partitioned"):
         compact_parquet(spark, path)
+
+
+def test_compaction_restores_a_dataset_a_crash_parked_aside(spark, tmp_path):
+    """A kill between the swap's two renames leaves the dataset at
+    ``<path>.old`` with ``path`` absent; the next compaction restores it
+    and compacts it, losing no rows."""
+    path = str(tmp_path / "parked")
+    spark.range(0, 500).repartition(5).write.parquet(path + ".old")
+    assert not os.path.exists(path)
+
+    n = compact_parquet(spark, path, target_bytes=10**12)
+    assert n == 1
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(
+        range(500)
+    )
+    assert not os.path.exists(path + ".old")

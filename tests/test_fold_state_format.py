@@ -12,9 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from scholarmind_spark.streaming import (
+    ann_state_query,
     ledger_mor_retire,
     ledger_state_mor,
-    manifest_state_dir,
     vector_index_retire,
     vector_state_enc,
 )
@@ -39,6 +39,17 @@ def _write(path, text):
 def _read(path):
     with open(path) as f:
         return f.read()
+
+
+def _files(root):
+    """Every file under ``root`` with its bytes: a state left untouched
+    compares equal."""
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+    return out
 
 
 def _rows(df):
@@ -91,10 +102,6 @@ def _mor_ledger_base(state, docs):
     _write(os.path.join(state, "v-0", "nbuckets.txt"), "1\n")
 
 
-def _cow_fold(state, lineage):
-    return _sketch_fold_fn(state, KEYS, "value", 5, lineage, commit="manifest")
-
-
 def test_checkpoint_lineage_file_is_read_back(tmp_path):
     ck = str(tmp_path / "ck")
     _write(os.path.join(ck, "_sketchfold_lineage"), "cafebabe")
@@ -113,9 +120,9 @@ def test_rename_sketch_state_by_hand(spark, tmp_path):
     with pytest.raises(ValueError, match="different checkpoint lineage"):
         _sketch_fold_fn(state, KEYS, "value", 5, "deadbeef")(b2, 4)
     with pytest.raises(ValueError, match="rename-committed"):
-        _sketch_fold_fn(state, KEYS, "value", 5, "cafebabe", commit="manifest")(b2, 4)
-    with pytest.raises(ValueError, match="rename-committed"):
         _ledger_ingest_fn_mor(state, "cafebabe")(b2, 4)
+    with pytest.raises(ValueError, match="rename-committed"):
+        _vector_ingest_fn(state, "cafebabe", m=2, dim=8)(b2, 4)
 
     fold = _sketch_fold_fn(state, KEYS, "value", 5, "cafebabe")
     fold(b2, 3)  # re-delivery
@@ -130,6 +137,11 @@ def test_rename_sketch_state_by_hand(spark, tmp_path):
 
 
 def test_manifest_sketch_and_cow_ledger_state_by_hand(spark, tmp_path):
+    """A sketch state in the former copy-on-write manifest layout (a
+    ``MANIFEST`` line without the ``mor`` field, ``v-0/`` holding the
+    whole state) is refused by every fold and every reader and left
+    byte-identical; so is a copy-on-write ledger.  A merge-on-read ledger
+    folded with ``compact_every=1`` gives the copy-on-write behaviour."""
     from scholarmind_spark.operators.ledger import (
         ledger_fingerprints,
         ledger_shingle_counts,
@@ -140,24 +152,23 @@ def test_manifest_sketch_and_cow_ledger_state_by_hand(spark, tmp_path):
     state = str(tmp_path / "sketch")
     hdr_state_build(b1, KEYS, "value").write.parquet(os.path.join(state, "v-0"))
     _write(os.path.join(state, "MANIFEST"), "0 cafebabe 3\n")
+    before = _files(state)
 
-    with pytest.raises(ValueError, match="different checkpoint lineage"):
-        _sketch_fold_fn(state, KEYS, "value", 5, "deadbeef", commit="manifest")(b2, 4)
-    with pytest.raises(ValueError, match="manifest-committed"):
-        _sketch_fold_fn(state, KEYS, "value", 5, "cafebabe")(b2, 4)
-    with pytest.raises(ValueError, match="copy-on-write"):
-        _ledger_ingest_fn_mor(state, "cafebabe")(b2, 4)
-    with pytest.raises(ValueError, match="not a vector-index state"):
-        _vector_ingest_fn(state, "cafebabe", m=2, dim=8)(b2, 4)
-
-    fold = _cow_fold(state, "cafebabe")
-    fold(b2, 3)  # re-delivery
-    assert _read(os.path.join(state, "MANIFEST")) == "0 cafebabe 3\n"
-    fold(b2, 4)
-    assert _read(os.path.join(state, "MANIFEST")) == "1 cafebabe 4\n"
-    assert _rows(spark.read.parquet(manifest_state_dir(state))) == _rows(
-        hdr_state_build(b1.unionByName(b2), KEYS, "value")
-    )
+    q = spark.createDataFrame([], "query_id long, query_vec array<double>")
+    for match, attempt in (
+        ("manifest-committed",
+         lambda: _sketch_fold_fn(state, KEYS, "value", 5, "cafebabe")(b2, 4)),
+        ("copy-on-write", lambda: _ledger_ingest_fn_mor(state, "cafebabe")(b2, 4)),
+        ("not a vector-index state",
+         lambda: _vector_ingest_fn(state, "cafebabe", m=2, dim=8)(b2, 4)),
+        ("not a ledger state", lambda: ledger_state_mor(spark, state)),
+        ("not a vector-index state", lambda: vector_state_enc(spark, state)),
+        ("not a vector-index state", lambda: ann_state_query(spark, state, q)),
+    ):
+        with pytest.raises(ValueError, match=match) as err:
+            attempt()
+        assert "start a fresh state_path" in str(err.value)
+        assert _files(state) == before
 
     # a ledger in the former copy-on-write layout is refused unchanged
     d1, d2, latest = _doc_batches(spark)
@@ -194,8 +205,6 @@ def test_mor_ledger_state_by_hand(spark, tmp_path):
     _mor_ledger_base(state, d1)
     _write(os.path.join(state, "MANIFEST"), "mor 0 cafebabe 0 0\n")
 
-    with pytest.raises(ValueError, match="merge-on-read"):
-        _cow_fold(state, "cafebabe")(d2, 1)
     with pytest.raises(ValueError, match="manifest-committed"):
         _sketch_fold_fn(state, KEYS, "value", 5, "cafebabe")(d2, 1)
     with pytest.raises(ValueError, match="different checkpoint lineage"):
@@ -244,8 +253,8 @@ def test_vector_state_by_hand(spark, tmp_path):
 
     VS = "vec_id long, embedding array<double>"
     batch = spark.createDataFrame([(4, [99.0] * 8), (5, [1.0] * 8)], VS)
-    with pytest.raises(ValueError, match="merge-on-read"):
-        _cow_fold(state, "feedbeef")(batch, 1)
+    with pytest.raises(ValueError, match="manifest-committed"):
+        _sketch_fold_fn(state, KEYS, "value", 5, "feedbeef")(batch, 1)
     with pytest.raises(ValueError, match="different checkpoint lineage"):
         _vector_ingest_fn(state, "deadbeef", m=2, dim=8)(batch, 1)
 

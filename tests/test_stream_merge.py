@@ -378,29 +378,29 @@ def test_stream_fold_kmv_and_bloom_families(spark, tmp_path):
         assert state_rows() == direct, family
 
 
-def test_stream_fold_manifest_commit(spark, tmp_path):
-    """The manifest commit protocol (commit='manifest'): immutable
-    version dirs + one atomically-replaced manifest — no directory
-    rename anywhere, the object-store-compatible variant.  Checks:
-    stream == direct batch build, exactly-once under re-delivery,
-    foreign-lineage refusal, crash-before-publish recovery (an orphan
-    version dir must be ignored by readers and overwritten by the
-    retried batch), and version GC."""
-    import os
-
-    import pytest as _pytest
-
-    from scholarmind_spark.operators.sketchledger import hdr_state_build
-    from scholarmind_spark.streaming import (
-        manifest_state_dir,
-        stream_fold_sketch_state,
+def test_stream_fold_with_retention(spark, tmp_path):
+    """retain_days wires compaction into the fold loop: after draining
+    two day-batches with retain_days=1, the state holds only the newest
+    day at day grain plus the older day's period row set — and equals
+    hdr_state_compact over the direct batch build at the same cutoff
+    (the production standing-ledger loop)."""
+    from scholarmind_spark.operators.sketchledger import (
+        hdr_state_build,
+        hdr_state_compact,
     )
-    from scholarmind_spark.streaming.pipeline import _sketch_fold_fn
-    from scholarmind_spark.streaming.state import fold_lineage
+    from scholarmind_spark.streaming import stream_fold_sketch_state
+
+    b1 = spark.createDataFrame(_fold_rows(0), FOLD_SCHEMA)  # days 19000/19001
+    both_direct = hdr_state_compact(
+        hdr_state_build(b1, ["day", "seg"], "value"), "day", "19001"
+    )
+    want = sorted(tuple(r) for r in both_direct.collect())
 
     src = str(tmp_path / "src")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
+    # one batch per day so the second fold slides the cutoff forward
+    b1.where(F.col("day") == "19000").coalesce(1).write.mode("append").parquet(src)
 
     def drain():
         stream = (
@@ -410,188 +410,96 @@ def test_stream_fold_manifest_commit(spark, tmp_path):
         )
         q = stream_fold_sketch_state(
             stream, state, ["day", "seg"], "value",
-            checkpoint=ck, commit="manifest",
+            checkpoint=ck, retain_days=1,
         )
         q.awaitTermination()
 
-    b1 = spark.createDataFrame(_fold_rows(0), FOLD_SCHEMA)
-    b2 = spark.createDataFrame(_fold_rows(1000), FOLD_SCHEMA)
-    b1.coalesce(1).write.mode("append").parquet(src)
     drain()
-    b2.coalesce(1).write.mode("append").parquet(src)
+    b1.where(F.col("day") == "19001").coalesce(1).write.mode("append").parquet(src)
     drain()
 
-    def state_rows():
-        return sorted(
-            tuple(r)
-            for r in spark.read.parquet(manifest_state_dir(state))
-            .select("day", "seg", "sign", "bucket", "cnt")
-            .collect()
-        )
-
-    direct = sorted(
+    got = sorted(
         tuple(r)
-        for r in hdr_state_build(
-            b1.unionByName(b2), ["day", "seg"], "value"
-        ).collect()
+        for r in spark.read.parquet(state)
+        .select("day", "seg", "sign", "bucket", "cnt")
+        .collect()
     )
-    assert state_rows() == direct
-    lineage_tag = fold_lineage(ck)
-    assert _manifest_text(state) == f"1 {lineage_tag} 1\n"
-
-    # re-delivery: manifest high-water mark skips already-folded ids
-    fold = _sketch_fold_fn(
-        state, ["day", "seg"], "value", 5, lineage_tag, commit="manifest"
-    )
-    fold(b2, 1)
-    fold(b1, 0)
-    assert state_rows() == direct
-    # no new version published
-    assert _manifest_text(state) == f"1 {lineage_tag} 1\n"
-
-    # foreign lineage refuses, state untouched
-    other = _sketch_fold_fn(
-        state, ["day", "seg"], "value", 5, "deadbeef", commit="manifest"
-    )
-    with _pytest.raises(ValueError, match="different checkpoint lineage"):
-        other(b1, 0)
-    assert state_rows() == direct
-
-    # crash-before-publish: an orphan v-2 exists but the manifest still
-    # names v-1 — readers never see the orphan, and the retried batch
-    # (id 2) overwrites it and publishes
-    b3 = spark.createDataFrame(_fold_rows(7), FOLD_SCHEMA)
-    orphan = os.path.join(state, "v-2")
-    hdr_state_build(b3.limit(5), ["day", "seg"], "value").write.mode(
-        "overwrite"
-    ).parquet(orphan)
-    assert state_rows() == direct  # manifest still resolves v-1
-    fold(b3, 2)
-    direct3 = sorted(
-        tuple(r)
-        for r in hdr_state_build(
-            b1.unionByName(b2).unionByName(b3), ["day", "seg"], "value"
-        ).collect()
-    )
-    assert state_rows() == direct3
-    assert _manifest_text(state) == f"2 {lineage_tag} 2\n"
-
-    # GC: after the publish of v-2, v-0 (older than the kept-one-back
-    # window) is gone
-    dirs = sorted(f for f in os.listdir(state) if f.startswith("v-"))
-    assert "v-0" not in dirs and "v-2" in dirs
-
-
-def test_stream_fold_with_retention(spark, tmp_path):
-    """retain_days wires compaction into the fold loop: after draining
-    two day-batches with retain_days=1, the state holds only the newest
-    day at day grain plus the older day's period row set — and equals
-    hdr_state_compact over the direct batch build at the same cutoff
-    (the production standing-ledger loop, for both commit protocols)."""
-    from scholarmind_spark.operators.sketchledger import (
-        hdr_state_build,
-        hdr_state_compact,
-    )
-    from scholarmind_spark.streaming import (
-        manifest_state_dir,
-        stream_fold_sketch_state,
-    )
-
-    b1 = spark.createDataFrame(_fold_rows(0), FOLD_SCHEMA)  # days 19000/19001
-    both_direct = hdr_state_compact(
-        hdr_state_build(b1, ["day", "seg"], "value"), "day", "19001"
-    )
-    want = sorted(tuple(r) for r in both_direct.collect())
-
-    for commit in ("rename", "manifest"):
-        src = str(tmp_path / f"src_{commit}")
-        state = str(tmp_path / f"state_{commit}")
-        ck = str(tmp_path / f"ck_{commit}")
-        # one batch per day so the second fold slides the cutoff forward
-        b1.where(F.col("day") == "19000").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-        def drain():
-            stream = (
-                spark.readStream.schema(FOLD_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            q = stream_fold_sketch_state(
-                stream, state, ["day", "seg"], "value",
-                checkpoint=ck, commit=commit, retain_days=1,
-            )
-            q.awaitTermination()
-
-        drain()
-        b1.where(F.col("day") == "19001").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        drain()
-
-        path = state if commit == "rename" else manifest_state_dir(state)
-        got = sorted(
-            tuple(r)
-            for r in spark.read.parquet(path)
-            .select("day", "seg", "sign", "bucket", "cnt")
-            .collect()
-        )
-        assert got == want, commit
-        days = {
-            r.day
-            for r in spark.read.parquet(path).select("day").distinct().collect()
-        }
-        assert days == {"19001", "m633"}, commit  # 19000 coarsened
+    assert got == want
+    days = {
+        r.day for r in spark.read.parquet(state).select("day").distinct().collect()
+    }
+    assert days == {"19001", "m633"}  # 19000 coarsened
 
 
 def test_fold_refuses_cross_protocol_state(spark, tmp_path):
-    """A rename-commit fold over a manifest-committed state would
-    rmtree the MANIFEST and every version dir (all state destroyed);
-    a manifest fold over a rename-committed state would ignore the
-    loose parquet AND its exactly-once marker and publish v-0 holding
-    one batch.  Both directions must refuse (review r11)."""
+    """A rename-layout sketch fold over a merge-on-read ledger state
+    would rmtree the MANIFEST and every version dir (all state
+    destroyed); a merge-on-read ledger fold over a rename-layout sketch
+    state would ignore the loose parquet AND its exactly-once marker and
+    publish v-0 holding one batch.  Both directions must refuse and
+    leave the state untouched."""
+    import os
+
     import pytest as _pytest
+    from pyspark.errors import StreamingQueryException
 
-    from scholarmind_spark.streaming import stream_fold_sketch_state
+    from scholarmind_spark.streaming import (
+        stream_fold_sketch_state,
+        stream_ledger_ingest,
+    )
 
-    b1 = spark.createDataFrame(_fold_rows(0), FOLD_SCHEMA)
-
-    def drain(src, state, ck, commit):
+    def drain_sketch(src, state, ck):
         stream = (
             spark.readStream.schema(FOLD_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = stream_fold_sketch_state(
-            stream, state, ["day", "seg"], "value",
-            checkpoint=ck, commit=commit,
+        stream_fold_sketch_state(
+            stream, state, ["day", "seg"], "value", checkpoint=ck
+        ).awaitTermination()
+
+    def drain_ledger(src, state, ck):
+        stream = (
+            spark.readStream.schema(DOC_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
         )
-        q.awaitTermination()
+        stream_ledger_ingest(
+            stream, state, shingle_k=3, checkpoint=ck
+        ).awaitTermination()
 
-    # manifest state, rename fold → refuse (state untouched)
-    import os
+    def listing(state):
+        return sorted(
+            os.path.relpath(os.path.join(d, f), state)
+            for d, _dirs, files in os.walk(state)
+            for f in files
+        )
 
-    from pyspark.errors import StreamingQueryException
+    sketch_batch = spark.createDataFrame(_fold_rows(0), FOLD_SCHEMA)
+    doc_batch = spark.createDataFrame(MOR_DOCS, DOC_SCHEMA)
 
-    src_m = str(tmp_path / "src_m")
-    state_m = str(tmp_path / "state_m")
-    b1.coalesce(1).write.mode("append").parquet(src_m)
-    drain(src_m, state_m, str(tmp_path / "ck_m1"), "manifest")
-    before = sorted(os.listdir(state_m))
-    b1.coalesce(1).write.mode("append").parquet(src_m)
+    # merge-on-read ledger state, sketch fold → refuse (state untouched)
+    doc_src = str(tmp_path / "doc_src")
+    ledger = str(tmp_path / "ledger")
+    doc_batch.coalesce(1).write.mode("append").parquet(doc_src)
+    drain_ledger(doc_src, ledger, str(tmp_path / "ck_l"))
+    before = listing(ledger)
+    manifest = _manifest_text(ledger)
+    sketch_src = str(tmp_path / "sketch_src")
+    sketch_batch.coalesce(1).write.mode("append").parquet(sketch_src)
     with _pytest.raises(StreamingQueryException, match="manifest-committed"):
-        drain(src_m, state_m, str(tmp_path / "ck_m2"), "rename")
-    assert sorted(os.listdir(state_m)) == before  # nothing destroyed
+        drain_sketch(sketch_src, ledger, str(tmp_path / "ck_s1"))
+    assert listing(ledger) == before  # nothing destroyed
+    assert _manifest_text(ledger) == manifest
 
-    # rename state, manifest fold → refuse
-    src_r = str(tmp_path / "src_r")
-    state_r = str(tmp_path / "state_r")
-    b1.coalesce(1).write.mode("append").parquet(src_r)
-    drain(src_r, state_r, str(tmp_path / "ck_r1"), "rename")
-    b1.coalesce(1).write.mode("append").parquet(src_r)
+    # rename-layout sketch state, ledger fold → refuse (state untouched)
+    sketch = str(tmp_path / "sketch")
+    drain_sketch(sketch_src, sketch, str(tmp_path / "ck_s2"))
+    before = listing(sketch)
     with _pytest.raises(StreamingQueryException, match="rename-committed"):
-        drain(src_r, state_r, str(tmp_path / "ck_r2"), "manifest")
+        drain_ledger(doc_src, sketch, str(tmp_path / "ck_l2"))
+    assert listing(sketch) == before
+    assert not os.path.exists(os.path.join(sketch, "MANIFEST"))
 
 
 DOC_SCHEMA = T.StructType(
@@ -778,44 +686,51 @@ def test_stream_ledger_ingest_dedupes_batch_ids(spark, tmp_path):
 
 
 def test_manifest_fold_refuses_interrupted_rename_state(spark, tmp_path):
-    """A rename-protocol crash can park ALL state at state_path+'.old'
-    with state_path absent; the manifest fold must refuse that layout
-    too (the rename fold self-heals it) instead of publishing v-0 over
-    an empty directory and orphaning the history (review r11, second
-    pass)."""
+    """A rename-layout crash can park ALL state at state_path+'.old'
+    with state_path absent; a merge-on-read fold must refuse that
+    layout too (the rename fold self-heals it) instead of publishing v-0
+    over an empty directory and orphaning the history."""
     import os
 
     import pytest as _pytest
     from pyspark.errors import StreamingQueryException
 
-    from scholarmind_spark.streaming import stream_fold_sketch_state
+    from scholarmind_spark.streaming import (
+        stream_fold_sketch_state,
+        stream_ledger_ingest,
+    )
 
     src = str(tmp_path / "src")
     state = str(tmp_path / "state")
 
     b1 = spark.createDataFrame(_fold_rows(0), FOLD_SCHEMA)
     b1.coalesce(1).write.mode("append").parquet(src)
-
-    def drain(ck, commit):
-        stream = (
-            spark.readStream.schema(FOLD_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = stream_fold_sketch_state(
-            stream, state, ["day", "seg"], "value",
-            checkpoint=ck, commit=commit,
-        )
-        q.awaitTermination()
-
-    drain(str(tmp_path / "ck1"), "rename")
+    stream = (
+        spark.readStream.schema(FOLD_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    stream_fold_sketch_state(
+        stream, state, ["day", "seg"], "value", checkpoint=str(tmp_path / "ck1")
+    ).awaitTermination()
     # simulate the interrupted-swap window: state parked aside
     os.rename(state, state + ".old")
-    b2 = spark.createDataFrame(_fold_rows(1000), FOLD_SCHEMA)
-    b2.coalesce(1).write.mode("append").parquet(src)
+    before = sorted(os.listdir(state + ".old"))
+
+    doc_src = str(tmp_path / "doc_src")
+    spark.createDataFrame(MOR_DOCS, DOC_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(doc_src)
+    docs = (
+        spark.readStream.schema(DOC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(doc_src)
+    )
     with _pytest.raises(StreamingQueryException, match="rename-committed"):
-        drain(str(tmp_path / "ck2"), "manifest")
-    assert os.path.isdir(state + ".old")  # history untouched
+        stream_ledger_ingest(
+            docs, state, shingle_k=3, checkpoint=str(tmp_path / "ck2")
+        ).awaitTermination()
+    assert sorted(os.listdir(state + ".old")) == before  # history untouched
 
 
 # ------------------------------------------ r12 advice regression tests
@@ -900,16 +815,16 @@ def test_fold_retention_rejects_date_day_key(spark, tmp_path):
         fold(b, 0)
 
 
-def test_fold_lineage_adopts_legacy_tag(spark, tmp_path):
-    """One-time legacy migration: state folded under the old
-    md5(abspath(checkpoint))[:8] path-derived tag, resumed with its
-    ORIGINAL checkpoint (which predates the _sketchfold_lineage file),
-    must ADOPT the legacy tag — not mint a random one and then raise
-    the lineage-mismatch error whose message advises exactly that
-    resume (r12 advice).  A state marked under an unrelated tag still
-    gets a fresh random token."""
+def test_fold_lineage_refuses_legacy_tag(spark, tmp_path):
+    """State folded under the former md5(abspath(checkpoint))[:8]
+    path-derived tag, resumed with its checkpoint (which predates the
+    _sketchfold_lineage file), is refused for its lineage and left
+    unchanged: the checkpoint gets a fresh random token, so the fold
+    fails loudly instead of silently skipping or double-counting."""
     import hashlib
     import os
+
+    import pytest as _pytest
 
     from scholarmind_spark.streaming.pipeline import _sketch_fold_fn
     from scholarmind_spark.streaming.state import fold_lineage
@@ -921,18 +836,17 @@ def test_fold_lineage_adopts_legacy_tag(spark, tmp_path):
     state = str(tmp_path / "state")
     b1 = spark.createDataFrame(_fold_rows(0), FOLD_SCHEMA)
     _sketch_fold_fn(state, ["day", "seg"], "value", 5, legacy)(b1, 0)
+    before = sorted(os.listdir(state))
+    want = sorted(tuple(r) for r in spark.read.parquet(state).collect())
 
-    # resume: the lineage for this checkpoint+state pair is the legacy tag
-    assert fold_lineage(ck, (state,)) == legacy
-    # and it is now persisted as the checkpoint's identity
-    assert fold_lineage(ck, ()) == legacy
-
-    # a state marked under a FOREIGN tag must NOT trigger adoption
-    ck2 = str(tmp_path / "ck2")
-    os.makedirs(ck2)
-    state2 = str(tmp_path / "state2")
-    _sketch_fold_fn(state2, ["day", "seg"], "value", 5, "deadbeef")(b1, 0)
-    assert fold_lineage(ck2, (state2,)) != "deadbeef"
+    lineage = fold_lineage(ck)
+    assert lineage != legacy
+    assert fold_lineage(ck) == lineage  # persisted as the identity
+    fold = _sketch_fold_fn(state, ["day", "seg"], "value", 5, lineage)
+    with _pytest.raises(ValueError, match="different checkpoint lineage"):
+        fold(spark.createDataFrame(_fold_rows(1000), FOLD_SCHEMA), 1)
+    assert sorted(os.listdir(state)) == before
+    assert sorted(tuple(r) for r in spark.read.parquet(state).collect()) == want
 
 
 def test_manifest_gc_ignores_stray_entries(spark, tmp_path):
@@ -1074,14 +988,16 @@ def test_mor_fold_redelivery_and_lineage(spark, tmp_path):
 
 
 def test_mor_cow_refuse_each_other(spark, tmp_path):
-    """A copy-on-write fold pointed at MoR state would read the base
-    version dir as the whole state and silently drop every delta; an
-    MoR fold on copy-on-write state (here a sketch ``commit="manifest"``
-    state) would mis-parse its manifest.  Both directions refuse, and
-    each layout's reader refuses the other's state too."""
+    """A merge-on-read fold or reader on a copy-on-write manifest (a
+    ``MANIFEST`` line without the ``mor`` field, written by hand) would
+    mis-parse it; a sketch fold on merge-on-read state would rmtree it.
+    Every one refuses and leaves the state as it was."""
+    import os
+
     import pytest as _pytest
 
-    from scholarmind_spark.streaming import ledger_state_mor, manifest_state_dir
+    from scholarmind_spark.operators.sketchledger import hdr_state_build
+    from scholarmind_spark.streaming import ledger_state_mor
     from scholarmind_spark.streaming.pipeline import (
         _ledger_ingest_fn_mor,
         _sketch_fold_fn,
@@ -1090,24 +1006,28 @@ def test_mor_cow_refuse_each_other(spark, tmp_path):
     batches = _mor_batches(spark)
     sketch_batch = spark.createDataFrame(_fold_rows(0), FOLD_SCHEMA)
 
-    def cow_fold(state):
-        return _sketch_fold_fn(
-            state, ["day", "seg"], "value", 5, "cafebabe", commit="manifest"
-        )
-
     mor_state = str(tmp_path / "mor")
     _ledger_ingest_fn_mor(mor_state, "cafebabe")(batches[0], 0)
-    with _pytest.raises(ValueError, match="merge-on-read"):
-        cow_fold(mor_state)(sketch_batch, 1)
-    with _pytest.raises(ValueError, match="merge-on-read"):
-        manifest_state_dir(mor_state)
+    manifest = _manifest_text(mor_state)
+    with _pytest.raises(ValueError, match="manifest-committed"):
+        _sketch_fold_fn(
+            mor_state, ["day", "seg"], "value", 5, "cafebabe"
+        )(sketch_batch, 1)
+    assert _manifest_text(mor_state) == manifest
 
     cow_state = str(tmp_path / "cow")
-    cow_fold(cow_state)(sketch_batch, 0)
+    hdr_state_build(sketch_batch, ["day", "seg"], "value").write.parquet(
+        os.path.join(cow_state, "v-0")
+    )
+    with open(os.path.join(cow_state, "MANIFEST"), "w") as f:
+        f.write("0 cafebabe 3\n")
+    before = sorted(os.listdir(cow_state))
     with _pytest.raises(ValueError, match="copy-on-write"):
-        _ledger_ingest_fn_mor(cow_state, "cafebabe")(batches[1], 1)
+        _ledger_ingest_fn_mor(cow_state, "cafebabe")(batches[1], 4)
     with _pytest.raises(ValueError, match="copy-on-write"):
         ledger_state_mor(spark, cow_state)
+    assert sorted(os.listdir(cow_state)) == before
+    assert _manifest_text(cow_state) == "0 cafebabe 3\n"
 
 
 def test_mor_retire_transaction(spark, tmp_path):
@@ -1530,33 +1450,40 @@ def test_vector_surfaces_refuse_cow_manifest_with_vector_advice(
     spark, tmp_path
 ):
     """A vector-index surface pointed at a copy-on-write manifest state
-    (a sketch ``commit="manifest"`` fold) must refuse with VECTOR
-    remediation (fresh state_path / re-fold the corpus), naming the
-    vector index as the state it expected."""
+    (a hand-written ``MANIFEST`` line without the ``mor`` field) must
+    refuse with VECTOR remediation (fresh state_path / re-fold the
+    corpus), naming the vector index as the state it expected."""
+    import os
+
     import pytest as _pytest
 
+    from scholarmind_spark.operators.sketchledger import hdr_state_build
     from scholarmind_spark.streaming.pipeline import (
-        _sketch_fold_fn,
         _vector_ingest_fn,
         ann_state_query,
         vector_state_enc,
     )
 
     cow = str(tmp_path / "cow")
-    _sketch_fold_fn(
-        cow, ["day", "seg"], "value", 5, "cafebabe", commit="manifest"
-    )(spark.createDataFrame(_fold_rows(0), FOLD_SCHEMA), 0)
+    hdr_state_build(
+        spark.createDataFrame(_fold_rows(0), FOLD_SCHEMA), ["day", "seg"], "value"
+    ).write.parquet(os.path.join(cow, "v-0"))
+    with open(os.path.join(cow, "MANIFEST"), "w") as f:
+        f.write("0 cafebabe 3\n")
+    before = sorted(os.listdir(cow))
     q = spark.createDataFrame([], "query_id long, query_vec array<double>")
     for attempt in (
         lambda: ann_state_query(spark, cow, q),
         lambda: vector_state_enc(spark, cow),
         lambda: _vector_ingest_fn(cow, "cafebabe", m=2, dim=8)(
             spark.createDataFrame(_vec_rows(0, 4),
-                                  "vec_id long, embedding array<double>"), 0
+                                  "vec_id long, embedding array<double>"), 4
         ),
     ):
         with _pytest.raises(ValueError, match="not a vector-index state"):
             attempt()
+    assert sorted(os.listdir(cow)) == before
+    assert _manifest_text(cow) == "0 cafebabe 3\n"
 
 
 def test_vector_ingest_residual_mode_frozen_and_matches_batch(spark, tmp_path):

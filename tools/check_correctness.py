@@ -255,50 +255,48 @@ def main() -> int:
             print(
                 f"PASS {name}: {len(srows)} rows (spark {spark_t:.1f}s, duckdb {duck_t:.2f}s)"
             )
-    # r14 verdict ask #7, second half: after a FULL battery nothing may stay
+    # after every run, full battery or named gates, nothing may stay
     # persisted.  Per-gate release_caches above frees tagged intermediates;
     # the one deliberate cross-gate share (the CC label memo) frees through
-    # its own reset.  Partial runs (explicit query names) skip the sweep —
-    # they may leave shared memos warm on purpose.
-    if not only:
-        try:
-            from scholarmind_spark.queries import reset_shared_components
+    # its own reset, which runs first so a warm memo cannot trip the sweep.
+    try:
+        from scholarmind_spark.queries import reset_shared_components
 
-            reset_shared_components()
-        except Exception:
-            pass
-        # measure once up front: a clean battery pays no gc + sleep.  Only
-        # a nonzero count nudges FIRST, then re-measures: the
-        # ContextCleaner unpersists GC'd handles asynchronously, and
-        # measuring at the top of the loop left the final iteration's
-        # gc+sleep dead work — the FAIL verdict could read a count one
-        # settle-window stale (r15 ADVICE)
-        import gc
+        reset_shared_components()
+    except Exception:
+        pass
+    # measure once up front: a clean battery pays no gc + sleep.  Only
+    # a nonzero count nudges FIRST, then re-measures: the
+    # ContextCleaner unpersists GC'd handles asynchronously, and
+    # measuring at the top of the loop left the final iteration's
+    # gc+sleep dead work — the FAIL verdict could read a count one
+    # settle-window stale
+    import gc
 
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    n_left = jmap.size()
+    for attempt in range(6 if n_left else 0):
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5 * (attempt + 1))
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         n_left = jmap.size()
-        for attempt in range(6 if n_left else 0):
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(0.5 * (attempt + 1))
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            n_left = jmap.size()
-            if n_left == 0:
-                break
-        if n_left != 0:
-            names = []
-            it = jmap.entrySet().iterator()
-            while it.hasNext() and len(names) < 10:
-                ent = it.next()
-                rdd = ent.getValue()
-                names.append(f"id={ent.getKey()} {rdd.name() or rdd.toString()}")
-            print(
-                f"FAIL cache-sweep: {n_left} persistent RDD(s) survive the "
-                "battery: " + "; ".join(names)
-            )
-            failures += 1
-        else:
-            print("cache sweep: 0 persistent RDDs after the battery")
+        if n_left == 0:
+            break
+    if n_left != 0:
+        names = []
+        it = jmap.entrySet().iterator()
+        while it.hasNext() and len(names) < 10:
+            ent = it.next()
+            rdd = ent.getValue()
+            names.append(f"id={ent.getKey()} {rdd.name() or rdd.toString()}")
+        print(
+            f"FAIL cache-sweep: {n_left} persistent RDD(s) survive the "
+            "battery: " + "; ".join(names)
+        )
+        failures += 1
+    else:
+        print("cache sweep: 0 persistent RDDs after the battery")
     spark.stop()
     if failures == 0:
         # rows-only entries ran but verified NOTHING beyond "it executes";

@@ -527,11 +527,11 @@ def main() -> None:
                         F.concat("text", F.lit(f" rev{i}")).alias("text"),
                     )
                 )
-            pre = read_manifest(state, "mor") if i > 0 else None
+            pre = read_manifest(state) if i > 0 else None
             t0 = time.time()
             fold(batch, i)
             dt = time.time() - t0
-            post = read_manifest(state, "mor")
+            post = read_manifest(state)
             # a fold that moved the base forward was a compaction
             if pre is None or post.base > pre.base:
                 compact_times.append(dt)
@@ -636,7 +636,7 @@ def main() -> None:
                 ),
                 1,
             )
-            head = read_manifest(state, "mor")
+            head = read_manifest(state)
             version, base_v = head.version, head.base
             batch_ids = spark.range(batch_n).select(F.col("id"))
             per_p, per_f = [], []
@@ -749,7 +749,7 @@ def main() -> None:
             dw[k] = float(
                 spark.read.parquet(os.path.join(state, "v-1", "denc")).count()
             )
-            head = read_manifest(state, "mor", "vector-index")
+            head = read_manifest(state, "vector-index")
             version, base_v = head.version, head.base
             q = emb.where(F.col("vec_id").isin(list(range(nq)))).select(
                 F.col("vec_id").alias("query_id"),
@@ -818,7 +818,7 @@ def main() -> None:
             t0 = time.time()
             fold(one_cell(910_000_000), 2)
             cwall[k] = time.time() - t0
-            head = read_manifest(state, "mor", "vector-index")
+            head = read_manifest(state, "vector-index")
             v2, b2 = head.version, head.base
             assert b2 == v2, "fold 2 did not compact"
             crows[k] = float(
