@@ -26,7 +26,16 @@ Spark-first shape:
   and decodes each code from the same literals — m element_at lookups
   + m×(dim/m) subtract-squares per pair, identical flops to one full
   d-dim distance, on a corpus that now lives in m bytes/row;
-- top-k is one query-partitioned window over per-pair scalars.
+- top-k is one query-partitioned window over per-pair scalars
+  (``similarity.rank_topk``, the whole ANN family's top-k step).
+
+IVFADC is written once, as stages: coarse codebook, cell encode
+(:func:`_encode_cells`), probe selection (:func:`_probe_cells`), ADC
+ranking (:func:`_adc_rank`) and the exact rerank (:func:`_exact_rerank`).
+:func:`ivfadc_topk`/:func:`ivfadc_refine_topk` run them over a corpus;
+the streaming index state (``streaming.pipeline.stream_vector_ingest``,
+``ann_state_query``, ``ann_state_query_refined``) encodes, queries and
+refines through the same stages over its stored codes.
 
 Honesty: ADC distance is an APPROXIMATION of the true distance (the
 quantization error is the paper's whole trade); the gate pins the
@@ -45,6 +54,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from scholarmind_spark.operators.kmeans import _assign, kmeans_fit
+from scholarmind_spark.operators.similarity import rank_topk
+
 
 def _sq(a, b):
     """Σ (a_i − b_i)² left-to-right — the semdedup float discipline."""
@@ -60,10 +72,19 @@ def _resolve_sub_rows(
     codebook_ids, codebook_df, subspace_codebook_df,
 ):
     """Resolve whichever codebook form the caller passed into the
-    per-subspace ``[(code, cw), ...]`` lists (value-sorted)."""
+    per-subspace ``[(code, cw), ...]`` lists (value-sorted).  A
+    ``(sub, code, cw)`` table with ``m``/``w`` None states its own
+    geometry: m = its count of subspaces, w = its codeword length — how
+    an index state's frozen codebook is read (:func:`_subspace_codebook`)."""
     if subspace_codebook_df is not None:
+        rows = subspace_codebook_df.collect()
+        if not rows:
+            raise ValueError("pq: empty codebook")
+        if m is None:
+            m = len({int(r["sub"]) for r in rows})
+            w = len(rows[0]["cw"])
         by_sub: dict[int, list[tuple[int, list[float]]]] = {}
-        for r in subspace_codebook_df.collect():
+        for r in rows:
             cw = [float(x) for x in r["cw"]]
             # width guard: a short/long codeword would make _sq's
             # zip_with emit NULL-poisoned distances downstream —
@@ -120,6 +141,13 @@ def _build_sub_lits(sub_rows):
         F.lit([[float(x) for x in cw] for _code, cw in rows_s])
         for rows_s in sub_rows
     ]
+
+
+def _subspace_codebook(cb, m=None, w=None):
+    """``(sub_lits, m, w)`` of a ``(sub, code, cw)`` table; ``m``/``w``
+    None take the table's own geometry."""
+    rows = _resolve_sub_rows(None, None, None, m, w, None, None, cb)
+    return _build_sub_lits(rows), len(rows), len(rows[0][0][1])
 
 
 def _argmin_code(sub_lits, vec, s, w):
@@ -206,19 +234,7 @@ def pq_topk(
         .filter(F.col(id_col) != F.col("query_id"))
         .select("query_id", F.col(id_col).alias("neighbor_id"), adc.alias("adc_raw"))
     )
-    rk = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rk))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("adc_raw", 6).alias("adc"),
-            "rank",
-        )
-    )
+    return rank_topk(scored, "adc_raw", k, "adc")
 
 
 def pq_topk_sql(
@@ -311,8 +327,6 @@ def pq_train(
     are independent — on a shared cluster they can be submitted
     concurrently; sequentially they cost m × one k-means, each of which
     is the linear-scan Lloyd the kmeans gates certify."""
-    from scholarmind_spark.operators.kmeans import kmeans_fit
-
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     w = dim // m
@@ -372,51 +386,82 @@ def ivfadc_topk(
       lift measured in SCALE.md ("PQ/ADC recall", ivfadc rows).
 
     ``coarse_df`` (``cid, cvec``) or ``coarse_ids`` corpus rows (default
-    0..3) form the coarse codebook — broadcast, (d, cid) argmin ties."""
-    from scholarmind_spark.operators.kmeans import _assign
+    0..3) form the coarse codebook — broadcast, (d, cid) argmin ties.
 
-    if coarse_df is None:
-        cids = coarse_ids if coarse_ids is not None else list(range(4))
-        coarse_df = df.filter(F.col(id_col).isin(cids)).select(
-            F.col(id_col).cast("long").alias("cid"),
-            F.col(vec_col).alias("cvec"),
-        )
-    coarse_df = coarse_df.select("cid", "cvec")
-
+    The operator is its four stages in sequence — coarse codebook,
+    :func:`_encode_cells`, :func:`_probe_cells`, :func:`_adc_rank` — the
+    same stages the streaming index state encodes and queries through."""
+    coarse_df = _coarse_codebook(df, id_col, vec_col, coarse_df, coarse_ids)
     w = dim // m
-    sub_rows = _resolve_sub_rows(
+    sub_lits = _build_sub_lits(_resolve_sub_rows(
         df, id_col, vec_col, m, w,
         codebook_ids, codebook_df, subspace_codebook_df,
+    ))
+    data = _encode_cells(
+        df, coarse_df, sub_lits, m, w, id_col, vec_col, by_residual
     )
-    sub_lits = _build_sub_lits(sub_rows)
+    probes = _probe_cells(
+        queries_df, coarse_df, nprobe, by_residual, query_id_col, query_vec_col
+    )
+    return _adc_rank(data, probes, sub_lits, m, w, k, id_col)
 
-    _res = lambda v, c: F.zip_with(  # noqa: E731
-        v, c, lambda x, y: x.cast("double") - y.cast("double")
+
+def _coarse_codebook(df, id_col, vec_col, coarse_df=None, coarse_ids=None):
+    """``(cid, cvec)``: ``coarse_df`` as given, else the ``coarse_ids``
+    rows of ``df`` (default 0..3)."""
+    if coarse_df is not None:
+        return coarse_df.select("cid", "cvec")
+    cids = coarse_ids if coarse_ids is not None else list(range(4))
+    return df.filter(F.col(id_col).isin(cids)).select(
+        F.col(id_col).cast("long").alias("cid"),
+        F.col(vec_col).alias("cvec"),
     )
-    assigned = _assign(df, coarse_df, id_col, vec_col)
-    if by_residual:
-        enc_in = _res(F.col(vec_col), F.col("cvec"))
-        data = (
-            assigned.join(
-                F.broadcast(coarse_df), assigned["cell"] == coarse_df["cid"]
-            )
-            .select(
-                id_col, "cell",
-                _encode_expr(sub_lits, enc_in, m, w).alias("pq"),
-            )
-        )
-    else:
-        data = assigned.select(
-            id_col, "cell",
-            _encode_expr(sub_lits, F.col(vec_col), m, w).alias("pq"),
-        )
-    # query probes: nprobe nearest coarse cells by the same (d, cid) order
+
+
+def _residual(v, c):
+    """``v − c`` elementwise, subtracted as DOUBLE — the one residual
+    every IVFADC encoding, probe and residual training computes."""
+    return F.zip_with(v, c, lambda x, y: x.cast("double") - y.cast("double"))
+
+
+def _route(df, coarse, id_col, vec_col, by_residual):
+    """Route every vector to its nearest coarse cell (``_assign``) and
+    return ``(routed, enc_in)``: the routed relation and the vector to
+    encode — the raw vector, or its residual against the routed cell's
+    centroid (one broadcast join of the k-row coarse table)."""
+    routed = _assign(df, coarse, id_col, vec_col)
+    if not by_residual:
+        return routed, F.col(vec_col)
+    routed = routed.join(F.broadcast(coarse), routed["cell"] == coarse["cid"])
+    return routed, _residual(F.col(vec_col), F.col("cvec"))
+
+
+def _encode_cells(df, coarse, sub_lits, m, w, id_col, vec_col, by_residual):
+    """IVFADC cell-encode stage: ``id_col, cell, pq`` — each vector
+    routed to its coarse cell, then PQ-encoded (raw or residual)."""
+    routed, enc_in = _route(df, coarse, id_col, vec_col, by_residual)
+    return routed.select(
+        id_col,
+        F.col("cell").cast("long").alias("cell"),
+        _encode_expr(sub_lits, enc_in, m, w).alias("pq"),
+    )
+
+
+def _probe_cells(
+    queries_df, coarse, nprobe, by_residual=False,
+    query_id_col="query_id", query_vec_col="query_vec",
+):
+    """IVFADC probe-selection stage: ``query_id, qvec, cell`` — each
+    query's ``nprobe`` nearest coarse cells by (distance, cell), the
+    coarse assignment's tiebreak.  In residual mode ``qvec`` is the
+    query's residual against the PROBED cell's centroid, per probe — the
+    paper's per-inverted-list distance tables."""
     q = queries_df.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).alias("qvec"),
     )
-    qs = q.crossJoin(F.broadcast(coarse_df)).select(
-        "query_id", "qvec", F.col("cid").alias("cell"),
+    qs = q.crossJoin(F.broadcast(coarse)).select(
+        "query_id", "qvec", F.col("cid").cast("long").alias("cell"),
         _sq(F.col("qvec"), F.col("cvec")).alias("cd"),
     )
     pw = Window.partitionBy("query_id").orderBy("cd", "cell")
@@ -425,15 +470,20 @@ def ivfadc_topk(
         .filter(F.col("rn") <= nprobe)
         .select("query_id", "qvec", "cell")
     )
-    if by_residual:
-        # per-probe query residual vs the probed cell's centroid — the
-        # paper's per-inverted-list distance tables
-        probes = probes.join(
-            F.broadcast(coarse_df), probes["cell"] == coarse_df["cid"]
-        ).select(
-            "query_id", _res(F.col("qvec"), F.col("cvec")).alias("qvec"),
-            "cell",
-        )
+    if not by_residual:
+        return probes
+    return probes.join(
+        F.broadcast(coarse), probes["cell"] == coarse["cid"]
+    ).select(
+        "query_id", _residual(F.col("qvec"), F.col("cvec")).alias("qvec"), "cell"
+    )
+
+
+def _adc_rank(data, probes, sub_lits, m, w, k, id_col):
+    """IVFADC ADC-ranking stage: the probed cells' residents of the
+    encoded ``data`` (``id_col, cell, pq``) ranked per query by ADC
+    against the probe's ``qvec`` — ``query_id, neighbor_id, adc, rank``.
+    A resident reached through several probes is scored once."""
     adc = _adc_expr(sub_lits, F.col("qvec"), F.col("pq"), m, w)
     scored = (
         data.join(F.broadcast(probes), on="cell")
@@ -443,17 +493,7 @@ def ivfadc_topk(
         )
         .distinct()
     )
-    rk = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rk))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("adc_raw", 6).alias("adc"), "rank",
-        )
-    )
+    return rank_topk(scored, "adc_raw", k, "adc")
 
 
 def pq_train_residual(
@@ -472,18 +512,11 @@ def pq_train_residual(
     raw-space codewords (a corpus subset, or :func:`pq_train` output)
     quantize them badly.  One coarse assignment + broadcast centroid
     join, then :func:`pq_train` on the residual relation."""
-    from scholarmind_spark.operators.kmeans import _assign
-
-    coarse_df = coarse_df.select("cid", "cvec")
-    assigned = _assign(df, coarse_df, id_col, vec_col)
-    residuals = assigned.join(
-        F.broadcast(coarse_df), assigned["cell"] == coarse_df["cid"]
-    ).select(
-        F.col(id_col).alias("vec_id"),
-        F.zip_with(
-            F.col(vec_col), F.col("cvec"),
-            lambda x, y: x.cast("double") - y.cast("double"),
-        ).alias("embedding"),
+    routed, res = _route(
+        df, coarse_df.select("cid", "cvec"), id_col, vec_col, True
+    )
+    residuals = routed.select(
+        F.col(id_col).alias("vec_id"), res.alias("embedding")
     )
     return pq_train(residuals, m=m, dim=dim, codes=codes, iters=iters)
 
@@ -802,8 +835,20 @@ def ivfadc_refine_topk(
         codebook_ids=codebook_ids, codebook_df=codebook_df,
         subspace_codebook_df=subspace_codebook_df,
         by_residual=by_residual,
-    ).select("query_id", "neighbor_id")
-    raw = df.select(
+    )
+    return _exact_rerank(
+        cand, df, queries_df, k, id_col, vec_col, query_id_col, query_vec_col
+    )
+
+
+def _exact_rerank(
+    cand, raw_df, queries_df, k, id_col, vec_col, query_id_col, query_vec_col
+):
+    """IVFADC+R exact-rerank stage: the ADC candidates ``cand``
+    (``query_id, neighbor_id``) re-scored by exact squared-L2 between the
+    raw query and ``raw_df``'s raw neighbor vector — ``query_id,
+    neighbor_id, dist, rank``."""
+    raw = raw_df.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nvec")
     )
     q = queries_df.select(
@@ -811,24 +856,14 @@ def ivfadc_refine_topk(
         F.col(query_vec_col).alias("__qvec"),
     )
     scored = (
-        raw.join(F.broadcast(cand), "neighbor_id")
+        raw.join(F.broadcast(cand.select("query_id", "neighbor_id")), "neighbor_id")
         .join(F.broadcast(q), "query_id")
         .select(
             "query_id", "neighbor_id",
             _sq(F.col("__qvec"), F.col("__nvec")).alias("d_raw"),
         )
     )
-    rk = Window.partitionBy("query_id").orderBy(
-        F.asc("d_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rk))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("d_raw", 6).alias("dist"), "rank",
-        )
-    )
+    return rank_topk(scored, "d_raw", k, "dist")
 
 
 def ivfadc_refine_topk_sql(

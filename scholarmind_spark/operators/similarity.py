@@ -77,6 +77,25 @@ def _norm(a):
     )
 
 
+def rank_topk(
+    scored: DataFrame, score: str, k: int, out: str, descending: bool = False
+) -> DataFrame:
+    """The ANN family's one top-k step: ``(query_id, neighbor_id,
+    <score>)`` rows → ``query_id, neighbor_id, <out>, rank``.  One
+    window per query ordered by the score (ascending distances,
+    ``descending`` similarities), equal scores broken by the LOWER
+    ``neighbor_id`` — the ``ORDER BY score, neighbor_id`` every SQL twin
+    spells — keeping ``rank <= k`` and emitting ``round(score, 6)``.
+    Candidate dedup stays with the caller."""
+    order = F.desc(score) if descending else F.asc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.round(score, 6).alias(out), "rank")
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     queries_df: DataFrame,
@@ -112,19 +131,7 @@ def cosine_topk(
             / (F.col("__nv") * F.col("__nq"))
         ).alias("cos_raw"),
     ).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cos_raw"), 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return rank_topk(scored, "cos_raw", k, "cosine", descending=True)
 
 
 def cosine_topk_sql(
@@ -317,12 +324,7 @@ def ann_lsh_topk(
             ).alias("cos_raw")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank")
-    )
+    return rank_topk(scored, "cos_raw", k, "cosine", descending=True)
 
 
 def derive_planes(
@@ -655,12 +657,7 @@ def ivf_topk(
             / (F.col("__nv") * F.col("__nq"))
         ).alias("cos_raw"),
     ).filter(F.col("query_id") != F.col("neighbor_id")).distinct()
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rank")
-    )
+    return rank_topk(scored, "cos_raw", k, "cosine", descending=True)
 
 
 def ivf_topk_sql(

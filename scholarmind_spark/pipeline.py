@@ -46,9 +46,6 @@ class PipelineConfig:
     llm_template: PromptTemplate | None = None
     llm_client: object | None = None  # ChatClient; None disables U1
     llm_max_workers: int = 4  # reference config.yaml:78
-    # opt-in: run assert_unique_record_ids on the parsed corpus (one extra
-    # aggregation pass) before processing — CI/harness use, off by default
-    check_id_collisions: bool = False
 
 
 def build_corpus(spark: SparkSession, sources: dict[str, str]) -> DataFrame:
@@ -170,8 +167,6 @@ def run_pipeline(
         reporter = ProgressReporter(progress_callback)
         reporter.update("parse", 0, 1)
     corpus = build_corpus(spark, cfg.sources)
-    if cfg.check_id_collisions:
-        assert_unique_record_ids(corpus)
     if reporter is not None:
         reporter.stage_done("parse")
     return process(corpus, cfg, reporter=reporter)

@@ -1,4 +1,4 @@
-from scholarmind_spark.sources.pubmed import scan_pubmed, scan_pubmed_records
+from scholarmind_spark.sources.pubmed import scan_pubmed
 from scholarmind_spark.sources.sciencedirect import scan_sciencedirect
 from scholarmind_spark.sources.wos import scan_wos, scan_wos_csv, scan_wos_excel
 
@@ -26,7 +26,6 @@ __all__ = [
     "SOURCE_READERS",
     "read_source",
     "scan_pubmed",
-    "scan_pubmed_records",
     "scan_sciencedirect",
     "scan_wos",
     "scan_wos_csv",

@@ -6,8 +6,6 @@ parsing is pure per-file logic, so it parallelizes across files).  The
 reference caps uploads at 16 MB/file (``app.py:42``), so per-file
 parallelism is the right grain: a 100 TB corpus is millions of small files,
 not one giant one, and this scan needs no record-boundary splitting logic.
-For genuinely huge single files, ``pubmed.py`` also offers a
-record-delimiter reader (``lineSep="\\n\\n"``) that splits within files.
 
 Parsers emit the fixed RECORD_SCHEMA (SURVEY §1.2: dynamic→fixed is a
 deliberate upgrade); ``record_id`` is attached afterwards.

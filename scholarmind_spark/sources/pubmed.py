@@ -5,13 +5,8 @@ Format: records separated by blank lines; field lines
 field; tags in MULTI_FIELDS accumulate as arrays (``pubmed_parser.py:32``);
 ``AID`` values suffixed ``[doi]``/``[pii]`` route to DOI/PII
 (``pubmed_parser.py:56-64``); duplicated scalar tags become lists, later
-flattened first-element (D4 policy).
-
-Two readers:
-- :func:`scan_pubmed` — one file per task (``wholetext``), the default.
-- :func:`scan_pubmed_records` — record-delimiter read (``lineSep="\\n\\n"``)
-  that splits WITHIN files, for corpora stored as few huge files; each
-  record parses independently so this parallelizes to any scale.
+flattened first-element (D4 policy).  :func:`scan_pubmed` reads one
+file per task (``wholetext``).
 """
 
 from __future__ import annotations
@@ -19,12 +14,9 @@ from __future__ import annotations
 import re
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from scholarmind_spark.schemas import RECORD_COLUMNS
-from scholarmind_spark.sources.base import empty_record, records_to_pdf, scan_files
+from scholarmind_spark.sources.base import empty_record, scan_files
 
 MULTI_FIELDS = {"IS", "LID", "FAU", "AU", "AD", "OT", "PHST"}  # pubmed_parser.py:32
 
@@ -168,37 +160,3 @@ def parse_pubmed_file(text: str) -> list[dict[str, Any]]:
 
 def scan_pubmed(spark: SparkSession, path: str) -> DataFrame:
     return scan_files(spark, path, parse_pubmed_file, "pubmed")
-
-
-def scan_pubmed_records(spark: SparkSession, path: str) -> DataFrame:
-    """Record-delimiter variant: one row per blank-line-separated record,
-    splittable within files."""
-    from scholarmind_spark.sources.base import _PARSE_SCHEMA, stable_record_id
-
-    def run(batches):
-        for pdf in batches:
-            records = []
-            files = []
-            for chunk, fpath in zip(pdf["value"], pdf["_file"]):
-                rs = parse_pubmed_file(chunk)
-                records.extend(rs)
-                files.extend([fpath] * len(rs))
-            out = records_to_pdf(records)
-            out["_file"] = pd.Series(files, dtype=object)
-            yield out
-
-    raw = (
-        spark.read.option("lineSep", "\n\n")
-        .text(path)
-        .select("value", F.col("_metadata.file_path").alias("_file"))
-    )
-    parsed = raw.mapInPandas(run, schema=_PARSE_SCHEMA[:-1] + ",_file:string>")
-    # Splittable reads expose no stable within-file ordinal, so the id is
-    # content-addressed (record content + file path): retry-stable, and
-    # byte-identical duplicates within one file share an id by design.
-    parsed = (
-        parsed.withColumn("source_type", F.lit("pubmed"))
-        .filter(F.col("abstract").isNotNull())
-        .withColumn("record_id", stable_record_id(F.col("_file")))
-    )
-    return parsed.select(*RECORD_COLUMNS)

@@ -35,7 +35,6 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from scholarmind_spark.streaming.state import (
     SKIP, chain_dirs, commit_mor, fold_gate, has_parquet, read_manifest,
@@ -1053,10 +1052,14 @@ def stream_vector_ingest(
     raw vectors, or the paper's §5 residuals vs the routed cell's
     centroid: SCALE.md's clustered-recall table measures residual
     encoding as load-bearing there, 0.075 → 0.200 recall at m8/c64)
-    are all frozen into the state.  Later folds read codebooks AND mode
-    FROM the state (the creation args are ignored), so a resumed stream
-    can neither re-encode under different codewords nor silently mix
-    raw and residual codes.  The codebooks are tiny by contract and
+    are all frozen into the state, and with the PQ codebook its
+    geometry (``m`` subspaces of width ``dim/m``).  Later folds read
+    codebooks, geometry AND mode FROM the state (``m``, ``dim``,
+    ``by_residual`` and the codebook args are ignored on resume), so a
+    resumed stream can neither re-encode under different codewords or
+    widths nor silently mix raw and residual codes.  Encoding is
+    :func:`operators.pq.ivfadc_topk`'s own cell-encode stage
+    (``_encode_cells``).  The codebooks are tiny by contract and
     copied forward into every version, so a reader needs only the
     current manifest; retraining them means a new state path — the
     Faiss operational reality, stated rather than hidden.  Query with
@@ -1081,27 +1084,20 @@ _VEC_TOUCHED_ISIN_MAX = 10_000
 
 def _vec_frags(state_path: str, version: int) -> list[int]:
     """Live base-fragment versions referenced by the cellmap at
-    ``version`` (frags.txt sidecar, written at every publish).  Absent
-    sidecar (a hand-assembled state) degrades to the single-fragment
-    reading of the version's own enc dir."""
-    txt = read_sidecar(state_path, version, "frags.txt")
-    if txt is None:
-        return [version]
-    return sorted(int(x) for x in txt.split())
+    ``version`` (frags.txt sidecar, written at every publish)."""
+    return sorted(
+        int(x) for x in read_sidecar(state_path, version, "frags.txt").split()
+    )
 
 
-def _vec_enc_schema(spark, state_path: str, version: int):
-    """The enc relation's schema — from the encschema.txt sidecar
-    (written at every publish since the fragment layout landed), or by
-    probing the version's enc/denc files for older/hand-built states."""
-    txt = read_sidecar(state_path, version, "encschema.txt")
-    if txt is not None:
-        from pyspark.sql.types import StructType
+def _vec_enc_schema(state_path: str, version: int):
+    """The enc relation's schema (encschema.txt sidecar, written at
+    every publish)."""
+    from pyspark.sql.types import StructType
 
-        return StructType.fromJson(json.loads(txt))
-    cur = version_dir(state_path, version)
-    part = "enc" if os.path.isdir(os.path.join(cur, "enc")) else "denc"
-    return spark.read.parquet(os.path.join(cur, part)).schema
+    return StructType.fromJson(
+        json.loads(read_sidecar(state_path, version, "encschema.txt"))
+    )
 
 
 def _vec_chain(spark, state_path: str, base_v: int, upto_v: int, cells=None):
@@ -1130,46 +1126,39 @@ def _vec_chain(spark, state_path: str, base_v: int, upto_v: int, cells=None):
             os.path.join(version_dir(state_path, frag), "enc")
         )
 
-    cm_path = os.path.join(version_dir(state_path, base_v), "cellmap")
+    cm = spark.read.parquet(
+        os.path.join(version_dir(state_path, base_v), "cellmap")
+    )
     parts = []
-    if os.path.isdir(cm_path):
-        cm = spark.read.parquet(cm_path)
-        if cells is not None:
-            # bounded-collect contract: |cells| is the caller's probe
-            # set (≤ nprobe × |queries|) or a compaction's touched set
-            # (capped at _VEC_TOUCHED_ISIN_MAX before full rewrite)
-            by_frag: dict[int, list] = {}
-            for r in cm.where(F.col("cell").isin(list(cells))).collect():
-                by_frag.setdefault(int(r["frag"]), []).append(r["cell"])
-            for frag in sorted(by_frag):
-                # the isin doubles as partition pruning AND fragment
-                # ownership: by_frag[frag] lists exactly the probed
-                # cells this fragment currently owns
-                parts.append(
-                    _std(_enc(frag).where(F.col("cell").isin(by_frag[frag])))
-                )
-        else:
-            frags = sorted(
-                int(r["frag"])
-                for r in cm.select("frag").distinct().collect()
-            )  # ≤ _VEC_MAX_FRAGS by the compaction cap
-            for frag in frags:
-                enc = _std(_enc(frag))
-                if frag != base_v:
-                    # an older fragment may still hold partitions for
-                    # cells a newer one rewrote — keep only its OWN
-                    own = cm.where(F.col("frag") == frag).select(
-                        F.col("cell").cast("long").alias("cell")
-                    )
-                    enc = enc.join(F.broadcast(own), "cell", "left_semi")
-                parts.append(enc)
+    if cells is not None:
+        # bounded-collect contract: |cells| is the caller's probe
+        # set (≤ nprobe × |queries|) or a compaction's touched set
+        # (capped at _VEC_TOUCHED_ISIN_MAX before full rewrite)
+        by_frag: dict[int, list] = {}
+        for r in cm.where(F.col("cell").isin(list(cells))).collect():
+            by_frag.setdefault(int(r["frag"]), []).append(r["cell"])
+        for frag in sorted(by_frag):
+            # the isin doubles as partition pruning AND fragment
+            # ownership: by_frag[frag] lists exactly the probed
+            # cells this fragment currently owns
+            parts.append(
+                _std(_enc(frag).where(F.col("cell").isin(by_frag[frag])))
+            )
     else:
-        # pre-fragment layout (hand-assembled state): the base version's
-        # own enc dir holds every cell
-        base = _enc(base_v)
-        if cells is not None:
-            base = base.where(F.col("cell").isin(list(cells)))
-        parts.append(_std(base))
+        frags = sorted(
+            int(r["frag"])
+            for r in cm.select("frag").distinct().collect()
+        )  # ≤ _VEC_MAX_FRAGS by the compaction cap
+        for frag in frags:
+            enc = _std(_enc(frag))
+            if frag != base_v:
+                # an older fragment may still hold partitions for
+                # cells a newer one rewrote — keep only its OWN
+                own = cm.where(F.col("frag") == frag).select(
+                    F.col("cell").cast("long").alias("cell")
+                )
+                enc = enc.join(F.broadcast(own), "cell", "left_semi")
+            parts.append(enc)
     denc_paths = chain_dirs(state_path, base_v, upto_v, "denc")
     if denc_paths:
         parts.append(
@@ -1181,7 +1170,7 @@ def _vec_chain(spark, state_path: str, base_v: int, upto_v: int, cells=None):
         # fully-retired-and-compacted state with no standing deltas:
         # an empty relation with the recorded schema
         parts.append(_std(spark.createDataFrame(
-            [], _vec_enc_schema(spark, state_path, base_v)
+            [], _vec_enc_schema(state_path, base_v)
         )))
     out = parts[0]
     for p in parts[1:]:
@@ -1311,10 +1300,7 @@ def _vec_compact(
     # time that cell alone is compacted, resurrecting the old row
     # over the current one.
     stack_ids = stack.select("id").distinct()
-    cm_path = os.path.join(version_dir(state_path, base_v), "cellmap")
-    has_cm = os.path.isdir(cm_path)
-    frag_list = _vec_frags(state_path, base_v) if has_cm else [base_v]
-    for frag in frag_list:
+    for frag in _vec_frags(state_path, base_v):
         # (id, cell) is a 2-column scan where cell is the partition
         # value — parquet reads one column of data
         enc = spark.read.parquet(
@@ -1328,11 +1314,13 @@ def _vec_compact(
     touched = sorted(
         r["cell"] for r in touched_df.distinct().collect()
     )
-    full = not has_cm or len(touched) > _VEC_TOUCHED_ISIN_MAX
+    full = len(touched) > _VEC_TOUCHED_ISIN_MAX
     untouched_cm = None
     keep_frags: list[int] = []
     if not full:
-        cm = spark.read.parquet(cm_path)
+        cm = spark.read.parquet(
+            os.path.join(version_dir(state_path, base_v), "cellmap")
+        )
         touched_lit = spark.createDataFrame(
             [(int(c),) for c in touched], "cell long"
         )
@@ -1380,9 +1368,9 @@ def _vec_commit(
     def write_delta(new_v):
         delta.write.mode("overwrite").parquet(os.path.join(carry(new_v), "denc"))
         for name in ("frags.txt", "encschema.txt"):
-            txt = read_sidecar(state_path, head.base, name)
-            if txt is not None:
-                write_sidecar(state_path, new_v, name, txt)
+            write_sidecar(
+                state_path, new_v, name, read_sidecar(state_path, head.base, name)
+            )
         return _vec_frags(state_path, head.base)
 
     def write_base(new_v):
@@ -1414,19 +1402,15 @@ def _vector_ingest_fn(
 ):
     """The foreachBatch body of :func:`stream_vector_ingest`, exposed
     for deterministic re-delivery / lineage tests."""
-    from scholarmind_spark.operators.kmeans import _assign
     from scholarmind_spark.operators.pq import (
-        _build_sub_lits,
-        _encode_expr,
+        _coarse_codebook,
+        _encode_cells,
         _resolve_sub_rows,
+        _subspace_codebook,
     )
 
     if compact_every < 1:
         raise ValueError("compact_every must be >= 1")
-    w = dim // m
-
-    def _res(v, c):
-        return F.zip_with(v, c, lambda x, y: x.cast("double") - y.cast("double"))
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         head = fold_gate(state_path, lineage, batch_id, "mor", "vector-index")
@@ -1440,26 +1424,15 @@ def _vector_ingest_fn(
             F.max(vec_col).alias(vec_col)
         )
         if head:
-            cur = version_dir(state_path, head.version)
-            coarse = spark.read.parquet(os.path.join(cur, "coarse"))
-            cb = spark.read.parquet(os.path.join(cur, "cb"))
-            # encoding mode is STATE, not a call argument: a resumed
-            # stream passing the wrong by_residual must not silently
-            # mix raw and residual codes in one table
-            residual = (
-                read_sidecar(state_path, head.version, "encmode.txt")
-                == "residual"
-            )
+            # codebooks, geometry and encoding mode are STATE, not call
+            # arguments: a resumed stream passing other values must not
+            # silently mix code spaces, code widths or raw and residual
+            # codes in one table
+            coarse, cb, residual = _vec_codebooks(spark, state_path, head.version)
+            geom = (None, None)
         else:
             residual = by_residual
-            if coarse_df is not None:
-                coarse = coarse_df.select("cid", "cvec")
-            else:
-                cids = coarse_ids if coarse_ids is not None else list(range(4))
-                coarse = uniq.filter(F.col(id_col).isin(cids)).select(
-                    F.col(id_col).cast("long").alias("cid"),
-                    F.col(vec_col).alias("cvec"),
-                )
+            coarse = _coarse_codebook(uniq, id_col, vec_col, coarse_df, coarse_ids)
             # creation-fold guard, mirroring _resolve_sub_rows's "pq:
             # empty codebook": a first batch lacking the coarse id rows
             # would freeze an EMPTY coarse codebook into the state —
@@ -1472,11 +1445,12 @@ def _vector_ingest_fn(
                     "first batch has none of the coarse_ids rows and no "
                     "coarse_df was given"
                 )
+            geom = (m, dim // m)
             if subspace_codebook_df is not None:
                 cb = subspace_codebook_df.select("sub", "code", "cw")
             else:
                 rows = _resolve_sub_rows(
-                    uniq, id_col, vec_col, m, w, codebook_ids, None, None
+                    uniq, id_col, vec_col, *geom, codebook_ids, None, None
                 )
                 cb = spark.createDataFrame(
                     [
@@ -1486,33 +1460,28 @@ def _vector_ingest_fn(
                     ],
                     "sub int, code long, cw array<double>",
                 )
-        sub_rows_state = _resolve_sub_rows(
-            None, id_col, vec_col, m, w, None, None, cb
-        )
-        sub_lits = _build_sub_lits(sub_rows_state)
-        assigned = _assign(uniq, coarse, id_col, vec_col)
-        if residual:
-            # the paper's §5 recipe, the ivfadc_topk(by_residual=True)
-            # device: encode (vector − its cell centroid) — one extra
-            # broadcast join of the k-row coarse table
-            assigned = assigned.join(
-                F.broadcast(coarse), assigned["cell"] == coarse["cid"]
-            )
-            enc_in = _res(F.col(vec_col), F.col("cvec"))
-        else:
-            enc_in = F.col(vec_col)
-        enc_new = assigned.select(
-            F.col(id_col).alias("id"),
-            F.col("cell").cast("long").alias("cell"),
-            _encode_expr(sub_lits, enc_in, m, w).alias("pq"),
-            *_versioned(new_v),
-        )
+        enc_new = _encode_cells(
+            uniq, coarse, *_subspace_codebook(cb, *geom), id_col, vec_col,
+            residual,
+        ).select(F.col(id_col).alias("id"), "cell", "pq", *_versioned(new_v))
         _vec_commit(
             spark, state_path, head, lineage, batch_id, enc_new,
             compact_every, coarse, cb, "residual" if residual else "raw",
         )
 
     return _fold
+
+
+def _vec_codebooks(spark, state_path: str, version: int):
+    """``(coarse, cb, residual)`` frozen into the index state at
+    ``version``: the coarse codebook, the ``(sub, code, cw)`` PQ
+    codebook, and whether codes encode residuals."""
+    cur = version_dir(state_path, version)
+    return (
+        spark.read.parquet(os.path.join(cur, "coarse")),
+        spark.read.parquet(os.path.join(cur, "cb")),
+        read_sidecar(state_path, version, "encmode.txt") == "residual",
+    )
 
 
 def ann_state_query(
@@ -1523,14 +1492,17 @@ def ann_state_query(
     nprobe: int = 2,
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    m: int = 8,
-    dim: int = 64,
 ):
     """ADC top-k against the PUBLISHED index state — the read side of
     :func:`stream_vector_ingest`: probe the query's ``nprobe`` nearest
     coarse cells, rank the probed residents by asymmetric distance
     DECODED FROM THE STORED CODES (the corpus is never re-read, never
-    re-encoded — the standing state is m ints/vector).  The base scan
+    re-encoded — the standing state is m ints/vector).  Codebooks,
+    geometry (m = the stored codebook's subspace count, dim/m = its
+    codeword length) and encoding mode are all read from the state.
+    Probing and ranking are :func:`operators.pq.ivfadc_topk`'s own
+    stages (``_probe_cells``, ``_adc_rank``); the state contributes only
+    the encoded residents.  The base scan
     is PRUNED to the probed cells (partition pruning on the
     cell-partitioned fragments the cellmap names; deltas are read
     whole so latest-seq-wins resolves before the cell filter, never
@@ -1543,75 +1515,25 @@ def ann_state_query(
     ivfadc_topk` contract), or None if nothing is published."""
     from scholarmind_spark.operators.ledger import mor_resolve
     from scholarmind_spark.operators.pq import (
-        _adc_expr,
-        _build_sub_lits,
-        _resolve_sub_rows,
-        _sq,
+        _adc_rank,
+        _probe_cells,
+        _subspace_codebook,
     )
 
     m_ = read_manifest(state_path, "vector-index")
     if m_ is None:
         return None
-    cur = version_dir(state_path, m_.version)
-    w = dim // m
-    coarse = spark.read.parquet(os.path.join(cur, "coarse"))
-    cb = spark.read.parquet(os.path.join(cur, "cb"))
-    sub_lits = _build_sub_lits(
-        _resolve_sub_rows(None, "id", "v", m, w, None, None, cb)
+    coarse, cb, residual = _vec_codebooks(spark, state_path, m_.version)
+    probes = _probe_cells(
+        queries_df, coarse, nprobe, residual, query_id_col, query_vec_col
     )
-    q = queries_df.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("qvec"),
-    )
-    qs = q.crossJoin(F.broadcast(coarse)).select(
-        "query_id", "qvec", F.col("cid").cast("long").alias("cell"),
-        _sq(F.col("qvec"), F.col("cvec")).alias("cd"),
-    )
-    pw = Window.partitionBy("query_id").orderBy("cd", "cell")
-    probes = (
-        qs.withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qvec", "cell")
-    )
-    if read_sidecar(state_path, m_.version, "encmode.txt") == "residual":
-        # residual-encoded state: compare (query − PROBED cell centroid)
-        # against resident codes, per probe — the ivfadc_topk
-        # by_residual device, one broadcast join of the k-row coarse
-        probes = probes.join(
-            F.broadcast(coarse),
-            probes["cell"] == coarse["cid"],
-        ).select(
-            "query_id",
-            F.zip_with(
-                "qvec", "cvec",
-                lambda x, y: x.cast("double") - y.cast("double"),
-            ).alias("qvec"),
-            "cell",
-        )
     # the probed cell set is ≤ nprobe × |queries| driver values — the
     # same bounded-collect contract as the MoR ledger's touched buckets
     cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
     enc = mor_resolve(
         _vec_chain(spark, state_path, m_.base, m_.version, cells=cells)
     )
-    adc = _adc_expr(sub_lits, F.col("qvec"), F.col("pq"), m, w)
-    scored = (
-        enc.join(F.broadcast(probes), on="cell")
-        .filter(F.col("id") != F.col("query_id"))
-        .select("query_id", F.col("id").alias("neighbor_id"), adc.alias("adc_raw"))
-        .distinct()
-    )
-    rk = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rk))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("adc_raw", 6).alias("adc"), "rank",
-        )
-    )
+    return _adc_rank(enc, probes, *_subspace_codebook(cb), k, "id")
 
 
 def ann_state_query_refined(
@@ -1626,8 +1548,6 @@ def ann_state_query_refined(
     query_vec_col: str = "query_vec",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = 8,
-    dim: int = 64,
 ):
     """:func:`ann_state_query` + exact re-ranking — the production read
     recipe served FROM THE PUBLISHED STATE (the batch twin is
@@ -1635,7 +1555,10 @@ def ann_state_query_refined(
     IVFADC+R / the Faiss refine): the state's ADC ranking surfaces
     top-``rerank`` candidates per query, their RAW vectors alone are
     fetched from ``raw_df`` and re-ranked by exact squared-L2 to the
-    unquantized query.  Measured on the clustered mixtures (SCALE.md),
+    unquantized query — the batch operator's own rerank stage
+    (``operators.pq._exact_rerank``).  Like :func:`ann_state_query`,
+    codebooks, geometry and encoding mode come from the state.
+    Measured on the clustered mixtures (SCALE.md),
     this stage is worth +0.375 absolute recall over the ADC ranking at
     the production residual/m16/c256 point — without it the compressed
     index's quality ceiling is the quantizer's.
@@ -1651,41 +1574,16 @@ def ann_state_query_refined(
     the standing state.  Returns ``query_id, neighbor_id, dist, rank``
     (exact distances, the refine contract), or None if nothing is
     published."""
-    from scholarmind_spark.operators.pq import _sq
+    from scholarmind_spark.operators.pq import _exact_rerank
 
     cand = ann_state_query(
         spark, state_path, queries_df, k=rerank, nprobe=nprobe,
         query_id_col=query_id_col, query_vec_col=query_vec_col,
-        m=m, dim=dim,
     )
     if cand is None:
         return None
-    cand = cand.select("query_id", "neighbor_id")
-    raw = raw_df.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nvec")
-    )
-    q = queries_df.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("__qvec"),
-    )
-    scored = (
-        raw.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id", "neighbor_id",
-            _sq(F.col("__qvec"), F.col("__nvec")).alias("d_raw"),
-        )
-    )
-    rk = Window.partitionBy("query_id").orderBy(
-        F.asc("d_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rk))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("d_raw", 6).alias("dist"), "rank",
-        )
+    return _exact_rerank(
+        cand, raw_df, queries_df, k, id_col, vec_col, query_id_col, query_vec_col
     )
 
 
@@ -1716,17 +1614,15 @@ def vector_index_retire(spark, state_path: str, retired_ids) -> None:
     m = read_manifest(state_path, "vector-index")
     if m is None:
         raise ValueError(f"no published vector-index state at {state_path}")
-    cur = version_dir(state_path, m.version)
-    enc_schema = _vec_enc_schema(spark, state_path, m.version)
+    enc_schema = _vec_enc_schema(state_path, m.version)
     tomb = retired_ids.select(
         F.col("id").cast(enc_schema["id"].dataType).alias("id"),
         F.lit(None).cast("long").alias("cell"),
         F.lit(None).cast(enc_schema["pq"].dataType).alias("pq"),
         *_versioned(m.version + 1, tomb=True),
     ).distinct()
+    coarse, cb, residual = _vec_codebooks(spark, state_path, m.version)
     _vec_commit(
-        spark, state_path, m, m.lineage, m.upto, tomb, None,
-        spark.read.parquet(os.path.join(cur, "coarse")),
-        spark.read.parquet(os.path.join(cur, "cb")),
-        read_sidecar(state_path, m.version, "encmode.txt") or "raw",
+        spark, state_path, m, m.lineage, m.upto, tomb, None, coarse, cb,
+        "residual" if residual else "raw",
     )

@@ -140,10 +140,6 @@ def _user_stats_update_factory(timeout_ms: int | None):
     return _update
 
 
-# Back-compat alias: the no-timeout update used by existing callers/tests.
-_update = _user_stats_update_factory(None)
-
-
 ANOMALY_STATE_SCHEMA = StructType(
     [StructField("recent", ArrayType(LongType()))]
 )

@@ -1,6 +1,9 @@
-"""Self-scaling LSH bucket space for embedding near-dup (derive_planes)."""
+"""Self-scaling LSH bucket space for embedding near-dup (derive_planes),
+and the top-k contract every ANN ranker shares (``rank_topk``)."""
 
 from __future__ import annotations
+
+import pytest
 
 from scholarmind_spark.operators.similarity import (
     LSH_PLANES,
@@ -68,8 +71,6 @@ def test_zero_norm_vectors_never_rank(spark):
 
 
 def test_sql_twins_reject_empty_query_ids():
-    import pytest
-
     from scholarmind_spark.operators.similarity import (
         ann_lsh_topk_sql,
         cosine_topk_sql,
@@ -81,3 +82,85 @@ def test_sql_twins_reject_empty_query_ids():
             fn(query_ids=[])
         with pytest.raises(ValueError, match="non-empty"):
             fn()
+
+
+# ---- the shared top-k contract.  Every vector is a power-of-two
+# multiple of ONE direction, so all cosines tie EXACTLY (scaling by 2 is
+# exact in IEEE), every LSH table co-buckets everything, and one coarse
+# cell holds the corpus: each query's candidates are the other 7 ids.
+# Duplicates tie exactly on every distance as well.
+_DIR = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0]
+_SCALES = [1, 2, 1, 4, 2, 1, 4, 2]  # id -> multiple of _DIR
+
+
+def _topk_state(spark, df, q, k, tmp_path):
+    from scholarmind_spark.streaming.pipeline import (
+        _vector_ingest_fn,
+        ann_state_query,
+    )
+
+    state = str(tmp_path / "state")
+    # a re-delivered batch 0 is a no-op, so every k reads one state
+    _vector_ingest_fn(
+        state, "cafebabe", m=2, dim=8, coarse_ids=[0], codebook_ids=[0, 1, 3]
+    )(df, 0)
+    return ann_state_query(spark, state, q, k=k, nprobe=1)
+
+
+def _topk_cases():
+    from scholarmind_spark.operators.pq import ivfadc_topk, pq_topk
+    from scholarmind_spark.operators.similarity import (
+        ann_lsh_topk,
+        cosine_topk,
+        ivf_topk,
+    )
+
+    pq_kw = dict(m=2, dim=8, codebook_ids=[0, 1, 3])
+    return {
+        "cosine_topk": (True, lambda s, d, q, k, t: cosine_topk(d, q, k=k)),
+        "ann_lsh_topk": (
+            True, lambda s, d, q, k, t: ann_lsh_topk(d, q, k=k, dim=8)
+        ),
+        "ivf_topk": (
+            True,
+            lambda s, d, q, k, t: ivf_topk(d, q, k=k, centroid_ids=[0], nprobe=1),
+        ),
+        "pq_topk": (False, lambda s, d, q, k, t: pq_topk(d, q, k=k, **pq_kw)),
+        "ivfadc_topk": (
+            False,
+            lambda s, d, q, k, t: ivfadc_topk(
+                d, q, k=k, nprobe=1, coarse_ids=[0], **pq_kw
+            ),
+        ),
+        "ann_state_query": (False, _topk_state),
+    }
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["cosine_topk", "ann_lsh_topk", "ivf_topk", "pq_topk", "ivfadc_topk",
+     "ann_state_query"],
+)
+def test_topk_ties_rank_lower_neighbor_first(spark, tmp_path, name):
+    """Equal scores rank the LOWER neighbor_id first, the score order is
+    ascending for distances and descending for cosine, ranks run 1..n,
+    and each query returns min(k, candidates) rows."""
+    descending, run = _topk_cases()[name]
+    df = spark.createDataFrame(
+        [(i, [x * c for x in _DIR]) for i, c in enumerate(_SCALES)],
+        "vec_id long, embedding array<double>",
+    )
+    q = df.filter("vec_id IN (0, 3)").selectExpr(
+        "vec_id AS query_id", "embedding AS query_vec"
+    )
+    candidates = len(_SCALES) - 1
+    for k in (3, 20):
+        rows = run(spark, df, q, k, tmp_path).collect()
+        for qid in (0, 3):
+            got = sorted((r for r in rows if r[0] == qid), key=lambda r: r[3])
+            assert [r[3] for r in got] == list(range(1, min(k, candidates) + 1))
+            sign = -1 if descending else 1
+            want = sorted(got, key=lambda r: (sign * r[2], r[1]))
+            assert [r[1] for r in got] == [r[1] for r in want]
+            # the corpus really exercises the tiebreak
+            assert len({r[2] for r in got}) < len(got)

@@ -1304,7 +1304,7 @@ def test_stream_vector_ingest_state_equals_full_rebuild(spark, tmp_path):
             ),
         ).collect())
     )
-    got_df = ann_state_query(spark, state, q, k=5, nprobe=2, m=2, dim=8)
+    got_df = ann_state_query(spark, state, q, k=5, nprobe=2)
     got = sorted(map(tuple, got_df.collect()))
     assert got == expect
 
@@ -1392,7 +1392,7 @@ def test_vector_ingest_delta_layout_and_pruned_query(spark, tmp_path):
             coarse_df=coarse, codebook_df=cb,
         ).collect()))
         got = sorted(map(tuple, ann_state_query(
-            spark, state, q, k=4, nprobe=1, m=2, dim=8
+            spark, state, q, k=4, nprobe=1
         ).collect()))
         assert got == expect, f"query {qid}"
 
@@ -1536,7 +1536,60 @@ def test_vector_ingest_residual_mode_frozen_and_matches_batch(spark, tmp_path):
         codebook_df=cb, by_residual=True,
     ).collect()))
     got = sorted(map(tuple, ann_state_query(
-        spark, state, q, k=5, nprobe=2, m=2, dim=8
+        spark, state, q, k=5, nprobe=2
+    ).collect()))
+    assert got == expect
+
+
+def test_vector_ingest_geometry_frozen_and_matches_batch(spark, tmp_path):
+    """The index geometry (m subspaces of width dim/m) is STATE: a
+    resumed fold passing a smaller m with the same width still writes
+    m=2 codes (4-code rows in an 8-code table would carry a NULL ADC),
+    and the reader, which takes no geometry, ranks on every subspace —
+    equal to ivfadc_topk over the latest corpus."""
+    from pyspark.sql import functions as F
+
+    from scholarmind_spark.operators.pq import ivfadc_topk
+    from scholarmind_spark.streaming.pipeline import (
+        _vector_ingest_fn,
+        ann_state_query,
+        vector_state_enc,
+    )
+
+    VS = "vec_id long, embedding array<double>"
+    state = str(tmp_path / "state")
+    fold = _vector_ingest_fn(
+        state, "feedbeef", m=2, dim=8, coarse_ids=[0, 1],
+        codebook_ids=[0, 1, 2, 3],
+    )
+    b0 = _vec_rows(0, 6)
+    b1 = _vec_rows(6, 6)
+    fold(spark.createDataFrame(b0, VS), 0)
+    # resume with the WRONG geometry: m and w must come from the state
+    _vector_ingest_fn(state, "feedbeef", m=1, dim=4)(
+        spark.createDataFrame(b1, VS), 1
+    )
+    assert {len(r.pq) for r in vector_state_enc(spark, state).collect()} == {2}
+
+    full = spark.createDataFrame(sorted(dict(b0 + b1).items()), VS)
+    coarse = spark.createDataFrame(
+        [(i, dict(b0)[i]) for i in (0, 1)], "cid long, cvec array<double>"
+    )
+    cb = spark.createDataFrame(
+        [(i, dict(b0)[i]) for i in (0, 1, 2, 3)], VS
+    ).select(
+        F.col("vec_id").cast("long").alias("code"),
+        F.col("embedding").alias("cvec"),
+    )
+    q = full.filter(F.col("vec_id").isin(4, 9)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    expect = sorted(map(tuple, ivfadc_topk(
+        full, q, k=5, m=2, dim=8, nprobe=2, coarse_df=coarse, codebook_df=cb,
+    ).collect()))
+    got = sorted(map(tuple, ann_state_query(
+        spark, state, q, k=5, nprobe=2
     ).collect()))
     assert got == expect
 
@@ -1592,7 +1645,6 @@ def test_ann_state_query_refined_matches_batch_refine(spark, tmp_path):
         ).collect()))
         got = sorted(map(tuple, ann_state_query_refined(
             spark, state, q, raw_df=full, k=4, rerank=8, nprobe=2,
-            m=2, dim=8,
         ).collect()))
         assert got == expect, f"residual={residual}"
 
@@ -1652,7 +1704,7 @@ def test_vector_index_retire(spark, tmp_path):
     got_ids = {
         r.neighbor_id
         for r in ann_state_query(
-            spark, state, q, k=12, nprobe=2, m=2, dim=8
+            spark, state, q, k=12, nprobe=2
         ).collect()
     }
     assert not ({3, 7} & got_ids) and got_ids
@@ -1758,7 +1810,7 @@ def test_partial_compaction_rewrites_only_touched_cells(spark, tmp_path):
         codebook_df=cb,
     ).collect()))
     got = sorted(map(tuple, ann_state_query(
-        spark, state, q, k=5, nprobe=2, m=2, dim=8
+        spark, state, q, k=5, nprobe=2
     ).collect()))
     assert got == expect
 

@@ -410,12 +410,11 @@ def ivfadc_clustered_main():
 
     import numpy as np
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from scholarmind_spark import get_spark
     from scholarmind_spark.operators.kmeans import _assign, kmeans_fit
     from scholarmind_spark.operators.pq import (
-        _sq,
+        _probe_cells,
         ivfadc_topk,
         pq_train,
         pq_train_residual,
@@ -457,16 +456,10 @@ def ivfadc_clustered_main():
             for r in _assign(e, coarse, "vec_id", "embedding")
             .groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
         }
-        qs = q.crossJoin(F.broadcast(coarse)).select(
-            "query_id", F.col("cid").alias("cell"),
-            _sq(F.col("query_vec"), F.col("cvec")).alias("cd"),
-        )
-        pw = Window.partitionBy("query_id").orderBy("cd", "cell")
         per_q: dict[int, int] = {}
-        for r in (
-            qs.withColumn("rn", F.row_number().over(pw))
-            .filter(F.col("rn") <= nprobe).select("query_id", "cell").collect()
-        ):
+        for r in _probe_cells(q, coarse, nprobe).select(
+            "query_id", "cell"
+        ).collect():
             per_q[r.query_id] = per_q.get(r.query_id, 0) + sizes.get(r.cell, 0)
         frac = sum(per_q.values()) / (len(per_q) * n_vec)
 
@@ -617,12 +610,9 @@ def state_refined_main():
                 for qid, hits in exact.items()
             ) / len(exact)
 
-        adc_df = ann_state_query(
-            spark, state, q, k=k, nprobe=nprobe, m=m, dim=dim
-        )
+        adc_df = ann_state_query(spark, state, q, k=k, nprobe=nprobe)
         ref_df = ann_state_query_refined(
-            spark, state, q, raw_df=e, k=k, rerank=rerank,
-            nprobe=nprobe, m=m, dim=dim,
+            spark, state, q, raw_df=e, k=k, rerank=rerank, nprobe=nprobe,
         )
         batch_df = ivfadc_refine_topk(
             e, q, k=k, rerank=rerank, m=m, dim=dim, nprobe=nprobe,

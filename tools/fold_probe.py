@@ -765,19 +765,11 @@ def main() -> None:
             coarse = spark.read.parquet(
                 os.path.join(state, f"v-{version}", "coarse")
             )
-            from scholarmind_spark.operators.pq import _sq as _sqd
+            from scholarmind_spark.operators.pq import _probe_cells
 
-            qs = q.crossJoin(F.broadcast(coarse)).select(
-                "query_id", F.col("cid").cast("long").alias("cell"),
-                _sqd(F.col("query_vec"), F.col("cvec")).alias("cd"),
-            )
-            from pyspark.sql.window import Window as _W
-
-            pw = _W.partitionBy("query_id").orderBy("cd", "cell")
             cells = [
                 r["cell"]
-                for r in qs.withColumn("rn", F.row_number().over(pw))
-                .filter(F.col("rn") <= nprobe)
+                for r in _probe_cells(q, coarse, nprobe)
                 .select("cell").distinct().collect()
             ]
             per_p, per_f = [], []
