@@ -23,9 +23,13 @@ and the words compare/hash identically).  Absent words mean 0.
 
 Spark-first shape: build is one explode (k rows per value) + one
 map-side-combined ``bit_or`` groupBy — shuffle ≤ m_words rows per
-partition regardless of input.  Probe joins the ≤ m_words sketch rows
-(broadcast) against the probes' exploded positions and ANDs the k
-bit tests back together with a ``min``.  Zero Python anywhere.
+partition regardless of input.  Build and merge are the keyed
+``sketchledger.bloom_state_build`` / ``bloom_state_merge``, the single
+implementation of the family: ``keys=[]`` builds the plain filter
+``(word, bits)`` every probe here reads, ``keys=["grp"]`` one filter per
+group.  Probe joins the ≤ m_words sketch rows (broadcast) against the
+probes' exploded positions and ANDs the k bit tests back together with
+a ``min``.  Zero Python anywhere.
 """
 
 from __future__ import annotations
@@ -55,10 +59,9 @@ def _positions(v: Column, m_words: int, k: int) -> list[Column]:
 
 def word_and_mask_exprs() -> tuple[Column, Column]:
     """``(word, mask)`` over a frame with bigint column ``pos`` — THE
-    home of the word/bit split on the build side.  Every builder
-    (un-keyed ``bloom_build`` and the keyed sketch-ledger variant) must
-    use this pair, or their filters silently stop being
-    probe-compatible."""
+    home of the word/bit split on the build side
+    (``sketchledger.bloom_state_build``), which the probes here must
+    match bit for bit."""
     return (
         F.expr(f"pos div {BITS_PER_WORD}"),
         F.expr(
@@ -73,33 +76,6 @@ def word_and_mask_sql() -> tuple[str, str]:
         f"pos // {BITS_PER_WORD}",
         f"(1::BIGINT << (pos % {BITS_PER_WORD})::INT)",
     )
-
-
-def bloom_build(
-    df: DataFrame, col: str | Column, m_words: int = 256, k: int = 4
-) -> DataFrame:
-    """The filter as rows ``(word, bits)`` — at most ``m_words`` rows
-    regardless of input size.  NULL keys are dropped (not members)."""
-    _check(m_words, k)
-    v = (F.col(col) if isinstance(col, str) else col).cast("string")
-    vals = df.select(v.alias("v")).where(F.col("v").isNotNull())
-    pos = vals.select(
-        F.explode(F.array(*_positions(F.col("v"), m_words, k))).alias("pos")
-    )
-    word, mask = word_and_mask_exprs()
-    return (
-        pos.select(word.alias("word"), mask.alias("m"))
-        .groupBy("word")
-        .agg(F.expr("bit_or(m)").alias("bits"))
-    )
-
-
-def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Fold two filters: union + groupBy bit_or.  Exact — OR is
-    associative/commutative, so fold == direct.  Both sides MUST share
-    build-time ``m_words``/``k`` (the CMS caller contract: mismatched
-    geometry addresses different bits and silently corrupts)."""
-    return a.unionByName(b).groupBy("word").agg(F.expr("bit_or(bits)").alias("bits"))
 
 
 def bloom_contains(
@@ -144,7 +120,8 @@ def _positions_sql(v: str, m_words: int, k: int) -> list[str]:
 
 
 def bloom_build_sql(values_query: str, m_words: int = 256, k: int = 4) -> str:
-    """DuckDB twin of :func:`bloom_build` over a subquery yielding ``v``."""
+    """DuckDB twin of ``bloom_state_build(df, [], "v", m_words, k)``
+    over a subquery yielding ``v``."""
     _check(m_words, k)
     pos = " UNION ALL ".join(
         f"SELECT {p} AS pos FROM vals" for p in _positions_sql("v", m_words, k)
@@ -159,6 +136,7 @@ def bloom_build_sql(values_query: str, m_words: int = 256, k: int = 4) -> str:
 
 
 def bloom_merge_sql(a: str, b: str) -> str:
+    """DuckDB twin of ``bloom_state_merge(a, b)`` over two plain filters."""
     return (
         f"(SELECT word, bit_or(bits)::BIGINT AS bits FROM "
         f"(SELECT * FROM {a} UNION ALL SELECT * FROM {b}) GROUP BY word)"
@@ -197,9 +175,10 @@ def bloom_prune(
     row-level runtime join prefilter (Spark's own bloom runtime filters,
     LIP/sideways information passing in the warehouse literature).
     Because a Bloom filter never false-negatives, ``bloom_prune(probe,
-    key, bloom_build(build, key)) JOIN build`` returns EXACTLY the rows
-    of the unpruned join — only the shuffled probe volume shrinks (by
-    1 − selectivity − FPR).  NULL keys are dropped (they join nothing).
+    key, bloom_state_build(build, [], key)) JOIN build`` returns EXACTLY
+    the rows of the unpruned join — only the shuffled probe volume
+    shrinks (by 1 − selectivity − FPR).  NULL keys are dropped (they
+    join nothing).
 
     Shape: the whole ≤ m_words-row sketch folds into ONE map value
     (word → bits) crossJoin-broadcast to the probe side, and the k bit
@@ -221,8 +200,8 @@ def bloom_prune(
         .crossJoin(F.broadcast(bitmap))
     )
     # one source of truth for the bit positions: the SAME _positions()
-    # bloom_build writes with (a hand-inlined copy of the hash device
-    # here could silently diverge and break never-false-negative).
+    # bloom_state_build writes with (a hand-inlined copy of the hash
+    # device here could silently diverge and break never-false-negative).
     # The bit test is bits & 2^bit: the mask is computed via double
     # pow(2, bit) — exact for every power of two ≤ 2^62 (bit ≤ 62 by
     # construction), and the AND stays in bigint (bits itself never

@@ -44,6 +44,11 @@ from pyspark.sql import functions as F
 from scholarmind_spark.operators.textstats import tokens, tokens_sql
 
 MICRO = 1_000_000
+# pagerank materializes (and truncates the lineage of) its ranks every
+# CHECKPOINT_EVERY rounds and on the last one.  Per-round eager
+# checkpoints made every iteration a separate materialization job, and a
+# 2-round plan is still tiny.
+CHECKPOINT_EVERY = 2
 
 
 def cooccurrence_edges(
@@ -90,10 +95,11 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 6,
     damping_milli: int = 850,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """``node, rank_micro`` after ``iterations`` rounds of damped
     PageRank over ``edges(src, dst, weight)``; all-integer fixed point.
+    The ranks are checkpointed every ``CHECKPOINT_EVERY`` (2) rounds and
+    after the last one; the cadence does not change the result.
 
     Per round, with d = damping_milli/1000 and V = node count:
 
@@ -163,14 +169,11 @@ def pagerank(
                     ).cast("long").alias("rank"),
                 )
             )
-            # materialize + truncate lineage every checkpoint_every rounds
-            # (and on the last round): per-round eager checkpoints made
-            # every iteration a separate materialization job, and a
-            # 2-round plan is still tiny — same integer results, half the
-            # job launches.  The previous checkpoint's blocks are freed
-            # only AFTER the next checkpoint exists (intermediate rounds'
-            # plans still read them).
-            if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
+            # materialize + truncate lineage every CHECKPOINT_EVERY rounds
+            # (and on the last round).  The previous checkpoint's blocks
+            # are freed only AFTER the next checkpoint exists
+            # (intermediate rounds' plans still read them).
+            if (it + 1) % CHECKPOINT_EVERY == 0 or it == iterations - 1:
                 new_ranks = new_ranks.localCheckpoint(eager=True)
                 if last_ckpt is not None:
                     unpersist_any(last_ckpt)

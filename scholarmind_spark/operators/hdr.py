@@ -33,17 +33,23 @@ Overflow envelope (same as operators/mi.psi_bins): the sub-bucket
 multiply needs ``vm·2ᵖ < 2⁶³`` — with p=5, |value| up to ~2.9e14 after
 milli scaling; quantize coarser first for larger magnitudes.
 
-Quantile lookup sorts the ≤4k buckets once in value order (sign asc,
-then sign·bucket asc) and takes a cumulative count — a SinglePartition
-window, safe because the row count is bounded by the SKETCH SIZE, not
-the data (the same bounded-state argument as the SNM offset window).
-Ranks are ceil(q·n/1000), 1-based — the classic lower-quantile
-definition, integer-exact on both engines.
+Quantile lookup sorts each sketch's ≤4k buckets once in value order
+(``sign·(2²⁰ + bucket)``) and takes a cumulative count; ranks are
+ceil(q·n/1000), 1-based — the classic lower-quantile definition,
+integer-exact on both engines.
+
+The Spark operators are the keyed ones in ``operators/sketchledger``
+(``hdr_state_build`` / ``hdr_state_merge`` / ``hdr_state_quantiles``),
+the single implementation of the family: ``keys=[]`` is the plain
+sketch ``(sign, bucket, cnt)`` — its quantile window is then one
+partition, safe because its row count is bounded by the SKETCH SIZE,
+not the data — and ``keys=["grp"]`` the per-group one.  This module
+holds the bucket math they share and the DuckDB twins (the oracles).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEFAULT_PRECISION_BITS = 5
@@ -61,8 +67,8 @@ def _vm(value: Column) -> Column:
 
 def _bucket_cols(p: int) -> tuple[Column, Column]:
     """(sign, bucket) expressions over a frame with column ``vm`` — the
-    ONE Spark-side home of the octave/sub-bucket math (the grouped and
-    global builders must never diverge)."""
+    ONE Spark-side home of the octave/sub-bucket math
+    (``sketchledger.hdr_state_build``)."""
     sign = F.when(F.col("vm") > 0, 1).when(F.col("vm") < 0, -1).otherwise(0)
     e = F.length(F.expr("bin(abs(vm))")) - 1
     sub = F.expr(
@@ -98,35 +104,6 @@ def _mid_case_sql(p: int) -> str:
 END"""
 
 
-def hdr_build(
-    df: DataFrame, value: Column | str, p: int = DEFAULT_PRECISION_BITS
-) -> DataFrame:
-    """The sketch as rows ``(sign, bucket, cnt)`` — at most
-    ~2·63·2ᵖ + 1 cells regardless of input size.  One projection + one
-    map-side-combined groupBy."""
-    _check_p(p)
-    vc = F.col(value) if isinstance(value, str) else value
-    vm = _vm(vc)
-    base = df.select(vm.alias("vm")).where(F.col("vm").isNotNull())
-    sign, bucket = _bucket_cols(p)
-    return (
-        base.select(sign.alias("sign"), bucket.alias("bucket"))
-        .groupBy("sign", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def hdr_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Fold two sketches: union + groupBy-sum.  Exact — fold == direct
-    by associativity of +.  Both must share the build-time ``p`` (the
-    CMS width/depth caller contract: store p next to the sketch)."""
-    return (
-        a.unionByName(b)
-        .groupBy("sign", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def _midpoint_expr(p: int) -> str:
     """SQL expr for the integer midpoint of (sign, bucket), shared
     verbatim by both engines (Spark F.expr and the DuckDB twin)."""
@@ -144,60 +121,12 @@ def _midpoint_expr(p: int) -> str:
 END"""
 
 
-def hdr_quantiles(
-    sketch: DataFrame,
-    qs_permille: tuple[int, ...] = (500, 900, 990),
-    p: int = DEFAULT_PRECISION_BITS,
-) -> DataFrame:
-    """``q_permille, n_rows, est_milli`` per requested quantile — the
-    integer midpoint of the bucket holding rank ``ceil(q·n/1000)``."""
-    _check_p(p)
-    for q in qs_permille:
-        if not 1 <= q <= 1000:
-            raise ValueError("quantiles are permille values in 1..1000")
-    w = (
-        Window.orderBy(F.col("sign").asc(), (F.col("sign") * F.col("bucket")).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = sketch.select(
-        "sign",
-        "bucket",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(
-            Window.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("n"),
-    )
-    qdf = sketch.sparkSession.createDataFrame(
-        [(q,) for q in qs_permille], "q_permille int"
-    )
-    # rank = ceil(q*n/1000); the quantile bucket is the FIRST bucket
-    # whose cumulative count reaches it (min over value order works
-    # because cum is monotone along that order)
-    hit = (
-        qdf.crossJoin(cum)
-        .where(F.col("cum") >= F.expr("(q_permille * n + 999) div 1000"))
-        .groupBy("q_permille")
-        .agg(
-            F.max("n").alias("n_rows"),
-            # min_by over sign·(2²⁰ + bucket) — a single bigint monotone
-            # in value order (bucket < 2²⁰ for every legal p), so the
-            # FIRST bucket at-or-past the rank wins on both engines
-            F.min_by(
-                F.expr(_midpoint_expr(p)),
-                F.col("sign") * (F.lit(1048576) + F.col("bucket")),
-            ).alias("est_milli"),
-        )
-    )
-    return hit.select("q_permille", F.col("n_rows").cast("bigint"), F.col("est_milli").cast("bigint"))
-
-
 # ------------------------------------------------------------ SQL twins
 
 
 def hdr_build_sql(values_query: str, p: int = DEFAULT_PRECISION_BITS) -> str:
-    """DuckDB twin of :func:`hdr_build` over a subquery yielding ``v``."""
+    """DuckDB twin of ``hdr_state_build(df, [], "v", p)`` over a
+    subquery yielding ``v``."""
     _check_p(p)
     sign, bucket = _bucket_case_sql(p)
     return f"""
@@ -212,6 +141,7 @@ def hdr_build_sql(values_query: str, p: int = DEFAULT_PRECISION_BITS) -> str:
 
 
 def hdr_merge_sql(a: str, b: str) -> str:
+    """DuckDB twin of ``hdr_state_merge(a, b)`` over two plain sketches."""
     return (
         f"(SELECT sign, bucket, sum(cnt)::BIGINT AS cnt FROM "
         f"(SELECT * FROM {a} UNION ALL SELECT * FROM {b}) GROUP BY sign, bucket)"
@@ -223,6 +153,7 @@ def hdr_quantiles_sql(
     qs_permille: tuple[int, ...] = (500, 900, 990),
     p: int = DEFAULT_PRECISION_BITS,
 ) -> str:
+    """DuckDB twin of ``hdr_state_quantiles(sketch, [], qs_permille, p)``."""
     _check_p(p)
     qvals = ", ".join(f"({q})" for q in qs_permille)
     mid = _mid_case_sql(p)
@@ -245,79 +176,18 @@ def hdr_quantiles_sql(
 
 # ------------------------------------------------------ grouped variant
 #
-# "p99 latency per endpoint" — the telemetry staple.  Identical bucket
-# math; state is ≤ buckets·groups cells; the quantile window partitions
-# on the GROUP key (never SinglePartition), so a hot group is bounded
-# by its bucket count (≤ ~4k), not its row count.
-
-
-def hdr_build_by_group(
-    df: DataFrame,
-    group_col: Column | str,
-    value: Column | str,
-    p: int = DEFAULT_PRECISION_BITS,
-) -> DataFrame:
-    """``grp, sign, bucket, cnt`` — :func:`hdr_build` per group.  NULL
-    groups are kept as their own group (real audit segments)."""
-    _check_p(p)
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    vc = F.col(value) if isinstance(value, str) else value
-    vm = _vm(vc)
-    base = df.select(
-        g.cast("string").alias("grp"), vm.alias("vm")
-    ).where(F.col("vm").isNotNull())
-    sign, bucket = _bucket_cols(p)
-    return (
-        base.select("grp", sign.alias("sign"), bucket.alias("bucket"))
-        .groupBy("grp", "sign", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def hdr_quantiles_by_group(
-    sketch: DataFrame,
-    qs_permille: tuple[int, ...] = (500, 990),
-    p: int = DEFAULT_PRECISION_BITS,
-) -> DataFrame:
-    """``grp, q_permille, n_rows, est_milli`` — per-group quantiles from
-    a grouped sketch."""
-    _check_p(p)
-    for q in qs_permille:
-        if not 1 <= q <= 1000:
-            raise ValueError("quantiles are permille values in 1..1000")
-    order = (F.col("sign") * (F.lit(1048576) + F.col("bucket"))).asc()
-    w = Window.partitionBy("grp").orderBy(order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wn = Window.partitionBy("grp")
-    cum = sketch.select(
-        "grp",
-        "sign",
-        "bucket",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(wn).alias("n"),
-    )
-    qdf = sketch.sparkSession.createDataFrame(
-        [(q,) for q in qs_permille], "q_permille int"
-    )
-    return (
-        qdf.crossJoin(cum)
-        .where(F.col("cum") >= F.expr("(q_permille * n + 999) div 1000"))
-        .groupBy("grp", "q_permille")
-        .agg(
-            F.max("n").cast("bigint").alias("n_rows"),
-            F.min_by(
-                F.expr(_midpoint_expr(p)),
-                F.col("sign") * (F.lit(1048576) + F.col("bucket")),
-            ).cast("bigint").alias("est_milli"),
-        )
-    )
+# "p99 latency per endpoint" — the telemetry staple, built in Spark by
+# the keyed operators with ``keys=["grp"]``.  Identical bucket math;
+# state is ≤ buckets·groups cells; the quantile window partitions on the
+# GROUP key (never SinglePartition), so a hot group is bounded by its
+# bucket count (≤ ~4k), not its row count.
 
 
 def hdr_build_by_group_sql(
     pairs_query: str, p: int = DEFAULT_PRECISION_BITS
 ) -> str:
-    """DuckDB twin over a subquery yielding ``grp, v``."""
+    """DuckDB twin of ``hdr_state_build(df, ["grp"], "v", p)`` over a
+    subquery yielding ``grp, v``."""
     _check_p(p)
     sign, bucket = _bucket_case_sql(p)
     return f"""
@@ -337,6 +207,7 @@ def hdr_quantiles_by_group_sql(
     qs_permille: tuple[int, ...] = (500, 990),
     p: int = DEFAULT_PRECISION_BITS,
 ) -> str:
+    """DuckDB twin of ``hdr_state_quantiles(sketch, ["grp"], qs_permille, p)``."""
     _check_p(p)
     qvals = ", ".join(f"({q})" for q in qs_permille)
     mid = _mid_case_sql(p)

@@ -215,13 +215,14 @@ def ledger_match(
     pref_c = nc.select("id", F.explode(_prefix_slice(alpha)).alias("sh"))
     gate_caches: list[DataFrame] = []
     if bloom_gate is not None:
-        from scholarmind_spark.operators.bloom import bloom_build, bloom_prune
+        from scholarmind_spark.operators.bloom import bloom_prune
+        from scholarmind_spark.operators.sketchledger import bloom_state_build
 
         m_words, kk = bloom_gate
         # persist(): pref_c feeds the filter build AND the candidate join
         pref_c = pref_c.persist()
         gate_caches.append(pref_c)
-        filt = bloom_build(pref_c, "sh", m_words, kk)
+        filt = bloom_state_build(pref_c, [], "sh", m_words, kk)
         pref_b = bloom_prune(pref_b, "sh", filt, m_words, kk)
     cand = (
         pref_b.alias("l")

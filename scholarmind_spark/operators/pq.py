@@ -440,10 +440,18 @@ def _encode_cells(df, coarse, sub_lits, m, w, id_col, vec_col, by_residual):
     """IVFADC cell-encode stage: ``id_col, cell, pq`` — each vector
     routed to its coarse cell, then PQ-encoded (raw or residual)."""
     routed, enc_in = _route(df, coarse, id_col, vec_col, by_residual)
+    if by_residual:
+        # let-bind the residual (the _argmin_code device): the m
+        # per-subspace slices would each re-evaluate its zip_with
+        pq = F.transform(
+            F.array(enc_in), lambda r: _encode_expr(sub_lits, r, m, w)
+        )[0]
+    else:
+        pq = _encode_expr(sub_lits, enc_in, m, w)
     return routed.select(
         id_col,
         F.col("cell").cast("long").alias("cell"),
-        _encode_expr(sub_lits, enc_in, m, w).alias("pq"),
+        pq.alias("pq"),
     )
 
 

@@ -266,93 +266,107 @@ def cap_cells(
     from scholarmind_spark.operators.kmeans import _assign
     from scholarmind_spark.util import unpersist_any
 
-    cents = centroids.select(
-        F.col("cid").cast("long").alias("cid"),
-        F.transform(F.col("cvec"), lambda x: x.cast("double")).alias("cvec"),
-    ).localCheckpoint(eager=True)
-
-    for _ in range(max_depth):
-        assigned = _assign(df, cents, id_col, vec_col)
-        over = (
-            assigned.groupBy("cell")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_cell)
-            .select(
-                "cell",
-                F.greatest(
-                    F.ceil(F.col("__n") / F.lit(max_cell)).cast("int"), F.lit(2)
-                ).alias("__k"),
-            )
-        ).localCheckpoint(eager=True)
-        if over.count() == 0:
-            unpersist_any(over)
-            break
-        members = (
-            assigned.join(over, "cell")
-            .select("cell", "__k", F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    # bound before the try: the except handler frees every live
+    # checkpoint (the pagerank discipline)
+    cents = over = members = sub = None
+    try:
+        cents = centroids.select(
+            F.col("cid").cast("long").alias("cid"),
+            F.transform(F.col("cvec"), lambda x: x.cast("double")).alias("cvec"),
         ).localCheckpoint(eager=True)
 
-        w = Window.partitionBy("cell").orderBy(F.xxhash64(F.col("id")), F.col("id"))
-        sub = (
-            members.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= F.col("__k"))
-            .select("cell", F.col("__rn").cast("long").alias("sub"),
-                    F.transform("v", lambda x: x.cast("double")).alias("cvec"))
-        ).localCheckpoint(eager=True)
-
-        for _i in range(iters):
-            dc = F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("v"), F.col("cvec"),
-                        lambda x, y: (x.cast("double") - y) ** 2,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, vv: acc + vv,
-                ).alias("d"),
-                F.col("sub").alias("sub"),
-            )
-            hit = (
-                members.join(sub, "cell")
-                .select("cell", "id", "v", dc.alias("dc"))
-                .groupBy("cell", "id")
-                .agg(F.min("dc")["sub"].alias("sub"), F.first("v").alias("v"))
-            )
-            means = (
-                hit.select("cell", "sub", F.posexplode("v").alias("pos", "x"))
-                .groupBy("cell", "sub", "pos")
-                .agg(F.avg("x").alias("m"))
-                .groupBy("cell", "sub")
-                .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        for _ in range(max_depth):
+            assigned = _assign(df, cents, id_col, vec_col)
+            over = (
+                assigned.groupBy("cell")
+                .agg(F.count("*").alias("__n"))
+                .filter(F.col("__n") > max_cell)
                 .select(
-                    "cell", "sub",
-                    F.transform("pm", lambda p: p["m"]).alias("cvec"),
+                    "cell",
+                    F.greatest(
+                        F.ceil(F.col("__n") / F.lit(max_cell)).cast("int"), F.lit(2)
+                    ).alias("__k"),
                 )
-            )
-            kept_subs = sub.join(means, ["cell", "sub"], "left_anti")
-            refreshed = means.unionByName(kept_subs).localCheckpoint(eager=True)
-            unpersist_any(sub)
-            sub = refreshed
+            ).localCheckpoint(eager=True)
+            if over.count() == 0:
+                unpersist_any(over)
+                break
+            members = (
+                assigned.join(over, "cell")
+                .select(
+                    "cell", "__k",
+                    F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
+                )
+            ).localCheckpoint(eager=True)
 
-        base = cents.agg(F.max("cid")).first()[0]
-        # codebook-sized single exchange (constant partition key stated
-        # explicitly — same plan, no spurious global-window warning)
-        w2 = Window.partitionBy(F.lit(0)).orderBy("cell", "sub")
-        new_cents = sub.select(
-            (F.lit(int(base)) + F.row_number().over(w2)).cast("long").alias("cid"),
-            "cvec",
-        )
-        refreshed_cents = (
-            cents.join(over.select(F.col("cell").alias("cid")), "cid", "left_anti")
-            .unionByName(new_cents)
-            .localCheckpoint(eager=True)
-        )
-        unpersist_any(cents)
-        unpersist_any(sub)
-        unpersist_any(members)
-        unpersist_any(over)
-        cents = refreshed_cents
-    return cents
+            w = Window.partitionBy("cell").orderBy(F.xxhash64(F.col("id")), F.col("id"))
+            sub = (
+                members.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") <= F.col("__k"))
+                .select("cell", F.col("__rn").cast("long").alias("sub"),
+                        F.transform("v", lambda x: x.cast("double")).alias("cvec"))
+            ).localCheckpoint(eager=True)
+
+            for _i in range(iters):
+                dc = F.struct(
+                    F.aggregate(
+                        F.zip_with(
+                            F.col("v"), F.col("cvec"),
+                            lambda x, y: (x.cast("double") - y) ** 2,
+                        ),
+                        F.lit(0.0),
+                        lambda acc, vv: acc + vv,
+                    ).alias("d"),
+                    F.col("sub").alias("sub"),
+                )
+                hit = (
+                    members.join(sub, "cell")
+                    .select("cell", "id", "v", dc.alias("dc"))
+                    .groupBy("cell", "id")
+                    .agg(F.min("dc")["sub"].alias("sub"), F.first("v").alias("v"))
+                )
+                means = (
+                    hit.select("cell", "sub", F.posexplode("v").alias("pos", "x"))
+                    .groupBy("cell", "sub", "pos")
+                    .agg(F.avg("x").alias("m"))
+                    .groupBy("cell", "sub")
+                    .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+                    .select(
+                        "cell", "sub",
+                        F.transform("pm", lambda p: p["m"]).alias("cvec"),
+                    )
+                )
+                kept_subs = sub.join(means, ["cell", "sub"], "left_anti")
+                refreshed = means.unionByName(kept_subs).localCheckpoint(eager=True)
+                unpersist_any(sub)
+                sub = refreshed
+
+            base = cents.agg(F.max("cid")).first()[0]
+            # codebook-sized single exchange (constant partition key stated
+            # explicitly — same plan, no spurious global-window warning)
+            w2 = Window.partitionBy(F.lit(0)).orderBy("cell", "sub")
+            new_cents = sub.select(
+                (F.lit(int(base)) + F.row_number().over(w2)).cast("long").alias("cid"),
+                "cvec",
+            )
+            refreshed_cents = (
+                cents.join(over.select(F.col("cell").alias("cid")), "cid", "left_anti")
+                .unionByName(new_cents)
+                .localCheckpoint(eager=True)
+            )
+            unpersist_any(cents)
+            unpersist_any(sub)
+            unpersist_any(members)
+            unpersist_any(over)
+            cents = refreshed_cents
+        # the codebook is itself a checkpoint: tagged so the caller's
+        # release_caches frees its blocks
+        return attach_caches(cents, [cents])
+    except BaseException:
+        for c in (cents, over, members, sub):
+            if c is not None:
+                unpersist_any(c)
+        raise
 
 
 def semdedup_sql(

@@ -44,6 +44,14 @@ Spark-first shape, sized for 100 TB:
 - both produce the SAME k minima (the global k smallest distinct hashes
   are contained in the union of per-partition k smallest), so the
   estimate does not depend on which path ran or how rows partition.
+
+The estimator, and every KEYED KMV sketch (per group, per day), is the
+single implementation in ``operators/sketchledger``: ``kmv_state_build``
+/ ``kmv_state_merge`` / ``kmv_state_estimate`` with ``keys=["grp"]`` for
+a per-group sketch; :func:`kmv_distinct_report` is ``kmv_state_estimate``
+over :func:`kmv_minima`.  The un-keyed minima, their merge and the
+overlap report stay here: their top-k plan with the Arrow prefilter is
+the O(P·k)-shuffle path the keyed window cap does not reproduce.
 """
 
 from __future__ import annotations
@@ -130,22 +138,16 @@ def kmv_distinct_report(
     k: int = DEFAULT_K,
     prefilter: bool = True,
 ) -> DataFrame:
-    """One row: ``k, n_minima, kth_hash, est_distinct``.
+    """One row: ``k, n_minima, kth_hash, est_distinct`` — the keyed
+    estimator ``sketchledger.kmv_state_estimate`` over the un-keyed
+    :func:`kmv_minima` (no key columns: one global row).
 
     ``kth_hash`` is the largest retained minimum (= the k-th smallest
     distinct hash when the set has ≥ k members)."""
-    minima = kmv_minima(df, col, k, prefilter=prefilter)
-    agg = minima.agg(
-        F.count("*").alias("n_minima"), F.max("h").alias("kth_hash")
-    )
-    return agg.select(
-        F.lit(k).alias("k"),
-        "n_minima",
-        "kth_hash",
-        _estimate_expr(F.col("n_minima"), F.col("kth_hash"), k).alias(
-            "est_distinct"
-        ),
-    )
+    from scholarmind_spark.operators.sketchledger import kmv_state_estimate
+
+    est = kmv_state_estimate(kmv_minima(df, col, k, prefilter=prefilter), k)
+    return est.select(F.lit(k).alias("k"), *est.columns)
 
 
 def kmv_minima_sql(values_query: str, k: int = DEFAULT_K) -> str:
@@ -560,56 +562,14 @@ FULL OUTER JOIN ({cells_b_query}) b
 # one reducer.  Keeping only the k smallest distinct hashes PER GROUP
 # bounds both: the shuffle carries ≤ k rows per group after the
 # map-side-combined distinct, and the estimator runs on k-row groups.
-
-
-def kmv_distinct_by_group(
-    df: DataFrame,
-    group_col: str | Column,
-    value_col: str | Column,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """``grp, n_minima, kth_hash, est_distinct`` per group — the
-    :func:`kmv_distinct_report` estimator applied groupwise.
-
-    Shape: distinct (grp, h) pairs (map-side combinable), then a
-    row_number window PARTITIONED BY grp keeps the k smallest — the
-    window partitions on the group key, never SinglePartition; a
-    degenerate hot group is bounded by its DISTINCT hash count before
-    ranking.  NULL groups are kept as their own group (a real segment
-    in audit outputs); NULL values are dropped (not set members)."""
-    if k < 2:
-        raise ValueError("kmv sketches need k >= 2 (the estimator uses k-1)")
-    from pyspark.sql import Window
-
-    g = _value_col(df, group_col)
-    v = _value_col(df, value_col)
-    pairs = (
-        df.select(g.cast("string").alias("grp"), minhash_base(v).alias("h"))
-        .where(F.col("h").isNotNull())
-        .distinct()
-    )
-    w = Window.partitionBy("grp").orderBy("h")
-    minima = pairs.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= k
-    )
-    agg = minima.groupBy("grp").agg(
-        F.count("*").alias("n_minima"), F.max("h").alias("kth_hash")
-    )
-    return agg.select(
-        "grp",
-        "n_minima",
-        "kth_hash",
-        _estimate_expr(F.col("n_minima"), F.col("kth_hash"), k).alias(
-            "est_distinct"
-        ),
-    )
+# The Spark side is the keyed ``sketchledger`` pair with ``keys=["grp"]``.
 
 
 def kmv_distinct_by_group_sql(
     pairs_query: str, k: int = DEFAULT_K
 ) -> str:
-    """DuckDB twin of :func:`kmv_distinct_by_group` over a subquery
-    yielding ``grp, v``."""
+    """DuckDB twin of ``kmv_state_estimate(kmv_state_build(df,
+    ["grp"], "v", k), k)`` over a subquery yielding ``grp, v``."""
     if k < 2:
         raise ValueError("kmv sketches need k >= 2 (the estimator uses k-1)")
     h = minhash_base_sql("v")

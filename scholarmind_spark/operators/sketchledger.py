@@ -10,7 +10,14 @@ then-rank for KMV minima, ``bit_or`` for Bloom words), and answers
 drift questions FROM STATE ONLY.  This module applies the dedup-ledger
 contract (content-pure keyed rows + associative fold + query-time
 answer; ``ledger.py``) to the sketch family the battery already has
-(``hdr.py``, ``sketch.py``, ``bloom.py``):
+(``hdr.py``, ``sketch.py``, ``bloom.py``).  The keyed operators here are
+the ONLY Spark implementation of HDR build/merge/quantiles, of the KMV
+estimator and of Bloom build/merge: ``keys=[]`` is the plain sketch (one
+global sketch, no key columns), ``keys=["grp"]`` the per-group one, so
+batch sketches and maintained state are the same code.  The families'
+modules keep the shared hash/bucket math, the DuckDB twins, and the
+operators with no keyed equivalent (the un-keyed KMV top-k path, Bloom
+probes, CMS).  The state tables:
 
 - **HDR state** ``(*keys, sign, bucket, cnt)`` — per-key log-bucket
   histograms; fold = groupBy-sum.  Answers per-key quantiles and
@@ -35,9 +42,9 @@ data — HDR ≤ ~4k cells, KMV ≤ k rows, Bloom ≤ m_words rows, each PER
 KEY — so a year of daily state for 1000 segments is a few GB of
 parquet, and each fold shuffles O(state) rows.  All groupBys are
 map-side combinable; the quantile windows partition on the key (never
-SinglePartition).  Geometry (``p``/``k``/``m_words``) is a caller
-contract stored next to the state table, exactly as for the
-un-keyed sketches."""
+SinglePartition, unless ``keys=[]`` makes the whole bounded sketch one
+partition).  Geometry (``p``/``k``/``m_words``) is a caller contract
+stored next to the state table."""
 
 from __future__ import annotations
 
@@ -86,9 +93,9 @@ def hdr_state_build(
 ) -> DataFrame:
     """``*keys, sign, bucket, cnt`` — one HDR sketch per key tuple.
     Key columns are cast to string (the grouped-sketch convention);
-    NULL keys form their own group.  Bucket math is the single-home
-    ``hdr._bucket_cols`` — this builder can never diverge from the
-    un-keyed one."""
+    NULL keys form their own group; ``keys=[]`` is the plain sketch
+    ``sign, bucket, cnt``.  Bucket math is the single-home
+    ``hdr._bucket_cols``, which the ``hdr.*_sql`` twins mirror."""
     _check_p(p)
     vc = F.col(value) if isinstance(value, str) else value
     base = df.select(
@@ -295,30 +302,17 @@ def kmv_state_estimate(state: DataFrame, k: int = 64) -> DataFrame:
     agg = state.groupBy(*keys).agg(
         F.count("*").alias("n_minima"), F.max("h").alias("kth_hash")
     )
-    n_guarded = F.when(
-        F.assert_true(
-            F.col("n_minima") <= F.lit(k),
-            F.lit(
-                "kmv_state_estimate: a key holds more than k minima — "
-                "the state was built/merged under a larger k than the "
-                "one passed here; the kth_hash is not the k-th minimum "
-                "and the estimate would be silently wrong"
-            ),
-        ).isNull(),
-        F.col("n_minima"),
-    )
-    kth_guarded = F.when(
-        F.assert_true(
-            F.col("n_minima") <= F.lit(k),
-            F.lit(
-                "kmv_state_estimate: a key holds more than k minima — "
-                "the state was built/merged under a larger k than the "
-                "one passed here; the kth_hash is not the k-th minimum "
-                "and the estimate would be silently wrong"
-            ),
-        ).isNull(),
-        F.col("kth_hash"),
-    )
+    k_ok = F.assert_true(
+        F.col("n_minima") <= F.lit(k),
+        F.lit(
+            "kmv_state_estimate: a key holds more than k minima — "
+            "the state was built/merged under a larger k than the "
+            "one passed here; the kth_hash is not the k-th minimum "
+            "and the estimate would be silently wrong"
+        ),
+    ).isNull()
+    n_guarded = F.when(k_ok, F.col("n_minima"))
+    kth_guarded = F.when(k_ok, F.col("kth_hash"))
     # the guard must live in EVERY output column an estimate consumer
     # can project — n_minima, kth_hash AND est_distinct each embed it —
     # so Catalyst column pruning cannot drop the assertion whichever
@@ -342,9 +336,10 @@ def bloom_state_build(
     k: int = 4,
 ) -> DataFrame:
     """``*keys, word, bits`` — one Bloom filter per key tuple, ≤
-    ``m_words`` rows each.  Bit positions come from the single-home
-    ``bloom._positions`` so keyed and un-keyed filters stay probe-
-    compatible."""
+    ``m_words`` rows each; ``keys=[]`` is the plain filter ``word,
+    bits`` that ``bloom.bloom_contains``/``bloom_prune`` probe.  Bit
+    positions come from the single-home ``bloom._positions``, so every
+    filter built here is probe-compatible with those probes."""
     _bloom_check(m_words, k)
     vc = (F.col(value) if isinstance(value, str) else value).cast("string")
     vals = df.select(

@@ -6401,19 +6401,21 @@ gate("dedup_ledger_roundtrip", dedup_ledger_roundtrip, _dedup_ledger_roundtrip_s
 
 
 def events_hdr_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group HDR quantiles (operators/hdr hdr_*_by_group): p50/p99
-    of the event value PER EVENT TYPE — the "latency per endpoint"
-    telemetry staple; the quantile window partitions on the group key
-    and each group's ranked state is bounded by the sketch's bucket
-    count, never its row count."""
-    from scholarmind_spark.operators.hdr import (
-        hdr_build_by_group,
-        hdr_quantiles_by_group,
+    """Per-group HDR quantiles (operators/sketchledger hdr_state_* with
+    ``keys=["grp"]``): p50/p99 of the event value PER EVENT TYPE — the
+    "latency per endpoint" telemetry staple; the quantile window
+    partitions on the group key and each group's ranked state is bounded
+    by the sketch's bucket count, never its row count."""
+    from scholarmind_spark.operators.sketchledger import (
+        hdr_state_build,
+        hdr_state_quantiles,
     )
 
-    e = _events(spark, sf_dir)
-    sk = hdr_build_by_group(e, "event_type", "value")
-    return hdr_quantiles_by_group(sk, (500, 990)).orderBy(
+    e = _events(spark, sf_dir).select(
+        F.col("event_type").alias("grp"), "value"
+    )
+    sk = hdr_state_build(e, ["grp"], "value")
+    return hdr_state_quantiles(sk, ["grp"], (500, 990)).orderBy(
         "grp", "q_permille"
     )
 
@@ -6912,7 +6914,7 @@ def dedup_ledger_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     match counts + digest equality (MUST be equal — Bloom never
     false-negatives, so no candidate is lost), plus the batch prefix
     keep ratio the gate achieved."""
-    from scholarmind_spark.operators.bloom import bloom_build, bloom_prune
+    from scholarmind_spark.operators.bloom import bloom_prune
     from scholarmind_spark.operators.ledger import (
         ledger_append,
         ledger_counts_merge,
@@ -6922,6 +6924,7 @@ def dedup_ledger_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         ledger_shingle_counts,
     )
     from scholarmind_spark.operators.neardup import minhash_base
+    from scholarmind_spark.operators.sketchledger import bloom_state_build
     from scholarmind_spark.util import attach_caches
 
     M_W, K_H = 1024, 4
@@ -6953,7 +6956,9 @@ def dedup_ledger_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operator API wins over the one-off cost
     pref_b = ledger_prefix_rows(fpC, counts, 0.5, 100).persist()
     pref_c = ledger_prefix_rows(corpus_fp, counts, 0.5, 100)
-    kept = bloom_prune(pref_b, "sh", bloom_build(pref_c, "sh", M_W, K_H), M_W, K_H)
+    kept = bloom_prune(
+        pref_b, "sh", bloom_state_build(pref_c, [], "sh", M_W, K_H), M_W, K_H
+    )
 
     def digest(m):
         key = F.concat_ws(
@@ -7097,7 +7102,8 @@ def orders_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     passing pattern (Spark's own runtime bloom filters).  One row: probe
     /kept sizes, pruned-vs-plain join row counts, and the equality flag
     the never-false-negative property guarantees."""
-    from scholarmind_spark.operators.bloom import bloom_build, bloom_prune
+    from scholarmind_spark.operators.bloom import bloom_prune
+    from scholarmind_spark.operators.sketchledger import bloom_state_build
     from scholarmind_spark.util import attach_caches
 
     m_words, k = 256, 4
@@ -7105,7 +7111,7 @@ def orders_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment") == "AUTOMOBILE"
     ).select(F.col("c_custkey").alias("ck"))
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    sk = bloom_build(c, "ck", m_words, k).persist()
+    sk = bloom_state_build(c, [], "ck", m_words, k).persist()
     # `pruned` has two consumers (n_kept count + the pruned join) but is
     # deliberately NOT persisted: the probe filter is a cheap map-side
     # projection (4 md5s/row, no shuffle), and re-running it twice
@@ -7722,18 +7728,20 @@ gate("events_time_bars", events_time_bars, _events_time_bars_sql())
 
 
 def events_kmv_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group KMV distinct sketch (operators/sketch
-    kmv_distinct_by_group): estimated distinct users per event type
-    from k=64 minima per group — the grouped form of
-    sketch_distinct_kmv, whose exact twin would shuffle every distinct
-    (type, user) pair; the sketch bounds the ranked state at k per
-    group."""
-    from scholarmind_spark.operators.sketch import kmv_distinct_by_group
-
-    e = _events(spark, sf_dir)
-    return kmv_distinct_by_group(
-        e, "event_type", F.col("user_id").cast("string"), k=64
+    """Per-group KMV distinct sketch (operators/sketchledger kmv_state_*
+    with ``keys=["grp"]``): estimated distinct users per event type from
+    k=64 minima per group — the grouped form of sketch_distinct_kmv,
+    whose exact twin would shuffle every distinct (type, user) pair; the
+    sketch bounds the ranked state at k per group."""
+    from scholarmind_spark.operators.sketchledger import (
+        kmv_state_build,
+        kmv_state_estimate,
     )
+
+    e = _events(spark, sf_dir).select(
+        F.col("event_type").alias("grp"), "user_id"
+    )
+    return kmv_state_estimate(kmv_state_build(e, ["grp"], "user_id", k=64), k=64)
 
 
 def _events_kmv_by_segment_sql() -> str:
@@ -7755,22 +7763,25 @@ def events_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HDR-style log-bucket quantile sketch (operators/hdr): p50/p90/p99
     of the event value from a mergeable fixed-size histogram (≤2⁻⁵
     relative error), with the fold contract exhibited in-row — three
-    per-batch sketches folded with hdr_merge must EQUAL the direct
+    per-batch sketches folded with hdr_state_merge must EQUAL the direct
     sketch (digest compare), the same incremental-maintenance pattern
-    as sketch_merge_incremental."""
-    from scholarmind_spark.operators.hdr import (
-        hdr_build,
-        hdr_merge,
-        hdr_quantiles,
+    as sketch_merge_incremental.  The sketches are the keyed
+    operators/sketchledger ones with ``keys=[]``."""
+    from scholarmind_spark.operators.sketchledger import (
+        hdr_state_build,
+        hdr_state_merge,
+        hdr_state_quantiles,
     )
 
     e = _events(spark, sf_dir).select("event_id", "value")
-    direct = hdr_build(e, "value").persist()
+    direct = hdr_state_build(e, [], "value").persist()
     batches = [
-        hdr_build(e.where(F.col("event_id") % 3 == i), "value")
+        hdr_state_build(e.where(F.col("event_id") % 3 == i), [], "value")
         for i in range(3)
     ]
-    merged = hdr_merge(hdr_merge(batches[0], batches[1]), batches[2])
+    merged = hdr_state_merge(
+        hdr_state_merge(batches[0], batches[1]), batches[2]
+    )
     dig = F.coalesce(
         F.sum(
             (((F.col("sign") + 1) * 1048576 + F.col("bucket")) % 16777213)
@@ -7780,7 +7791,7 @@ def events_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dm = merged.agg(dig.alias("dig_m"))
     dd = direct.agg(dig.alias("dig_d"))
-    q = hdr_quantiles(direct, (500, 900, 990))
+    q = hdr_state_quantiles(direct, [], (500, 900, 990))
     from scholarmind_spark.util import attach_caches
 
     out = (
@@ -7838,10 +7849,10 @@ def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     the no-false-negative guarantee exhibited (every true member
     reports contained) and the measured false-positive count/rate on
     the absent side — the production pre-filter contract."""
-    from scholarmind_spark.operators.bloom import (
-        bloom_build,
-        bloom_contains,
-        bloom_merge,
+    from scholarmind_spark.operators.bloom import bloom_contains
+    from scholarmind_spark.operators.sketchledger import (
+        bloom_state_build,
+        bloom_state_merge,
     )
     from scholarmind_spark.util import attach_caches
 
@@ -7849,12 +7860,16 @@ def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         F.col("o_custkey").cast("string").alias("v"), "o_orderkey"
     )
-    direct = bloom_build(o, "v", m_words, k).persist()
+    direct = bloom_state_build(o, [], "v", m_words, k).persist()
     batches = [
-        bloom_build(o.where(F.col("o_orderkey") % 3 == i), "v", m_words, k)
+        bloom_state_build(
+            o.where(F.col("o_orderkey") % 3 == i), [], "v", m_words, k
+        )
         for i in range(3)
     ]
-    merged = bloom_merge(bloom_merge(batches[0], batches[1]), batches[2])
+    merged = bloom_state_merge(
+        bloom_state_merge(batches[0], batches[1]), batches[2]
+    )
     dig = F.coalesce(
         F.sum((F.col("word") + 1) * (F.col("bits") % 1000003)), F.lit(0)
     )

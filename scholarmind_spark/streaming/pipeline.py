@@ -353,7 +353,6 @@ def run_to_memory(
     stream_df: DataFrame,
     mode: str = "complete",
     name: str | None = None,
-    shuffle_partitions: int = 32,
 ) -> DataFrame:
     """Drain a stream with availableNow into an in-memory table and return
     it as a batch DataFrame (test/verification harness).
@@ -361,8 +360,10 @@ def run_to_memory(
     A streaming query fixes its state-store partition count from
     ``spark.sql.shuffle.partitions`` at START (no AQE coalescing in
     streaming) — on a default session that is 200 state-store tasks per
-    microbatch regardless of data size.  The conf is pinned for the start
-    and restored after the drain.
+    microbatch regardless of data size.  The drain pins it to the
+    context's ``defaultParallelism`` (one state store per core: the N of
+    ``local[N]``) for the start and restores it after the drain; stream
+    results do not depend on the partition count.
 
     availableNow appends one NO-DATA microbatch after the last data batch
     when watermarks advanced, whose only jobs are eager state cleanup and
@@ -389,7 +390,10 @@ def run_to_memory(
     prev_ndb = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(spark.sparkContext.defaultParallelism),
+    )
     spark.conf.set(
         "spark.sql.streaming.noDataMicroBatches.enabled",
         "true" if final_batch else "false",

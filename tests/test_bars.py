@@ -7,9 +7,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from scholarmind_spark.operators.bars import time_bars, time_bars_sql
-from scholarmind_spark.operators.sketch import (
-    kmv_distinct_by_group,
-    kmv_distinct_by_group_sql,
+from scholarmind_spark.operators.sketch import kmv_distinct_by_group_sql
+from scholarmind_spark.operators.sketchledger import (
+    kmv_state_build,
+    kmv_state_estimate,
 )
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -158,7 +159,7 @@ def test_kmv_by_group_exact_below_k_and_twin(spark):
     rows = [(g, f"u{i % n}") for g, n in [("a", 10), ("b", 40)] for i in range(200)]
     df = spark.createDataFrame(rows, "grp string, v string")
     got = {r["grp"]: r for r in
-           kmv_distinct_by_group(df, "grp", "v", k=64).collect()}
+           kmv_state_estimate(kmv_state_build(df, ["grp"], "v", k=64), k=64).collect()}
     # below k: the estimate is EXACT (n_min < k branch)
     assert got["a"]["est_distinct"] == 10 and got["a"]["n_minima"] == 10
     assert got["b"]["est_distinct"] == 40
@@ -168,14 +169,15 @@ def test_kmv_by_group_exact_below_k_and_twin(spark):
     con.executemany("INSERT INTO t VALUES (?,?)", rows)
     q = kmv_distinct_by_group_sql("SELECT grp, v FROM t", k=64)
     oracle = sorted(con.execute(f"SELECT * FROM {q}").fetchall())
+    sketch = kmv_state_build(df, ["grp"], "v", k=64)
     assert sorted(tuple(r) for r in
-                  kmv_distinct_by_group(df, "grp", "v", k=64).collect()) == oracle
+                  kmv_state_estimate(sketch, k=64).collect()) == oracle
 
 
 def test_kmv_by_group_estimates_above_k(spark):
     rows = [("big", f"user-{i}") for i in range(2000)]
     df = spark.createDataFrame(rows, "grp string, v string")
-    r = kmv_distinct_by_group(df, "grp", "v", k=128).collect()[0]
+    r = kmv_state_estimate(kmv_state_build(df, ["grp"], "v", k=128), k=128).collect()[0]
     assert r["n_minima"] == 128
     # KMV standard error ~ 1/sqrt(k-1) ≈ 9% at k=128; allow 3 sigma
     assert abs(r["est_distinct"] - 2000) < 2000 * 0.27
@@ -185,5 +187,5 @@ def test_kmv_by_group_null_group_kept_null_value_dropped(spark):
     rows = [(None, "x"), (None, "y"), ("g", None), ("g", "z")]
     df = spark.createDataFrame(rows, "grp string, v string")
     got = {r["grp"]: r["est_distinct"] for r in
-           kmv_distinct_by_group(df, "grp", "v", k=8).collect()}
+           kmv_state_estimate(kmv_state_build(df, ["grp"], "v", k=8), k=8).collect()}
     assert got == {None: 2, "g": 1}

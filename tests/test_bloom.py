@@ -6,12 +6,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from scholarmind_spark.operators.bloom import (
-    bloom_build,
     bloom_build_sql,
     bloom_contains,
     bloom_contains_sql,
-    bloom_merge,
     bloom_merge_sql,
+)
+from scholarmind_spark.operators.sketchledger import (
+    bloom_state_build,
+    bloom_state_merge,
 )
 
 MEMBERS = [f"key-{i}" for i in range(200)]
@@ -20,7 +22,7 @@ ABSENT = [f"nope-{i}" for i in range(200)]
 
 def test_no_false_negatives_and_some_discrimination(spark):
     df = spark.createDataFrame([(v,) for v in MEMBERS], ["v"])
-    sk = bloom_build(df, "v", m_words=64, k=4)
+    sk = bloom_state_build(df, [], "v", m_words=64, k=4)
     probes = spark.createDataFrame([(v,) for v in MEMBERS + ABSENT], ["v"])
     got = {
         r["key"]: r["contained"]
@@ -39,15 +41,17 @@ def test_merge_fold_equals_direct(spark):
     )
     direct = {
         r["word"]: r["bits"]
-        for r in bloom_build(df, "v", m_words=32, k=3).collect()
+        for r in bloom_state_build(df, [], "v", m_words=32, k=3).collect()
     }
     parts = [
-        bloom_build(df.filter(F.col("i") % 3 == j), "v", m_words=32, k=3)
+        bloom_state_build(df.filter(F.col("i") % 3 == j), [], "v", m_words=32, k=3)
         for j in range(3)
     ]
     merged = {
         r["word"]: r["bits"]
-        for r in bloom_merge(bloom_merge(parts[0], parts[1]), parts[2]).collect()
+        for r in bloom_state_merge(
+            bloom_state_merge(parts[0], parts[1]), parts[2]
+        ).collect()
     }
     assert merged == direct
 
@@ -56,7 +60,7 @@ def test_sign_bit_never_set(spark):
     """63 data bits per word: every stored word stays non-negative, so
     cross-engine comparison/hashing of the bigint is unambiguous."""
     df = spark.createDataFrame([(v,) for v in MEMBERS], ["v"])
-    for r in bloom_build(df, "v", m_words=8, k=4).collect():
+    for r in bloom_state_build(df, [], "v", m_words=8, k=4).collect():
         assert r["bits"] >= 0
 
 
@@ -64,7 +68,7 @@ def test_duckdb_twin(spark):
     rows = [(v,) for v in MEMBERS[:50]]
     df = spark.createDataFrame(rows, ["v"])
     s_build = sorted(
-        tuple(r) for r in bloom_build(df, "v", m_words=16, k=3).collect()
+        tuple(r) for r in bloom_state_build(df, [], "v", m_words=16, k=3).collect()
     )
     con = duckdb.connect()
     con.execute("CREATE TABLE t (v VARCHAR)")
@@ -79,7 +83,7 @@ def test_duckdb_twin(spark):
     s_cont = sorted(
         tuple(r)
         for r in bloom_contains(
-            bloom_build(df, "v", m_words=16, k=3), probes, "v",
+            bloom_state_build(df, [], "v", m_words=16, k=3), probes, "v",
             m_words=16, k=3,
         ).collect()
     )
@@ -100,7 +104,7 @@ def test_duckdb_twin(spark):
 
 def test_null_keys_dropped(spark):
     df = spark.createDataFrame([("a",), (None,)], ["v"])
-    sk = bloom_build(df, "v", m_words=4, k=2)
+    sk = bloom_state_build(df, [], "v", m_words=4, k=2)
     probes = spark.createDataFrame([("a",), (None,)], ["v"])
     got = bloom_contains(sk, probes, "v", m_words=4, k=2).collect()
     assert len(got) == 1 and got[0]["key"] == "a" and got[0]["contained"] == 1
@@ -110,7 +114,7 @@ def test_geometry_validation(spark):
     df = spark.createDataFrame([("a",)], ["v"])
     for bad_kwargs in ({"m_words": 0}, {"k": 0}, {"k": 17}):
         with pytest.raises(ValueError):
-            bloom_build(df, "v", **bad_kwargs)
+            bloom_state_build(df, [], "v", **bad_kwargs)
         with pytest.raises(ValueError):
             bloom_build_sql("SELECT v FROM t", **bad_kwargs)
 
@@ -124,7 +128,7 @@ def test_prune_then_join_equals_plain_join(spark):
     probe = spark.createDataFrame(
         [(v, i) for i, v in enumerate(MEMBERS[:80] + ABSENT)], ["key", "x"]
     )
-    sk = bloom_build(build, "key", m_words=32, k=4)
+    sk = bloom_state_build(build, [], "key", m_words=32, k=4)
     pruned = bloom_prune(probe, "key", sk, m_words=32, k=4)
     plain = sorted(tuple(r) for r in probe.join(build, "key").collect())
     via_prune = sorted(tuple(r) for r in pruned.join(build, "key").collect())
@@ -142,7 +146,7 @@ def test_prune_duckdb_twin(spark):
     probe_rows = [(v, i) for i, v in enumerate(MEMBERS[:60] + ABSENT[:60])]
     build = spark.createDataFrame(build_rows, ["key"])
     probe = spark.createDataFrame(probe_rows, ["key", "x"])
-    sk = bloom_build(build, "key", m_words=16, k=3)
+    sk = bloom_state_build(build, [], "key", m_words=16, k=3)
     got = sorted(
         tuple(r) for r in bloom_prune(probe, "key", sk, m_words=16, k=3).collect()
     )

@@ -8,12 +8,14 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from scholarmind_spark.operators.hdr import (
-    hdr_build,
     hdr_build_sql,
-    hdr_merge,
     hdr_merge_sql,
-    hdr_quantiles,
     hdr_quantiles_sql,
+)
+from scholarmind_spark.operators.sketchledger import (
+    hdr_state_build,
+    hdr_state_merge,
+    hdr_state_quantiles,
 )
 
 P = 5
@@ -61,7 +63,7 @@ def test_build_matches_python_reference(spark):
     df = spark.createDataFrame([(v,) for v in vals], "v double")
     got = {
         (r["sign"], r["bucket"]): r["cnt"]
-        for r in hdr_build(df, "v", P).collect()
+        for r in hdr_state_build(df, [], "v", P).collect()
     }
     import math
 
@@ -80,7 +82,7 @@ def test_non_finite_and_null_dropped(spark):
         [(1.0,), (float("nan"),), (float("inf"),), (-float("inf"),), (None,)],
         "v double",
     )
-    cells = hdr_build(df, "v").collect()
+    cells = hdr_state_build(df, [], "v").collect()
     assert sum(r["cnt"] for r in cells) == 1
 
 
@@ -92,12 +94,16 @@ def test_merge_fold_equals_direct(spark):
     df = spark.createDataFrame(vals, "id int, v double")
     direct = {
         (r["sign"], r["bucket"]): r["cnt"]
-        for r in hdr_build(df, "v").collect()
+        for r in hdr_state_build(df, [], "v").collect()
     }
-    parts = [hdr_build(df.filter(F.col("id") % 3 == i), "v") for i in range(3)]
+    parts = [
+        hdr_state_build(df.filter(F.col("id") % 3 == i), [], "v") for i in range(3)
+    ]
     merged = {
         (r["sign"], r["bucket"]): r["cnt"]
-        for r in hdr_merge(hdr_merge(parts[0], parts[1]), parts[2]).collect()
+        for r in hdr_state_merge(
+            hdr_state_merge(parts[0], parts[1]), parts[2]
+        ).collect()
     }
     assert merged == direct
 
@@ -105,8 +111,11 @@ def test_merge_fold_equals_direct(spark):
 def test_quantiles_near_exact(spark):
     vals = [float(i) for i in range(1, 1001)]  # 1..1000
     df = spark.createDataFrame([(v,) for v in vals], "v double")
-    sk = hdr_build(df, "v")
-    q = {r["q_permille"]: r for r in hdr_quantiles(sk, (500, 900, 990)).collect()}
+    sk = hdr_state_build(df, [], "v")
+    q = {
+        r["q_permille"]: r
+        for r in hdr_state_quantiles(sk, [], (500, 900, 990)).collect()
+    }
     for qp in (500, 900, 990):
         exact = qp  # value == permille here
         est = q[qp]["est_milli"] / 1000.0
@@ -118,7 +127,7 @@ def test_duckdb_twin_build_and_quantiles(spark):
     vals = [0.0, 0.001, -0.5, 1.0, 2.0, 4.0, 7.99, -1024.5, 31.25, 0.064,
             123456.789, -0.002]
     df = spark.createDataFrame([(v,) for v in vals], "v double")
-    srows = sorted(tuple(r) for r in hdr_build(df, "v").collect())
+    srows = sorted(tuple(r) for r in hdr_state_build(df, [], "v").collect())
     con = duckdb.connect()
     con.execute("CREATE TABLE t (v DOUBLE)")
     con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in vals])
@@ -128,7 +137,9 @@ def test_duckdb_twin_build_and_quantiles(spark):
 
     sq = sorted(
         tuple(r)
-        for r in hdr_quantiles(hdr_build(df, "v"), (250, 500, 750)).collect()
+        for r in hdr_state_quantiles(
+            hdr_state_build(df, [], "v"), [], (250, 500, 750)
+        ).collect()
     )
     oq = sorted(
         con.execute(
@@ -146,11 +157,11 @@ def test_duckdb_twin_build_and_quantiles(spark):
 def test_validation(spark):
     df = spark.createDataFrame([(1.0,)], "v double")
     with pytest.raises(ValueError):
-        hdr_build(df, "v", p=0)
+        hdr_state_build(df, [], "v", p=0)
     with pytest.raises(ValueError):
         hdr_build_sql("SELECT v FROM t", p=11)
     with pytest.raises(ValueError):
-        hdr_quantiles(hdr_build(df, "v"), (0,))
+        hdr_state_quantiles(hdr_state_build(df, [], "v"), [], (0,))
 
 
 def test_grouped_build_and_quantiles_match_global_per_group(spark):
@@ -158,15 +169,10 @@ def test_grouped_build_and_quantiles_match_global_per_group(spark):
     that group's rows, and the grouped quantiles match the global ones."""
     import random
 
-    from scholarmind_spark.operators.hdr import (
-        hdr_build_by_group,
-        hdr_quantiles_by_group,
-    )
-
     rng = random.Random(11)
     rows = [("a" if i % 3 else "b", rng.uniform(-50, 500)) for i in range(400)]
     df = spark.createDataFrame(rows, "grp string, v double")
-    grouped = hdr_build_by_group(df, "grp", "v")
+    grouped = hdr_state_build(df, ["grp"], "v")
     for g in ("a", "b"):
         sub = {
             (r["sign"], r["bucket"]): r["cnt"]
@@ -174,19 +180,19 @@ def test_grouped_build_and_quantiles_match_global_per_group(spark):
         }
         solo = {
             (r["sign"], r["bucket"]): r["cnt"]
-            for r in hdr_build(df.where(F.col("grp") == g), "v").collect()
+            for r in hdr_state_build(df.where(F.col("grp") == g), [], "v").collect()
         }
         assert sub == solo, g
         gq = {
             r["q_permille"]: r["est_milli"]
-            for r in hdr_quantiles_by_group(grouped, (500, 990)).where(
+            for r in hdr_state_quantiles(grouped, ["grp"], (500, 990)).where(
                 F.col("grp") == g
             ).collect()
         }
         sq = {
             r["q_permille"]: r["est_milli"]
-            for r in hdr_quantiles(
-                hdr_build(df.where(F.col("grp") == g), "v"), (500, 990)
+            for r in hdr_state_quantiles(
+                hdr_state_build(df.where(F.col("grp") == g), [], "v"), [], (500, 990)
             ).collect()
         }
         assert gq == sq, g
@@ -194,9 +200,7 @@ def test_grouped_build_and_quantiles_match_global_per_group(spark):
 
 def test_grouped_duckdb_twin(spark):
     from scholarmind_spark.operators.hdr import (
-        hdr_build_by_group,
         hdr_build_by_group_sql,
-        hdr_quantiles_by_group,
         hdr_quantiles_by_group_sql,
     )
 
@@ -206,8 +210,8 @@ def test_grouped_duckdb_twin(spark):
     key = lambda t: (t[0] is not None, t[0] or "", t[1])
     got = sorted(
         (tuple(r)
-         for r in hdr_quantiles_by_group(
-             hdr_build_by_group(df, "grp", "v"), (250, 750)
+         for r in hdr_state_quantiles(
+             hdr_state_build(df, ["grp"], "v"), ["grp"], (250, 750)
          ).collect()),
         key=key,
     )

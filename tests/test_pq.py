@@ -228,6 +228,32 @@ def test_ivfadc_residual_exact_on_representable_corpus(spark):
     assert set(got) == {0, 3}
 
 
+def test_ivfadc_residual_encoded_once_per_row(spark):
+    """Residual mode computes each vector's residual once before its m
+    subspace encodes: its surplus of ``zip_with`` over raw mode in the
+    executed plan does not grow with m."""
+    from scholarmind_spark.operators.pq import ivfadc_topk
+
+    rows = [
+        (i, [float((i * 7 + j * 3) % 5) - 2.0 + 40.0 * (i % 2) for j in range(DIM)])
+        for i in range(16)
+    ]
+    df = _df(spark, rows)
+    q = _q(spark, rows, [0, 1])
+
+    def zip_withs(m, by_residual):
+        out = ivfadc_topk(
+            df, q, k=3, m=m, dim=DIM, coarse_ids=[0, 1],
+            codebook_ids=[0, 1, 2, 3], by_residual=by_residual,
+        )
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return plan.count("zip_with")
+
+    surplus = {m: zip_withs(m, True) - zip_withs(m, False) for m in (2, 4)}
+    assert surplus[2] == surplus[4]
+
+
 def test_ivfadc_residual_beats_raw_on_clustered_corpus(spark):
     """The paper's reason for residual encoding, measured: on a
     2-cluster corpus with a shared within-cluster shape, the same code

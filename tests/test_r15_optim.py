@@ -6,8 +6,8 @@ changed keep their exact semantics.
   pin the (count, gram length, hash) DESC tie-break on crafted ties.
 - queries._t memoizes the loaded frame per (session, dir, table) —
   pin reuse and that no persisted (cached) data backs it.
-- pagerank's checkpoint cadence is configurable — pin that every-round
-  and every-2-rounds produce identical integer fixed points.
+- pagerank checkpoints every 2 rounds and after the last — pin that an
+  off-cadence round count reaches the DuckDB twin's integer fixed point.
 - PQ codeword tables are single nested-array literals — pin encode and
   ADC against the brute-force Python computation.
 - ledger_fingerprints is a pure projection (sort_array over the hashed
@@ -63,20 +63,26 @@ def test_t_memo_reuses_frame_and_caches_nothing(spark, tmp_path):
 
 
 def test_pagerank_checkpoint_cadence_is_result_invariant(spark):
-    from scholarmind_spark.operators.graph import pagerank
+    """Five rounds end off the every-2 cadence (checkpoints after rounds
+    2, 4 and the final 5): the fixed point equals the DuckDB twin, which
+    has no checkpoints at all."""
+    import duckdb
 
-    edges = spark.createDataFrame(
-        [(1, 2, 1), (2, 3, 2), (3, 1, 1), (4, 1, 3), (5, 5, 1)],
-        "src long, dst long, weight long",
+    from scholarmind_spark.operators.graph import pagerank, pagerank_sql
+    from scholarmind_spark.util import release_caches
+
+    rows = [(1, 2, 1), (2, 3, 2), (3, 1, 1), (4, 1, 3), (5, 5, 1)]
+    edges = spark.createDataFrame(rows, "src long, dst long, weight long")
+    out = pagerank(edges, iterations=5)
+    r1 = {(r.node, r.rank_micro) for r in out.collect()}
+    release_caches(out)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE e (src BIGINT, dst BIGINT, weight BIGINT)")
+    con.executemany("INSERT INTO e VALUES (?, ?, ?)", rows)
+    r2 = set(
+        con.sql(pagerank_sql("SELECT src, dst, weight FROM e", iterations=5))
+        .fetchall()
     )
-    r1 = {
-        (r.node, r.rank_micro)
-        for r in pagerank(edges, iterations=5, checkpoint_every=1).collect()
-    }
-    r2 = {
-        (r.node, r.rank_micro)
-        for r in pagerank(edges, iterations=5, checkpoint_every=2).collect()
-    }
     assert r1 == r2
 
 

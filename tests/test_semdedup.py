@@ -144,14 +144,7 @@ def _max_cell_size(spark, df, cents):
     )
 
 
-def test_cap_cells_splits_oversized_cells(spark):
-    """One centroid owns a 40-vector spread-out blob (cap 10): capping
-    sub-clusters it in place and the max cell size drops to ~cap while
-    the other cell is untouched."""
-    from pyspark.sql import functions as F
-
-    from scholarmind_spark.operators.semdedup import cap_cells
-
+def _blob_corpus(spark):
     rows = []
     # 40 spread vectors around the origin-side centroid (splittable:
     # four true sub-blobs at distinct corners)
@@ -162,7 +155,16 @@ def test_cap_cells_splits_oversized_cells(spark):
     # 3 vectors near the far centroid
     for i in range(40, 43):
         rows.append((i, [100.0, 100.0, 100.0, 100.0 + i - 40]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_cap_cells_splits_oversized_cells(spark):
+    """One centroid owns a 40-vector spread-out blob (cap 10): capping
+    sub-clusters it in place and the max cell size drops to ~cap while
+    the other cell is untouched."""
+    from scholarmind_spark.operators.semdedup import cap_cells
+
+    df = _blob_corpus(spark)
     cents = _cents(spark)  # [0,0,0,0] and [100,100,100,100]
 
     assert _max_cell_size(spark, df, cents) == 40
@@ -175,6 +177,21 @@ def test_cap_cells_splits_oversized_cells(spark):
     rows_out = out.collect()
     release_caches(out)
     assert len(rows_out) == 43
+
+
+def test_cap_cells_codebook_is_released(spark):
+    """The refined codebook is a checkpoint tagged for release: after the
+    caller's action and ``release_caches`` every persistent RDD of the
+    refinement is gone."""
+    from scholarmind_spark.operators.semdedup import cap_cells
+
+    df = _blob_corpus(spark)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    refined = cap_cells(df, _cents(spark), max_cell=10)
+    refined.collect()
+    release_caches(refined)
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
 
 
 def test_cap_cells_degenerate_duplicates_terminate(spark):

@@ -95,7 +95,7 @@ def test_sliding_stream_equals_batch(spark, batch_events):
     from scholarmind_spark.streaming import read_events_stream, sliding_agg
 
     stream = read_events_stream(spark, SF_DIR)
-    got = run_to_memory(sliding_agg(stream), mode="complete", shuffle_partitions=4)
+    got = run_to_memory(sliding_agg(stream), mode="complete")
     want = sliding_agg(batch_events)
     cols = ["bucket_start", "event_type", "n_events"]
     assert _canon(got, cols) == _canon(want, cols)

@@ -116,18 +116,22 @@ def main() -> None:
     def _hdr(df):
         from pyspark.sql import functions as F
 
-        from scholarmind_spark.operators.hdr import hdr_build, hdr_quantiles
+        from scholarmind_spark.operators.sketchledger import (
+            hdr_state_build,
+            hdr_state_quantiles,
+        )
 
         v = df.select(((F.col("doc_id") % 100000) / 7.0).alias("v"))
-        hdr_quantiles(hdr_build(v, "v"), (500, 990)).collect()
+        hdr_state_quantiles(hdr_state_build(v, [], "v"), [], (500, 990)).collect()
 
     def _bloom(df):
         from pyspark.sql import functions as F
 
-        from scholarmind_spark.operators.bloom import bloom_build, bloom_contains
+        from scholarmind_spark.operators.bloom import bloom_contains
+        from scholarmind_spark.operators.sketchledger import bloom_state_build
 
         keys = df.select(F.col("doc_id").cast("string").alias("v"))
-        sk = bloom_build(keys, "v", m_words=512, k=4)
+        sk = bloom_state_build(keys, [], "v", m_words=512, k=4)
         _noop(bloom_contains(sk, keys, "v", m_words=512, k=4))
 
     spark = get_spark(app_name="endpoint-probe")

@@ -171,7 +171,7 @@ def cap_probe() -> None:
 
     from scholarmind_spark import get_spark
     from scholarmind_spark.operators.semdedup import cap_cells
-    from scholarmind_spark.util import release_caches  # noqa: F401  (parity)
+    from scholarmind_spark.util import release_caches
 
     spark = get_spark(app_name="semdedup-cap-probe")
     df = replicated_embeddings(spark, sf_dir, 8).persist()
@@ -190,7 +190,9 @@ def cap_probe() -> None:
         )
 
     # warmup (the first-action codegen/shuffle setup — see main())
-    cap_cells(df, codebook(2), max_cell=n, max_depth=1).count()
+    warm = cap_cells(df, codebook(2), max_cell=n, max_depth=1)
+    warm.count()
+    release_caches(warm)
 
     print("| oversized cells C | rows | level med (3 reps) |")
     print("|---|---|---|")
@@ -204,6 +206,7 @@ def cap_probe() -> None:
             refined = cap_cells(df, cb, max_cell=max(2, n // (4 * c)), max_depth=1)
             refined.count()
             per.append(time.time() - t0)
+            release_caches(refined)
         per.sort()
         print(f"| {c} | {n} | {per[len(per) // 2]:.2f}s of {[round(p, 2) for p in per]} |")
     df.unpersist()
