@@ -40,6 +40,10 @@ from pyspark.sql import functions as F
 from scholarmind_spark.operators.neardup import minhash_base, minhash_base_sql
 
 BITS_PER_WORD = 63
+# default geometry of every builder, probe and twin of the family: a probe
+# must read the positions the builder set, so they share one value
+DEFAULT_M_WORDS = 256
+DEFAULT_HASHES = 4
 _MAX_K = 16
 
 
@@ -82,8 +86,8 @@ def bloom_contains(
     sketch: DataFrame,
     keys: DataFrame,
     col: str | Column,
-    m_words: int = 256,
-    k: int = 4,
+    m_words: int = DEFAULT_M_WORDS,
+    k: int = DEFAULT_HASHES,
 ) -> DataFrame:
     """``key, contained`` (int 0/1) for every distinct non-null key of
     ``keys`` — 1 iff ALL k probed bits are set.  ``m_words``/``k`` must
@@ -119,7 +123,9 @@ def _positions_sql(v: str, m_words: int, k: int) -> list[str]:
     return out
 
 
-def bloom_build_sql(values_query: str, m_words: int = 256, k: int = 4) -> str:
+def bloom_build_sql(
+    values_query: str, m_words: int = DEFAULT_M_WORDS, k: int = DEFAULT_HASHES
+) -> str:
     """DuckDB twin of ``bloom_state_build(df, [], "v", m_words, k)``
     over a subquery yielding ``v``."""
     _check(m_words, k)
@@ -144,7 +150,10 @@ def bloom_merge_sql(a: str, b: str) -> str:
 
 
 def bloom_contains_sql(
-    sketch_query: str, keys_query: str, m_words: int = 256, k: int = 4
+    sketch_query: str,
+    keys_query: str,
+    m_words: int = DEFAULT_M_WORDS,
+    k: int = DEFAULT_HASHES,
 ) -> str:
     """DuckDB twin of :func:`bloom_contains` — ``keys_query`` yields ``v``."""
     _check(m_words, k)
@@ -168,8 +177,8 @@ def bloom_prune(
     df: DataFrame,
     col: str | Column,
     sketch: DataFrame,
-    m_words: int = 256,
-    k: int = 4,
+    m_words: int = DEFAULT_M_WORDS,
+    k: int = DEFAULT_HASHES,
 ) -> DataFrame:
     """Keep only rows whose key is PROBABLY in the filter — the
     row-level runtime join prefilter (Spark's own bloom runtime filters,
@@ -227,8 +236,8 @@ def bloom_prune_sql(
     table_query: str,
     key_expr: str,
     sketch_query: str,
-    m_words: int = 256,
-    k: int = 4,
+    m_words: int = DEFAULT_M_WORDS,
+    k: int = DEFAULT_HASHES,
 ) -> str:
     """DuckDB twin of :func:`bloom_prune` — returns rows of
     ``table_query`` whose ``key_expr`` probes all-set."""

@@ -9,7 +9,8 @@ Scale design — min-label propagation WITH pointer jumping, as a driver
 loop of DataFrame joins (the standard Spark shape when a graph library
 isn't warranted):
 
-- labels start as each node's own id;
+- labels start as ``min(own id, min neighbor id)`` (the seed absorbs the
+  first propagation round);
 - each round every node takes
   ``min(own label, neighbors' labels, label(own label))`` — the last term
   is the pointer-jumping / path-shortcutting step of the classic PRAM CC
@@ -21,27 +22,35 @@ isn't warranted):
   with a million-node path component converges in ~20 rounds;
 - labels only ever decrease and every label is a node id inside the same
   component, so the fixpoint (no label changes) is exactly the per-node
-  component minimum;
-- convergence when a round changes no label (checked with one tiny agg
-  action per round).
+  component minimum.
 
-Each round is two bounded shuffles (edges⋈labels on the edge list,
-labels⋈labels for the jump) plus one map-side-combining min.  At 100 TB
-the pair list is orders of magnitude smaller than the corpus (it only
-contains near-dups), so the loop runs on a relation that broadcast-joins
-back to the corpus at the end.
+The symmetric edge list comes from ONE scan of the pairs (each pair
+explodes into both directed edges, then ``distinct``).  Each round is
+two bounded joins (edges⋈labels on the edge list, labels⋈labels for the
+jump) plus one map-side-combining ``groupBy`` that also carries the
+node's previous label as ``min(old)``.  The round's ONE driver action is
+``count_if(label < old)`` over the round's lazy checkpoint: it computes
+and checkpoints the round, and 0 means converged (labels only decrease,
+so "no label fell" is the fixpoint; the count works for any orderable id
+type, strings included).  At 100 TB the pair list is orders of magnitude
+smaller than the corpus (it only contains near-dups), so the loop runs
+on a relation that broadcast-joins back to the corpus at the end.
 
-Each round's labels are ``localCheckpoint(eager=True)``-ed, NOT merely
-persisted: the round plan references the previous labels three times, so
-without lineage truncation the logical plan tree grows ~3^rounds and
+The seed and every round are ``localCheckpoint(eager=False)``-ed, NOT
+persisted: the round plan references the previous labels three times,
+so without lineage truncation the logical plan tree grows ~3^rounds and
 merely stringifying it (cache names, explain, AQE logging) exhausts the
 driver heap — observed as a JVM OOM inside ``Dataset.persist`` →
-``treeString`` on a diameter-16 graph.  The checkpoint materializes the
-round AND resets the plan to a LogicalRDD leaf; the previous round's
-blocks are freed eagerly (``util.unpersist_any``).  On a real cluster
-``localCheckpoint`` trades fault-tolerance for speed (blocks die with an
-executor); a production run with flaky executors should set a checkpoint
-dir and swap in ``DataFrame.checkpoint`` — same plan shape.
+``treeString`` on a diameter-16 graph.  The checkpoint resets the plan to
+a LogicalRDD leaf at call time, and the round's action fills its blocks
+(an eager checkpoint would spend a second job on that).  A ``persist()``
+on the seed instead gives three in-memory-cache reads per round plan, and
+the number of jobs that race to materialize them varies from run to run.
+The previous round's blocks are freed as soon as the next round is
+counted (``util.unpersist_any``).  On a real cluster ``localCheckpoint``
+trades fault-tolerance for speed (blocks die with an executor); a
+production run with flaky executors should set a checkpoint dir and swap
+in ``DataFrame.checkpoint`` — same plan shape.
 """
 
 from __future__ import annotations
@@ -62,24 +71,24 @@ def connected_components(
     """``node, component`` for every node in ``pairs``; component = min node
     id reachable through the pair graph (deterministic canonical label).
 
-    O(log diameter) rounds via pointer jumping, lineage truncated per
-    round with an eager localCheckpoint (see module docstring);
+    O(log diameter) rounds via pointer jumping, one driver action and a
+    lazy localCheckpoint per round (see module docstring);
     ``max_iter=25`` therefore covers any graph a 64-bit id space can
     hold, and non-convergence within the budget raises."""
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .persist()
+    # one scan of the pair list: each pair explodes into both directed
+    # edges (a self-union would plan, and list, the pairs twice)
+    both = F.array(
+        F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+        F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
     )
-    # SEEDED initial labels (round 15): label₀ = min(node, min neighbor)
-    # — the same one-shuffle aggregation the old `distinct` paid, but it
-    # absorbs the first neighbor-propagation round outright (a star
-    # cluster, the common dedup shape, is already at its fixpoint and
-    # pays only the confirming round).  The fixpoint is unchanged: any
-    # initial labeling with label ≤ node and label within the node's
-    # component converges to the per-component min under the same
-    # monotone update.
+    edges = pairs.select(F.explode(both).alias("e")).select("e.*").distinct().persist()
+    # SEEDED initial labels: label₀ = min(node, min neighbor) — the one
+    # shuffle that lists the nodes also absorbs the first
+    # neighbor-propagation round (a star cluster, the common dedup shape,
+    # is already at its fixpoint and pays only the confirming round).  The
+    # fixpoint is unchanged: any initial labeling with label ≤ node and
+    # label within the node's component converges to the per-component
+    # min under the same monotone update.
     labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("mn"))
@@ -87,23 +96,10 @@ def connected_components(
             F.col("src").alias("node"),
             F.least(F.col("src"), F.col("mn")).alias("label"),
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
-    def _label_digest(lbl: DataFrame):
-        # Fixpoint detector that works for ANY id type: per-node min labels
-        # only change by decreasing, so the multiset of labels changes iff
-        # some label changed; a sum of 64-bit label hashes (in decimal, so
-        # no bigint overflow wrap) detects that with one cheap scalar agg
-        # per round.  A plain sum(label) is null for string ids — and
-        # null == null made the old check "converge" after one round.
-        return lbl.agg(
-            F.sum(F.xxhash64("label").cast("decimal(38,0)"))
-        ).collect()[0][0]
-
-    converged = False
     ok = False
     try:
-        prev_sum = _label_digest(labels)
         for _ in range(max_iter):
             # neighbor labels: edge dst carries its current label to src
             neighbor = (
@@ -113,7 +109,9 @@ def connected_components(
             # pointer jump: follow the label pointer one hop —
             # label(label(node)).  Every label is a node id in the same
             # component, so the jump target always exists in `labels`
-            # (left join only as belt-and-braces) and its label is ≤ ours.
+            # (left join only as belt-and-braces) and its label is ≤ ours;
+            # the jump row therefore also stands in for the node's own
+            # label, and carries that label as `old` for the change count.
             jump = (
                 labels.alias("l")
                 .join(
@@ -127,47 +125,40 @@ def connected_components(
                 .select(
                     F.col("l.node").alias("node"),
                     F.coalesce("ref_label", "l.label").alias("label"),
+                    F.col("l.label").alias("old"),
                 )
             )
-            # LAZY localCheckpoint (round 16): the plan is truncated to a
-            # LogicalRDD leaf at call time either way, but eager=True ran a
-            # dedicated materialization job and the digest below then ran a
-            # SECOND job over the blocks.  With eager=False the digest
-            # action itself computes AND checkpoints the round — one job
-            # per fixpoint round instead of two, identical labels.
-            new_labels = (
-                labels.unionByName(neighbor)
-                .unionByName(jump)
+            rnd = (
+                jump.unionByName(neighbor, allowMissingColumns=True)
                 .groupBy("node")
-                .agg(F.min("label").alias("label"))
+                .agg(F.min("label").alias("label"), F.min("old").alias("old"))
                 .localCheckpoint(eager=False)
             )
-            new_sum = _label_digest(new_labels)
+            # the round's one action computes AND checkpoints it: labels
+            # only decrease, so "no label fell" is the fixpoint
+            changed = rnd.agg(F.count_if(F.col("label") < F.col("old"))).collect()[0][0]
             _unpersist_any(labels)
-            labels = new_labels
-            if new_sum == prev_sum:
-                converged = True
+            labels = rnd
+            if changed == 0:
                 break
-            prev_sum = new_sum
-        if not converged:
+        else:
             # surface instead of silently returning a partial labeling: a
             # graph this budget cannot close (diameter > 2^max_iter) needs
             # an explicitly bigger budget, and the caller must know
-            _unpersist_any(labels)
             raise RuntimeError(
                 f"connected_components did not converge in {max_iter} "
                 "iterations; raise max_iter for this graph"
             )
         out = labels.select("node", F.col("label").alias("component"))
-        # the final labels round was materialized by its convergence count;
-        # the caller releases it via release_caches() after consuming `out`
+        # the final round was materialized by its change count; the caller
+        # releases it via release_caches() after consuming `out`
         ok = True
         return _attach_caches(out, [labels])
     finally:
         edges.unpersist()
         if not ok:
-            # a failure mid-loop (digest collect, checkpoint action) must
-            # not strand the current round's blocks for the session
+            # non-convergence or a failure mid-loop (the change count, a
+            # checkpoint) must not strand the current round's blocks
             _unpersist_any(labels)
 
 

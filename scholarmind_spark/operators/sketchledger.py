@@ -53,6 +53,8 @@ from pyspark.sql import functions as F
 
 from scholarmind_spark.operators.bloom import (
     BITS_PER_WORD,
+    DEFAULT_HASHES,
+    DEFAULT_M_WORDS,
     word_and_mask_exprs,
     word_and_mask_sql,
 )
@@ -75,7 +77,7 @@ from scholarmind_spark.operators.hdr import (
     _vm,
 )
 from scholarmind_spark.operators.neardup import minhash_base, minhash_base_sql
-from scholarmind_spark.operators.sketch import _estimate_expr, _estimate_sql
+from scholarmind_spark.operators.sketch import DEFAULT_K, _estimate_expr, _estimate_sql
 
 
 def _key_cols(keys: list[str]) -> list[Column]:
@@ -245,7 +247,7 @@ def kmv_state_build(
     df: DataFrame,
     keys: list[str],
     value: Column | str,
-    k: int = 64,
+    k: int = DEFAULT_K,
 ) -> DataFrame:
     """``*keys, h`` — the k smallest distinct 60-bit hashes of ``value``
     per key tuple (fewer if the key saw fewer distinct values).  NULL
@@ -267,7 +269,7 @@ def kmv_state_build(
     return _rank_cap(pairs, keys, k)
 
 
-def kmv_state_merge(a: DataFrame, b: DataFrame, k: int = 64) -> DataFrame:
+def kmv_state_merge(a: DataFrame, b: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """Fold two KMV state tables: union → distinct → per-key rank ≤ k.
     Exact — any hash among a key's global k smallest is among that
     key's k smallest in whichever batch contained it, so the union of
@@ -278,7 +280,7 @@ def kmv_state_merge(a: DataFrame, b: DataFrame, k: int = 64) -> DataFrame:
     return _rank_cap(a.unionByName(b).distinct(), keys, k)
 
 
-def kmv_state_estimate(state: DataFrame, k: int = 64) -> DataFrame:
+def kmv_state_estimate(state: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """``*keys, n_minima, kth_hash, est_distinct`` per key tuple — the
     KMV estimator over a state table (exact below k).
 
@@ -332,8 +334,8 @@ def bloom_state_build(
     df: DataFrame,
     keys: list[str],
     value: Column | str,
-    m_words: int = 64,
-    k: int = 4,
+    m_words: int = DEFAULT_M_WORDS,
+    k: int = DEFAULT_HASHES,
 ) -> DataFrame:
     """``*keys, word, bits`` — one Bloom filter per key tuple, ≤
     ``m_words`` rows each; ``keys=[]`` is the plain filter ``word,
@@ -385,8 +387,8 @@ def bloom_state_contains(
     state: DataFrame,
     probes: DataFrame,
     col: str | Column,
-    m_words: int = 64,
-    k: int = 4,
+    m_words: int = DEFAULT_M_WORDS,
+    k: int = DEFAULT_HASHES,
 ) -> DataFrame:
     """``*keys, key, contained`` — for every key tuple in ``state`` and
     every distinct non-null probe value: 1 iff all k probed bits are
@@ -570,7 +572,7 @@ def bloom_state_compact(
     return recent.unionByName(bloom_state_rekey(old, keys))
 
 
-def kmv_state_rekey(state: DataFrame, keys: list[str], k: int = 64) -> DataFrame:
+def kmv_state_rekey(state: DataFrame, keys: list[str], k: int = DEFAULT_K) -> DataFrame:
     """Coarsen a KMV state table to a subset of its keys: project,
     distinct, re-cap.  EXACT by the merge argument — any hash among the
     coarse key's global k minima has fewer than k smaller hashes in its
@@ -585,7 +587,7 @@ def kmv_state_compact(
     state: DataFrame,
     day_col: str,
     cutoff_day: str,
-    k: int = 64,
+    k: int = DEFAULT_K,
     period: Column | None = None,
     period_prefix: str = "m",
 ) -> DataFrame:
@@ -692,7 +694,7 @@ def hdr_state_drift_sql(
  FROM lagged WHERE prev_p_milli IS NOT NULL)"""
 
 
-def kmv_state_build_sql(pairs_query: str, keys: list[str], k: int = 64) -> str:
+def kmv_state_build_sql(pairs_query: str, keys: list[str], k: int = DEFAULT_K) -> str:
     if k < 2:
         raise ValueError("kmv sketches need k >= 2 (the estimator uses k-1)")
     h = minhash_base_sql("v::VARCHAR")
@@ -704,7 +706,7 @@ def kmv_state_build_sql(pairs_query: str, keys: list[str], k: int = 64) -> str:
     return _rank_cap_sql(pairs, keys, k)
 
 
-def kmv_state_merge_sql(a: str, b: str, keys: list[str], k: int = 64) -> str:
+def kmv_state_merge_sql(a: str, b: str, keys: list[str], k: int = DEFAULT_K) -> str:
     u = (
         f"(SELECT DISTINCT * FROM"
         f" (SELECT * FROM {a} UNION ALL SELECT * FROM {b}))"
@@ -712,7 +714,7 @@ def kmv_state_merge_sql(a: str, b: str, keys: list[str], k: int = 64) -> str:
     return _rank_cap_sql(u, keys, k)
 
 
-def kmv_state_estimate_sql(state_query: str, keys: list[str], k: int = 64) -> str:
+def kmv_state_estimate_sql(state_query: str, keys: list[str], k: int = DEFAULT_K) -> str:
     kl = ", ".join(keys)
     est = _estimate_sql("n_minima", "kth_hash", k)
     return f"""
@@ -724,7 +726,10 @@ def kmv_state_estimate_sql(state_query: str, keys: list[str], k: int = 64) -> st
 
 
 def bloom_state_build_sql(
-    pairs_query: str, keys: list[str], m_words: int = 64, k: int = 4
+    pairs_query: str,
+    keys: list[str],
+    m_words: int = DEFAULT_M_WORDS,
+    k: int = DEFAULT_HASHES,
 ) -> str:
     _bloom_check(m_words, k)
     kl = ", ".join(keys)
@@ -765,8 +770,8 @@ def bloom_state_contains_sql(
     state_query: str,
     keys: list[str],
     probes_query: str,
-    m_words: int = 64,
-    k: int = 4,
+    m_words: int = DEFAULT_M_WORDS,
+    k: int = DEFAULT_HASHES,
 ) -> str:
     """DuckDB twin of :func:`bloom_state_contains` — ``probes_query``
     yields ``v``."""

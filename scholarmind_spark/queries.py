@@ -4757,13 +4757,13 @@ gate("diag_orc_price", diag_orc_price, DIAG_ORC_PRICE_SQL)
 
 # Three gates (dedup_clusters, dedup_cluster_reps, dedup_cluster_sizes)
 # consume the SAME pairs→connected-components relation; in one battery or
-# bench job the CC loop (the cost: per-round localCheckpoint
-# materializations) should run once, not three times.  The labels are
-# memoized per (session, sf_dir): tiny (one row per pair-graph node),
-# materialized into the loop's final localCheckpoint blocks, and
-# deliberately NOT attached for release — bench's clearCache() between
-# queries clears SQL caches, never these RDD blocks, so every later
-# consumer reuses them.
+# bench job the CC loop (the cost: one driver action per fixpoint round)
+# should run once, not three times.  The labels are memoized per
+# (session, sf_dir): tiny (one row per pair-graph node), already
+# materialized in the loop's final localCheckpoint blocks by its last
+# round's change count (no extra action here), and deliberately NOT
+# attached for release — bench's clearCache() between queries clears SQL
+# caches, never these RDD blocks, so every later consumer reuses them.
 _CC_MEMO: dict = {}
 
 
@@ -4788,9 +4788,9 @@ def _shared_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         comp = connected_components(pairs.select("id_a", "id_b"))
         caches = list(getattr(comp, "_sm_caches", []))
-        comp.count()  # materialize the labels (lineage is already truncated)
-        # the pair-lister's intermediates are no longer reachable from the
-        # checkpointed labels plan — free them now
+        # the loop's last action materialized the labels; the pair-lister's
+        # intermediates are no longer reachable from that checkpoint — free
+        # them now
         for c in getattr(pairs, "_sm_caches", []):
             unpersist_any(c)
         comp._sm_caches = []  # shared state: consumers must not release it

@@ -58,6 +58,12 @@ def get_spark(
         # in the ASCII range the oracle compares.
         .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # Spark keeps 100 generated classes by default; one pass of a
+        # mixed workload (connected components, a stream drain, a sketch
+        # fold, a join query) generates ~140, so every repeat of the same
+        # plans recompiled all of them with Janino.  Static conf: it must
+        # be set before the session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # The driver's events.parquet carries TIMESTAMP(NANOS) (pandas ns
         # precision), which Spark's vectorized reader rejects outright.
         # Read nanos as LongType and convert explicitly (see load_events).

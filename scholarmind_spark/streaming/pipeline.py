@@ -36,6 +36,8 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scholarmind_spark.operators.bloom import DEFAULT_HASHES, DEFAULT_M_WORDS
+from scholarmind_spark.operators.sketch import DEFAULT_K
 from scholarmind_spark.streaming.state import (
     SKIP, chain_dirs, commit_mor, fold_gate, has_parquet, read_manifest,
     read_sidecar, recover_swap, rename_swap, start_fold_stream, version_dir,
@@ -480,9 +482,9 @@ def stream_fold_sketch_state(
     p: int = 5,
     checkpoint: str | None = None,
     family: str = "hdr",
-    k: int = 64,
-    m_words: int = 64,
-    bloom_k: int = 4,
+    k: int = DEFAULT_K,
+    m_words: int = DEFAULT_M_WORDS,
+    bloom_k: int = DEFAULT_HASHES,
     retain_days: int | None = None,
     compact_day: str | None = None,
 ):
@@ -650,9 +652,9 @@ def _sketch_fold_fn(
     p: int,
     lineage: str,
     family: str = "hdr",
-    k: int = 64,
-    m_words: int = 64,
-    bloom_k: int = 4,
+    k: int = DEFAULT_K,
+    m_words: int = DEFAULT_M_WORDS,
+    bloom_k: int = DEFAULT_HASHES,
     retain_days: int | None = None,
     compact_day: str | None = None,
 ):

@@ -174,6 +174,20 @@ def test_kmv_by_group_exact_below_k_and_twin(spark):
                   kmv_state_estimate(sketch, k=64).collect()) == oracle
 
 
+
+def test_kmv_by_group_default_k_matches_twin(spark):
+    """Builder, estimator and DuckDB twin share one default ``k``: above
+    that k the defaults-only Spark estimate equals the twin's."""
+    rows = [("big", f"user-{i}") for i in range(600)] + [("small", "x")]
+    df = spark.createDataFrame(rows, "grp string, v string")
+    sketch = kmv_state_build(df, ["grp"], "v")
+    got = sorted(tuple(r) for r in kmv_state_estimate(sketch).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (grp VARCHAR, v VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?,?)", rows)
+    q = kmv_distinct_by_group_sql("SELECT grp, v FROM t")
+    assert got == sorted(con.execute(f"SELECT * FROM {q}").fetchall())
+
 def test_kmv_by_group_estimates_above_k(spark):
     rows = [("big", f"user-{i}") for i in range(2000)]
     df = spark.createDataFrame(rows, "grp string, v string")

@@ -20,6 +20,17 @@ MEMBERS = [f"key-{i}" for i in range(200)]
 ABSENT = [f"nope-{i}" for i in range(200)]
 
 
+
+def test_default_geometry_round_trip_has_no_false_negatives(spark):
+    """The builder and the probe share one default geometry: a filter
+    built and probed with every default reports each built key present.
+    A 64-word builder default under a 256-word probe default reported 499
+    of 500 built keys absent."""
+    df = spark.createDataFrame([(f"doc-{i}",) for i in range(500)], ["v"])
+    got = bloom_contains(bloom_state_build(df, [], "v"), df, "v").collect()
+    assert len(got) == 500
+    assert all(r["contained"] == 1 for r in got)
+
 def test_no_false_negatives_and_some_discrimination(spark):
     df = spark.createDataFrame([(v,) for v in MEMBERS], ["v"])
     sk = bloom_state_build(df, [], "v", m_words=64, k=4)

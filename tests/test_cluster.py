@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import time
+
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -153,3 +155,60 @@ def test_cluster_representatives_unscored_members_still_count(spark):
         for r in cluster_representatives(pairs, scored).collect()
     }
     assert got == {1: (2, 2, 0.3), 5: (5, 2, None)}
+
+
+def test_connected_components_string_path_needs_several_rounds(spark):
+    """A 40-node path over string ids, visited in shuffled order, plus a
+    separate pair: the seed round cannot close the path, so the loop's
+    change count must keep it going until the labels equal the union-find
+    reference — and a one-round budget must still raise."""
+    import random
+
+    import pytest as _pytest
+
+    names = [f"v{i:02d}" for i in range(40)]
+    random.Random(5).shuffle(names)
+    edges = list(zip(names, names[1:])) + [("w0", "w1")]
+    pairs = spark.createDataFrame(edges, "id_a string, id_b string")
+    cc = connected_components(pairs)
+    got = sorted(tuple(r) for r in cc.collect())
+    release_caches(cc)
+    assert got == sorted(union_find_reference(edges).items())
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(pairs, max_iter=1)
+
+
+def test_shared_components_job_budget(spark):
+    """Three fresh-memo reps of ``dedup_cluster_sizes`` on the sf0.001
+    fixture, each under its own job group, run the same number of Spark
+    jobs: 27 (local[4]), against 40 when the edge list was a self-union
+    of the pairs, the seed labels were persisted, a separate digest action
+    ran before round 1 and the memo ran its own ``count()``.  Every
+    in-memory-cache read the loop plans adds a job, and a varying count
+    would fail the benchmark's identical-work check."""
+    from test_streaming import SF_DIR  # the sf0.001 tier-1 fixture
+
+    from scholarmind_spark import queries
+    from scholarmind_spark.queries import SPARK_QUERIES, reset_shared_components
+
+    sc = spark.sparkContext
+    counts, results = [], []
+    try:
+        for rep in range(3):
+            group = f"cc_budget_{rep}"
+            sc.setJobGroup(group, group)
+            reset_shared_components()
+            queries._T_MEMO.clear()  # every rep reads its tables afresh
+            df = SPARK_QUERIES["dedup_cluster_sizes"](spark, SF_DIR)
+            results.append(df.collect())
+            st = sc.statusTracker()
+            while st.getActiveJobsIds():
+                time.sleep(0.02)
+            counts.append(len(st.getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        reset_shared_components()
+    assert results[0] == results[1] == results[2]
+    assert len(set(counts)) == 1, counts
+    assert counts[0] < 40, counts
