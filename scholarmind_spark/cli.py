@@ -127,7 +127,13 @@ def main(argv: list[str] | None = None) -> int:
             )
     result = run_pipeline(spark, cfg)
     write_parquet(result, args.output)
-    n = spark.read.parquet(args.output).count()
+    # The write materialized the LLM map's checkpoint, so counting it reads
+    # its blocks; without the LLM map a count would re-run the whole plan,
+    # and reading the files back is cheaper.
+    if hasattr(result, "_sm_checkpoint_of"):
+        n = result.count()
+    else:
+        n = spark.read.parquet(args.output).count()
     print(f"wrote {n} records to {args.output}")
     if args.sheets:
         paths = write_sheets_csv(result, args.sheets)

@@ -13,14 +13,35 @@ driver-side materialization is the one the reference also has (the
 distinct-journal collect for the online metrics fetch; SURVEY §3.1).
 Release the checkpoint after the last sink with
 ``util.release_caches(result)``.
+
+One more job runs, and it computes nothing: while the driver builds the
+plan (single-threaded analysis of every source scan, ~1.5 s on a cold
+JVM on a 4-vCPU host), :func:`run_pipeline` warms the Python worker
+pool in a background thread with one tiny ``mapInPandas`` job over
+``defaultParallelism`` partitions.  Each worker unpickles :func:`_pass_batches` by reference,
+so it imports this module, and with it the parsers, the LLM map, pandas
+and pyarrow, while the JVM loads its Arrow runner and first-job
+scheduler path; the first real Python stage then finds warm, reused
+workers.  The warm-up sits here and not in ``get_spark`` because only a
+pipeline with a Python stage (a text source or the LLM map) gains from
+it: sessions that never start a Python worker must not pay for one.  It
+runs only on a local master (a cluster's executors are not warmed by a
+driver-side job sized to ``defaultParallelism``) and only with
+``spark.python.worker.reuse`` on (otherwise no worker outlives the
+job).  It is an ``InheritableThread``, so the job runs in the caller's
+job group and is counted with the pipeline's own jobs; a failing
+warm-up is swallowed, and the thread is joined before
+:func:`run_pipeline` returns.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import InheritableThread
 
 from scholarmind_spark.functions.links import with_link_columns
 from scholarmind_spark.functions.text import with_publication_year
@@ -159,14 +180,61 @@ def run_pipeline(
     (``app.py:351-370``).  The driver-side journal fetch ticks per
     journal; wrap the final sink action in
     :func:`scholarmind_spark.progress.watch_action` to get task-level
-    ticks for the cluster-side stages too."""
-    reporter = None
-    if progress_callback is not None:
-        from scholarmind_spark.progress import ProgressReporter
+    ticks for the cluster-side stages too.
 
-        reporter = ProgressReporter(progress_callback)
-        reporter.update("parse", 0, 1)
-    corpus = build_corpus(spark, cfg.sources)
-    if reporter is not None:
-        reporter.stage_done("parse")
-    return process(corpus, cfg, reporter=reporter)
+    When the plan has a Python stage, the Python workers start in a
+    background job while the plan is built (one extra job in the caller's
+    job group, finished before this returns; see the module docstring)."""
+    warmup = _start_worker_warmup(spark, cfg)
+    try:
+        reporter = None
+        if progress_callback is not None:
+            from scholarmind_spark.progress import ProgressReporter
+
+            reporter = ProgressReporter(progress_callback)
+            reporter.update("parse", 0, 1)
+        corpus = build_corpus(spark, cfg.sources)
+        if reporter is not None:
+            reporter.stage_done("parse")
+        return process(corpus, cfg, reporter=reporter)
+    finally:
+        if warmup is not None:
+            warmup.join()
+
+
+# sources whose scan parses files in a Python worker (``scan_files``)
+_PYTHON_SOURCES = frozenset({"pubmed", "wos", "sciencedirect"})
+
+
+def _pass_batches(batches: Iterator) -> Iterator:
+    """The warm-up job's worker function: a pass-through.  Defined here so
+    that unpickling it imports this module in the worker."""
+    yield from batches
+
+
+def _start_worker_warmup(spark: SparkSession, cfg: PipelineConfig) -> InheritableThread | None:
+    """Start the warm-up job in a thread that inherits the caller's job
+    group, or return None when the plan runs no Python stage, the master
+    is not local, or workers are not reused."""
+    sc = spark.sparkContext
+    python_stage = bool(_PYTHON_SOURCES & cfg.sources.keys()) or (
+        cfg.llm_template is not None and cfg.llm_client is not None
+    )
+    if (
+        not python_stage
+        or not sc.master.startswith("local")
+        or sc.getConf().get("spark.python.worker.reuse", "true").lower() != "true"
+    ):
+        return None
+
+    n = sc.defaultParallelism
+
+    def warm() -> None:
+        try:
+            spark.range(0, n, 1, n).mapInPandas(_pass_batches, schema="id long").collect()
+        except Exception:  # a cold worker is slower, never wrong
+            pass
+
+    thread = InheritableThread(target=warm, name="python-worker-warmup", daemon=True)
+    thread.start()
+    return thread

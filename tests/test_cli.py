@@ -5,7 +5,7 @@ import os
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
-def test_cli_end_to_end(spark, tmp_path):
+def test_cli_end_to_end(spark, tmp_path, capsys):
     from scholarmind_spark.cli import main
 
     out = str(tmp_path / "corpus")
@@ -24,6 +24,7 @@ def test_cli_end_to_end(spark, tmp_path):
     assert rc == 0
     df = spark.read.parquet(out)
     assert df.count() == 3  # 5 parsed, 2 removed by A1 priority dedup
+    assert f"wrote 3 records to {out}" in capsys.readouterr().out
     assert {"summary", "method"} <= set(df.columns)
     assert sorted(os.listdir(sheets)) == [
         "PubMed.csv", "Results.csv", "ScienceDirect.csv", "WOS.csv",
@@ -36,7 +37,7 @@ def test_cli_requires_sources(capsys):
     assert main(["--output", "/tmp/x"]) == 2
 
 
-def test_cli_excel_workbook_and_wos_excel_source(spark, tmp_path):
+def test_cli_excel_workbook_and_wos_excel_source(spark, tmp_path, capsys):
     """--wos-excel in, --excel out: the reference's primary I/O pair, end
     to end over a real .xlsx on both sides (no Excel engine involved)."""
     from scholarmind_spark.cli import main
@@ -53,6 +54,7 @@ def test_cli_excel_workbook_and_wos_excel_source(spark, tmp_path):
     wb = str(tmp_path / "report.xlsx")
     rc = main(["--wos-excel", src, "--output", out, "--excel", wb])
     assert rc == 0
+    assert f"wrote 1 records to {out}" in capsys.readouterr().out
     sheets = read_xlsx(wb)
     assert list(sheets) == ["Results", "WOS", "PubMed", "ScienceDirect"]
     results = sheets["Results"]

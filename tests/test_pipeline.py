@@ -1,6 +1,7 @@
 """End-to-end pipeline: fixtures in all three formats → parse → union →
 dedup → enrich → links → year → LLM → sinks (reference lifecycle §3.1)."""
 
+import contextlib
 import os
 
 import pytest
@@ -231,3 +232,89 @@ def test_assert_unique_record_ids_pass_and_fail(spark, cfg):
     )
     with pytest.raises(AssertionError, match="duplicate record_id"):
         assert_unique_record_ids(dup)
+
+
+@contextlib.contextmanager
+def _job_group(spark, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _group_statuses(spark, group):
+    """Statuses of the group's jobs, once the listener bus has caught up."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    return [st.getJobInfo(j).status for j in st.getJobIdsForGroup(group)]
+
+
+def _count_jobs(spark, group, build):
+    """Jobs of ``build()`` plus one count over its result, and the
+    statuses of the group's jobs when ``build()`` returned."""
+    with _job_group(spark, group):
+        df = build()
+        at_return = _group_statuses(spark, group)
+        df.count()
+        release_caches(df)
+    return len(_group_statuses(spark, group)), at_return
+
+
+@pytest.mark.parametrize("llm", [True, False])
+def test_worker_warmup_is_one_finished_job_in_the_callers_group(spark, cfg, monkeypatch, llm):
+    """A pipeline with a Python stage runs one extra job, the worker
+    warm-up, in the caller's job group, and it is over when
+    ``run_pipeline`` returns: a warm-up slower than the plan build is
+    waited for.  (Without the LLM map the build runs no job, so nothing
+    else waits for the warm-up's task slots.)"""
+    import time
+    from dataclasses import replace
+
+    import scholarmind_spark.pipeline as pipeline_mod
+
+    if not llm:
+        cfg = replace(cfg, llm_template=None, llm_client=None)
+
+    def slow_pass(batches):
+        time.sleep(2)
+        yield from batches
+
+    monkeypatch.setattr(pipeline_mod, "_pass_batches", slow_pass)
+    ref, ref_at_return = _count_jobs(
+        spark, f"ref-{llm}", lambda: process(build_corpus(spark, cfg.sources), cfg)
+    )
+    n, at_return = _count_jobs(spark, f"warm-{llm}", lambda: run_pipeline(spark, cfg))
+    assert n == ref + 1
+    assert len(at_return) == len(ref_at_return) + 1
+    assert set(at_return) == {"SUCCEEDED"}
+
+
+def test_failed_worker_warmup_does_not_fail_the_pipeline(spark, cfg, monkeypatch):
+    import scholarmind_spark.pipeline as pipeline_mod
+
+    def rows(df):
+        out = df.orderBy("record_id").collect()
+        release_caches(df)
+        return out
+
+    expected = rows(run_pipeline(spark, cfg))
+
+    def boom(batches):
+        raise RuntimeError("warm-up failed")
+
+    monkeypatch.setattr(pipeline_mod, "_pass_batches", boom)
+    with _job_group(spark, "boom"):
+        got = rows(run_pipeline(spark, cfg))
+    assert got == expected
+    assert "FAILED" in _group_statuses(spark, "boom")  # the warm-up ran and failed
+
+
+def test_no_worker_warmup_without_a_python_stage(spark):
+    """A CSV source with no LLM map runs no Python stage: no warm-up job."""
+    cfg2 = PipelineConfig(sources={"wos_csv": f"{FIX}/wos.csv"})
+    ref, _ = _count_jobs(spark, "csv_ref", lambda: process(build_corpus(spark, cfg2.sources), cfg2))
+    n, _ = _count_jobs(spark, "csv_run", lambda: run_pipeline(spark, cfg2))
+    assert n == ref
