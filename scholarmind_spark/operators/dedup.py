@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from scholarmind_spark.functions.doi import doi_norm
 from scholarmind_spark.schemas import SOURCE_PRIORITY
@@ -78,7 +79,7 @@ def priority_dedup(
     # instead of one skewed null partition.  \x00 prefix cannot collide with
     # a real normalized DOI (lower/trim never emits NUL).
     eff_key = F.when(
-        key_is_empty, F.concat(F.lit("\x00"), F.col(tiebreak).cast("string"))
+        key_is_empty, F.concat(F.lit("\x00"), F.col(tiebreak).cast(StringType()))
     ).otherwise(key)
 
     w = Window.partitionBy("__dedup_key").orderBy(

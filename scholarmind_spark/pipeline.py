@@ -15,14 +15,15 @@ Release the checkpoint after the last sink with
 ``util.release_caches(result)``.
 
 One more job runs, and it computes nothing: while the driver builds the
-plan (single-threaded analysis of every source scan, ~1.5 s on a cold
-JVM on a 4-vCPU host), :func:`run_pipeline` warms the Python worker
-pool in a background thread with one tiny ``mapInPandas`` job over
-``defaultParallelism`` partitions.  Each worker unpickles :func:`_pass_batches` by reference,
-so it imports this module, and with it the parsers, the LLM map, pandas
-and pyarrow, while the JVM loads its Arrow runner and first-job
-scheduler path; the first real Python stage then finds warm, reused
-workers.  The warm-up sits here and not in ``get_spark`` because only a
+plan (single-threaded analysis of every source scan), :func:`run_pipeline`
+warms the Python worker pool in a background thread with one tiny
+``mapInPandas`` job over ``defaultParallelism`` partitions.  Each worker
+unpickles :func:`_pass_batches` by reference, so it imports this module,
+and with it the parsers, the LLM map, pandas and pyarrow, while the JVM
+loads its Arrow runner; the first real Python stage then finds warm,
+reused workers.  (The JVM's SQL engine itself is warmed by ``get_spark``,
+see :mod:`scholarmind_spark.session`; that job runs no Python.)  The
+worker warm-up sits here and not in ``get_spark`` because only a
 pipeline with a Python stage (a text source or the LLM map) gains from
 it: sessions that never start a Python worker must not pay for one.  It
 runs only on a local master (a cluster's executors are not warmed by a
@@ -41,6 +42,7 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.util import InheritableThread
 
 from scholarmind_spark.functions.links import with_link_columns
@@ -206,6 +208,11 @@ def run_pipeline(
 _PYTHON_SOURCES = frozenset({"pubmed", "wos", "sciencedirect"})
 
 
+# a StructType, not DDL text: parsing the first DDL string on a cold JVM
+# costs ~0.3 s, and the warm-up would pay it before submitting its job
+_WARMUP_SCHEMA = StructType([StructField("id", LongType())])
+
+
 def _pass_batches(batches: Iterator) -> Iterator:
     """The warm-up job's worker function: a pass-through.  Defined here so
     that unpickling it imports this module in the worker."""
@@ -231,7 +238,7 @@ def _start_worker_warmup(spark: SparkSession, cfg: PipelineConfig) -> Inheritabl
 
     def warm() -> None:
         try:
-            spark.range(0, n, 1, n).mapInPandas(_pass_batches, schema="id long").collect()
+            spark.range(0, n, 1, n).mapInPandas(_pass_batches, schema=_WARMUP_SCHEMA).collect()
         except Exception:  # a cold worker is slower, never wrong
             pass
 

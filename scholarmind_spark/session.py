@@ -3,13 +3,43 @@
 Local testing runs ``local[N]``; the configuration below is written for a
 real multi-executor cluster (AQE, skew-join handling, Arrow batching) and
 degrades gracefully on local mode.
+
+Engine warm-up.  A fresh JVM pays for its first SQL query once: it loads
+some 12k classes and JIT-compiles the analyzer, optimizer, AQE stages,
+shuffle, aggregate and join code, and Janino compiles the first generated
+classes.  On a 4-vCPU host that makes the first step of a cold pass 4-5x
+slower than the same step warm.  So once per SparkContext, and only on a
+``local`` master, :func:`get_spark` starts a daemon thread and returns
+without waiting for it.  The thread runs one small job
+(:func:`_warmup_frame`: ``range`` over ``defaultParallelism`` partitions
+→ group-by aggregate → join back → aggregate → collect) while the caller
+imports its modules and builds its first plan, and swallows any failure.
+The job is built from Column objects only, so it warms neither the SQL
+parser (a DDL schema or a type-name cast) nor a Python worker: a session
+that never runs a Python stage starts no ``pyspark.daemon``.
+
+- Local master only: there the driver's JVM is also the executor, so the
+  one job warms the code every later task runs.  On a cluster it would
+  warm the driver alone, and it would hold executors the caller may be
+  waiting for.
+- Its own job group (:data:`WARMUP_GROUP`): the job belongs to no caller
+  job group, so jobs counted per group (``progress.watch_action``,
+  benchmark steps) do not include it.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+WARMUP_GROUP = "scholarmind-engine-warmup"
+
+_log = logging.getLogger(__name__)
+_warmup_lock = threading.Lock()
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -28,6 +58,9 @@ def get_spark(
       moves batches via Arrow, not pickled rows.
     - Session timezone pinned to UTC so timestamp semantics match the
       DuckDB oracle (duckdb timestamps are UTC-naive).
+
+    On a local master, the first call for a SparkContext also starts the
+    engine warm-up in the background (see the module docstring).
     """
     # Python workers unpickle mapInPandas closures by module reference; make
     # sure they can import this package even when the driver only put it on
@@ -81,4 +114,42 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _start_engine_warmup(spark)
+    return spark
+
+
+def _warmup_frame(spark: SparkSession) -> DataFrame:
+    """The warm-up query: a shuffle, a hash aggregate, a join and a final
+    aggregate over a few thousand rows, one partition per task slot."""
+    n = spark.sparkContext.defaultParallelism
+    ids = spark.range(0, 1 << 12, 1, n).withColumn("k", F.col("id") % n)
+    groups = ids.groupBy("k").agg(F.count(F.lit(1)).alias("c"), F.max("id").alias("m"))
+    return ids.join(groups, "k").agg(F.sum("c"), F.max("m"))
+
+
+def _warm_engine(spark: SparkSession) -> None:
+    try:
+        spark.sparkContext.setJobGroup(WARMUP_GROUP, "engine warm-up")
+        _warmup_frame(spark).collect()
+    except Exception:  # a cold engine is slower, never wrong
+        _log.debug("engine warm-up failed", exc_info=True)
+
+
+def _start_engine_warmup(spark: SparkSession) -> threading.Thread | None:
+    """Start the warm-up thread once per SparkContext on a local master;
+    return it, or None when the master is not local or the context was
+    warmed already.  The thread is kept on the context as
+    ``_engine_warmup``."""
+    sc = spark.sparkContext
+    if not sc.master.startswith("local"):
+        return None
+    with _warmup_lock:
+        if getattr(sc, "_engine_warmup", None) is not None:
+            return None
+        thread = threading.Thread(
+            target=_warm_engine, args=(spark,), name="spark-engine-warmup", daemon=True
+        )
+        sc._engine_warmup = thread
+    thread.start()
+    return thread

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 # Fields the reference comma-joins vs first-element (parsers_manager.py:201-230)
 JOINED_ARRAY_FIELDS = {
@@ -38,7 +39,7 @@ def flatten_for_presentation(df: DataFrame) -> DataFrame:
     out = df.withColumns(cols)
     return out.select(
         [
-            F.coalesce(F.col(c).cast("string"), F.lit("")).alias(c)
+            F.coalesce(F.col(c).cast(StringType()), F.lit("")).alias(c)
             if t.startswith(("string", "array")) or c in cols
             else F.col(c)
             for c, t in out.dtypes

@@ -19,17 +19,27 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from scholarmind_spark.schemas import ARRAY_COLUMNS, RECORD_COLUMNS, RECORD_SCHEMA
+from scholarmind_spark.schemas import ARRAY_COLUMNS, RECORD_COLUMNS, RECORD_FIELDS
 
 PARSE_COLUMNS = [c for c in RECORD_COLUMNS if c != "record_id"]
 
-# mapInPandas output schema = RECORD_SCHEMA minus record_id
-_PARSE_SCHEMA = RECORD_SCHEMA.simpleString().replace("record_id:bigint,", "")
+# mapInPandas output schema = RECORD_SCHEMA minus record_id, every field
+# nullable: the parsers emit nulls wherever a record lacks a tag (also in
+# source_type, which scan_files overwrites afterwards), and a non-null
+# field here makes Spark trust the parser and fail on its nulls.  Built as
+# a StructType, not DDL text, so a cold JVM does not start its SQL parser
+# to plan a scan.
+_PARSE_SCHEMA = StructType(
+    [StructField(f.name, f.dataType) for f in RECORD_FIELDS if f.name != "record_id"]
+)
 
 # scan_files threads the source file path + within-file record ordinal
 # through the parser so record_id can be derived from them.
-_SCAN_SCHEMA = _PARSE_SCHEMA[:-1] + ",_file:string,_ordinal:bigint>"
+_SCAN_SCHEMA = StructType(
+    [*_PARSE_SCHEMA.fields, StructField("_file", StringType()), StructField("_ordinal", LongType())]
+)
 
 
 def stable_record_id(*extra: Column) -> Column:

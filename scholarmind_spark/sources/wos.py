@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from scholarmind_spark.schemas import RECORD_COLUMNS
+from scholarmind_spark.schemas import ARRAY_COLUMNS, RECORD_COLUMNS, RECORD_FIELDS
 from scholarmind_spark.sources.base import empty_record, scan_files, stable_record_id
 from scholarmind_spark.xlsxlite import read_xlsx
 
@@ -202,29 +202,26 @@ def normalize_wos_tabular(df: DataFrame) -> DataFrame:
         if old in df.columns and new not in renames.values() and new not in df.columns:
             renames[old] = new
     df = df.withColumnsRenamed(renames)
-    array_cols = {"authors", "full_authors", "affiliation", "issn", "keywords",
-                  "keywords_plus", "mesh_terms"}
     out_cols = []
-    for c in RECORD_COLUMNS:
+    for field in RECORD_FIELDS:
+        c = field.name
         if c == "record_id":
             continue
         if c in df.columns:
-            if c in array_cols:
+            if c in ARRAY_COLUMNS:
                 out_cols.append(
                     F.filter(
-                        F.transform(F.split(F.col(c).cast("string"), ";"),
+                        F.transform(F.split(F.col(c).cast(T.StringType()), ";"),
                                     lambda x: F.trim(x)),
                         lambda x: x != "",
                     ).alias(c)
                 )
             else:
-                out_cols.append(F.col(c).cast("string").alias(c))
+                out_cols.append(F.col(c).cast(T.StringType()).alias(c))
         elif c == "source_type":
             out_cols.append(F.lit("wos").alias(c))
         else:
-            out_cols.append(
-                F.lit(None).cast("array<string>" if c in array_cols else "string").alias(c)
-            )
+            out_cols.append(F.lit(None).cast(field.dataType).alias(c))
     df = df.select(*out_cols).filter(F.col("abstract").isNotNull())
     # Content-addressed id (no file/ordinal here: the Excel path enters via
     # createDataFrame) — retry-stable, unlike monotonically_increasing_id;
@@ -233,12 +230,43 @@ def normalize_wos_tabular(df: DataFrame) -> DataFrame:
     return df.select(*RECORD_COLUMNS)
 
 
+SNIFF_BYTES = 64 * 1024
+
+
+def read_head(spark: SparkSession, path: str) -> bytes:
+    """The first :data:`SNIFF_BYTES` of the first input file of ``path``,
+    read on the driver through the Hadoop FileSystem, so any URI the CSV
+    reader accepts works here too.  Runs no Spark job.
+
+    ``path`` is a file, a directory or a glob.  Of several files the
+    lexicographically first is read; in a directory, the ``_``/``.``
+    names that Spark's file sources skip are skipped."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    files = []
+    for status in fs.globStatus(hpath) or []:
+        if not status.isDirectory():
+            files.append(status.getPath())
+            continue
+        files.extend(
+            st.getPath()
+            for st in fs.listStatus(status.getPath())
+            if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        )
+    if not files:
+        raise FileNotFoundError(f"no input file at {path}")
+    first = min(files, key=lambda p: p.toString())
+    stream = fs.open(first)
+    try:
+        return bytes(stream.readNBytes(SNIFF_BYTES))
+    finally:
+        stream.close()
+
+
 def scan_wos_csv(spark: SparkSession, path: str) -> DataFrame:
     """WOS CSV/TSV export → standardized records (S3)."""
-    sc = spark.sparkContext
-    # sample the first file's first 64 KB on the driver for dialect sniffing
-    first = sc.binaryFiles(path).first()
-    encoding, sep = sniff_csv_dialect(first[1][: 64 * 1024])
+    encoding, sep = sniff_csv_dialect(read_head(spark, path))
     df = spark.read.csv(path, header=True, sep=sep, encoding=encoding,
                         multiLine=True, escape='"')
     return normalize_wos_tabular(df)

@@ -305,3 +305,64 @@ def test_wos_tabular_duplicate_headers_survive(spark):
     # first duplicate header wins; the scan completes instead of
     # AMBIGUOUS_REFERENCE
     assert len(rows) == 1 and rows[0]["abstract"] == "a1"
+
+
+def test_scan_schemas_equal_the_former_ddl(spark):
+    """The StructType scan and parse schemas are the DDL text they replace,
+    field for field: names, types and nullability (every field nullable,
+    ``source_type`` too)."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from scholarmind_spark.schemas import RECORD_SCHEMA
+    from scholarmind_spark.sources.base import _PARSE_SCHEMA, _SCAN_SCHEMA
+
+    parse_ddl = RECORD_SCHEMA.simpleString().replace("record_id:bigint,", "")
+    scan_ddl = parse_ddl[:-1] + ",_file:string,_ordinal:bigint>"
+    for schema, ddl in ((_PARSE_SCHEMA, parse_ddl), (_SCAN_SCHEMA, scan_ddl)):
+        expected = _parse_datatype_string(ddl)
+        assert [(f.name, f.dataType, f.nullable) for f in schema.fields] == [
+            (f.name, f.dataType, f.nullable) for f in expected.fields
+        ]
+        assert schema == expected
+
+
+def test_wos_csv_sniff_runs_no_spark_job(spark, tmp_path):
+    """Planning a WOS CSV scan runs one job (the CSV reader's header job):
+    the dialect is sniffed from the first file's head on the driver, with
+    the same result as sniffing the file's first 64 KB."""
+    import shutil
+
+    from scholarmind_spark.sources.wos import (
+        SNIFF_BYTES,
+        read_head,
+        scan_wos_csv,
+        sniff_csv_dialect,
+    )
+
+    path = os.path.join(FIXTURES, "wos.csv")
+    with open(path, "rb") as f:
+        head = f.read(SNIFF_BYTES)
+    for d in ("a", "b"):
+        (tmp_path / d).mkdir()
+    shutil.copy(path, tmp_path / "a" / "export.csv")
+    (tmp_path / "a" / "_SUCCESS").write_bytes(b"")
+    (tmp_path / "b" / "export.tsv").write_bytes(b"Article Title\tDOI\nt\t10.1/x\n")
+    assert read_head(spark, path) == head
+    assert read_head(spark, str(tmp_path / "a")) == head  # skips _SUCCESS
+    assert read_head(spark, f"file://{tmp_path}/*/export.*") == head  # first match of a glob
+    big = tmp_path / "big.csv"
+    big.write_bytes(b"x" * (SNIFF_BYTES + 1000))
+    assert len(read_head(spark, str(big))) == SNIFF_BYTES
+    with pytest.raises(FileNotFoundError):
+        read_head(spark, str(tmp_path / "missing.csv"))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("wos_csv_plan", "wos_csv_plan")
+    try:
+        scan_wos_csv(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("wos_csv_plan")) == 1
+    assert sniff_csv_dialect(read_head(spark, path)) == sniff_csv_dialect(head) == ("utf-8", ",")

@@ -318,3 +318,47 @@ def test_no_worker_warmup_without_a_python_stage(spark):
     ref, _ = _count_jobs(spark, "csv_ref", lambda: process(build_corpus(spark, cfg2.sources), cfg2))
     n, _ = _count_jobs(spark, "csv_run", lambda: run_pipeline(spark, cfg2))
     assert n == ref
+
+
+def test_corpus_rows_unchanged_by_the_structtype_scan_schema(spark, cfg, monkeypatch):
+    """``build_corpus`` returns the same rows with the StructType scan
+    schema as with the DDL text it replaced."""
+    import scholarmind_spark.sources.base as base
+    from scholarmind_spark.schemas import RECORD_SCHEMA
+
+    sources = {**cfg.sources, "wos_csv": f"{FIX}/wos.csv"}
+    got = build_corpus(spark, sources).orderBy("record_id").collect()
+    parse_ddl = RECORD_SCHEMA.simpleString().replace("record_id:bigint,", "")
+    monkeypatch.setattr(base, "_SCAN_SCHEMA", parse_ddl[:-1] + ",_file:string,_ordinal:bigint>")
+    assert build_corpus(spark, sources).orderBy("record_id").collect() == got
+    assert got
+
+
+def test_pipeline_build_parses_no_sql_type_text(spark, cfg, monkeypatch):
+    """Building the pipeline (and its presentation projection) on the
+    fixtures passes no type name to ``Column.cast`` and no DDL string as a
+    UDF schema: on a cold JVM the first parse of either costs 0.15-0.35 s
+    of plan construction."""
+    from dataclasses import replace
+
+    import pyspark.sql.udf as udf_mod
+    from pyspark.sql.classic.column import Column
+
+    seen = []
+    real_cast, real_parse = Column.cast, udf_mod._parse_datatype_string
+
+    def cast(self, dataType):
+        if isinstance(dataType, str):
+            seen.append(("cast", dataType))
+        return real_cast(self, dataType)
+
+    def parse(s):
+        seen.append(("udf schema", s))
+        return real_parse(s)
+
+    monkeypatch.setattr(Column, "cast", cast)
+    monkeypatch.setattr(udf_mod, "_parse_datatype_string", parse)
+    df = run_pipeline(spark, replace(cfg, sources={**cfg.sources, "wos_csv": f"{FIX}/wos.csv"}))
+    flatten_for_presentation(df)
+    release_caches(df)
+    assert seen == []
