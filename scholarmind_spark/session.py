@@ -36,6 +36,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scholarmind_spark import classcache
+
 WARMUP_GROUP = "scholarmind-engine-warmup"
 
 _log = logging.getLogger(__name__)
@@ -61,6 +63,18 @@ def get_spark(
 
     On a local master, the first call for a SparkContext also starts the
     engine warm-up in the background (see the module docstring).
+
+    A call that launches a new gateway JVM goes through the class-data
+    cache (:mod:`scholarmind_spark.classcache`): on an eligible host it
+    maps the archive a previous run recorded under
+    ``$XDG_CACHE_HOME/scholarmind_spark/``, appending
+    ``-XX:SharedArchiveFile`` to the caller's
+    ``spark.driver.extraJavaOptions``; without one, one process at a time
+    records it with ``-XX:ArchiveClassesAtExit`` and publishes it from an
+    ``atexit`` hook once the JVM's exit dump is done and verified.  The
+    launch sees ``SPARK_CONF_DIR`` pointed at an empty directory, restored
+    afterwards.  An ineligible host, a running gateway or a held recording
+    lock launch exactly as without the cache.
     """
     # Python workers unpickle mapInPandas closures by module reference; make
     # sure they can import this package even when the driver only put it on
@@ -114,7 +128,7 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = classcache.get_or_create(builder, extra_conf or {})
     _start_engine_warmup(spark)
     return spark
 

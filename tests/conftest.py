@@ -1,8 +1,22 @@
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+
 import pytest
 
 from scholarmind_spark.session import get_spark
+
+# The JVM class-data cache (scholarmind_spark.classcache) lives under
+# $XDG_CACHE_HOME.  Give the test session, and every CLI subprocess it
+# starts, a cache of its own, so a test run never writes the developer's
+# ~/.cache.  Registered before get_spark registers its recording hook, so
+# the directory is removed after the session JVM's exit dump is done.
+_CACHE_HOME = tempfile.mkdtemp(prefix="scholarmind-test-cache-")
+os.environ["XDG_CACHE_HOME"] = _CACHE_HOME
+atexit.register(shutil.rmtree, _CACHE_HOME, True)
 
 
 @pytest.fixture(scope="session")
