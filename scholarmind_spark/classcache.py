@@ -7,7 +7,8 @@ loaded into an AppCDS archive when the JVM exits
 (``-XX:SharedArchiveFile``), which skips the parsing and verification.
 :func:`get_or_create` does this for
 :func:`scholarmind_spark.session.get_spark` whenever it launches a new
-gateway JVM.  Nothing else changes: no conf, query, plan or job.
+gateway JVM.  Nothing else changes: no query, plan or job, and no conf
+but :data:`MODE_CONF`, which says what the launch did.
 
 **Where.**  ``$XDG_CACHE_HOME/scholarmind_spark/`` (``~/.cache/...`` by
 default), created with mode 0700.  A cache dir that is group- or
@@ -19,7 +20,8 @@ beside it), ``SPARK_HOME``, the name, size and mtime of every jar in
 - ``<key>.jsa``: the published archive; ``<key>.size``: its manifest, the
   archive's size in bytes;
 - ``<key>.<pid>.part``: the archive process ``pid`` is recording;
-- ``<key>.lock``: held by the one recording process (``pid start-time``);
+- ``<key>.lock``: an empty file the one recording process holds an
+  exclusive ``flock`` on;
 - ``conf/``: an empty directory, the launch's ``SPARK_CONF_DIR``.
 
 **Eligibility.**  The JVM prints some of its archive errors on stdout,
@@ -50,12 +52,15 @@ Passing any ``-Xshare`` option is how a caller keeps it off.
 ``-Xlog:disable -Xlog:all=warning:stderr -XX:SharedArchiveFile=<key>.jsa``
 is appended to the caller's ``spark.driver.extraJavaOptions``.  An archive
 whose size differs, or that has no manifest, is deleted first and never
-reaches the JVM.  If the gateway still fails to start, the archive is
-deleted and the launch retried once without it.
+reaches the JVM.  If the gateway still fails to start, the launch is
+retried once without the archive; only when that succeeds is the archive
+deleted (it was the cause), otherwise the plain launch's error is raised
+and the archive kept.
 
-**Recording.**  Otherwise one process at a time takes ``<key>.lock``
-(``O_EXCL``; a lock whose process is gone is taken over), deletes the
-``.part`` files a dead recorder left and launches with
+**Recording.**  Otherwise one process at a time holds ``<key>.lock``
+(a non-blocking ``flock``, which the kernel drops when its process dies,
+so a crashed recorder leaves no lock to recover), deletes the ``.part``
+files a dead recorder left and launches with
 ``-XX:ArchiveClassesAtExit=<key>.<pid>.part`` (its ``cds`` warnings, one
 per class the dump skips, are dropped; everything else warns on stderr).
 A process that finds the lock held launches without the cache.  An
@@ -64,13 +69,26 @@ and publishes the ``.part`` by atomic rename, after writing its size
 manifest, only if the JVM exited 0 and a verification JVM maps it with
 ``-Xshare:on`` and the recorded ``java.class.path`` (stdout captured,
 ``-XX:ErrorFile`` inside the cache dir).  Then it deletes the ``.part``
-and releases the lock.  The recording run pays the dump once (seconds,
-for an archive of ~150-200 MB); every later start maps it.
+and releases the lock.  The recording run pays for it once: on a 4-vCPU
+host its start and cold pass take ~20-35% longer and the dump takes
+5-13 s at exit, for an archive of ~150-200 MB.  Every later start maps
+the archive.  A host whose cache does not persist (an ephemeral
+``HOME``, a fresh container) pays the recording run every time;
+``-Xshare:auto`` in the JVM options keeps the cache off there.
+
+**Which case applied.**  Every launch through the cache prints one line
+on stderr (``scholarmind_spark: class-data cache <mode>: <archive>``)
+and sets :data:`MODE_CONF` on the session to its mode: ``mapped``,
+``recording``, ``busy`` (another process is recording; this launch is as
+without the cache) or ``discarded`` (the gateway failed to start with
+the archive and started without it).  A launch that is not eligible
+prints nothing and leaves the conf unset.
 """
 
 from __future__ import annotations
 
 import atexit
+import fcntl
 import glob
 import hashlib
 import logging
@@ -78,12 +96,13 @@ import os
 import shutil
 import stat
 import subprocess
-import time
+import sys
 from dataclasses import dataclass
 
 _log = logging.getLogger(__name__)
 
 JAVA_OPTIONS = "spark.driver.extraJavaOptions"
+MODE_CONF = "spark.scholarmind.classcache"
 _QUIET = "-Xlog:disable -Xlog:all=warning:stderr"
 _QUIET_DUMP = "-Xlog:disable -Xlog:all=warning,cds*=error:stderr"
 _CALLER_CDS = ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit", "-Xlog")
@@ -92,20 +111,21 @@ _JVM_OPTION_ENV = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "SP
 _MIN_FREE_BYTES = 1 << 30  # room for the exit dump
 _EXIT_TIMEOUT_S = 120  # the dump takes seconds
 _VERIFY_TIMEOUT_S = 60
-_FRESH_LOCK_S = 10  # a lock too young to hold its pid yet
 
 
 @dataclass
 class Launch:
-    """One gateway launch through the cache: the ``extraJavaOptions`` to
-    pass, the empty conf dir, and for a recording run the ``.part`` path
-    and the lock it holds."""
+    """One gateway launch through the cache: its mode, the
+    ``extraJavaOptions`` to pass, the empty conf dir, and for a recording
+    run the ``.part`` path and the descriptor that holds the lock."""
 
     cache: str
     key: str
-    java_options: str
+    mode: str
+    java_options: str | None
     caller_options: str | None
     part: str | None = None
+    lock_fd: int | None = None
 
     @property
     def archive(self) -> str:
@@ -131,8 +151,9 @@ class Launch:
         _unlink(self.part)
         for p in glob.glob(os.path.join(self.cache, f"{self.key}.hs_err_*.log")):
             _unlink(p)
-        if _read(self.lock) == _lock_token(os.getpid()):
-            _unlink(self.lock)
+        if self.lock_fd is not None:
+            os.close(self.lock_fd)  # closing the last descriptor drops the flock
+            self.lock_fd = None
 
 
 def get_or_create(builder, extra_conf: dict[str, str]):
@@ -147,24 +168,48 @@ def get_or_create(builder, extra_conf: dict[str, str]):
     launch = plan(extra_conf)
     if launch is None:
         return builder.getOrCreate()
-    builder = builder.config(JAVA_OPTIONS, launch.java_options)
+    if launch.mode == "busy":
+        spark = builder.getOrCreate()
+    else:
+        spark = _launch_through(builder, launch)
+    _report(spark, launch)
+    return spark
+
+
+def _launch_through(builder, launch: Launch):
+    """Launch with the cache's options and conf dir.  A gateway that fails
+    to start while mapping is relaunched once without the archive, which is
+    deleted only if that relaunch starts."""
+    from pyspark import SparkContext
+
     try:
-        spark = _launch(builder, launch.conf_dir)
+        spark = _launch(builder.config(JAVA_OPTIONS, launch.java_options), launch.conf_dir)
     except BaseException as e:
         launch.release()
         if not isinstance(e, Exception) or launch.part or SparkContext._gateway is not None:
             raise
-        _log.warning("gateway failed to start with the class-data archive %s; "
-                     "deleting it and retrying without", launch.archive, exc_info=True)
+        # raises the plain launch's own error, and keeps the archive, when
+        # the archive was not what stopped the gateway
+        spark = builder.config(JAVA_OPTIONS, launch.caller_options or "").getOrCreate()
+        _log.warning("gateway failed to start with the class-data archive %s and started "
+                     "without it; archive deleted", launch.archive, exc_info=True)
         _unlink(launch.archive)
         _unlink(launch.manifest)
-        return builder.config(JAVA_OPTIONS, launch.caller_options or "").getOrCreate()
+        launch.mode = "discarded"
+        return spark
     if launch.part is not None:
         sc = spark.sparkContext
         java = os.path.join(sc._jvm.System.getProperty("java.home"), "bin", "java")
         class_path = sc._jvm.System.getProperty("java.class.path")
         atexit.register(_at_exit, launch, sc._gateway.proc, java, class_path)
     return spark
+
+
+def _report(spark, launch: Launch) -> None:
+    """Say which case applied: one stderr line and :data:`MODE_CONF`."""
+    print(f"scholarmind_spark: class-data cache {launch.mode}: {launch.archive}",
+          file=sys.stderr, flush=True)
+    spark.conf.set(MODE_CONF, launch.mode)
 
 
 def _at_exit(launch: Launch, proc, java: str, class_path: str) -> None:
@@ -195,9 +240,9 @@ def _launch(builder, conf_dir: str):
 
 
 def plan(extra_conf: dict[str, str]) -> Launch | None:
-    """Decide how the next gateway launch uses the cache: a mapping or a
-    recording :class:`Launch`, or None to launch as without the cache (not
-    eligible, or another process is recording)."""
+    """Decide how the next gateway launch uses the cache: a ``mapped``,
+    ``recording`` or ``busy`` :class:`Launch` (another process holds the
+    lock: launch as without the cache), or None when not eligible."""
     env = os.environ
     spark_home = _spark_home()
     java = _java()
@@ -226,14 +271,19 @@ def plan(extra_conf: dict[str, str]) -> Launch | None:
     except OSError:
         return None
     before = f"{caller} " if caller else ""  # append to the caller's, never replace
-    launch = Launch(cache, key, "", caller)
+    launch = Launch(cache, key, "mapped", None, caller)
     if _published(launch):
         launch.java_options = f"{before}{_QUIET} -XX:SharedArchiveFile={launch.archive}"
         return launch
-    if shutil.disk_usage(cache).free < _MIN_FREE_BYTES or not _take_lock(launch.lock):
+    if shutil.disk_usage(cache).free < _MIN_FREE_BYTES:
         return None
+    launch.lock_fd = _take_lock(launch.lock)
+    if launch.lock_fd is None:
+        launch.mode = "busy"
+        return launch
     for p in glob.glob(os.path.join(cache, f"{key}.*.part")):
         _unlink(p)  # we hold the lock: every .part is a dead recorder's
+    launch.mode = "recording"
     launch.part = os.path.join(cache, f"{key}.{os.getpid()}.part")
     launch.java_options = f"{before}{_QUIET_DUMP} -XX:ArchiveClassesAtExit={launch.part}"
     return launch
@@ -364,57 +414,20 @@ def _published(launch: Launch) -> bool:
     return ok
 
 
-def _take_lock(path: str) -> bool:
-    """Create the recorder lock with ``O_EXCL``; take over a lock whose
-    process is gone.  False when a live process holds it."""
-    for _ in range(2):
-        try:
-            fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o600)
-        except FileExistsError:
-            if _lock_held(path):
-                return False
-            _unlink(path)
-            continue
-        except OSError:
-            return False
-        with os.fdopen(fd, "w") as f:
-            f.write(_lock_token(os.getpid()))
-        return True
-    return False
-
-
-def _lock_held(path: str) -> bool:
-    text = _read(path)
+def _take_lock(path: str) -> int | None:
+    """An open descriptor holding an exclusive ``flock`` on the recorder
+    lock, or None when another process holds it.  The kernel drops the
+    lock when its holder exits, however it exits."""
     try:
-        pid_s, start = text.split()
-        pid = int(pid_s)
-    except ValueError:
-        try:  # created, but its pid not written yet
-            return time.time() - os.stat(path).st_mtime < _FRESH_LOCK_S
-        except FileNotFoundError:
-            return False
+        fd = os.open(path, os.O_RDWR | os.O_CREAT, 0o600)
+    except OSError:
+        return None
     try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        pass
-    now = _proc_start(pid)
-    return now in (start, "-")  # a different start time: the pid was reused
-
-
-def _lock_token(pid: int) -> str:
-    return f"{pid} {_proc_start(pid)}"
-
-
-def _proc_start(pid: int) -> str:
-    """The process's start time in clock ticks since boot, or ``-`` where
-    ``/proc`` does not say."""
-    try:
-        with open(f"/proc/{pid}/stat") as f:
-            return f.read().rsplit(")", 1)[1].split()[19]
-    except (OSError, IndexError):
-        return "-"
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except OSError:
+        os.close(fd)
+        return None
+    return fd
 
 
 def _read(path: str) -> str:

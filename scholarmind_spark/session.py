@@ -71,10 +71,12 @@ def get_spark(
     ``-XX:SharedArchiveFile`` to the caller's
     ``spark.driver.extraJavaOptions``; without one, one process at a time
     records it with ``-XX:ArchiveClassesAtExit`` and publishes it from an
-    ``atexit`` hook once the JVM's exit dump is done and verified.  The
-    launch sees ``SPARK_CONF_DIR`` pointed at an empty directory, restored
-    afterwards.  An ineligible host, a running gateway or a held recording
-    lock launch exactly as without the cache.
+    ``atexit`` hook once the JVM's exit dump is done and verified (that
+    first run is slower and waits for the dump at exit).  The launch sees
+    ``SPARK_CONF_DIR`` pointed at an empty directory, restored afterwards,
+    and prints one stderr line naming its mode, also set as the session
+    conf ``spark.scholarmind.classcache``.  An ineligible host, a running
+    gateway or a held recording lock launch exactly as without the cache.
     """
     # Python workers unpickle mapInPandas closures by module reference; make
     # sure they can import this package even when the driver only put it on

@@ -81,6 +81,18 @@ class FakeProc:
         pass
 
 
+class FakeConf(dict):
+    def set(self, k, v):
+        self[k] = v
+
+
+class FakeSession:
+    """What a launch returns: a session whose runtime conf is a dict."""
+
+    def __init__(self):
+        self.conf = FakeConf()
+
+
 class FakeBuilder:
     """A session builder that records the conf and ``SPARK_CONF_DIR`` each
     launch sees; the first ``fail`` launches raise."""
@@ -99,7 +111,7 @@ class FakeBuilder:
         if self.fail:
             self.fail -= 1
             raise RuntimeError("Java gateway process exited before sending its port number")
-        return "session"
+        return FakeSession()
 
 
 @pytest.fixture
@@ -112,14 +124,17 @@ def no_gateway(monkeypatch):
 def test_first_launch_records_under_a_lock(host):
     launch = classcache.plan({})
     cache = _cache(host)
+    assert launch.mode == "recording"
     assert launch.part == os.path.join(cache, f"{launch.key}.{os.getpid()}.part")
     assert launch.java_options.endswith(f"-XX:ArchiveClassesAtExit={launch.part}")
     assert "SharedArchiveFile" not in launch.java_options
     assert stat.S_IMODE(os.stat(cache).st_mode) == 0o700
     assert os.listdir(launch.conf_dir) == []
-    assert os.path.exists(launch.lock)
+    assert classcache._take_lock(launch.lock) is None  # held
     launch.release()
-    assert not os.path.exists(launch.lock)
+    fd = classcache._take_lock(launch.lock)  # free again
+    assert fd is not None
+    os.close(fd)
 
 
 def test_truncated_part_and_mismatched_archive_never_reach_the_jvm(host):
@@ -156,12 +171,11 @@ def test_published_archive_is_mapped_after_the_callers_options(host):
     key = _recorded_key()
     archive = _publish(host, key, 10)
     launch = classcache.plan({classcache.JAVA_OPTIONS: "-Dcaller=1 -Xss4m"})
-    assert launch.part is None
+    assert (launch.mode, launch.part, launch.lock_fd) == ("mapped", None, None)  # no lock
     assert launch.java_options == (
         "-Dcaller=1 -Xss4m -Xlog:disable -Xlog:all=warning:stderr "
         f"-XX:SharedArchiveFile={archive}"
     )
-    assert not os.path.exists(launch.lock)  # mapping takes no lock
 
 
 def test_failed_recording_publishes_nothing(host):
@@ -171,7 +185,7 @@ def test_failed_recording_publishes_nothing(host):
     proc = FakeProc(rc=1)
     classcache.finish_recording(launch, proc, str(host / "jdk" / "bin" / "java"), "cp")
     assert proc.stdin.closed
-    assert os.listdir(_cache(host)) == ["conf"]
+    assert sorted(os.listdir(_cache(host))) == sorted(["conf", f"{launch.key}.lock"])
 
 
 def test_unverified_recording_publishes_nothing(host):
@@ -179,7 +193,7 @@ def test_unverified_recording_publishes_nothing(host):
     with open(launch.part, "wb") as f:
         f.write(b"\0" * 10)
     classcache.finish_recording(launch, FakeProc(rc=0), "/bin/false", "cp")
-    assert os.listdir(_cache(host)) == ["conf"]
+    assert sorted(os.listdir(_cache(host))) == sorted(["conf", f"{launch.key}.lock"])
 
 
 def test_verified_recording_is_published_with_its_manifest(host):
@@ -188,32 +202,49 @@ def test_verified_recording_is_published_with_its_manifest(host):
         f.write(b"\0" * 10)
     classcache.finish_recording(launch, FakeProc(rc=0), str(host / "jdk" / "bin" / "java"), "cp")
     key = launch.key
-    assert sorted(os.listdir(_cache(host))) == sorted(["conf", f"{key}.jsa", f"{key}.size"])
+    assert sorted(os.listdir(_cache(host))) == sorted(
+        ["conf", f"{key}.jsa", f"{key}.size", f"{key}.lock"])
     with open(launch.manifest) as f:
         assert f.read() == "10"
     assert classcache.plan({}).part is None  # the next launch maps it
 
 
-def test_second_recorder_finds_the_lock_held(host):
+def test_second_recorder_finds_the_lock_held(host, no_gateway, capsys):
+    """A second process finds the lock held: its launch is exactly as
+    without the cache, and it says so."""
     first = classcache.plan({})
     try:
-        assert classcache.plan({}) is None  # held by a live process: no cache
+        second = classcache.plan({})
+        assert (second.mode, second.part, second.java_options) == ("busy", None, None)
+        builder = FakeBuilder()
+        session = classcache.get_or_create(builder, {})
+        assert builder.launches == [({}, None)]
+        assert session.conf == {classcache.MODE_CONF: "busy"}
+        assert capsys.readouterr().err == (
+            f"scholarmind_spark: class-data cache busy: {first.archive}\n")
     finally:
         first.release()
 
 
-def test_stale_locks_are_taken_over(host):
+def test_dead_recorders_lock_is_free(host):
+    """The kernel drops the lock of a recorder that is killed: the next
+    launch records."""
     key = _recorded_key()
     lock = os.path.join(_cache(host), f"{key}.lock")
-    gone = subprocess.Popen(["true"])  # a pid that has exited
-    gone.wait()
-    for holder in (f"{gone.pid} 1", f"{os.getpid()} 1"):  # dead; pid reused
-        with open(lock, "w") as f:
-            f.write(holder)
-        launch = classcache.plan({})
-        assert launch is not None and launch.part is not None
-        launch.release()
-        assert not os.path.exists(lock)
+    holder = subprocess.Popen(
+        [sys.executable, "-c",
+         "import fcntl, os, sys; fd = os.open(sys.argv[1], os.O_RDWR); "
+         "fcntl.flock(fd, fcntl.LOCK_EX); print('held', flush=True); sys.stdin.read()", lock],
+        stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True)
+    try:
+        assert holder.stdout.readline() == "held\n"
+        assert classcache.plan({}).mode == "busy"
+    finally:
+        holder.kill()
+        holder.wait()
+    launch = classcache.plan({})
+    assert launch.mode == "recording"
+    launch.release()
 
 
 @pytest.mark.parametrize("case", [
@@ -237,7 +268,7 @@ def test_ineligible_host_launches_unchanged(host, monkeypatch, no_gateway, case)
     monkeypatch.setenv("SPARK_CONF_DIR", str(host / "spark" / "conf"))
     builder = FakeBuilder()
     builder.conf.update(extra)
-    assert classcache.get_or_create(builder, extra) == "session"
+    assert classcache.get_or_create(builder, extra).conf == {}
     assert builder.launches == [(extra, str(host / "spark" / "conf"))]
     assert not os.path.exists(_cache(host))
 
@@ -247,7 +278,7 @@ def test_running_gateway_is_a_no_op(host, monkeypatch):
 
     monkeypatch.setattr(SparkContext, "_gateway", object())
     builder = FakeBuilder()
-    assert classcache.get_or_create(builder, {}) == "session"
+    assert classcache.get_or_create(builder, {}).conf == {}
     assert builder.launches == [({}, None)]
     assert not os.path.exists(_cache(host))
 
@@ -268,13 +299,16 @@ def test_unsafe_cache_dir_is_ignored(host, monkeypatch, unsafe):
     assert os.listdir(cache) == []
 
 
-def test_mapped_launch_sees_the_empty_conf_dir_then_restores_it(host, monkeypatch, no_gateway):
+def test_mapped_launch_sees_the_empty_conf_dir_then_restores_it(
+        host, monkeypatch, no_gateway, capsys):
     key = _recorded_key()
     archive = _publish(host, key, 10)
     monkeypatch.setenv("SPARK_CONF_DIR", str(host / "spark" / "conf"))
     builder = FakeBuilder()
     builder.conf[classcache.JAVA_OPTIONS] = "-Dcaller=1"
-    classcache.get_or_create(builder, {classcache.JAVA_OPTIONS: "-Dcaller=1"})
+    session = classcache.get_or_create(builder, {classcache.JAVA_OPTIONS: "-Dcaller=1"})
+    assert session.conf == {classcache.MODE_CONF: "mapped"}
+    assert capsys.readouterr().err == f"scholarmind_spark: class-data cache mapped: {archive}\n"
     [(conf, conf_dir)] = builder.launches
     assert conf_dir == os.path.join(_cache(host), "conf")
     assert conf[classcache.JAVA_OPTIONS].startswith("-Dcaller=1 -Xlog:disable ")
@@ -283,14 +317,29 @@ def test_mapped_launch_sees_the_empty_conf_dir_then_restores_it(host, monkeypatc
 
 
 def test_gateway_that_dies_on_the_archive_is_relaunched_without_it(host, no_gateway):
+    """The gateway fails with the archive and starts without it: the
+    archive was the cause and is deleted."""
     key = _recorded_key()
     archive = _publish(host, key, 10)
     builder = FakeBuilder(fail=1)
-    assert classcache.get_or_create(builder, {}) == "session"
+    assert classcache.get_or_create(builder, {}).conf == {classcache.MODE_CONF: "discarded"}
     assert "SharedArchiveFile" in builder.launches[0][0][classcache.JAVA_OPTIONS]
     assert builder.launches[1] == ({classcache.JAVA_OPTIONS: ""}, None)
     assert not os.path.exists(archive)
     assert "SPARK_CONF_DIR" not in os.environ
+
+
+def test_gateway_that_dies_without_the_archive_too_keeps_it(host, no_gateway):
+    """A launch that fails with and without the archive (a bad driver
+    memory, a port) raises the plain launch's error; the archive stays."""
+    key = _recorded_key()
+    archive = _publish(host, key, 10)
+    builder = FakeBuilder(fail=2)
+    with pytest.raises(RuntimeError, match="gateway process exited"):
+        classcache.get_or_create(builder, {})
+    assert len(builder.launches) == 2
+    assert os.path.exists(archive)
+    assert classcache.plan({}).mode == "mapped"
 
 
 def _cli(cache_home: str, out_dir: str) -> subprocess.CompletedProcess:
@@ -327,10 +376,11 @@ def test_cli_records_then_maps_and_stdout_stays_its_own(spark, tmp_path, monkeyp
     first = _cli(cache_home, str(tmp_path / "a"))
     assert first.returncode == 0, first.stderr[-3000:]
     assert first.stdout == expected(tmp_path / "a")
+    assert "scholarmind_spark: class-data cache recording: " in first.stderr
     names = sorted(os.listdir(cache))
     [archive] = [n for n in names if n.endswith(".jsa")]
     key = archive[: -len(".jsa")]
-    assert names == sorted(["conf", archive, f"{key}.size"])
+    assert names == sorted(["conf", archive, f"{key}.size", f"{key}.lock"])
     archive = os.path.join(cache, archive)
     size = os.stat(archive).st_size
     with open(os.path.join(cache, f"{key}.size")) as f:
@@ -340,6 +390,7 @@ def test_cli_records_then_maps_and_stdout_stays_its_own(spark, tmp_path, monkeyp
     second = _cli(cache_home, str(tmp_path / "b"))
     assert second.returncode == 0, second.stderr[-3000:]
     assert second.stdout == expected(tmp_path / "b")
+    assert f"scholarmind_spark: class-data cache mapped: {archive}" in second.stderr
     assert "[cds]" not in second.stderr  # a refused archive warns here
     assert sorted(os.listdir(cache)) == names
     now = os.stat(archive)
@@ -363,4 +414,4 @@ def test_cli_records_then_maps_and_stdout_stays_its_own(spark, tmp_path, monkeyp
     launch.release()
     assert launch.part is not None
     assert "SharedArchiveFile" not in launch.java_options
-    assert sorted(os.listdir(cache)) == ["conf"]
+    assert sorted(os.listdir(cache)) == sorted(["conf", f"{key}.lock"])
