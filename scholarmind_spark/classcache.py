@@ -1,93 +1,82 @@
-"""A class-data archive for the gateway JVM, kept between runs.
+"""A class-data archive for the gateway JVM, built once and mapped by every run.
 
 A fresh driver JVM spends most of its start loading, parsing and verifying
-the classes of ``$SPARK_HOME/jars``.  JDK 13+ can write the classes a run
-loaded into an AppCDS archive when the JVM exits
-(``-XX:ArchiveClassesAtExit``) and map that archive on later starts
-(``-XX:SharedArchiveFile``), which skips the parsing and verification.
-:func:`get_or_create` does this for
-:func:`scholarmind_spark.session.get_spark` whenever it launches a new
-gateway JVM.  Nothing else changes: no query, plan or job, and no conf
-but :data:`MODE_CONF`, which says what the launch did.
+the classes of ``$SPARK_HOME/jars``.  JDK 13+ can write the classes a JVM
+loaded into an AppCDS archive at exit (``-XX:ArchiveClassesAtExit``) and
+map it on later starts (``-XX:SharedArchiveFile``), skipping that work.
+``python -m scholarmind_spark.classcache build`` records the archive
+(:func:`build`), and :func:`get_or_create` maps it whenever
+:func:`scholarmind_spark.session.get_spark` launches a new gateway JVM.
+Without a published archive the launch is exactly
+``builder.getOrCreate()``: no run records, writes to the cache or waits
+at exit.  No query, plan, job or conf changes but :data:`MODE_CONF`.
 
 **Where.**  ``$XDG_CACHE_HOME/scholarmind_spark/`` (``~/.cache/...`` by
-default), created with mode 0700.  A cache dir that is group- or
-world-writable, owned by another uid or not writable is ignored.  Each
-archive is keyed by a digest of the ``java`` binary (and the JDK image
-beside it), ``SPARK_HOME``, the name, size and mtime of every jar in
-``$SPARK_HOME/jars`` and the caller's ``spark.driver.extraClassPath``:
+default), made 0700 by the build and ignored when group- or
+world-writable, owned by another uid or not writable.  The key digests
+the ``java`` binary and JDK image, ``SPARK_HOME``, the name, size and
+mtime of each jar in ``$SPARK_HOME/jars`` and the caller's
+``spark.driver.extraClassPath``.  Files: ``<key>.jsa`` (the archive),
+``<key>.size`` (its manifest: its size in bytes), ``<key>.<pid>.part``
+(a build's recording), ``<key>.lock`` (the build's ``flock``) and
+``conf/`` (empty: the launch's ``SPARK_CONF_DIR``).
 
-- ``<key>.jsa``: the published archive; ``<key>.size``: its manifest, the
-  archive's size in bytes;
-- ``<key>.<pid>.part``: the archive process ``pid`` is recording;
-- ``<key>.lock``: an empty file the one recording process holds an
-  exclusive ``flock`` on;
-- ``conf/``: an empty directory, the launch's ``SPARK_CONF_DIR``.
+**An archive belongs to its cache directory's path.**  The launch's class
+path starts with ``<cache>/conf/`` and the JVM maps an archive only for
+the class path it was recorded with, so a copied or moved cache, or the
+same files under another ``XDG_CACHE_HOME`` path, maps nothing (``java
+-Xshare:on`` fails with "shared class paths mismatch"; the default
+``-Xshare:auto`` starts without it) while the stderr line still says
+``mapped``.  Build the archive where it is used.
 
-**Eligibility.**  The JVM prints some of its archive errors on stdout,
-whatever ``-Xlog`` says: "Cannot have non-empty directory in paths" and
-the crash banner of a truncated archive (JDK 17 dies with SIGBUS in
-``FileMapInfo::relocate_pointers_in_core_regions``).  A CLI whose stdout
-is its output cannot have either, so the cache is used only when:
+**Eligibility.**  The JVM prints some archive errors on stdout whatever
+``-Xlog`` says ("Cannot have non-empty directory in paths"; JDK 17's
+SIGBUS banner for a truncated archive), which a CLI whose stdout is its
+output cannot have.  So the cache is used only when:
 
 - the effective conf dir (``SPARK_CONF_DIR`` or ``$SPARK_HOME/conf``)
-  holds only ``*.template`` files.  Spark's launcher puts that directory
-  on the driver's class path and the JVM refuses to archive a class path
-  with a non-empty directory, so the launch points ``SPARK_CONF_DIR`` at
-  ``conf/`` and restores it afterwards; with templates only, the launch
-  reads nothing from the real one either;
+  holds only ``*.template`` files.  The launcher puts it on the class
+  path and the JVM refuses a non-empty directory there, so the launch
+  points ``SPARK_CONF_DIR`` at ``conf/`` and restores it afterwards;
 - ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR``, ``SPARK_DIST_CLASSPATH`` and
-  ``SPARK_PREPEND_CLASSES`` are unset (each puts more on the class path);
+  ``SPARK_PREPEND_CLASSES`` are unset (each adds to the class path);
 - the caller passes no ``-Xshare``, ``SharedArchiveFile``,
-  ``ArchiveClassesAtExit`` or ``-Xlog`` option (ours would override or
-  switch off the caller's), in ``spark.driver.extraJavaOptions``,
-  ``spark.driver.defaultJavaOptions`` or the JVM option variables, and
-  ``PYSPARK_SUBMIT_ARGS`` is unset or the default ``pyspark-shell``;
-- the cache dir passes the checks above and its path needs no quoting.
-
-Otherwise the launch is exactly what it would be without this module.
-Passing any ``-Xshare`` option is how a caller keeps it off.
+  ``ArchiveClassesAtExit`` or ``-Xlog`` option (in
+  ``spark.driver.extraJavaOptions``, ``spark.driver.defaultJavaOptions``
+  or the JVM option variables) and ``PYSPARK_SUBMIT_ARGS`` is unset or
+  ``pyspark-shell``.  Any ``-Xshare`` option keeps the cache off;
+- the cache dir exists and passes the checks above, its path needs no
+  quoting and its ``conf/`` is empty.  Otherwise the launch is exactly
+  what it would be without this module.
 
 **Mapping.**  If ``<key>.jsa`` exists and its size matches its manifest,
 ``-Xlog:disable -Xlog:all=warning:stderr -XX:SharedArchiveFile=<key>.jsa``
-is appended to the caller's ``spark.driver.extraJavaOptions``.  An archive
-whose size differs, or that has no manifest, is deleted first and never
-reaches the JVM.  If the gateway still fails to start, the launch is
-retried once without the archive; only when that succeeds is the archive
-deleted (it was the cause), otherwise the plain launch's error is raised
-and the archive kept.
+is appended to the caller's ``spark.driver.extraJavaOptions``.  A
+mismatched or manifest-less archive is deleted first and never reaches
+the JVM.  A gateway that still fails to start is relaunched once without
+the archive, which is deleted only if that relaunch starts; otherwise
+the plain launch's error is raised and the archive kept.  The launch
+prints one stderr line (``scholarmind_spark: class-data cache <mode>:
+<archive>``) and sets :data:`MODE_CONF` to its mode, ``mapped`` or
+``discarded``.  Any other launch prints nothing and leaves it unset.
 
-**Recording.**  Otherwise one process at a time holds ``<key>.lock``
-(a non-blocking ``flock``, which the kernel drops when its process dies,
-so a crashed recorder leaves no lock to recover), deletes the ``.part``
-files a dead recorder left and launches with
-``-XX:ArchiveClassesAtExit=<key>.<pid>.part`` (its ``cds`` warnings, one
-per class the dump skips, are dropped; everything else warns on stderr).
-A process that finds the lock held launches without the cache.  An
-``atexit`` hook closes the gateway's stdin, waits for the JVM's exit dump
-and publishes the ``.part`` by atomic rename, after writing its size
-manifest, only if the JVM exited 0 and a verification JVM maps it with
-``-Xshare:on`` and the recorded ``java.class.path`` (stdout captured,
-``-XX:ErrorFile`` inside the cache dir).  Then it deletes the ``.part``
-and releases the lock.  The recording run pays for it once: on a 4-vCPU
-host its start and cold pass take ~20-35% longer and the dump takes
-5-13 s at exit, for an archive of ~150-200 MB.  Every later start maps
-the archive.  A host whose cache does not persist (an ephemeral
-``HOME``, a fresh container) pays the recording run every time;
-``-Xshare:auto`` in the JVM options keeps the cache off there.
-
-**Which case applied.**  Every launch through the cache prints one line
-on stderr (``scholarmind_spark: class-data cache <mode>: <archive>``)
-and sets :data:`MODE_CONF` on the session to its mode: ``mapped``,
-``recording``, ``busy`` (another process is recording; this launch is as
-without the cache) or ``discarded`` (the gateway failed to start with
-the archive and started without it).  A launch that is not eligible
-prints nothing and leaves the conf unset.
+**Building.**  The build takes ``<key>.lock`` with a non-blocking
+``flock``, which the kernel drops when its holder dies (a build that
+finds it held exits 1 and changes nothing), deletes dead builds'
+``.part`` files and the archive, and starts a session through
+``get_spark`` and the same ``conf/`` redirect with
+``-XX:ArchiveClassesAtExit=<key>.<pid>.part`` (``cds`` warnings
+dropped).  It runs the engine warm-up query, a pass-through
+``mapInPandas`` job and a parquet write and read, stops the session,
+closes the gateway's stdin and waits for the exit dump.  If the JVM
+exited 0 and a JVM maps the ``.part`` with ``-Xshare:on`` and the
+recorded class path (output captured, ``-XX:ErrorFile`` in the cache),
+it writes the manifest, publishes by rename and prints the archive's
+size and its own wall time; else it exits 1.
 """
 
 from __future__ import annotations
 
-import atexit
 import fcntl
 import glob
 import hashlib
@@ -97,6 +86,9 @@ import shutil
 import stat
 import subprocess
 import sys
+import tempfile
+import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 _log = logging.getLogger(__name__)
@@ -108,24 +100,19 @@ _QUIET_DUMP = "-Xlog:disable -Xlog:all=warning,cds*=error:stderr"
 _CALLER_CDS = ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit", "-Xlog")
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH", "SPARK_PREPEND_CLASSES")
 _JVM_OPTION_ENV = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS")
-_MIN_FREE_BYTES = 1 << 30  # room for the exit dump
 _EXIT_TIMEOUT_S = 120  # the dump takes seconds
 _VERIFY_TIMEOUT_S = 60
 
 
 @dataclass
 class Launch:
-    """One gateway launch through the cache: its mode, the
-    ``extraJavaOptions`` to pass, the empty conf dir, and for a recording
-    run the ``.part`` path and the descriptor that holds the lock."""
+    """A gateway launch through the cache: its mode, JVM options and the caller's own."""
 
     cache: str
     key: str
-    mode: str
-    java_options: str | None
     caller_options: str | None
-    part: str | None = None
-    lock_fd: int | None = None
+    java_options: str | None = None
+    mode: str = "mapped"
 
     @property
     def archive(self) -> str:
@@ -136,31 +123,14 @@ class Launch:
         return os.path.join(self.cache, f"{self.key}.size")
 
     @property
-    def lock(self) -> str:
-        return os.path.join(self.cache, f"{self.key}.lock")
-
-    @property
     def conf_dir(self) -> str:
         return os.path.join(self.cache, "conf")
 
-    def release(self) -> None:
-        """Delete this run's ``.part`` and crash reports and drop the lock
-        (recording runs only)."""
-        if self.part is None:
-            return
-        _unlink(self.part)
-        for p in glob.glob(os.path.join(self.cache, f"{self.key}.hs_err_*.log")):
-            _unlink(p)
-        if self.lock_fd is not None:
-            os.close(self.lock_fd)  # closing the last descriptor drops the flock
-            self.lock_fd = None
-
 
 def get_or_create(builder, extra_conf: dict[str, str]):
-    """``builder.getOrCreate()``, launching a new gateway JVM through the
-    class-data cache when it is eligible (see the module docstring).
-    ``extra_conf`` is what the caller put on the builder; a running
-    gateway leaves everything as it is."""
+    """``builder.getOrCreate()``, mapping the published archive when the
+    launch is eligible (see the module docstring).  ``extra_conf`` is what
+    the caller put on the builder; a running gateway changes nothing."""
     from pyspark import SparkContext
 
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
@@ -168,87 +138,67 @@ def get_or_create(builder, extra_conf: dict[str, str]):
     launch = plan(extra_conf)
     if launch is None:
         return builder.getOrCreate()
-    if launch.mode == "busy":
-        spark = builder.getOrCreate()
-    else:
-        spark = _launch_through(builder, launch)
-    _report(spark, launch)
+    spark = _launch_through(builder, launch)
+    print(f"scholarmind_spark: class-data cache {launch.mode}: {launch.archive}",
+          file=sys.stderr, flush=True)
+    spark.conf.set(MODE_CONF, launch.mode)
     return spark
 
 
 def _launch_through(builder, launch: Launch):
-    """Launch with the cache's options and conf dir.  A gateway that fails
-    to start while mapping is relaunched once without the archive, which is
+    """Launch with the archive and the cache's conf dir.  A gateway that
+    fails to start is relaunched once without the archive, which is
     deleted only if that relaunch starts."""
     from pyspark import SparkContext
 
     try:
-        spark = _launch(builder.config(JAVA_OPTIONS, launch.java_options), launch.conf_dir)
-    except BaseException as e:
-        launch.release()
-        if not isinstance(e, Exception) or launch.part or SparkContext._gateway is not None:
+        with _conf_dir(launch.conf_dir):
+            return builder.config(JAVA_OPTIONS, launch.java_options).getOrCreate()
+    except Exception:
+        if SparkContext._gateway is not None:
             raise
         # raises the plain launch's own error, and keeps the archive, when
         # the archive was not what stopped the gateway
         spark = builder.config(JAVA_OPTIONS, launch.caller_options or "").getOrCreate()
         _log.warning("gateway failed to start with the class-data archive %s and started "
                      "without it; archive deleted", launch.archive, exc_info=True)
-        _unlink(launch.archive)
-        _unlink(launch.manifest)
-        launch.mode = "discarded"
-        return spark
-    if launch.part is not None:
-        sc = spark.sparkContext
-        java = os.path.join(sc._jvm.System.getProperty("java.home"), "bin", "java")
-        class_path = sc._jvm.System.getProperty("java.class.path")
-        atexit.register(_at_exit, launch, sc._gateway.proc, java, class_path)
+    _unlink(launch.archive)
+    _unlink(launch.manifest)
+    launch.mode = "discarded"
     return spark
 
 
-def _report(spark, launch: Launch) -> None:
-    """Say which case applied: one stderr line and :data:`MODE_CONF`."""
-    print(f"scholarmind_spark: class-data cache {launch.mode}: {launch.archive}",
-          file=sys.stderr, flush=True)
-    spark.conf.set(MODE_CONF, launch.mode)
-
-
-def _at_exit(launch: Launch, proc, java: str, class_path: str) -> None:
-    """Stop a context the caller left running, from Python, so its
-    accumulator server shuts down instead of seeing the JVM's end of the
-    socket close under it; then finish the recording."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is not None:
-        try:
-            sc.stop()
-        except Exception:  # the JVM still exits and dumps on EOF
-            _log.debug("stopping the context before the dump failed", exc_info=True)
-    finish_recording(launch, proc, java, class_path)
-
-
-def _launch(builder, conf_dir: str):
+@contextmanager
+def _conf_dir(conf_dir: str):
+    """Point ``SPARK_CONF_DIR`` at ``conf_dir`` for a launch, then restore it."""
     saved = os.environ.get("SPARK_CONF_DIR")
     os.environ["SPARK_CONF_DIR"] = conf_dir
     try:
-        return builder.getOrCreate()
+        yield
     finally:
-        if saved is None:
-            os.environ.pop("SPARK_CONF_DIR", None)
-        else:
+        os.environ.pop("SPARK_CONF_DIR")
+        if saved is not None:
             os.environ["SPARK_CONF_DIR"] = saved
 
 
 def plan(extra_conf: dict[str, str]) -> Launch | None:
-    """Decide how the next gateway launch uses the cache: a ``mapped``,
-    ``recording`` or ``busy`` :class:`Launch` (another process holds the
-    lock: launch as without the cache), or None when not eligible."""
+    """A ``mapped`` :class:`Launch` when the launch is eligible and the
+    archive is published, else None.  Creates nothing."""
+    launch = _target(extra_conf, create=False)
+    if launch is None or not _published(launch):
+        return None
+    before = f"{launch.caller_options} " if launch.caller_options else ""  # never replace
+    launch.java_options = f"{before}{_QUIET} -XX:SharedArchiveFile={launch.archive}"
+    return launch
+
+
+def _target(extra_conf: dict[str, str], create: bool) -> Launch | None:
+    """The cache and key a launch with ``extra_conf`` uses, or None when not
+    eligible.  ``create`` (the build) makes the cache and conf dirs."""
     env = os.environ
     spark_home = _spark_home()
     java = _java()
-    if spark_home is None or java is None:
-        return None
-    if any(env.get(k) for k in _CLASSPATH_ENV):
+    if spark_home is None or java is None or any(env.get(k) for k in _CLASSPATH_ENV):
         return None
     if env.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell").strip() != "pyspark-shell":
         return None
@@ -259,59 +209,107 @@ def plan(extra_conf: dict[str, str]) -> Launch | None:
         return None
     if not _only_templates(env.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")):
         return None
-    cache = cache_dir()
+    cache = cache_dir(create)
     if cache is None:
         return None
     conf_dir = os.path.join(cache, "conf")
     try:
-        os.makedirs(conf_dir, mode=0o700, exist_ok=True)
+        if create:
+            os.makedirs(conf_dir, mode=0o700, exist_ok=True)
         if os.listdir(conf_dir):
             return None
         key = _key(java, spark_home, extra_conf.get("spark.driver.extraClassPath", ""))
     except OSError:
         return None
-    before = f"{caller} " if caller else ""  # append to the caller's, never replace
-    launch = Launch(cache, key, "mapped", None, caller)
-    if _published(launch):
-        launch.java_options = f"{before}{_QUIET} -XX:SharedArchiveFile={launch.archive}"
-        return launch
-    if shutil.disk_usage(cache).free < _MIN_FREE_BYTES:
-        return None
-    launch.lock_fd = _take_lock(launch.lock)
-    if launch.lock_fd is None:
-        launch.mode = "busy"
-        return launch
-    for p in glob.glob(os.path.join(cache, f"{key}.*.part")):
-        _unlink(p)  # we hold the lock: every .part is a dead recorder's
-    launch.mode = "recording"
-    launch.part = os.path.join(cache, f"{key}.{os.getpid()}.part")
-    launch.java_options = f"{before}{_QUIET_DUMP} -XX:ArchiveClassesAtExit={launch.part}"
-    return launch
+    return Launch(cache, key, caller)
 
 
-def finish_recording(launch: Launch, proc, java: str, class_path: str) -> None:
-    """The recording run's exit hook: close the gateway's stdin (the JVM
-    exits on EOF), wait for its exit dump, verify and publish."""
+def build() -> int:
+    """Record, verify and publish the archive (module docstring); 0 when published."""
+    start = time.perf_counter()
+    launch = _target({}, create=True)
+    if launch is None:
+        print("scholarmind_spark: the class-data cache is off here; nothing built",
+              file=sys.stderr)
+        return 1
+    lock = os.path.join(launch.cache, f"{launch.key}.lock")
+    lock_fd = _take_lock(lock)
+    if lock_fd is None:
+        print(f"scholarmind_spark: another build holds {lock}; nothing built", file=sys.stderr)
+        return 1
+    part = os.path.join(launch.cache, f"{launch.key}.{os.getpid()}.part")
     try:
-        if proc.stdin is not None and not proc.stdin.closed:
-            proc.stdin.close()
-        try:
-            rc = proc.wait(timeout=_EXIT_TIMEOUT_S)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-            proc.wait()
-            rc = None
-        if rc != 0:
-            _log.info("class-data recording JVM exited %s; nothing published", rc)
-        elif verify(java, launch.part, class_path, launch.cache, launch.key):
-            _write_atomic(launch.manifest, str(os.stat(launch.part).st_size))
-            os.replace(launch.part, launch.archive)
-        else:
-            _log.info("class-data archive %s failed verification; discarded", launch.part)
-    except OSError:
-        _log.info("class-data recording not published", exc_info=True)
+        for p in glob.glob(os.path.join(launch.cache, f"{launch.key}.*.part")):
+            _unlink(p)  # we hold the lock: every .part is a dead build's
+        # launches run plain until the new archive is published
+        _unlink(launch.archive)
+        _unlink(launch.manifest)
+        launch.java_options = f"{_QUIET_DUMP} -XX:ArchiveClassesAtExit={part}"
+        if not finish_recording(launch, part, *_record(launch)):
+            return 1
     finally:
-        launch.release()
+        _unlink(part)
+        for p in glob.glob(os.path.join(launch.cache, f"{launch.key}.hs_err_*.log")):
+            _unlink(p)
+        os.close(lock_fd)  # closing the last descriptor drops the flock
+    size = os.stat(launch.archive).st_size
+    print(f"scholarmind_spark: built {launch.archive} ({size / 1e6:.1f} MB) "
+          f"in {time.perf_counter() - start:.1f} s")
+    return 0
+
+
+def _record(launch: Launch):
+    """Run a session that records its classes at exit over jobs most runs'
+    classes load; return its gateway process, ``java`` and class path."""
+    from pyspark.sql import Window, functions as F
+    from pyspark.sql.types import DecimalType, StringType
+
+    from scholarmind_spark.pipeline import _WARMUP_SCHEMA, _pass_batches
+    from scholarmind_spark.session import get_spark
+
+    with _conf_dir(launch.conf_dir):
+        spark = get_spark(app_name="scholarmind-classcache-build", master="local[*]",
+                          extra_conf={JAVA_OPTIONS: launch.java_options})
+    try:
+        sc = spark.sparkContext
+        sc._engine_warmup.join()  # session._warmup_frame
+        n = sc.defaultParallelism
+        spark.range(0, n, 1, n).mapInPandas(_pass_batches, schema=_WARMUP_SCHEMA).collect()
+        with tempfile.TemporaryDirectory() as tmp:  # string, date, decimal; sort, window
+            path = os.path.join(tmp, "t.parquet")
+            t = spark.range(0, 1 << 12, 1, n)
+            t.select("id", (t.id % 7).cast(StringType()).alias("s"), F.current_date().alias("d"),
+                     (t.id / 8).cast(DecimalType(12, 2)).alias("m")).write.parquet(path)
+            rank = F.row_number().over(Window.partitionBy("s").orderBy("m"))
+            spark.read.parquet(path).withColumn("r", rank).orderBy("d", "id").collect()
+        java = os.path.join(sc._jvm.System.getProperty("java.home"), "bin", "java")
+        class_path = sc._jvm.System.getProperty("java.class.path")
+        proc = sc._gateway.proc
+    finally:
+        spark.stop()
+    return proc, java, class_path
+
+
+def finish_recording(launch: Launch, part: str, proc, java: str, class_path: str) -> bool:
+    """Close the recording gateway's stdin (the JVM exits on EOF), wait for
+    its exit dump, verify ``part`` and publish it; True when published."""
+    if proc.stdin is not None and not proc.stdin.closed:
+        proc.stdin.close()
+    try:
+        rc = proc.wait(timeout=_EXIT_TIMEOUT_S)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+        rc = None
+    if rc != 0:
+        print(f"scholarmind_spark: recording JVM exited {rc}; nothing published", file=sys.stderr)
+        return False
+    if not verify(java, part, class_path, launch.cache, launch.key):
+        print(f"scholarmind_spark: {part} failed verification; nothing published", file=sys.stderr)
+        return False
+    _write_atomic(launch.manifest, str(os.stat(part).st_size))
+    os.replace(part, launch.archive)
+    return True
 
 
 def verify(java: str, archive: str, class_path: str, cache: str, key: str) -> bool:
@@ -329,10 +327,11 @@ def verify(java: str, archive: str, class_path: str, cache: str, key: str) -> bo
     return done.returncode == 0
 
 
-def cache_dir() -> str | None:
-    """The cache directory, created 0700 if missing, or None when it is
-    unsafe or unusable: group- or world-writable, owned by another uid,
-    not a directory, not writable, or a path the launcher would split."""
+def cache_dir(create: bool = True) -> str | None:
+    """The cache directory, created 0700 if missing and ``create``, or None
+    when it is missing, unsafe or unusable: group- or world-writable,
+    owned by another uid, not a directory, not writable, or a path the
+    launcher would split."""
     base = os.environ.get("XDG_CACHE_HOME", "")
     if not os.path.isabs(base):
         base = os.path.join(os.path.expanduser("~"), ".cache")
@@ -340,7 +339,8 @@ def cache_dir() -> str | None:
     if any(c.isspace() or c in "\"'\\" for c in path):
         return None
     try:
-        os.makedirs(path, mode=0o700, exist_ok=True)
+        if create:
+            os.makedirs(path, mode=0o700, exist_ok=True)
         st = os.lstat(path)
     except OSError:
         return None
@@ -404,8 +404,9 @@ def _published(launch: Launch) -> bool:
     except FileNotFoundError:
         return False
     try:
-        ok = int(_read(launch.manifest)) == size
-    except ValueError:
+        with open(launch.manifest) as f:
+            ok = int(f.read()) == size
+    except (OSError, ValueError):
         ok = False
     if not ok:
         _log.warning("class-data archive %s does not match its manifest; deleted", launch.archive)
@@ -415,9 +416,9 @@ def _published(launch: Launch) -> bool:
 
 
 def _take_lock(path: str) -> int | None:
-    """An open descriptor holding an exclusive ``flock`` on the recorder
-    lock, or None when another process holds it.  The kernel drops the
-    lock when its holder exits, however it exits."""
+    """An open descriptor holding an exclusive ``flock`` on the build lock,
+    or None when another process holds it.  The kernel drops the lock
+    when its holder exits, however it exits."""
     try:
         fd = os.open(path, os.O_RDWR | os.O_CREAT, 0o600)
     except OSError:
@@ -428,14 +429,6 @@ def _take_lock(path: str) -> int | None:
         os.close(fd)
         return None
     return fd
-
-
-def _read(path: str) -> str:
-    try:
-        with open(path) as f:
-            return f.read()
-    except OSError:
-        return ""
 
 
 def _write_atomic(path: str, text: str) -> None:
@@ -450,3 +443,9 @@ def _unlink(path: str) -> None:
         os.unlink(path)
     except FileNotFoundError:
         pass
+
+
+if __name__ == "__main__":
+    if sys.argv[1:] != ["build"]:
+        sys.exit("usage: python -m scholarmind_spark.classcache build")
+    sys.exit(build())

@@ -78,11 +78,3 @@ def doi_link(col: Column | str) -> Column:
     return F.when(
         norm.isNotNull() & (norm != ""), F.concat(F.lit("https://doi.org/"), norm)
     ).otherwise(F.lit(""))
-
-
-def doi_link_sql(expr: str) -> str:
-    norm = doi_norm_sql(expr)
-    return (
-        f"CASE WHEN {norm} IS NOT NULL AND {norm} <> ''"
-        f" THEN 'https://doi.org/' || {norm} ELSE '' END"
-    )

@@ -29,17 +29,6 @@ def join_authors(authors: Column) -> Column:
     return F.array_join(authors, ", ")
 
 
-def flatten_array_field(col: Column, joined: bool) -> Column:
-    """Presentation flattening policy (reference D4,
-    parsers_manager.py:198-230): configured array fields are comma-joined;
-    every other list-valued column takes its first element.
-
-    ``F.get`` (0-based), not ``element_at``: the latter THROWS on an
-    empty array under Spark 4's default ANSI mode (same crash fixed in
-    ``sinks/parquet.flatten_for_presentation``); ``get`` returns null."""
-    return F.array_join(col, ", ") if joined else F.get(col, 0)
-
-
 def split_sd_authors(authors: Column) -> Column:
     """ScienceDirect ``"Last, F., Last, F."`` → array (reference D5,
     sciencedirect_parser.py:117-131)."""

@@ -28,7 +28,6 @@ and have exact DuckDB oracle twins.
 
 from __future__ import annotations
 
-import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -288,9 +287,3 @@ def frame_sample(df: DataFrame, n_frames: int = 4) -> DataFrame:
             yield pd.DataFrame(out, columns=["media_id", "frame_no", "frame_ts_ms", "frame"])
 
     return df.filter(F.col("media.media_type") == "video").mapInPandas(fn, _FRAME_SCHEMA)
-
-
-def content_checksum(content: bytes | None) -> int:
-    """Deterministic payload checksum used in tests (crc32 — stable across
-    runs/platforms, unlike hash())."""
-    return zlib.crc32(content or b"")

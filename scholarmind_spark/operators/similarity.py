@@ -210,18 +210,6 @@ def lsh_bucket(vec_col, planes: int = 8, dim: int = 64):
     return bucket
 
 
-def lsh_bucket_sql(vec_expr: str, planes: int = 8, dim: int = 64) -> str:
-    """DuckDB twin of :func:`lsh_bucket` — identical plane constants,
-    identical sign convention (strictly-positive projection sets the bit)."""
-    parts = []
-    for p, coeffs in enumerate(_plane_signs(planes, dim)):
-        terms = " + ".join(
-            f"{vec_expr}[{i + 1}]::DOUBLE * ({c:.1f})" for i, c in enumerate(coeffs)
-        )
-        parts.append(f"(CASE WHEN ({terms}) > 0 THEN {1 << p} ELSE 0 END)")
-    return "(" + " + ".join(parts) + ")::BIGINT"
-
-
 # ---- multi-table LSH: L independent tables of b planes each.  A single
 # b-plane table needs ALL b bits to agree — P(hit) = p^b, tiny for modest
 # neighbor angles (measured recall@10 ≈ 0.01 with one 8-plane table on the

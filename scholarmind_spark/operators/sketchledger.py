@@ -636,14 +636,6 @@ def hdr_state_merge_sql(a: str, b: str, keys: list[str]) -> str:
     )
 
 
-def hdr_state_rekey_sql(state_query: str, keys: list[str]) -> str:
-    kl = ", ".join(keys)
-    return (
-        f"(SELECT {kl}, sign, bucket, sum(cnt)::BIGINT AS cnt FROM "
-        f"{state_query} GROUP BY {kl}, sign, bucket)"
-    )
-
-
 def hdr_state_quantiles_sql(
     state_query: str,
     keys: list[str],

@@ -36,8 +36,6 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from scholarmind_spark import classcache
-
 WARMUP_GROUP = "scholarmind-engine-warmup"
 
 _log = logging.getLogger(__name__)
@@ -65,18 +63,16 @@ def get_spark(
     engine warm-up in the background (see the module docstring).
 
     A call that launches a new gateway JVM goes through the class-data
-    cache (:mod:`scholarmind_spark.classcache`): on an eligible host it
-    maps the archive a previous run recorded under
-    ``$XDG_CACHE_HOME/scholarmind_spark/``, appending
+    cache (:mod:`scholarmind_spark.classcache`): on an eligible host with
+    an archive that ``python -m scholarmind_spark.classcache build``
+    published under ``$XDG_CACHE_HOME/scholarmind_spark/``, it appends
     ``-XX:SharedArchiveFile`` to the caller's
-    ``spark.driver.extraJavaOptions``; without one, one process at a time
-    records it with ``-XX:ArchiveClassesAtExit`` and publishes it from an
-    ``atexit`` hook once the JVM's exit dump is done and verified (that
-    first run is slower and waits for the dump at exit).  The launch sees
-    ``SPARK_CONF_DIR`` pointed at an empty directory, restored afterwards,
-    and prints one stderr line naming its mode, also set as the session
-    conf ``spark.scholarmind.classcache``.  An ineligible host, a running
-    gateway or a held recording lock launch exactly as without the cache.
+    ``spark.driver.extraJavaOptions``, points ``SPARK_CONF_DIR`` at an
+    empty directory for the launch (restored afterwards) and prints one
+    stderr line naming its mode, also set as the session conf
+    ``spark.scholarmind.classcache``.  Without a published archive, on an
+    ineligible host or with a running gateway the launch is exactly
+    ``builder.getOrCreate()``; no call records an archive.
     """
     # Python workers unpickle mapInPandas closures by module reference; make
     # sure they can import this package even when the driver only put it on
@@ -130,6 +126,10 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    # imported here so that ``python -m scholarmind_spark.classcache`` runs
+    # a module the package import has not loaded already
+    from scholarmind_spark import classcache
+
     spark = classcache.get_or_create(builder, extra_conf or {})
     _start_engine_warmup(spark)
     return spark

@@ -32,11 +32,5 @@ def register_tables(
     return list(names)
 
 
-def register_corpus(spark: SparkSession, corpus: DataFrame, name: str = "corpus") -> str:
-    """Expose a processed literature corpus to SQL."""
-    corpus.createOrReplaceTempView(name)
-    return name
-
-
 def sql(spark: SparkSession, query: str) -> DataFrame:
     return spark.sql(query)

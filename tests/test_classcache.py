@@ -1,12 +1,16 @@
 """The gateway JVM's class-data cache (``scholarmind_spark.classcache``):
-eligibility, the archive's lifecycle and a CLI whose stdout stays its own.
+eligibility, the archive's build and lifecycle, and a CLI whose stdout
+stays its own.
 
 Most tests run against a stand-in Spark home and ``java`` and launch no
-JVM; the CLI test runs the real thing twice against a fresh cache."""
+JVM (the build's recording session is faked); the CLI test runs the real
+thing against a fresh cache: a plain CLI run, a build, a mapped CLI run."""
 
 from __future__ import annotations
 
+import atexit
 import os
+import re
 import stat
 import subprocess
 import sys
@@ -50,12 +54,9 @@ def _cache(host) -> str:
     return str(host / "cache" / "scholarmind_spark")
 
 
-def _recorded_key() -> str:
-    """Take and drop the recording lock once; return the archive key."""
-    launch = classcache.plan({})
-    assert launch is not None and launch.part is not None
-    launch.release()
-    return launch.key
+def _key() -> str:
+    """Create the cache and its conf dir as a build does; return the key."""
+    return classcache._target({}, create=True).key
 
 
 def _publish(host, key: str, size: int, manifest: int | None = None) -> str:
@@ -67,8 +68,13 @@ def _publish(host, key: str, size: int, manifest: int | None = None) -> str:
     return path
 
 
+def _snapshot(cache: str) -> dict[str, tuple[int, int, int]]:
+    stats = {n: os.stat(os.path.join(cache, n)) for n in os.listdir(cache)}
+    return {n: (st.st_ino, st.st_size, st.st_mtime_ns) for n, st in stats.items()}
+
+
 class FakeProc:
-    """The gateway ``Popen`` as the exit hook sees it."""
+    """The recording gateway's ``Popen`` as the build sees it."""
 
     def __init__(self, rc: int):
         self.rc = rc
@@ -79,6 +85,25 @@ class FakeProc:
 
     def kill(self):
         pass
+
+
+def _fake_recording(monkeypatch, rc: int = 0, java: str | None = None) -> list[FakeProc]:
+    """Replace the build's recording session: it writes a 10-byte ``.part``
+    where the JVM options say and returns a gateway that exits ``rc``;
+    verification runs ``java`` (the host's stand-in by default)."""
+    procs: list[FakeProc] = []
+
+    def record(launch):
+        part = launch.java_options.rsplit("-XX:ArchiveClassesAtExit=", 1)[1]
+        assert part == os.path.join(launch.cache, f"{launch.key}.{os.getpid()}.part")
+        assert launch.java_options.startswith("-Xlog:disable ")
+        with open(part, "wb") as f:
+            f.write(b"\0" * 10)
+        procs.append(FakeProc(rc))
+        return procs[-1], java or os.path.join(os.environ["JAVA_HOME"], "bin", "java"), "cp"
+
+    monkeypatch.setattr(classcache, "_record", record)
+    return procs
 
 
 class FakeConf(dict):
@@ -121,130 +146,144 @@ def no_gateway(monkeypatch):
     monkeypatch.setattr(SparkContext, "_gateway", None)
 
 
-def test_first_launch_records_under_a_lock(host):
-    launch = classcache.plan({})
-    cache = _cache(host)
-    assert launch.mode == "recording"
-    assert launch.part == os.path.join(cache, f"{launch.key}.{os.getpid()}.part")
-    assert launch.java_options.endswith(f"-XX:ArchiveClassesAtExit={launch.part}")
-    assert "SharedArchiveFile" not in launch.java_options
-    assert stat.S_IMODE(os.stat(cache).st_mode) == 0o700
-    assert os.listdir(launch.conf_dir) == []
-    assert classcache._take_lock(launch.lock) is None  # held
-    launch.release()
-    fd = classcache._take_lock(launch.lock)  # free again
-    assert fd is not None
-    os.close(fd)
+def test_launch_without_archive_is_plain(host, monkeypatch, no_gateway, capsys):
+    """No published archive: the launch sees the caller's options and
+    ``SPARK_CONF_DIR``, prints nothing, registers no exit hook and writes
+    nothing, on a fresh cache and on one a build has set up."""
+    hooks = []
+    monkeypatch.setattr(atexit, "register", lambda *a, **k: hooks.append(a))
+    conf = str(host / "spark" / "conf")
+    monkeypatch.setenv("SPARK_CONF_DIR", conf)
+    caller = {classcache.JAVA_OPTIONS: "-Dcaller=1"}
+    for fresh in (True, False):
+        if not fresh:
+            _key()
+            assert os.listdir(_cache(host)) == ["conf"]
+        builder = FakeBuilder()
+        builder.conf.update(caller)
+        assert classcache.get_or_create(builder, caller).conf == {}
+        assert builder.launches == [(caller, conf)]
+        assert capsys.readouterr().err == ""
+        assert hooks == []
+        assert os.path.exists(_cache(host)) is not fresh
+    assert os.listdir(_cache(host)) == ["conf"]
+    assert stat.S_IMODE(os.stat(_cache(host)).st_mode) == 0o700
 
 
-def test_truncated_part_and_mismatched_archive_never_reach_the_jvm(host):
-    """A dead recorder's ``.part`` and a published archive whose size
-    differs from its manifest are deleted; the launch records afresh."""
-    key = _recorded_key()
+def test_truncated_part_and_mismatched_archive_never_reach_the_jvm(host, monkeypatch):
+    """A published archive whose size differs from its manifest is deleted
+    and the launch is plain; the next build deletes a dead build's
+    ``.part``."""
+    key = _key()
     cache = _cache(host)
     part = os.path.join(cache, f"{key}.4194000.part")
     with open(part, "wb") as f:
         f.write(b"\0" * 10)
     archive = _publish(host, key, 10, manifest=20)
-    launch = classcache.plan({})
-    try:
-        assert not os.path.exists(part)
-        assert not os.path.exists(archive)
-        assert not os.path.exists(os.path.join(cache, f"{key}.size"))
-        assert "SharedArchiveFile" not in launch.java_options
-        assert launch.part is not None
-    finally:
-        launch.release()
+    assert classcache.plan({}) is None
+    assert not os.path.exists(archive)
+    assert not os.path.exists(os.path.join(cache, f"{key}.size"))
+    _fake_recording(monkeypatch)
+    assert classcache.build() == 0
+    assert not os.path.exists(part)
+    assert sorted(os.listdir(cache)) == sorted(
+        ["conf", f"{key}.jsa", f"{key}.size", f"{key}.lock"])
 
 
 def test_archive_without_manifest_is_deleted(host):
-    key = _recorded_key()
+    key = _key()
     archive = _publish(host, key, 10)
     os.unlink(os.path.join(_cache(host), f"{key}.size"))
-    launch = classcache.plan({})
-    launch.release()
+    assert classcache.plan({}) is None
     assert not os.path.exists(archive)
-    assert launch.part is not None
 
 
 def test_published_archive_is_mapped_after_the_callers_options(host):
-    key = _recorded_key()
+    key = _key()
     archive = _publish(host, key, 10)
     launch = classcache.plan({classcache.JAVA_OPTIONS: "-Dcaller=1 -Xss4m"})
-    assert (launch.mode, launch.part, launch.lock_fd) == ("mapped", None, None)  # no lock
+    assert launch.mode == "mapped"
     assert launch.java_options == (
         "-Dcaller=1 -Xss4m -Xlog:disable -Xlog:all=warning:stderr "
         f"-XX:SharedArchiveFile={archive}"
     )
+    assert not os.path.exists(os.path.join(_cache(host), f"{key}.lock"))  # mapping takes no lock
 
 
-def test_failed_recording_publishes_nothing(host):
-    launch = classcache.plan({})
-    with open(launch.part, "wb") as f:
-        f.write(b"\0" * 10)
-    proc = FakeProc(rc=1)
-    classcache.finish_recording(launch, proc, str(host / "jdk" / "bin" / "java"), "cp")
+def test_failed_recording_publishes_nothing(host, monkeypatch, capsys):
+    procs = _fake_recording(monkeypatch, rc=1)
+    assert classcache.build() == 1
+    assert procs[0].stdin.closed
+    key = _key()
+    assert sorted(os.listdir(_cache(host))) == sorted(["conf", f"{key}.lock"])
+    assert "recording JVM exited 1; nothing published" in capsys.readouterr().err
+
+
+def test_unverified_recording_publishes_nothing(host, monkeypatch, capsys):
+    _fake_recording(monkeypatch, java="/bin/false")
+    assert classcache.build() == 1
+    key = _key()
+    assert sorted(os.listdir(_cache(host))) == sorted(["conf", f"{key}.lock"])
+    assert "failed verification; nothing published" in capsys.readouterr().err
+
+
+def test_verified_recording_is_published_with_its_manifest(host, monkeypatch, capsys):
+    """The build stops the recording gateway, publishes the verified
+    archive with its manifest and says so; the next launch maps it."""
+    procs = _fake_recording(monkeypatch)
+    assert classcache.build() == 0
+    [proc] = procs
     assert proc.stdin.closed
-    assert sorted(os.listdir(_cache(host))) == sorted(["conf", f"{launch.key}.lock"])
-
-
-def test_unverified_recording_publishes_nothing(host):
-    launch = classcache.plan({})
-    with open(launch.part, "wb") as f:
-        f.write(b"\0" * 10)
-    classcache.finish_recording(launch, FakeProc(rc=0), "/bin/false", "cp")
-    assert sorted(os.listdir(_cache(host))) == sorted(["conf", f"{launch.key}.lock"])
-
-
-def test_verified_recording_is_published_with_its_manifest(host):
-    launch = classcache.plan({})
-    with open(launch.part, "wb") as f:
-        f.write(b"\0" * 10)
-    classcache.finish_recording(launch, FakeProc(rc=0), str(host / "jdk" / "bin" / "java"), "cp")
-    key = launch.key
-    assert sorted(os.listdir(_cache(host))) == sorted(
+    key = _key()
+    cache = _cache(host)
+    assert sorted(os.listdir(cache)) == sorted(
         ["conf", f"{key}.jsa", f"{key}.size", f"{key}.lock"])
-    with open(launch.manifest) as f:
+    with open(os.path.join(cache, f"{key}.size")) as f:
         assert f.read() == "10"
-    assert classcache.plan({}).part is None  # the next launch maps it
+    archive = os.path.join(cache, f"{key}.jsa")
+    assert re.fullmatch(rf"scholarmind_spark: built {re.escape(archive)} \(0\.0 MB\) "
+                        r"in \d+\.\d s\n", capsys.readouterr().out)
+    assert classcache.plan({}).mode == "mapped"
 
 
-def test_second_recorder_finds_the_lock_held(host, no_gateway, capsys):
-    """A second process finds the lock held: its launch is exactly as
-    without the cache, and it says so."""
-    first = classcache.plan({})
+def test_second_recorder_finds_the_lock_held(host, monkeypatch, capsys):
+    """A build that finds another build's lock held exits 1, records
+    nothing and leaves every file in the cache as it was."""
+    key = _key()
+    _publish(host, key, 10)
+    with open(os.path.join(_cache(host), f"{key}.4194000.part"), "wb") as f:
+        f.write(b"\0" * 3)
+    fd = classcache._take_lock(os.path.join(_cache(host), f"{key}.lock"))
+    before = _snapshot(_cache(host))
+    monkeypatch.setattr(classcache, "_record", lambda launch: pytest.fail("recorded"))
     try:
-        second = classcache.plan({})
-        assert (second.mode, second.part, second.java_options) == ("busy", None, None)
-        builder = FakeBuilder()
-        session = classcache.get_or_create(builder, {})
-        assert builder.launches == [({}, None)]
-        assert session.conf == {classcache.MODE_CONF: "busy"}
-        assert capsys.readouterr().err == (
-            f"scholarmind_spark: class-data cache busy: {first.archive}\n")
+        assert classcache.build() == 1
     finally:
-        first.release()
+        os.close(fd)
+    assert _snapshot(_cache(host)) == before
+    assert "another build holds" in capsys.readouterr().err
 
 
-def test_dead_recorders_lock_is_free(host):
-    """The kernel drops the lock of a recorder that is killed: the next
-    launch records."""
-    key = _recorded_key()
-    lock = os.path.join(_cache(host), f"{key}.lock")
+def test_dead_recorders_lock_is_free(host, monkeypatch):
+    """The kernel drops the lock of a build that is killed: the next build
+    records."""
+    lock = os.path.join(_cache(host), f"{_key()}.lock")
+    open(lock, "w").close()
     holder = subprocess.Popen(
         [sys.executable, "-c",
          "import fcntl, os, sys; fd = os.open(sys.argv[1], os.O_RDWR); "
          "fcntl.flock(fd, fcntl.LOCK_EX); print('held', flush=True); sys.stdin.read()", lock],
         stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True)
+    procs = _fake_recording(monkeypatch)
     try:
         assert holder.stdout.readline() == "held\n"
-        assert classcache.plan({}).mode == "busy"
+        assert classcache.build() == 1
+        assert procs == []
     finally:
         holder.kill()
         holder.wait()
-    launch = classcache.plan({})
-    assert launch.mode == "recording"
-    launch.release()
+    assert classcache.build() == 0
+    assert len(procs) == 1
 
 
 @pytest.mark.parametrize("case", [
@@ -296,12 +335,13 @@ def test_unsafe_cache_dir_is_ignored(host, monkeypatch, unsafe):
         monkeypatch.setattr(os, "getuid", lambda: uid + 1)
     assert classcache.cache_dir() is None
     assert classcache.plan({}) is None
+    assert classcache.build() == 1
     assert os.listdir(cache) == []
 
 
 def test_mapped_launch_sees_the_empty_conf_dir_then_restores_it(
         host, monkeypatch, no_gateway, capsys):
-    key = _recorded_key()
+    key = _key()
     archive = _publish(host, key, 10)
     monkeypatch.setenv("SPARK_CONF_DIR", str(host / "spark" / "conf"))
     builder = FakeBuilder()
@@ -319,7 +359,7 @@ def test_mapped_launch_sees_the_empty_conf_dir_then_restores_it(
 def test_gateway_that_dies_on_the_archive_is_relaunched_without_it(host, no_gateway):
     """The gateway fails with the archive and starts without it: the
     archive was the cause and is deleted."""
-    key = _recorded_key()
+    key = _key()
     archive = _publish(host, key, 10)
     builder = FakeBuilder(fail=1)
     assert classcache.get_or_create(builder, {}).conf == {classcache.MODE_CONF: "discarded"}
@@ -332,7 +372,7 @@ def test_gateway_that_dies_on_the_archive_is_relaunched_without_it(host, no_gate
 def test_gateway_that_dies_without_the_archive_too_keeps_it(host, no_gateway):
     """A launch that fails with and without the archive (a bad driver
     memory, a port) raises the plain launch's error; the archive stays."""
-    key = _recorded_key()
+    key = _key()
     archive = _publish(host, key, 10)
     builder = FakeBuilder(fail=2)
     with pytest.raises(RuntimeError, match="gateway process exited"):
@@ -342,10 +382,15 @@ def test_gateway_that_dies_without_the_archive_too_keeps_it(host, no_gateway):
     assert classcache.plan({}).mode == "mapped"
 
 
-def _cli(cache_home: str, out_dir: str) -> subprocess.CompletedProcess:
+def _run(cache_home: str, *args: str) -> subprocess.CompletedProcess:
     env = dict(os.environ, XDG_CACHE_HOME=cache_home)
-    cmd = [
-        sys.executable, "-m", "scholarmind_spark.cli",
+    return subprocess.run([sys.executable, "-m", *args], cwd=ROOT, env=env,
+                          capture_output=True, text=True, timeout=600)
+
+
+def _cli(cache_home: str, out_dir: str) -> subprocess.CompletedProcess:
+    return _run(
+        cache_home, "scholarmind_spark.cli",
         "--pubmed", f"{FIX}/pubmed.txt",
         "--wos", f"{FIX}/wos.txt",
         "--sciencedirect", f"{FIX}/sciencedirect.txt",
@@ -353,17 +398,17 @@ def _cli(cache_home: str, out_dir: str) -> subprocess.CompletedProcess:
         "--mock-llm",
         "--output", f"{out_dir}/corpus",
         "--sheets", f"{out_dir}/sheets",
-    ]
-    return subprocess.run(cmd, cwd=ROOT, env=env, capture_output=True, text=True, timeout=600)
+    )
 
 
-def test_cli_records_then_maps_and_stdout_stays_its_own(spark, tmp_path, monkeypatch, capfd):
-    """Two CLI runs on one fresh cache: the first records and publishes the
-    archive at exit, the second maps it.  Each prints exactly the CLI's
-    own lines on stdout.  Then a truncated copy of the real archive (which
-    crashes a JDK 17 that maps it) fails verification without a byte on
-    our stdout, and a published truncated archive is deleted before any
-    launch sees it."""
+def test_cli_runs_plain_then_maps_the_built_archive_and_stdout_stays_its_own(
+        spark, tmp_path, monkeypatch, capfd):
+    """On a fresh cache a CLI run launches plain and writes nothing there;
+    ``build`` publishes the archive; the next CLI run maps it.  Each CLI
+    run prints exactly its own lines on stdout.  Then a truncated copy of
+    the real archive (which crashes a JDK 17 that maps it) fails
+    verification without a byte on our stdout, and a published truncated
+    archive is deleted before any launch sees it."""
     cache_home = str(tmp_path / "cache")
     cache = os.path.join(cache_home, "scholarmind_spark")
 
@@ -376,13 +421,19 @@ def test_cli_records_then_maps_and_stdout_stays_its_own(spark, tmp_path, monkeyp
     first = _cli(cache_home, str(tmp_path / "a"))
     assert first.returncode == 0, first.stderr[-3000:]
     assert first.stdout == expected(tmp_path / "a")
-    assert "scholarmind_spark: class-data cache recording: " in first.stderr
+    assert "class-data cache" not in first.stderr
+    assert not os.path.exists(cache_home)
+
+    built = _run(cache_home, "scholarmind_spark.classcache", "build")
+    assert built.returncode == 0, built.stderr[-3000:]
     names = sorted(os.listdir(cache))
     [archive] = [n for n in names if n.endswith(".jsa")]
     key = archive[: -len(".jsa")]
     assert names == sorted(["conf", archive, f"{key}.size", f"{key}.lock"])
     archive = os.path.join(cache, archive)
     size = os.stat(archive).st_size
+    assert re.fullmatch(rf"scholarmind_spark: built {re.escape(archive)} \(\d+\.\d MB\) "
+                        r"in \d+\.\d s\n", built.stdout)
     with open(os.path.join(cache, f"{key}.size")) as f:
         assert int(f.read()) == size > 0
     recorded = os.stat(archive)
@@ -410,8 +461,5 @@ def test_cli_records_then_maps_and_stdout_stays_its_own(spark, tmp_path, monkeyp
 
     os.replace(truncated, archive)
     monkeypatch.setenv("XDG_CACHE_HOME", cache_home)
-    launch = classcache.plan({})
-    launch.release()
-    assert launch.part is not None
-    assert "SharedArchiveFile" not in launch.java_options
+    assert classcache.plan({}) is None
     assert sorted(os.listdir(cache)) == sorted(["conf", f"{key}.lock"])
