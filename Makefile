@@ -9,14 +9,12 @@
 #   make gate-hard — perturbed gate only
 #   make test      — pytest suite only (the ROADMAP tier-1 command)
 #   make bench     — headline-query bench (one JSON line, sf0.1)
-#   make plans     — regenerate PLANS.md physical-plan audit
-#   make scale     — regenerate SCALE.md 1x..10x probe (slow)
 
 SF ?= /root/testdata/sf0.01
 PERTURB = TZ=America/New_York LANG=C LC_ALL=C \
   JAVA_TOOL_OPTIONS="-Duser.timezone=America/New_York -Dfile.encoding=US-ASCII"
 
-.PHONY: check gate gate-hard test bench plans scale
+.PHONY: check gate gate-hard test bench
 
 check: gate gate-hard test
 
@@ -31,9 +29,3 @@ test:
 
 bench:
 	python bench.py
-
-plans:
-	python tools/explain_report.py
-
-scale:
-	python tools/scale_probe.py

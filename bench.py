@@ -43,7 +43,7 @@ import time
 #
 # Two consecutive driver-recorded benches (r11, r12) landed in external-
 # load windows and the exoneration had to be reconstructed after the fact
-# from SCALE.md prose and manual re-runs.  The artifact now defends
+# from prose logs and manual re-runs.  The artifact now defends
 # itself: every query window measures EXTERNAL CPU — host busy jiffies
 # (/proc/stat, host-wide even in a container) minus this process tree's
 # own jiffies (self + descendants utime/stime + reaped-children
@@ -53,7 +53,9 @@ import time
 # ext_cores is the signal, loadavg the corroboration.  A query whose
 # window saw ext_cores > EXT_CORES_SUSPECT is flagged suspect, and the
 # summary carries {load_start, load_max, ext_max, n_suspect, suspect}.
-# Threshold documented in SCALE.md ("Bench load forensics").
+# The threshold is 2: two external cores busy while a 32-cpu host
+# measures wall-clock distort the heavy shuffle stages, and the r12
+# contaminated windows read host loads of 4-9.
 #
 # Round 13: the meter wraps EACH REP, and the recorded median is taken
 # over the CLEAN reps (ext_cores <= threshold); a query is flagged
@@ -230,7 +232,7 @@ BENCH_QUERIES = [
     # are driver-gated but not benched: like dedup_ledger_roundtrip they
     # are self-verifying double-computations whose cost is fixed
     # materialization units, and one such anchor in the bench already
-    # covers the shape (isolated anchors for all three live in SCALE.md)
+    # covers the shape
     "text_clean",
     "token_topk",
     "text_word_repetition",
@@ -366,7 +368,7 @@ def main() -> None:
 
     n_reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     # SPARK_GRAFT_BENCH_ONLY=a,b,c — isolated-measure mode for anchor
-    # medians (SCALE.md "noop-basis anchors"): a query timed alone in a
+    # medians (the round-8 noop-basis anchors): a query timed alone in a
     # fresh session is free of the late-session heap/position effects the
     # full-list run carries, so it anchors round-over-round drift.
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")

@@ -513,7 +513,7 @@ def ledger_expire_sql(
 # ------------------------------------------------------- merge-on-read
 #
 # The copy-on-write folds above REWRITE the whole fp table per version
-# — measured at sf0.1 the rewrite term is ~4 µs/doc (SCALE.md r12
+# — measured at sf0.1 the rewrite term is ~4 µs/doc (round-12
 # probe), which is fine to 100k docs and the dominant cost at 100 TB.
 # The scale path is the merge-on-read shape every transactional table
 # format converges on: the state is a BASE snapshot plus a stack of

@@ -78,6 +78,7 @@ from scholarmind_spark.operators.textstats import (  # noqa: E402
     TOKEN_SPLIT_RE as _WS_RE,
 )
 from scholarmind_spark.util import attach_caches as _attach_caches  # noqa: E402
+from scholarmind_spark.util import build_cache as _build_cache  # noqa: E402
 from scholarmind_spark.util import spread as _spread  # noqa: E402
 
 
@@ -211,7 +212,10 @@ def ngram_jaccard_pairs(
     the only corpus-sized exchanges left are the one per-doc re-group and
     the prefix self-join's two ~(1−t)-sized sides."""
     t_pm = int(round(threshold * 1000))
-    docs = _capped_doc_arrays(df, id_col, text_col, k, max_df)
+    # built here, once: the listing plan reads ``docs`` four times (both
+    # prefix sides, both verify joins), and an unbuilt cache costs one
+    # job per read
+    docs = _build_cache(_capped_doc_arrays(df, id_col, text_col, k, max_df))
     # α = ⌈t·n⌉ via integers: (t_pm·n + 999) div 1000
     alpha = F.expr(f"({t_pm} * n + 999) div 1000")
     pref = docs.select("id", F.explode(_prefix_slice(alpha)).alias("sh"))

@@ -101,8 +101,8 @@ def semdedup(
     literal (map-only, no shuffle); beyond that the literal plan's
     per-row O(k·d) evaluation and plan size stop paying and assignment
     falls back to the corpus × broadcast(codebook) + ``min(struct)``
-    aggregate of :func:`operators.kmeans._assign`.  The probe
-    (tools/semdedup_probe.py) is what forced this honesty: scaling k
+    aggregate of :func:`operators.kmeans._assign`.  The round-12
+    probe is what forced this honesty: scaling k
     WITH the corpus keeps the pair stage linear but makes the literal
     assignment itself O(n·k·d) — at a codebook too big to broadcast,
     coarse-quantize the codebook itself (IVF-style two-level

@@ -192,24 +192,6 @@ def _plane_signs(planes: int, dim: int) -> list[list[float]]:
     ]
 
 
-def lsh_bucket(vec_col, planes: int = 8, dim: int = 64):
-    """Random-hyperplane LSH bucket id from sign patterns.
-
-    Planes are pseudo-random ±1 vectors derived from md5 of (plane, dim
-    index) — fully deterministic and portable to the SQL oracle.  Bucketed
-    ANN joins on this id instead of cross-producting the corpus."""
-    bucket = F.lit(0).cast("bigint")
-    for p, coeffs in enumerate(_plane_signs(planes, dim)):
-        arr = F.array(*[F.lit(c) for c in coeffs])
-        proj = F.aggregate(
-            F.zip_with(vec_col, arr, lambda x, c: x.cast("double") * c),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
-
-
 # ---- multi-table LSH: L independent tables of b planes each.  A single
 # b-plane table needs ALL b bits to agree — P(hit) = p^b, tiny for modest
 # neighbor angles (measured recall@10 ≈ 0.01 with one 8-plane table on the
@@ -284,9 +266,10 @@ def ann_lsh_topk(
     """Approximate top-k via multi-table LSH: a candidate shares ANY of the
     L per-table buckets with the query, then exact cosine ranks within
     candidates.  L tables of b planes lift recall from p^b to
-    1-(1-p^b)^L (measured 0.01 → see SCALE.md) while the join stays a
-    bucket equi-join — the 100 TB path.  A pair found by several tables is
-    collapsed by the (query, neighbor) groupBy before ranking."""
+    1-(1-p^b)^L (recall@10 0.01 → 0.37 at 8×6 on sf0.1, measured in
+    round 4) while the join stays a bucket equi-join — the 100 TB path.
+    A pair found by several tables is collapsed by the (query, neighbor)
+    groupBy before ranking."""
     d = df.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__v"),
@@ -325,7 +308,7 @@ def derive_planes(
     so candidate volume per table is ~``Σ size² ≈ (n/2^b)·n``; holding
     ``n/2^b ≈ target_bucket_rows`` makes that ``target·n`` — linear in
     the corpus — hence ``b = ceil(log2(n / target))``, floored at the
-    small-corpus default.  This is SCALE.md's "planes ∝ log₂(n)" rule as
+    small-corpus default.  This is the round-5 "planes ∝ log₂(n)" rule as
     the default instead of a manual knob (the x10 probe previously grew
     5.5× on a fixed 2^6 bucket space).  Per-pair recall at a given
     cosine decays as ``p^b`` per table, so a production corpus that

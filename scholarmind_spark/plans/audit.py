@@ -4,7 +4,7 @@ The engine adds no custom Catalyst rules (SURVEY §4 — the reference's
 hand-rolled tactics are all subsumed by Catalyst/AQE); what it adds instead
 is plan *auditing*: every query's physical plan is reducible to a digest of
 scale-relevant facts (pushed filters, join strategies, exchange count,
-Python stage count) that tests and `tools/explain_report.py` assert over.
+Python stage count) that tests assert over.
 """
 
 from __future__ import annotations

@@ -2026,8 +2026,8 @@ def ann_index_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     source corpus (the state stores m-int codes, by design) and
     re-ranked by exact squared-L2.  Must equal the batch
     ivfadc_refine_topk DuckDB oracle over the same standing corpus —
-    SCALE.md's clustered table measures this stage at +0.375 absolute
-    recall at the production residual/m16/c256 point."""
+    On the clustered mixtures this stage measured +0.375 absolute
+    recall at the production residual/m16/c256 point (round 14)."""
     from scholarmind_spark.streaming.pipeline import ann_state_query_refined
 
     e = _t(spark, sf_dir, "embeddings")
@@ -2058,7 +2058,7 @@ gate("ann_index_rerank", ann_index_rerank, _ann_index_rerank_sql())
 
 def ann_index_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming index in RESIDUAL mode, driver-gated (r14 verdict
-    ask #6): the mode SCALE.md's clustered table measures as
+    ask #6): the mode the round-14 clustered-recall runs measured as
     load-bearing (raw m8/c64 collapses to 0.075 recall at σ0.3;
     residual recovers it) was pytest-only at the state surface.  The
     corpus folds in three microbatches with by_residual=True frozen

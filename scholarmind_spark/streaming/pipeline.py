@@ -587,8 +587,8 @@ def _maybe_compact(
     so the retained window slides forward with ingest.  A None
     retain_days (or a state with no numeric day yet) is a no-op.  The
     compactors are idempotent over their own period labels, which is
-    what makes running this on EVERY fold safe — the 90-day simulation
-    in tools/fold_probe.py is exactly this loop.
+    what makes running this on EVERY fold safe
+    (``test_sketchledger.py::test_sketch_state_compact_is_rerunnable``).
 
     The day-key TYPE contract: the state builders cast every key
     column to string, so the snapshot's day column is StringType no
@@ -1048,16 +1048,15 @@ def stream_vector_ingest(
     writes a cell-partitioned base fragment.  Re-ingested ids REPLACE
     their rows (latest-seq-wins, resolved at read time over a delta
     stack ≤ compact_every versions).  Gates: ``ann_index_stream`` /
-    ``ann_index_residual`` / ``ann_index_rerank``; probe:
-    ``tools/fold_probe.py vector``.
+    ``ann_index_residual`` / ``ann_index_rerank``.
 
     First fold CREATES the state: the coarse codebook (``coarse_df`` or
     ``coarse_ids`` rows of the first batch), the PQ codebook
     (``subspace_codebook_df`` — e.g. :func:`operators.pq.pq_train` — or
     ``codebook_ids`` rows), and the ENCODING MODE (``by_residual`` —
     raw vectors, or the paper's §5 residuals vs the routed cell's
-    centroid: SCALE.md's clustered-recall table measures residual
-    encoding as load-bearing there, 0.075 → 0.200 recall at m8/c64)
+    centroid: on clustered data residual encoding is load-bearing,
+    0.075 → 0.200 recall at m8/c64, measured in round 14)
     are all frozen into the state, and with the PQ codebook its
     geometry (``m`` subspaces of width ``dim/m``).  Later folds read
     codebooks, geometry AND mode FROM the state (``m``, ``dim``,
@@ -1275,9 +1274,10 @@ def _vec_compact(
     column-pruned (id, cell) scan of the live fragments — tombstones
     carry a NULL cell by design) — points those cells at the new
     fragment, and carries every untouched cell forward BY REFERENCE:
-    write volume ∝ touched cells (the LSM leveling discipline;
-    fold_probe.py vector measures it).  Reads stay exact because each
-    fragment is consulted only for the cells the cellmap assigns it, so
+    write volume ∝ touched cells (the LSM leveling discipline; pinned by
+    ``test_partial_compaction_rewrites_only_touched_cells``).  Reads stay
+    exact because each fragment is consulted only for the cells the
+    cellmap assigns it, so
     purged ids cannot resurrect out of stale partitions.  Falls back to
     a FULL rewrite, which re-bases every cell onto one fragment and lets
     GC reclaim the rest, when the prospective fragment count would
@@ -1564,7 +1564,7 @@ def ann_state_query_refined(
     unquantized query — the batch operator's own rerank stage
     (``operators.pq._exact_rerank``).  Like :func:`ann_state_query`,
     codebooks, geometry and encoding mode come from the state.
-    Measured on the clustered mixtures (SCALE.md),
+    Measured on the clustered mixtures in round 14,
     this stage is worth +0.375 absolute recall over the ADC ranking at
     the production residual/m16/c256 point — without it the compressed
     index's quality ceiling is the quantizer's.

@@ -70,6 +70,24 @@ def attach_caches(out: DataFrame, caches: list[DataFrame]) -> DataFrame:
     return out
 
 
+def build_cache(df: DataFrame) -> DataFrame:
+    """Build every block of the ``persist()``-ed ``df`` in one Spark job.
+
+    Adaptive execution plans one ``TableCacheQueryStage`` per read of a
+    cached relation that is not built yet, and each stage submits its own
+    job over the same blocks; ``count()`` takes three (the cache stage,
+    the partial count and the final count).  Counting the cache's own RDD
+    builds the blocks once, so every later plan finds them built and
+    submits no cache job."""
+    cached = (
+        df.sparkSession._jsparkSession.sharedState()  # type: ignore[attr-defined]
+        .cacheManager()
+        .lookupCachedData(df._jdf)  # type: ignore[attr-defined]
+    )
+    cached.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().count()
+    return df
+
+
 def unpersist_any(df: DataFrame) -> None:
     """Free the materialized blocks behind ``df`` whether it was
     ``persist()``-ed (CacheManager entry) or ``localCheckpoint()``-ed

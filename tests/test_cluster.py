@@ -181,11 +181,12 @@ def test_connected_components_string_path_needs_several_rounds(spark):
 def test_shared_components_job_budget(spark):
     """Three fresh-memo reps of ``dedup_cluster_sizes`` on the sf0.001
     fixture, each under its own job group, run the same number of Spark
-    jobs: 27 (local[4]), against 40 when the edge list was a self-union
+    jobs: 24 (local[4]).  It was 40 when the edge list was a self-union
     of the pairs, the seed labels were persisted, a separate digest action
-    ran before round 1 and the memo ran its own ``count()``.  Every
-    in-memory-cache read the loop plans adds a job, and a varying count
-    would fail the benchmark's identical-work check."""
+    ran before round 1 and the memo ran its own ``count()``, and 27 while
+    the pair lister's four reads of its unbuilt ``docs`` cache each ran
+    their own job.  Every in-memory-cache read the loop plans adds a job,
+    and a varying count would fail the benchmark's identical-work check."""
     from test_streaming import SF_DIR  # the sf0.001 tier-1 fixture
 
     from scholarmind_spark import queries
@@ -211,4 +212,4 @@ def test_shared_components_job_budget(spark):
         reset_shared_components()
     assert results[0] == results[1] == results[2]
     assert len(set(counts)) == 1, counts
-    assert counts[0] < 40, counts
+    assert counts[0] <= 24, counts

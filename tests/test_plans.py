@@ -26,15 +26,15 @@ SKIP = {
     # round-14: the streaming vector-index gate FOLDS state (3 manifest
     # commits) before querying — plan inspection would execute them; the
     # query-side plan (pruned base + delta resolve + broadcast probes)
-    # is covered by the gate and tools/fold_probe.py vector
+    # is covered by the gate and the test_stream_merge.py vector tests
     "ann_index_stream",
     "ann_index_retire",
     # round-15: same device — ann_index_rerank folds the shared gate
     # state via _ann_index_state, ann_index_residual folds its own
     # residual-mode state inline; the query-side plans (pruned base +
     # delta resolve + broadcast probes, and the rerank's broadcast-hash
-    # candidate join) are covered by the gates and fold_probe, and the
-    # probe BNLJ is the ann_ivfadc_topk coarse-attach shape
+    # candidate join) are covered by the gates and test_stream_merge.py,
+    # and the probe BNLJ is the ann_ivfadc_topk coarse-attach shape
     "ann_index_rerank",
     "ann_index_residual",
 }
@@ -178,7 +178,7 @@ def test_no_cartesian_products(spark):
         # near-dup pair listing verifies candidates via vectorized array
         # intersection over the cached per-doc hash arrays (the prefix
         # self-join's strategy is size-based: broadcast at this tiny SF,
-        # shuffle at scale — SCALE.md carries the at-scale evidence)
+        # shuffle at scale)
         ("dedup_ngram_jaccard", "array_intersect"),
     ],
 )

@@ -1752,6 +1752,51 @@ def _cells_state(spark, tmp_path, name, compact_every=2):
     return state, b0, b1, b2
 
 
+def test_vec_chain_pruned_to_cells_resolves_like_full_chain(spark, tmp_path):
+    """A chain read pruned to some cells keeps only those cells' base
+    rows plus every delta row, and resolves like the full chain within
+    those cells — also for an id a delta moved OUT of a pruned-in cell,
+    whose stale base row must lose the seq race to the delta."""
+    from pyspark.sql import functions as F
+
+    from scholarmind_spark.operators.ledger import mor_resolve
+    from scholarmind_spark.streaming.pipeline import _vec_chain, _vector_ingest_fn
+    from scholarmind_spark.streaming.state import read_manifest
+
+    VS = "vec_id long, embedding array<double>"
+    state = str(tmp_path / "state")
+    fold = _vector_ingest_fn(
+        state, "feedbeef", m=2, dim=8, coarse_ids=[0, 1, 2],
+        codebook_ids=[0, 1, 2, 3], compact_every=2,
+    )
+    b0 = [(0, [0.0] * 8), (1, [100.0] * 8), (2, [200.0] * 8)] + [
+        (i, _cellvec(c, i)) for c, i in ((0, 3), (1, 5), (1, 6), (2, 7))
+    ]
+    fold(spark.createDataFrame(b0, VS), 0)  # v-0: creation base
+    # v-1: a one-cell delta: a fresh id, and id 5 moved from cell 1 to 0
+    fold(spark.createDataFrame([(10, _cellvec(0, 10)), (5, _cellvec(0, 5))], VS), 1)
+    head = read_manifest(state, "vector-index")
+    assert (head.base, head.version) == (0, 1)
+
+    def chain(cells):
+        return _vec_chain(spark, state, 0, 1, cells=cells)
+
+    def resolved(cells_read, cells_kept):
+        return sorted(
+            (r.id, r.cell, tuple(r.pq))
+            for r in mor_resolve(chain(cells_read))
+            .where(F.col("cell").isin(cells_kept))
+            .collect()
+        )
+
+    assert sorted(r.id for r in chain(None).collect()) == [0, 1, 2, 3, 5, 5, 6, 7, 10]
+    # cell 1's base rows (1, 5, 6) and the whole delta (5, 10)
+    assert sorted(r.id for r in chain([1]).collect()) == [1, 5, 5, 6, 10]
+    for cells in ([0], [1], [2], [0, 2]):
+        assert resolved(cells, cells) == resolved(None, cells), cells
+    assert [r[0] for r in resolved([1], [1])] == [1, 6]
+
+
 def test_partial_compaction_rewrites_only_touched_cells(spark, tmp_path):
     """Per-cell incremental compaction: the deltas touched only cell 0,
     so the compaction fragment holds ONLY a cell=0 partition; cells 1-2
@@ -1777,6 +1822,10 @@ def test_partial_compaction_rewrites_only_touched_cells(spark, tmp_path):
     assert sorted(
         d for d in os.listdir(enc2) if d.startswith("cell=")
     ) == ["cell=0"]
+    # ... holding exactly cell 0's rows: its standing ids and both batches
+    assert sorted(r.id for r in spark.read.parquet(enc2).collect()) == [
+        0, 3, 4, 10, 11, 12,
+    ]
     cm = {
         (r["cell"], r["frag"])
         for r in spark.read.parquet(

@@ -7,7 +7,7 @@ not a vibe.  Recall@k = |approx ∩ exact| / k averaged over the query set.
 
 Usage: python tools/ann_recall.py [sf_dir] [k] [n_queries] [replicate]
    or: python tools/ann_recall.py clustered [k] [n_queries] [n_vectors]
-Appends a section to SCALE.md.
+Prints its results as a markdown section on stdout.
 
 ``clustered`` mode (round-12 ask): the isotropic-Gaussian rows below
 are the deliberate WORST CASE for any partition-pruning index — real
@@ -112,24 +112,19 @@ def main():
         results[name] = sum(recalls) / len(recalls)
         print(f"{name}: recall@{k} = {results[name]:.3f} over {len(recalls)} queries")
 
-    out_md = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md"
+    print(
+        f"\n\n## ANN recall@{k} vs exact cosine ({sf_dir}, {nq} queries, "
+        f"{n_corpus} vectors, replicate={replicate})\n\n"
+        "| index | recall |\n|---|---|\n"
+        + "".join(f"| {n} | {r:.3f} |\n" for n, r in results.items())
+        + "\nLSH uses 8 tables x 6 hyperplanes (multi-table: single-table\n"
+        "recall measured 0.01); IVF probes the 2 nearest cells. Both keep\n"
+        "shuffle linear in corpus size — the exact baseline is quadratic\n"
+        "per query set. NB the synthetic embeddings are isotropic Gaussian,\n"
+        "the worst case for LSH (real embedding spaces cluster, and recall\n"
+        "rises with cluster structure); the tunables trade candidates for\n"
+        "recall explicitly (tables/planes, nprobe).\n"
     )
-    with open(out_md, "a") as f:
-        f.write(
-            f"\n\n## ANN recall@{k} vs exact cosine ({sf_dir}, {nq} queries, "
-            f"{n_corpus} vectors, replicate={replicate})\n\n"
-            "| index | recall |\n|---|---|\n"
-            + "".join(f"| {n} | {r:.3f} |\n" for n, r in results.items())
-            + "\nLSH uses 8 tables x 6 hyperplanes (multi-table: single-table\n"
-            "recall measured 0.01); IVF probes the 2 nearest cells. Both keep\n"
-            "shuffle linear in corpus size — the exact baseline is quadratic\n"
-            "per query set. NB the synthetic embeddings are isotropic Gaussian,\n"
-            "the worst case for LSH (real embedding spaces cluster, and recall\n"
-            "rises with cluster structure); the tunables trade candidates for\n"
-            "recall explicitly (tables/planes, nprobe).\n"
-        )
-    print(f"appended to {out_md}")
 
 
 def clustered_main():
@@ -238,23 +233,18 @@ def clustered_main():
         e.unpersist()
         trained.unpersist()
 
-    out_md = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md"
-    )
-    with open(out_md, "a") as f:
-        f.write(
-            f"\n\n## ANN recall@{k} on a CLUSTERED corpus "
-            f"(mixture of 16 Gaussians, {n_vec} vectors, dim 64, seed 0, "
-            f"{nq} queries)\n\n"
-            "| sigma | index | recall | scan fraction |\n|---|---|---|---|\n"
-            + "".join(
-                f"| {s} | {n} | {r:.3f} | "
-                + ("—" if fr != fr else f"{fr:.3f}")
-                + " |\n"
-                for s, n, r, fr in out_rows
-            )
+    print(
+        f"\n\n## ANN recall@{k} on a CLUSTERED corpus "
+        f"(mixture of 16 Gaussians, {n_vec} vectors, dim 64, seed 0, "
+        f"{nq} queries)\n\n"
+        "| sigma | index | recall | scan fraction |\n|---|---|---|---|\n"
+        + "".join(
+            f"| {s} | {n} | {r:.3f} | "
+            + ("—" if fr != fr else f"{fr:.3f}")
+            + " |\n"
+            for s, n, r, fr in out_rows
         )
-    print(f"appended to {out_md}")
+    )
 
 
 
@@ -366,33 +356,28 @@ def pq_main():
         results[name] = (sum(rec) / len(rec), dim * 4 / 8)
         print(f"{name}: recall@{k} = {results[name][0]:.3f}")
 
-    out_md = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md"
-    )
-    with open(out_md, "a") as f:
-        f.write(
-            f"\n\n## PQ/ADC recall@{k} vs exact squared-L2 ({sf_dir}, "
-            f"{nq} queries, {n_corpus} vectors, corpus-subset codebooks)\n\n"
-            "| config | recall | compression vs float32 |\n|---|---|---|\n"
-            + "".join(
-                f"| {n} | {r:.3f} | {c:.0f}x |\n"
-                for n, (r, c) in results.items()
-            )
-            + "\nCorpus-subset codebooks (no k-means training) are the\n"
-            "recall FLOOR: trained per-subspace codebooks only improve the\n"
-            "quantizer.  Isotropic-Gaussian embeddings are additionally the\n"
-            "hardest case (no cluster structure for codewords to exploit).\n"
-            "The trade on display: bytes/vector shrink by the compression\n"
-            "column while the scan stays full-corpus — compose with IVF\n"
-            "(probe cells, ADC within) for the paper's IVFADC shape.\n"
+    print(
+        f"\n\n## PQ/ADC recall@{k} vs exact squared-L2 ({sf_dir}, "
+        f"{nq} queries, {n_corpus} vectors, corpus-subset codebooks)\n\n"
+        "| config | recall | compression vs float32 |\n|---|---|---|\n"
+        + "".join(
+            f"| {n} | {r:.3f} | {c:.0f}x |\n"
+            for n, (r, c) in results.items()
         )
-    print(f"appended to {out_md}")
+        + "\nCorpus-subset codebooks (no k-means training) are the\n"
+        "recall FLOOR: trained per-subspace codebooks only improve the\n"
+        "quantizer.  Isotropic-Gaussian embeddings are additionally the\n"
+        "hardest case (no cluster structure for codewords to exploit).\n"
+        "The trade on display: bytes/vector shrink by the compression\n"
+        "column while the scan stays full-corpus — compose with IVF\n"
+        "(probe cells, ADC within) for the paper's IVFADC shape.\n"
+    )
     spark.stop()
 
 
 def ivfadc_clustered_main():
     """IVFADC recall in the CLUSTERED regime (r13 verdict ask #4 — the
-    SCALE.md ivfadc rows were isotropic-only, the honest floor; the
+    earlier ivfadc rows were isotropic-only, the honest floor; the
     100 TB ANN story quotes the clustered regime, so measure it): the
     same 16-Gaussian mixtures (seed 0, sigma 0.3 / 0.7) as the r12 IVF
     probe study, raw vs residual encoding at m8/c64 and m16/c256,
@@ -402,7 +387,7 @@ def ivfadc_clustered_main():
     fraction uses the L2 cell assignment ivfadc actually routes by.
 
     Usage: python tools/ann_recall.py ivfadc_clustered [k] [nq] [n_vec]
-    Appends a section to SCALE.md."""
+    Prints its results as a markdown section on stdout."""
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     nq = int(sys.argv[3]) if len(sys.argv) > 3 else 20
     n_vec = int(sys.argv[4]) if len(sys.argv) > 4 else 10_000
@@ -503,22 +488,17 @@ def ivfadc_clustered_main():
         e.unpersist()
         coarse.unpersist()
 
-    out_md = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md"
-    )
-    with open(out_md, "a") as f:
-        f.write(
-            f"\n\n## IVFADC recall@{k} on the CLUSTERED corpus "
-            f"(mixture of 16 Gaussians, {n_vec} vectors, dim 64, seed 0, "
-            f"{nq} queries, kmeans-16 coarse, trained codebooks, "
-            f"nprobe {nprobe})\n\n"
-            "| sigma | config | recall | scan fraction |\n|---|---|---|---|\n"
-            + "".join(
-                f"| {s} | {n} | {r:.3f} | {fr:.3f} |\n"
-                for s, n, r, fr in out_rows
-            )
+    print(
+        f"\n\n## IVFADC recall@{k} on the CLUSTERED corpus "
+        f"(mixture of 16 Gaussians, {n_vec} vectors, dim 64, seed 0, "
+        f"{nq} queries, kmeans-16 coarse, trained codebooks, "
+        f"nprobe {nprobe})\n\n"
+        "| sigma | config | recall | scan fraction |\n|---|---|---|---|\n"
+        + "".join(
+            f"| {s} | {n} | {r:.3f} | {fr:.3f} |\n"
+            for s, n, r, fr in out_rows
         )
-    print(f"appended to {out_md}")
+    )
     spark.stop()
 
 
@@ -536,7 +516,7 @@ def state_refined_main():
     row-for-row, not just recall-for-recall.
 
     Usage: python tools/ann_recall.py state_refined [k] [nq] [n_vec]
-    Appends a section to SCALE.md."""
+    Prints its results as a markdown section on stdout."""
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     nq = int(sys.argv[3]) if len(sys.argv) > 3 else 20
     n_vec = int(sys.argv[4]) if len(sys.argv) > 4 else 10_000
@@ -631,23 +611,18 @@ def state_refined_main():
         e.unpersist(); coarse.unpersist(); res_cb.unpersist()
         shutil.rmtree(state, ignore_errors=True)
 
-    out_md = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md"
-    )
-    with open(out_md, "a") as f:
-        f.write(
-            f"\n\n## State-served IVFADC+R recall@{k} (clustered corpus, "
-            f"{n_vec} vectors, residual m{m}/c{codes}, kmeans-{n_clusters} "
-            f"coarse, nprobe {nprobe}, rerank {rerank}; index FOLDED as a "
-            "stream: base + compaction + standing delta)\n\n"
-            "| sigma | state ADC recall | state refined recall | "
-            "state == batch refine (rows) |\n|---|---|---|---|\n"
-            + "".join(
-                f"| {s} | {a:.3f} | {r:.3f} | {sm} |\n"
-                for s, a, r, sm in out_rows
-            )
+    print(
+        f"\n\n## State-served IVFADC+R recall@{k} (clustered corpus, "
+        f"{n_vec} vectors, residual m{m}/c{codes}, kmeans-{n_clusters} "
+        f"coarse, nprobe {nprobe}, rerank {rerank}; index FOLDED as a "
+        "stream: base + compaction + standing delta)\n\n"
+        "| sigma | state ADC recall | state refined recall | "
+        "state == batch refine (rows) |\n|---|---|---|---|\n"
+        + "".join(
+            f"| {s} | {a:.3f} | {r:.3f} | {sm} |\n"
+            for s, a, r, sm in out_rows
         )
-    print(f"appended to {out_md}")
+    )
     spark.stop()
 
 
